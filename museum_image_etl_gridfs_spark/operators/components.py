@@ -37,6 +37,9 @@ def connected_components(
     """(vertex, component) for every vertex in ``edges``; component =
     min vertex id reachable. Raises if not converged within
     ``max_iterations`` (shallow graphs converge in a handful)."""
+    # reset first: a call that raises must not leave the previous
+    # call's round count behind for a reader
+    connected_components.last_rounds = 0
     sym = tracked_local_checkpoint(
         # every propagation round joins sym; without a checkpoint the
         # edge producer (e.g. a blocked-matmul similarity stage)

@@ -79,7 +79,7 @@ def tracked_local_checkpoint(df: DataFrame, *, eager: bool = False) -> DataFrame
     DataFrame (the JVM blocks outlive the wrapper). The trade is that
     ContextCleaner's GC-driven unpersist cannot reclaim a tracked
     checkpoint — so every long-lived production loop over queries
-    (bench.py, tools/check_correctness.py) calls
+    (perfbench/run.py, tools/check_correctness.py) calls
     :func:`release_checkpoints` between queries; a weakref registry
     was considered and rejected because an entry untracked at wrapper
     death is exactly the entry ``release_checkpoints`` was about to

@@ -207,7 +207,7 @@ def prefix_filter_jaccard_join(
     of the collapsed groups (strong JVM refs in
     ``operators/lifecycle.py``'s registry). Callers MUST call
     ``lifecycle.release_checkpoints(spark)`` after fully materializing
-    the result — bench.py and tools/check_correctness.py do this
+    the result — perfbench/run.py and tools/check_correctness.py do this
     between queries — or wrap the build+action in
     ``lifecycle.checkpoint_scope``; a long-lived session that never
     releases accumulates unreleasable checkpoint blocks. Do NOT
@@ -288,7 +288,7 @@ def prefix_filter_jaccard_join(
     # otherwise re-run the explode + vocab-rank join + two groupBys
     # from the source scan — cheap at sf0.1, 4× the dominant cost at
     # sf1 (the round-6 regression: 1290 s solo → 503 s checkpointed).
-    # Tracked so bench.py / tools/check_correctness.py release the
+    # Tracked so perfbench/run.py / tools/check_correctness.py release the
     # blocks between queries (operators/lifecycle.py contract).
     groups = tracked_local_checkpoint(groups)
 

@@ -1,3 +1,3 @@
-"""Named logical plans (queries) + the driver-facing registry."""
+"""Named logical plans (queries) + the query registry."""
 
 from .registry import Query, all_queries, query  # noqa: F401

@@ -3,7 +3,7 @@
 Every operator from SURVEY.md §2 (plus the training-data-pipeline
 extensions) registers a named query here: a DataFrame builder
 ``(spark, sf_dir) -> DataFrame`` and, when SQL-expressible, an exact
-DuckDB oracle. The driver hashes both sides at sf0.01
+DuckDB oracle. ``tools/check_correctness.py`` hashes both sides
 (order-insensitive), so builders alias every computed column to match
 the oracle exactly.
 
@@ -14,7 +14,7 @@ Cross-engine determinism rules used throughout the query modules:
 - every aggregate/computed column is aliased identically on both
   sides;
 - DuckDB ``SUM(int)`` returns HUGEINT and is always cast to BIGINT;
-- no ORDER BY dependence — the driver compare is order-insensitive,
+- no ORDER BY dependence — the oracle compare is order-insensitive,
   LIMIT queries pin a total order first.
 """
 
@@ -25,8 +25,6 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-
-from .staleness import LAST_CHECKED, LATEST_ROUND
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -77,153 +75,14 @@ def query(
     return deco
 
 
-#: prior-round greens deliberately re-pinned FIRST in the verified
-#: prefix as regression sentinels — one per fixture-sensitive table
-#: family (lineitem/orders core, events batch, events streaming,
-#: documents, embeddings), so a driver fixture change (e.g. the
-#: round-2 events NANOS->MICROS/NTZ rewrite) flips a CORRECTNESS row
-#: red instead of only surfacing as a bench crash.
-_SENTINELS = (
-    "flagship_dup_groups",
-    "user_sessions",
-    "stream_tumbling_1h",
-    "quality_flags",
-    "cosine_topk",
-)
-
-
-#: rows the driver verifies per round (observed in every
-#: CORRECTNESS_r*.json since r1) — the ordering below is designed
-#: around this budget.
-DRIVER_PREFIX = 50
-
-#: at most this many never-driver-green oracle-checkable queries may
-#: jump ahead of the stale band per round, so a wave of new queries
-#: cannot starve the rotation (the r7 wave pushed user_event_type_map
-#: past the staleness promise). Raised 3 -> 5 for r11 per VERDICT r10
-#: item 3: the queue was not shrinking (r10 drained 3 and added 3) —
-#: drain ALL five in one round so union coverage reaches 192/192;
-#: r11's own additions queue behind via ``_NEVER_GREEN_FIRST`` and
-#: lead r12. Drop back to 2-3 once the queue stays empty.
-NEVER_GREEN_CAP = 5
-
-#: never-green queries to drain FIRST, ahead of registration order
-#: (VERDICT r11 item 3 names the five r11 additions that have never
-#: had driver contact; r12's own additions — gopher_dup_line_stats,
-#: signlsh_topk — register earlier in module order and would
-#: otherwise displace two of them from the capped band, so they queue
-#: behind and lead r13).
-_NEVER_GREEN_FIRST = (
-    "gopher_dup_ngram_chars",
-    "substring_dedup_rewrite",
-    "source_unigram_kl",
-    "filter_agreement_kappa",
-    "ngram_novelty_profile",
-)
-
-#: no-oracle queries to grant the trickle slot FIRST among equal
-#: last-checked rounds (VERDICT r11 item 5 names near_dup_clusters /
-#: lsh_bucketed_ann / incremental_minhash_near_dups as the next
-#: rotation candidates; all of the r4 cohort are equally stale —
-#: CORRECTNESS_r04 has spark_rows for every one — so this only
-#: reorders ties, never jumps a fresher query past a staler one).
-_NO_ORACLE_FIRST = (
-    "near_dup_clusters",
-    "lsh_bucketed_ann",
-    "incremental_minhash_near_dups",
-)
-
-#: staleness promise: every oracle-checkable query re-verified by the
-#: driver within this many rounds of its last green row.
-PROMISE_AGE = 4
-
-
-def _last(q: Query) -> int:
-    return LAST_CHECKED.get(q.name, 0)
-
-
-def _ordered(queries: list[Query]) -> list[Query]:
-    """Order the registry so the driver's fixed 50-row prefix IS the
-    verification policy.
-
-    Bands, in order:
-
-    1. sentinels — new-query waves can never crowd them out;
-    2. never-driver-green oracle-checkable queries, CAPPED at
-       :data:`NEVER_GREEN_CAP` per round (overflow re-queues directly
-       after the prefix, so it leads the next round);
-    3. previously-green oracle-checkable queries ascending last-green
-       round from the generated ``staleness.LAST_CHECKED`` table
-       (``tools/gen_staleness.py``; a red row does not advance a
-       query's round, so failures self-correct to the front);
-    4. ONE no-oracle query (the one with the oldest driver contact,
-       never-run first) takes the LAST prefix slot — but only when
-       granting it cannot push any oracle-checkable query past
-       :data:`PROMISE_AGE` + 1 rounds of staleness at the upcoming
-       round. The driver can only row-count these (``err:
-       no_oracle``), but rows>0-in-driver-env beats never-run; their
-       value checks live in full-result goldens
-       (``tests/test_goldens.py``) and the sf sweeps.
-    5. everything else (never-green overflow, fresher greens, the
-       remaining no-oracle queries) — outside the budget this round.
-
-    Registration order breaks ties everywhere (stable sort).
-    """
-    by_name = {q.name: q for q in queries}
-    sentinels = [by_name[n] for n in _SENTINELS if n in by_name]
-    rest = [q for q in queries if q.name not in _SENTINELS]
-    oracle = [q for q in rest if q.oracle is not None]
-    no_oracle = sorted(
-        (q for q in rest if q.oracle is None),
-        # the VERDICT r11 queue outranks even never-run newcomers:
-        # each round ships new golden-pinned queries at _last=0, so a
-        # plain oldest-first key would let them starve the r4 cohort
-        # indefinitely (kmeans took r10, semantic_dedup r11 that way)
-        key=lambda q: (
-            _NO_ORACLE_FIRST.index(q.name)
-            if q.name in _NO_ORACLE_FIRST
-            else len(_NO_ORACLE_FIRST),
-            _last(q),
-        ),
-    )
-    never = sorted(
-        (q for q in oracle if _last(q) == 0),
-        key=lambda q: (
-            _NEVER_GREEN_FIRST.index(q.name)
-            if q.name in _NEVER_GREEN_FIRST
-            else len(_NEVER_GREEN_FIRST)
-        ),
-    )
-    seen = sorted((q for q in oracle if _last(q) > 0), key=_last)
-    head_never, tail_never = never[:NEVER_GREEN_CAP], never[NEVER_GREEN_CAP:]
-
-    head = sentinels + head_never
-    slots = DRIVER_PREFIX - len(head)
-    # Trickle condition: the no-oracle slot displaces the
-    # (slots-1)+1-th stalest green; grant it only if every green that
-    # then misses the prefix is still within PROMISE_AGE+1 at the
-    # upcoming round (LATEST_ROUND+1).
-    upcoming = LATEST_ROUND + 1
-    displaced = seen[slots - 1 :] if slots >= 1 else seen
-    trickle_ok = bool(no_oracle) and all(
-        upcoming - _last(q) <= PROMISE_AGE + 1 for q in displaced
-    )
-    if trickle_ok:
-        prefix = head + seen[: slots - 1] + no_oracle[:1]
-        overflow = tail_never + seen[slots - 1 :] + no_oracle[1:]
-    else:
-        prefix = head + seen[:slots]
-        overflow = tail_never + seen[slots:] + no_oracle
-    return prefix + overflow
-
-
 def all_queries() -> dict[str, Query]:
-    """Import all query modules and return the full registry.
-
-    Ordered so the driver's prefix-limited correctness pass spends its
-    budget on the stalest driver rows — see :func:`_ordered` for the
-    banding policy.
-    """
+    """Import all query modules and return the full registry in
+    registration order: module order in :data:`_QUERY_MODULES`, then
+    decorator order within a module."""
     for mod in _QUERY_MODULES:
         importlib.import_module(mod)
-    return {q.name: q for q in _ordered(list(_REGISTRY.values()))}
+    rank = {mod: i for i, mod in enumerate(_QUERY_MODULES)}
+    # a module imported directly before the first call registers early;
+    # the stable sort restores module order and keeps decorator order
+    ordered = sorted(_REGISTRY.values(), key=lambda q: rank[q.build.__module__])
+    return {q.name: q for q in ordered}

@@ -50,6 +50,18 @@ def test_nonconvergence_guard(spark):
         )
 
 
+
+def test_last_rounds_reset_when_a_call_raises(spark):
+    connected_components(_edges(spark, [(1, 2), (2, 3), (3, 4)])).collect()
+    stale = connected_components.last_rounds
+    assert stale > 0
+    with pytest.raises(RuntimeError, match="converge"):
+        connected_components(
+            _edges(spark, [(i, i + 1) for i in range(8)]), max_iterations=1
+        )
+    assert connected_components.last_rounds != stale
+
+
 # ---- triangle_census (non-complete graphs the fixture never has) ----
 
 

@@ -21,74 +21,20 @@ def test_registry_nonempty_and_named():
         assert q.name == name and q.doc, name
 
 
-def test_driver_prefix_rotates_stalest_first():
-    """The driver verifies a 50-row prefix: sentinels must lead, then
-    at most NEVER_GREEN_CAP never-driver-green oracle-checkable
-    queries (a new-query wave cannot starve the rotation), then
-    oracle-checkable queries ascending last-green driver round; when
-    the trickle condition holds, exactly one no-oracle query (oldest
-    driver contact first) takes the final prefix slot so rows>0
-    evidence in the driver env accrues to the golden-pinned queries
-    too."""
-    from museum_image_etl_gridfs_spark.plans.registry import (
-        DRIVER_PREFIX,
-        NEVER_GREEN_CAP,
-        _SENTINELS,
-    )
-    from museum_image_etl_gridfs_spark.plans.staleness import LAST_CHECKED
+def test_registry_in_registration_order():
+    """Module order in ``_QUERY_MODULES``, then decorator order."""
+    import inspect
 
-    names = list(QUERIES)
-    assert names[: len(_SENTINELS)] == list(_SENTINELS) or set(
-        names[: len(_SENTINELS)]
-    ) == set(_SENTINELS)
-    prefix = names[:DRIVER_PREFIX]
-    body = prefix[len(_SENTINELS):]
-    # never-green cap: at most NEVER_GREEN_CAP rows with no prior green
-    # oracle-checkable round inside the prefix body (excluding the
-    # optional no-oracle trickle slot at the end)
-    oracle_body = [n for n in body if QUERIES[n].oracle is not None]
-    never = [n for n in oracle_body if LAST_CHECKED.get(n, 0) == 0]
-    assert len(never) <= NEVER_GREEN_CAP
-    # never-green rows lead the body
-    assert oracle_body[: len(never)] == never
-    # the rest ascend by last-green round (stalest first)
-    rounds = [LAST_CHECKED.get(n, 0) for n in oracle_body[len(never):]]
-    assert rounds == sorted(rounds)
-    # at most ONE no-oracle query in the prefix, and only in the last slot
-    trickle = [n for n in body if QUERIES[n].oracle is None]
-    assert len(trickle) <= 1
-    if trickle:
-        assert body[-1] == trickle[0]
-        # the trickle slot drains the explicit VERDICT queue first
-        # (each round ships new golden-pinned queries at last=0, so
-        # oldest-contact-first alone would starve the backlog), then
-        # falls back to oldest driver contact
-        from museum_image_etl_gridfs_spark.plans.registry import (
-            _NO_ORACLE_FIRST,
+    from museum_image_etl_gridfs_spark.plans.registry import _QUERY_MODULES
+
+    def key(q):
+        return (
+            _QUERY_MODULES.index(q.build.__module__),
+            inspect.getsourcelines(q.build)[1],
         )
 
-        queued = [n for n in _NO_ORACLE_FIRST if n in QUERIES]
-        if queued:
-            assert trickle[0] == queued[0]
-        else:
-            all_no_oracle = [
-                n for n in QUERIES if QUERIES[n].oracle is None
-            ]
-            oldest = min(
-                all_no_oracle, key=lambda n: LAST_CHECKED.get(n, 0)
-            )
-            assert LAST_CHECKED.get(trickle[0], 0) == LAST_CHECKED.get(
-                oldest, 0
-            )
-    # no oracle-checkable query outside the prefix is staler than any
-    # non-sentinel inside it (the rotation spends budget on the stalest)
-    outside = [
-        n
-        for n in names[DRIVER_PREFIX:]
-        if QUERIES[n].oracle is not None and LAST_CHECKED.get(n, 0) > 0
-    ]
-    if outside and rounds:
-        assert min(LAST_CHECKED[n] for n in outside) >= rounds[-1]
+    keys = [key(q) for q in QUERIES.values()]
+    assert keys == sorted(keys)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

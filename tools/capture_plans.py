@@ -2,10 +2,9 @@
 
 Usage:
     python tools/capture_plans.py --suffix before [--sf-dir DIR] name...
-(no names = the bench HEADLINE+HEAVY set)
 
-Plans are captured at the bench SF so PushedFilters / join strategies
-reflect what the bench actually runs. Queries whose builders run
+Plans are captured at sf0.1 by default so PushedFilters / join
+strategies reflect a realistic scale. Queries whose builders run
 construction-time Spark jobs (eager vocab rank etc.) execute those
 jobs here too — capture is plan-only otherwise (no noop sink).
 """
@@ -28,16 +27,13 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--suffix", required=True, help="before|after")
     ap.add_argument("--out-dir", default="plans/r12")
-    ap.add_argument("names", nargs="*")
+    ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    import bench
-
-    names = args.names or list(bench.HEADLINE + bench.HEAVY)
     os.makedirs(args.out_dir, exist_ok=True)
     spark = get_spark("capture_plans")
     qs = all_queries()
-    for name in names:
+    for name in args.names:
         try:
             df = qs[name].build(spark, args.sf_dir)
             txt = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001

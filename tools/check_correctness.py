@@ -1,12 +1,15 @@
-"""Local mimic of the driver's correctness gate.
+"""The repo's oracle correctness gate.
 
 Runs every registered query on Spark and its DuckDB oracle on the
 same parquet tables, then compares row count, normalized schema, and
-an order-insensitive value hash. Strictly harsher than necessary is
-fine — if this passes, the driver's comparison should too.
+an order-insensitive value hash. Queries without an oracle are run
+and row-counted only. ``--count-only`` compares exact row counts
+instead of values, for the pair-quadratic oracles at large scale
+factors. Exits non-zero when any query fails.
 
 Usage:
-    python tools/check_correctness.py [--sf-dir /root/testdata/sf0.01] [names...]
+    python tools/check_correctness.py [--sf-dir /root/testdata/sf0.01] \
+        [--count-only a,b] [--out results.json] [names...]
 """
 
 from __future__ import annotations
@@ -17,7 +20,6 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,49 +30,6 @@ from museum_image_etl_gridfs_spark.catalog import TABLES
 from museum_image_etl_gridfs_spark.operators.lifecycle import release_checkpoints
 from museum_image_etl_gridfs_spark.plans import all_queries
 from museum_image_etl_gridfs_spark.session import get_spark
-
-
-def _steal_cs() -> int:
-    """Hypervisor steal time (centiseconds, all CPUs) from /proc/stat."""
-    try:
-        return int(open("/proc/stat").readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return 0
-
-
-from museum_image_etl_gridfs_spark.hostmetrics import (  # noqa: E402
-    tree_cpu_s as _tree_cpu_s,
-)
-
-
-class _NoiseClock:
-    """Per-row co-tenant noise ledger (same fields as bench.py's):
-    steal centiseconds accrued over the row's wall window + loadavg at
-    row end. Lets a reader adjudicate a slow sweep row as contention
-    vs regression after the fact — the round-6 lesson (839 s vs 232 s
-    on identical data, unadjudicable without the ledger)."""
-
-    def start(self) -> None:
-        self._steal0, self._wall0 = _steal_cs(), time.time()
-        self._load0 = os.getloadavg()[0]
-        self._cpu0 = _tree_cpu_s()
-
-    def block(self) -> dict:
-        wall = time.time() - self._wall0
-        return {
-            "steal_cs": _steal_cs() - self._steal0,
-            "wall_s": round(wall, 1),
-            # loadavg at BOTH ends of the row: a contended middle is
-            # invisible to an end-only sample when the row's own last
-            # stage is narrow (the round-7 duplicated_spans lesson —
-            # 326 s contended row closed at loadavg 2.7)
-            "loadavg1_start": round(self._load0, 2),
-            "loadavg1": round(os.getloadavg()[0], 2),
-            # process-tree CPU burned by the row (driver + JVM +
-            # Python workers): contention-immune — compare across
-            # rounds where wall_s cannot be trusted
-            "task_cpu_s": round(_tree_cpu_s() - self._cpu0, 1),
-        }
 
 
 def duck_connection(sf_dir: str) -> "duckdb.DuckDBPyConnection":
@@ -125,171 +84,69 @@ def main() -> int:
         "(values hash-checked at sf0.01 as always; used at big SF where "
         "the pair-quadratic oracle output is tens of millions of rows)",
     )
-    ap.add_argument(
-        "--spark-only",
-        default="",
-        help="comma-separated names run Spark-side only (rows + engine "
-        "time; used where the oracle is intractable at this SF)",
-    )
-    ap.add_argument(
-        "--warm-dir",
-        default="/root/testdata/sf0.001",
-        help="fixture dir each query is built+materialized against ONCE "
-        "before its timed run, so spark_sec measures engine work rather "
-        "than first-run codegen/Arrow-init (the bench.py warm-up pattern; "
-        "rounds 1-8 repeatedly adjudicated 10-20s sweep rows that were "
-        "pure per-session compile — bm25 19.9s cold vs 0.9s warm). "
-        "Pass an empty string to disable (pre-r9 cold semantics).",
-    )
     args = ap.parse_args()
     count_only = {n for n in args.count_only.split(",") if n}
-    spark_only = {n for n in args.spark_only.split(",") if n}
 
     spark = get_spark("correctness-check")
     con = duck_connection(args.sf_dir)
     qs = all_queries()
     names = args.names or sorted(qs)
     failures, results = [], {}
-    clock = _NoiseClock()
 
-    def _warm(q) -> bool:
-        """Best-effort warm-up; returns whether it actually ran.
-
-        A missing warm fixture or a warm-build failure must not be
-        silent (ADVICE r8): every row records ``warmed`` so a cold
-        timing can never masquerade as a warmed one, and the failure
-        is reported to stderr (the timed run still reports any real
-        query failure itself).
-        """
-        if not args.warm_dir:
-            return False
-        try:
-            q.build(spark, args.warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return True
-        except Exception as e:  # noqa: BLE001 - warm-up is best-effort
-            print(
-                f"[warm-failed] {q.name}: {str(e)[:200]}", file=sys.stderr
-            )
-            return False
-        finally:
-            release_checkpoints(spark)
+    def fail(name: str, status: str, tag: str, e: Exception) -> None:
+        failures.append(name)
+        results[name] = {"status": status, "error": str(e)[:500]}
+        print(f"[{tag}] {name}: {str(e)[:300]}")
 
     for name in names:
         q = qs[name]
-        warmed = _warm(q)
-        clock.start()
-        t0 = time.time()
-        if name in spark_only:
-            try:
-                # time FULL materialization (noop sink), never count():
-                # count() lets Catalyst prune every projected column,
-                # so a narrow CPU-heavy query times as row counting —
-                # measured 1.28 s count vs 15 s materialized on
-                # lang_id at sf1 (r12 lesson; bench.py's docstring
-                # warned about exactly this). rows come from an
-                # untimed count afterwards.
-                df = q.build(spark, args.sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                spark_sec = round(time.time() - t0, 2)
-                rows = df.count()
-                results[name] = {
-                    "status": "SPARK_ONLY_OK",
-                    "rows": rows,
-                    "sec": spark_sec,
-                    "spark_sec": spark_sec,
-                    "noise": clock.block(),
-                    "warmed": warmed,
-                }
-                print(f"[spark-only] {name}: {rows} rows in {spark_sec}s")
-            except Exception as e:  # noqa: BLE001
-                failures.append(name)
-                results[name] = {"status": "SPARK_ERROR", "error": str(e)[:500]}
-                print(f"[FAIL-spark] {name}: {str(e)[:300]}")
-            release_checkpoints(spark)
-            continue
         if name in count_only:
             try:
                 rows = q.build(spark, args.sf_dir).count()
-                spark_sec = round(time.time() - t0, 2)
             except Exception as e:  # noqa: BLE001
-                failures.append(name)
-                results[name] = {"status": "SPARK_ERROR", "error": str(e)[:500]}
-                print(f"[FAIL-spark] {name}: {str(e)[:300]}")
-                release_checkpoints(spark)
+                fail(name, "SPARK_ERROR", "FAIL-spark", e)
                 continue
-            t_o = time.time()
+            finally:
+                release_checkpoints(spark)
             try:
                 o_rows = con.execute(
                     f"SELECT COUNT(*) FROM ({q.oracle})"
                 ).fetchone()[0]
             except Exception as e:  # noqa: BLE001
-                failures.append(name)
-                results[name] = {"status": "ORACLE_ERROR", "error": str(e)[:500]}
-                print(f"[FAIL-oracle] {name}: {str(e)[:300]}")
-                release_checkpoints(spark)
+                fail(name, "ORACLE_ERROR", "FAIL-oracle", e)
                 continue
             status = (
                 "COUNT_OK"
                 if rows == o_rows
                 else f"COUNT_MISMATCH spark={rows} oracle={o_rows}"
             )
-            results[name] = {
-                "status": status,
-                "rows": rows,
-                "sec": round(time.time() - t0, 2),
-                "spark_sec": spark_sec,
-                "oracle_sec": round(time.time() - t_o, 2),
-                "noise": clock.block(),
-                "warmed": warmed,
-            }
+            results[name] = {"status": status, "rows": rows}
             if status != "COUNT_OK":
                 failures.append(name)
                 print(f"[FAIL] {name}: {status}")
             else:
-                print(f"[count-ok] {name}: {rows} rows, spark {spark_sec}s")
-            release_checkpoints(spark)
+                print(f"[count-ok] {name}: {rows} rows")
             continue
         try:
             sdf = q.build(spark, args.sf_dir).toPandas()
         except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            results[name] = {"status": "SPARK_ERROR", "error": str(e)[:500]}
-            print(f"[FAIL-spark] {name}: {str(e)[:300]}")
-            release_checkpoints(spark)
+            fail(name, "SPARK_ERROR", "FAIL-spark", e)
             continue
-        # engine time vs oracle time recorded separately: the scaling
-        # gate (tools/bench_trend.py) judges the SPARK side; several
-        # oracles are documented quadratic (pareto NOT-EXISTS, pair
-        # joins) and would otherwise dominate "sec" at large SF.
-        spark_sec = round(time.time() - t0, 2)
-        release_checkpoints(spark)
+        finally:
+            release_checkpoints(spark)
         if q.oracle is None:
-            results[name] = {
-                "status": "ROWS_ONLY",
-                "rows": len(sdf),
-                "sec": spark_sec,
-                "spark_sec": spark_sec,
-                "noise": clock.block(),
-                "warmed": warmed,
-            }
+            results[name] = {"status": "ROWS_ONLY", "rows": len(sdf)}
             print(f"[rows-only] {name}: {len(sdf)} rows")
             continue
-        t_o = time.time()
         try:
             odf = con.execute(q.oracle).df()
         except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            results[name] = {"status": "ORACLE_ERROR", "error": str(e)[:500]}
-            print(f"[FAIL-oracle] {name}: {str(e)[:300]}")
+            fail(name, "ORACLE_ERROR", "FAIL-oracle", e)
             continue
         try:
             s_n, o_n = normalize(sdf), normalize(odf)
         except Exception as e:  # noqa: BLE001
-            failures.append(name)
-            results[name] = {"status": "NORMALIZE_ERROR", "error": str(e)[:500]}
-            print(f"[FAIL-norm] {name}: {str(e)[:300]}")
+            fail(name, "NORMALIZE_ERROR", "FAIL-norm", e)
             continue
         status = "OK"
         if list(s_n.columns) != list(o_n.columns):
@@ -301,20 +158,12 @@ def main() -> int:
             diff = s_n.compare(o_n) if s_n.shape == o_n.shape else None
             if diff is not None and not diff.empty:
                 print(diff.head(10))
-        results[name] = {
-            "status": status,
-            "rows": len(s_n),
-            "sec": round(time.time() - t0, 2),
-            "spark_sec": spark_sec,
-            "oracle_sec": round(time.time() - t_o, 2),
-            "noise": clock.block(),
-            "warmed": warmed,
-        }
+        results[name] = {"status": status, "rows": len(s_n)}
         if status != "OK":
             failures.append(name)
             print(f"[FAIL] {name}: {status}")
         else:
-            print(f"[ok] {name}: {len(s_n)} rows in {results[name]['sec']}s")
+            print(f"[ok] {name}: {len(s_n)} rows")
 
     print(json.dumps({"total": len(names), "failed": failures}))
     if args.out:
@@ -322,7 +171,6 @@ def main() -> int:
             json.dump(
                 {
                     "sf_dir": args.sf_dir,
-                    "warm_dir": args.warm_dir or None,
                     "total": len(names),
                     "failed": failures,
                     "results": results,
