@@ -27,6 +27,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType
 
 from ..partitioning import spread
 
@@ -85,11 +86,12 @@ def exact_dedup(df: DataFrame, columns: Sequence[str] | None = None) -> DataFram
 # ANSI overflow checking (Spark 4 default).
 _MERSENNE = (1 << 31) - 1
 
-#: ceiling (bytes, estimated as docs × (8·num_hashes + struct slack))
-#: under which the per-doc signature relation is BROADCAST into the
-#: post-candidate join instead of shuffle-joined. 64 MiB matches the
-#: session's autoBroadcastJoinThreshold; the checkpointed relation has
-#: no Catalyst stats, so the planner would never broadcast it unaided.
+#: ceiling (bytes, estimated as docs × (8·num_hashes + struct slack)
+#: plus the ids' bytes) under which the per-doc signature relation is
+#: BROADCAST into the post-candidate join instead of shuffle-joined.
+#: 64 MiB matches the session's autoBroadcastJoinThreshold; the
+#: checkpointed relation has no Catalyst stats, so the planner would
+#: never broadcast it unaided.
 _SIG_BROADCAST_MAX_BYTES = 64 << 20
 
 
@@ -349,6 +351,11 @@ def minhash_near_duplicates(
     candidate pairs are band-local so cost tracks true-duplicate
     density, not n^2.
 
+    Eager work at build time: ONE aggregate job over the checkpointed
+    sketch (row count and total id bytes). It materializes the lazy
+    checkpoint and sizes the signature relation for the broadcast gate
+    (``_SIG_BROADCAST_MAX_BYTES``).
+
     Sketching is CPU-bound, not IO-bound: parallelism must track
     cores, not input bytes. A small input (one parquet row group)
     would otherwise run the whole sketch on a single core — and AQE
@@ -475,12 +482,22 @@ def minhash_near_duplicates(
     # the band rows that survived the fp-collapse in a bucket with ≥2
     # distinct texts — usually a small fraction of the fan-out. The
     # per-doc sig relation reads the checkpoint (never re-sketches);
-    # it is broadcast when provably small (one cheap count over the
+    # it is broadcast when provably small (one cheap aggregate over the
     # checkpoint blocks — the size_gated_broadcast pattern), else a
     # shuffle join that still moves each signature once instead of
-    # ``bands`` times.
+    # ``bands`` times. The estimate counts the ids' own bytes: string
+    # and binary ids by their measured octet length, others by their
+    # fixed type width.
     sig_rel = sk.select("id", "sig")
-    sig_bytes = sk.count() * (num_hashes * 8 + 32)
+    id_dt = sk.schema["id"].dataType
+    if isinstance(id_dt, (StringType, BinaryType)):
+        id_bytes = F.sum(F.octet_length("id"))
+    else:
+        jvm_types = sk.sparkSession._jvm.org.apache.spark.sql.types  # noqa: SLF001
+        width = jvm_types.DataType.fromJson(id_dt.json()).defaultSize()
+        id_bytes = F.count(F.lit(1)) * width
+    n_docs, n_id_bytes = sk.agg(F.count(F.lit(1)), F.coalesce(id_bytes, F.lit(0))).first()
+    sig_bytes = n_docs * (num_hashes * 8 + 32) + n_id_bytes
     if sig_bytes <= _SIG_BROADCAST_MAX_BYTES:
         sig_rel = F.broadcast(sig_rel)
     kept = kept.join(sig_rel, "id")

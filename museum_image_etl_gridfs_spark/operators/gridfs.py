@@ -98,13 +98,23 @@ def reassemble(chunks: DataFrame) -> DataFrame:
     Sorts each group's (n, data) structs by n, then folds the binary
     pieces with concat — ``sort_array`` on collect_list avoids a
     per-group window sort; one shuffle on files_id.
+
+    ``data`` is NULL unless the group's sorted ordinals are exactly
+    ``0..k-1``: a missing, duplicated or out-of-range chunk never
+    reassembles into silently wrong bytes (a duplicate standing in for
+    a missing chunk would otherwise keep the length right).
     """
     return chunks.groupBy("files_id").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("n", "data"))),
-            F.lit(b""),
-            lambda acc, s: F.concat(acc, s["data"]),
-        ).alias("data")
+        F.sort_array(F.collect_list(F.struct("n", "data"))).alias("sorted")
+    ).select(
+        "files_id",
+        F.when(
+            F.transform("sorted", lambda s: s["n"])
+            == F.sequence(F.lit(0), F.size("sorted") - 1),
+            F.aggregate(
+                "sorted", F.lit(b""), lambda acc, s: F.concat(acc, s["data"])
+            ),
+        ).alias("data"),
     )
 
 
@@ -113,7 +123,11 @@ def reassemble_with_files(files: DataFrame, chunks: DataFrame) -> DataFrame:
 
     Joins the descriptor table to the reassembled blobs and flags
     rows whose byte length disagrees with the descriptor (corruption
-    check the reference never does).
+    check the reference never does). A file with chunks whose set is
+    not exactly ``n = 0..k-1`` reassembles to NULL ``data`` (see
+    :func:`reassemble`) and is flagged whatever its length; a file
+    with no chunks at all is ok only at length 0 (GridFS stores zero
+    chunks for an empty file).
     """
     blobs = reassemble(chunks)
     return (
@@ -121,8 +135,9 @@ def reassemble_with_files(files: DataFrame, chunks: DataFrame) -> DataFrame:
         .select(
             files["*"],
             blobs["data"],
-            (F.coalesce(F.length(blobs["data"]), F.lit(0)) == files["length"]).alias(
-                "length_ok"
-            ),
+            (
+                (F.coalesce(F.length(blobs["data"]), F.lit(0)) == files["length"])
+                & (blobs["files_id"].isNull() | blobs["data"].isNotNull())
+            ).alias("length_ok"),
         )
     )

@@ -157,6 +157,39 @@ def test_minhash_giant_identical_cluster_bounded(spark):
     assert all(r["id_a"] == rep or r["id_b"] == rep for r in rows)
 
 
+def test_minhash_sig_broadcast_gate_counts_id_bytes(spark, monkeypatch):
+    """The signature broadcast gate must count the ids' bytes. With
+    wide string ids and a ceiling between the id-blind estimate
+    (docs × (8·num_hashes + 32)) and the full one, the sig join must
+    carry no broadcast hint; the pairs are the same either way."""
+    from museum_image_etl_gridfs_spark.operators import dedup
+
+    n, num_hashes = 12, 32
+    docs = spark.createDataFrame(
+        [
+            (f"{i:04d}" + "x" * 2000, f"shared words in every doc number {i % 3} here")
+            for i in range(n)
+        ],
+        "doc_id string, text string",
+    )
+    kw = dict(k=2, num_hashes=num_hashes, bands=8, min_jaccard=0.5)
+
+    def hinted(pairs) -> bool:
+        plan = pairs._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+        return "strategy=broadcast" in plan
+
+    assert hinted(minhash_near_duplicates(docs, "doc_id", "text", **kw))
+    expected = sorted(
+        tuple(r) for r in minhash_near_duplicates(docs, "doc_id", "text", **kw).collect()
+    )
+    id_blind = n * (num_hashes * 8 + 32)
+    monkeypatch.setattr(dedup, "_SIG_BROADCAST_MAX_BYTES", id_blind)
+    pairs = minhash_near_duplicates(docs, "doc_id", "text", **kw)
+    assert not hinted(pairs)
+    assert sorted(tuple(r) for r in pairs.collect()) == expected
+    assert expected  # the docs do pair up
+
+
 def test_minhash_block_decomposition_is_exact(spark):
     """Sub-salting oversized buckets must be output-invariant: a
     bucket_cap small enough to force multi-chunk 2D blocking on every

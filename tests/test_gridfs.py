@@ -85,6 +85,43 @@ def test_reassemble_with_files_flags_length(spark):
     assert not joined_bad[0]["length_ok"]
 
 
+def test_chunk_sets_not_exactly_0_to_k_minus_1_never_reassemble(spark):
+    """A 3-chunk file whose sorted ordinals are not exactly 0..2 must
+    come back as NULL data and length_ok false — never as silently
+    wrong bytes. Chunk 0 standing in for a missing chunk 1 keeps the
+    byte length right, so the length check alone cannot catch it."""
+    blob = bytes(range(CHUNK * 2 + 8))  # chunks of 16, 16, 8 bytes
+    df = _blobs_df(spark, [blob])
+    files = file_descriptors(df, "id", "blob", chunk_size=CHUNK)
+    good = {r["n"]: bytes(r["data"]) for r in chunk_binary(df, "id", "blob", CHUNK).collect()}
+    assert sorted(good) == [0, 1, 2]
+    cases = {
+        "well_formed": [(0, good[0]), (1, good[1]), (2, good[2])],
+        "dup_for_missing": [(0, good[0]), (0, good[0]), (2, good[2])],
+        "missing": [(0, good[0]), (2, good[2])],
+        "duplicated": [(0, good[0]), (1, good[1]), (1, good[1]), (2, good[2])],
+        "out_of_range": [(0, good[0]), (1, good[1]), (3, good[2])],
+    }
+    for name, pieces in cases.items():
+        chunks = spark.createDataFrame(
+            [(0, n, d) for n, d in pieces], "files_id long, n int, data binary"
+        ).repartition(3)
+        (row,) = reassemble_with_files(files, chunks).collect()
+        if name == "well_formed":
+            assert bytes(row["data"]) == blob and row["length_ok"], name
+        else:
+            assert row["data"] is None and not row["length_ok"], name
+
+    # an empty file's single empty chunk, duplicated: NULL data is
+    # flagged even though the descriptor length (0) matches
+    empty = _blobs_df(spark, [b""])
+    one = chunk_binary(empty, "id", "blob", CHUNK)
+    dup = one.unionAll(one)
+    files = file_descriptors(empty, "id", "blob", chunk_size=CHUNK)
+    (row,) = reassemble_with_files(files, dup).collect()
+    assert row["data"] is None and not row["length_ok"]
+
+
 def test_default_255kb_chunks_with_megabyte_blobs(spark):
     """Realistic layout: the GridFS default 261120-byte chunk size
     against MB-scale blobs (the reference's raw images are 0.3-1 MB,
