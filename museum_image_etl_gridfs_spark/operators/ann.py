@@ -135,8 +135,8 @@ def cosine_pairs_blocked(
     a fixed block count that was fine at one SF turns into multi-GB
     per-task matrices at 3× (measured 417 s at sf3 with the old
     fixed 8; the count is one cheap column-pruned job at build time —
-    the same build-time-measurement precedent as the simjoin's
-    occurrence-derived partition count). Callers that must stay LAZY
+    the same build-time measurement as :func:`jaccard_pairs_blocked`'s
+    sub-block count). Callers that must stay LAZY
     at plan-construction time (explain-only plan audits) pass
     ``n_blocks`` explicitly — that parameter IS the
     precomputed-count path and skips the build-time job. Total work stays O(n²), as
@@ -253,11 +253,14 @@ def jaccard_pairs_blocked(
     tokens_col: str,
     block_col: str | None = None,
     threshold: float = 0.5,
+    new_col: str | None = None,
     n_sub_blocks: int | None = None,
     target_sub_rows: int = 2048,
 ) -> DataFrame:
     """All-pairs exact token-set Jaccard ≥ threshold, block-matrix
-    style (same shape as :func:`cosine_pairs_blocked`).
+    style (same shape as :func:`cosine_pairs_blocked`). The engine's
+    one exact Jaccard-threshold join: every exact near-dup pair query
+    runs through it.
 
     Each (block, sub-block) packs into one row; block-local sub-block
     pairs cross-join; per pair numpy builds incidence matrices over
@@ -290,6 +293,15 @@ def jaccard_pairs_blocked(
     time; callers that must stay lazy (explain-only plan audits) pass
     ``n_sub_blocks`` explicitly — that parameter IS the
     precomputed-count path.
+
+    ``new_col`` (boolean column; NULL counts as old) switches on
+    INCREMENTAL mode — "dedup today's batch against the standing
+    corpus": only pairs with at least one NEW member are returned, and
+    the result equals the full join filtered to those pairs. New and
+    old rows pack into separate cells (``new`` is part of the packing
+    key) and the cell-pair join drops old x old cells, so the standing
+    corpus is never re-paired with itself and those cells never reach
+    the matmul.
     """
     if threshold <= 0:
         raise ValueError("jaccard_pairs_blocked: threshold must be > 0")
@@ -306,16 +318,29 @@ def jaccard_pairs_blocked(
         n_sub_blocks = _sub_blocks_for(
             mx or 0, nk or 1, para, target_sub_rows
         )
+    new = (
+        F.coalesce(F.col(new_col).cast("boolean"), F.lit(False))
+        if new_col
+        else F.lit(False)
+    )
     packed = (
         docs.select(
             F.col(id_col).alias("id"),
             F.array_distinct(F.col(tokens_col)).alias("ts"),
             blk.alias("blk"),
+            new.alias("new"),
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub_blocks)).alias("sub"),
         )
-        .groupBy("blk", "sub")
+        .groupBy("blk", "new", "sub")
         .agg(F.collect_list(F.struct("id", "ts")).alias("ms"))
     )
+    # Cells are ordered by (new, sub), so each unordered cell pair
+    # joins once and a cell pairs with itself on the diagonal.
+    cell_a = F.struct(F.col("a.new"), F.col("a.sub"))
+    cell_b = F.struct(F.col("b.new"), F.col("b.sub"))
+    cond = (F.col("a.blk") == F.col("b.blk")) & (cell_a <= cell_b)
+    if new_col:
+        cond = cond & (F.col("a.new") | F.col("b.new"))
     # Round-robin the O(blocks × sub²) pair rows across cores: the
     # join's output inherits hash-partitioning on blk (a handful of
     # sources), so without this the CPU-bound matmul stage runs
@@ -325,12 +350,9 @@ def jaccard_pairs_blocked(
     para = docs.sparkSession.sparkContext.defaultParallelism
     pairs = (
         packed.alias("a")
-        .join(
-            packed.alias("b"),
-            (F.col("a.blk") == F.col("b.blk")) & (F.col("a.sub") <= F.col("b.sub")),
-        )
+        .join(packed.alias("b"), cond)
         .select(
-            (F.col("a.sub") == F.col("b.sub")).alias("diag"),
+            (cell_a == cell_b).alias("diag"),
             F.col("a.ms").alias("ms_a"),
             F.col("b.ms").alias("ms_b"),
         )
@@ -428,7 +450,7 @@ def _jaccard_score_fn(threshold: float, id_np: str):
                     # silently drop or duplicate pairs under
                     # permutation. Id masking keeps the output
                     # duplicate-free BY CONSTRUCTION (every doc lives
-                    # in exactly one (block, sub)) with no
+                    # in exactly one (block, new, sub)) with no
                     # dropDuplicates — a full shuffle of the
                     # output-quadratic pair stream (10 GB at sf3).
                     jac = np.where(aid[:, None] < bid[None, :], jac, 0.0)

@@ -283,7 +283,7 @@ def minhash_near_duplicates(
     """Near-duplicate pairs via MinHash + LSH banding.
 
     ``new_col`` (boolean column) switches on INCREMENTAL mode — the
-    approximate twin of ``simjoin.prefix_filter_jaccard_join``'s
+    approximate twin of ``ann.jaccard_pairs_blocked``'s
     ``new_col``: only pairs with at least one NEW member are emitted,
     and the result equals the full output filtered to those pairs
     (``tests/test_dedup.py`` pins that equivalence). Plan-level, not a

@@ -92,8 +92,8 @@ def bytes_sized_partitions(
     holds ~``_TARGET_BATCH_BYTES`` of estimated OUTPUT blobs, floored
     at defaultParallelism so small inputs still use every core. The
     row count is the caller's (one metadata-cheap ``count()`` on the
-    pruned scan — the same documented eager pattern as the simjoin's
-    occurrence probe)."""
+    pruned scan — the same documented eager pattern as
+    ``jaccard_pairs_blocked``'s sub-block probe)."""
     cores = df.sparkSession.sparkContext.defaultParallelism
     return max(cores, -(-int(n_rows) * int(est_row_bytes) // _TARGET_BATCH_BYTES))
 

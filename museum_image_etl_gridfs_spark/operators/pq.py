@@ -322,7 +322,7 @@ def ivfpq_topk(
     # re-ran the whole upstream chain — corpus scan, 16-way centroid
     # broadcast join, per-vector row_number window, interpreted
     # zip_with residual — 7-8 times per build. Same storage contract
-    # as the simjoin groups checkpoint (caller releases via
+    # as every tracked checkpoint (caller releases via
     # lifecycle.release_checkpoints).
     from .lifecycle import tracked_local_checkpoint
 

@@ -21,26 +21,26 @@ All operators here share one machinery:
 4. global value = bucket offset + local value.
 
 Every stage is n/p per task. Heavy-tailed lead keys are handled
-explicitly: a lead VALUE whose mass exceeds one bucket (Zipf token
-frequencies — e.g. the simjoin vocabulary where almost every token
-has document frequency 1 — or a dominant price point) is detected
-from repeated split points and SUB-BUCKETED by a monotone numeric
+explicitly: a lead VALUE whose mass exceeds one bucket (a dominant
+price point, a customer with most of the orders) is detected from
+repeated split points and SUB-BUCKETED by a monotone numeric
 encoding of the SECOND sort key, so no single value can pin the
 within-bucket sort to one task. Bucket membership stays exact; ties
-that survive sub-bucketing (no second key, or identical encodings)
-share a bucket and are ordered by the window's full key list.
+that survive sub-bucketing (no second key, a second key without a
+monotone encoding such as a string, or identical encodings) share a
+bucket and are ordered by the window's full key list.
 """
 
 from __future__ import annotations
 
 import math
-import os
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..partitioning import plan_size_bytes
 from .lifecycle import tracked_local_checkpoint
 
 
@@ -50,10 +50,8 @@ def _monotone_double(df: DataFrame, key: str) -> Column | None:
     Used ONLY to sub-bucket rows that tie on the lead key — ties
     within the encoding stay in one bucket and are ordered by the
     window's full key list, so the encoding never has to be
-    injective, only (weakly) order-preserving. Strings go through
-    :func:`_string_enc_col` instead (they need the hot group's common
-    prefix stripped first). Returns ``None`` for types without a
-    cheap monotone encoding.
+    injective, only (weakly) order-preserving. Returns ``None`` for
+    types without a cheap monotone encoding (strings among them).
     """
     dt = df.schema[key].dataType
     c = F.col(key)
@@ -66,35 +64,6 @@ def _monotone_double(df: DataFrame, key: str) -> Column | None:
     if isinstance(dt, T.DateType):
         return c.cast("timestamp").cast("double")
     return None
-
-
-#: 2^48 — the exact scale combining two 48-bit words into one double
-_W48 = float(1 << 48)
-
-
-def _string_enc_col(key: str, skip: int) -> Column:
-    """Double encoding of a string column, weakly monotone in Spark's
-    binary (UTF-8 byte) collation: big-endian value of UTF-8 bytes
-    ``skip*chars .. +12 bytes``, as ``hi*2^48 + lo`` (each word is an
-    exact 48-bit integer; the one rounded add is order-preserving —
-    rounding a monotone sequence to nearest keeps it weakly monotone).
-
-    ``skip`` drops the hot group's common prefix (character count),
-    computed by the caller from the group's min/max — a vocabulary
-    where every token shares a long prefix (URLs, "tok_000…") would
-    otherwise encode to one constant. 12 chars always cover the first
-    12 bytes of the remainder; rpad both zero-pads short remainders
-    and truncates long ones to 24 hex digits (12 bytes).
-    """
-    hexs = F.rpad(
-        F.hex(F.encode(F.substring(F.col(key), skip + 1, 12), "UTF-8")),
-        24,
-        "0",
-    )
-    return (
-        F.conv(F.substring(hexs, 1, 12), 16, 10).cast("double") * F.lit(_W48)
-        + F.conv(F.substring(hexs, 13, 12), 16, 10).cast("double")
-    )
 
 
 def _with_range_pid(
@@ -118,9 +87,9 @@ def _with_range_pid(
       a monotone double encoding of the second sort key into
       ``ceil(count * nb / n)`` sub-buckets. Sub-splitting is skipped
       (one bucket, exact but unbalanced) when there is no second key,
-      the second key has NULL/NaN or a constant encoding, or two
-      distinct lead values collide in double space — each a documented
-      degenerate tie.
+      the second key has no monotone encoding (strings), NULL/NaN or
+      a constant encoding, or two distinct lead values collide in
+      double space — each a documented degenerate tie.
 
     Returns ``None`` for an empty input. Raises on NULL/NaN lead keys
     — engines disagree on their ordering (Spark NULLS FIRST vs DuckDB
@@ -180,95 +149,54 @@ def _with_range_pid(
 
     # per-hot-value stats decide whether a hot value can be sub-split
     # by the second key (0 extra jobs for smooth keys — `hots` is
-    # empty whenever no single value fills a bucket)
-    sub: dict[float, tuple[int, Column]] = {}  # hot -> (k, branch expr)
-    if hots:
-        second = order_keys[1] if len(order_keys) > 1 else None
-        is_str = second is not None and isinstance(
-            df.schema[second].dataType, T.StringType
-        )
-        enc2 = (
-            _monotone_double(df, second)
-            if second is not None and not is_str
-            else None
-        )
-        aggs = [
-            F.count(F.lit(1)).alias("cnt"),
-            F.min(lead).alias("vmin"),
-            F.max(lead).alias("vmax"),
-        ]
-        if second is not None:
-            aggs.append(
-                (F.count(F.lit(1)) - F.count(second)).alias("enull")
-            )
-        if is_str:
-            aggs += [F.min(second).alias("smin"), F.max(second).alias("smax")]
-        elif enc2 is not None:
-            aggs += [
+    # empty whenever no single value fills a bucket — and for second
+    # keys without a monotone encoding)
+    sub: dict[float, tuple[int, Column]] = {h: (1, F.lit(1)) for h in hots}
+    second = order_keys[1] if len(order_keys) > 1 else None
+    enc2 = _monotone_double(df, second) if second is not None else None
+    if hots and enc2 is not None:
+        enc_k: dict[float, int] = {}  # hot -> target sub-bucket count
+        for r in (
+            df.filter(leadd.isin(hots))
+            .groupBy(leadd.alias("__h"))
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.min(lead).alias("vmin"),
+                F.max(lead).alias("vmax"),
+                (F.count(F.lit(1)) - F.count(second)).alias("enull"),
                 F.min(enc2).alias("emin"),
                 F.max(enc2).alias("emax"),
                 F.count(F.when(F.isnan(enc2), 1)).alias("enan"),
-            ]
-        enc_of: dict[float, tuple[int, Column]] = {}  # hot -> (k, enc expr)
-        for r in (
-            df.filter(leadd.isin(hots)).groupBy(leadd.alias("__h")).agg(*aggs)
+            )
         ).collect():
-            h = float(r["__h"])
-            sub[h] = (1, F.lit(1))
             k = min(math.ceil(r["cnt"] * nb / max(n, 1)), nb)
             # two distinct lead values collapsing to one double may NOT
             # be interleaved by the second key (lead order wins) — keep
-            # a collapsed group in a single bucket; likewise NULL
-            # second keys (engines disagree on NULL order)
-            splittable = (
+            # a collapsed group in a single bucket; likewise NULL/NaN
+            # second keys (engines disagree on their order)
+            if (
                 k > 1
-                and second is not None
                 and r["vmin"] == r["vmax"]
                 and not r["enull"]
-            )
-            if splittable and is_str and r["smin"] != r["smax"]:
-                # drop the group's common prefix so near-identical
-                # vocabularies ("tok_000001"…, URL corpora) still vary
-                # within the encoding's 12-byte window
-                smin, smax = r["smin"], r["smax"]
-                lcp = 0
-                while (
-                    lcp < min(len(smin), len(smax))
-                    and smin[lcp] == smax[lcp]
-                ):
-                    lcp += 1
-                enc_of[h] = (k, _string_enc_col(second, lcp))
-            elif (
-                splittable
-                and enc2 is not None
                 and not r["enan"]
                 and r["emin"] is not None
                 and r["emin"] != r["emax"]
             ):
-                enc_of[h] = (k, enc2)
-        if enc_of:
+                enc_k[float(r["__h"])] = k
+        if enc_k:
             # COUNT-BALANCED sub-split points: per-group approx
             # quantiles of the encoding (equal-width bucketing fails on
-            # clustered encodings — digit strings pile 90% of rows into
-            # the first stripe of the byte range). One job for ALL
-            # groups: a CASE expression selects each group's encoding.
-            kmax = max(k for k, _ in enc_of.values())
-            enc_case: Column | None = None
-            for h, (_, e) in enc_of.items():
-                enc_case = (
-                    F.when(leadd == F.lit(h), e)
-                    if enc_case is None
-                    else enc_case.when(leadd == F.lit(h), e)
-                )
+            # clustered encodings). One job for ALL groups.
+            kmax = max(enc_k.values())
             probs = [i / kmax for i in range(1, kmax)]
             qrows = (
-                df.filter(leadd.isin(list(enc_of)))
+                df.filter(leadd.isin(list(enc_k)))
                 .groupBy(leadd.alias("__h"))
-                .agg(F.percentile_approx(enc_case, probs, 10000).alias("qs"))
+                .agg(F.percentile_approx(enc2, probs, 10000).alias("qs"))
             ).collect()
             for r in qrows:
                 h = float(r["__h"])
-                k, e = enc_of[h]
+                k = enc_k[h]
                 # keep ~k of the kmax-grid points (dedup handles
                 # encoding ties); membership below is `point < enc`,
                 # a pure function of the row once embedded
@@ -279,7 +207,7 @@ def _with_range_pid(
                 arr = F.array(*[F.lit(p) for p in pts])
                 sub[h] = (
                     len(pts) + 1,
-                    F.size(F.filter(arr, lambda p: p < e)) + 1,
+                    F.size(F.filter(arr, lambda p: p < enc2)) + 1,
                 )
 
     # stratum: 2*(# hot values below) + 1 if ON a hot value — strictly
@@ -794,24 +722,7 @@ def grouped_rank_stats(
 #: quantities). The machinery is the escape hatch for CONTINUOUS
 #: value domains at corpus scale, where that map degenerates to
 #: O(rows)/group.
-PCTL_BUFFER_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PCTL_BUFFER_MAX_BYTES", str(4 << 30))
-)
-
-
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate — plan-time, no job."""
-    try:
-        return int(
-            str(
-                df._jdf.queryExecution()  # noqa: SLF001
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    except Exception:
-        return None
+PCTL_BUFFER_MAX_BYTES = 4 << 30
 
 
 def grouped_percentiles_auto(
@@ -833,12 +744,24 @@ def grouped_percentiles_auto(
     interpolation arithmetic term for term, pinned against
     ``F.percentile`` itself in tests/test_quantiles.py — so the gate
     can never move a query's oracle hash.
+
+    NULL values are skipped on both sides (a group with no non-NULL
+    value gets NULL percentiles); a NaN value fails the query on both
+    sides with the same message — NaN has no order the engines agree
+    on.
     """
     if len(ps) != len(out_cols) or not ps:
         raise ValueError(
             "grouped_percentiles_auto: |ps| must equal |out_cols| >= 1"
         )
-    est = _plan_size_bytes(df)
+    est = plan_size_bytes(df)
+    if isinstance(df.schema[value_col].dataType, (T.FloatType, T.DoubleType)):
+        v = F.col(value_col)
+        nan_msg = f"NaN in value column {value_col!r}: it has no agreed order"
+        df = df.withColumn(
+            value_col,
+            F.when(F.isnan(v), F.raise_error(F.lit(nan_msg))).otherwise(v),
+        )
     if est is not None and est <= PCTL_BUFFER_MAX_BYTES:
         return df.groupBy(*group_keys).agg(
             *[
@@ -846,14 +769,25 @@ def grouped_percentiles_auto(
                 for p, o in zip(ps, out_cols)
             ]
         )
-    return grouped_exact_percentiles(
-        df,
+    out = grouped_exact_percentiles(
+        df.filter(F.col(value_col).isNotNull()),
         group_keys,
         value_col,
         ps,
         out_cols=out_cols,
         buckets_per_core=buckets_per_core,
     )
+    if not group_keys:
+        return out
+    all_null = (
+        df.groupBy(*group_keys)
+        .agg(F.count(value_col).alias("__nv"))
+        .filter(F.col("__nv") == 0)
+        .select(
+            *group_keys, *[F.lit(None).cast("double").alias(o) for o in out_cols]
+        )
+    )
+    return out.unionByName(all_null)
 
 
 def grouped_exact_percentiles(

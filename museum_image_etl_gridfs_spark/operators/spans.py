@@ -63,11 +63,11 @@ of the training-data-pipeline extension surface.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..partitioning import plan_size_bytes
 
 #: input-size ceiling (bytes, est. from the source's optimized-plan
 #: stats) under which :func:`duplicated_spans` materializes the gram
@@ -76,11 +76,8 @@ from pyspark.sql.window import Window
 #: corpus-sized storage — so the checkpoint is a win exactly while the
 #: executors can hold it (MEMORY_AND_DISK); past the gate the operator
 #: keeps the two-pass shape, whose second scan is linear and
-#: spill-free (the documented 100 TB trade). Env-overridable so a
-#: cluster with real aggregate storage can raise it.
-_INV_CKPT_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_INV_CKPT_MAX_BYTES", str(8 << 30))
-)
+#: spill-free (the documented 100 TB trade).
+_INV_CKPT_MAX_BYTES = 8 << 30
 
 
 def _maybe_checkpoint_inventory(src: DataFrame, occ: DataFrame) -> DataFrame:
@@ -95,18 +92,8 @@ def _maybe_checkpoint_inventory(src: DataFrame, occ: DataFrame) -> DataFrame:
     and the caller's two-pass plan stands. The gate reads the SOURCE
     relation's Catalyst size estimate — plan-time, no extra job.
     """
-    try:
-        est = int(
-            str(
-                src._jdf.queryExecution()  # noqa: SLF001
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    except Exception:  # stats unavailable — keep the safe two-pass shape
-        return occ
-    if est > _INV_CKPT_MAX_BYTES:
+    est = plan_size_bytes(src)
+    if est is None or est > _INV_CKPT_MAX_BYTES:  # None: no stats
         return occ
     from .lifecycle import tracked_local_checkpoint
 

@@ -47,6 +47,22 @@ def spread(
     return df.repartition(target)
 
 
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's optimized-plan size estimate in bytes — plan-time, no
+    job; ``None`` when the plan has no statistics."""
+    try:
+        return int(
+            str(
+                df._jdf.queryExecution()  # noqa: SLF001
+                .optimizedPlan()
+                .stats()
+                .sizeInBytes()
+            )
+        )
+    except Exception:
+        return None
+
+
 #: default row ceiling for :func:`size_gated_broadcast` — ~2M small
 #: rows (a (term, count) pair is tens of bytes) keeps the broadcast
 #: well under typical executor budgets while covering every real

@@ -40,56 +40,6 @@ def exact_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ngram_jaccard_pairs",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, source,
-               list_distinct(regexp_split_to_array(trim(lower(coalesce(text,''))), '\\s+')) AS ts
-        FROM documents
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CASE WHEN len(list_distinct(list_concat(a.ts, b.ts))) = 0 THEN CAST(0.0 AS DOUBLE)
-                ELSE len(list_intersect(a.ts, b.ts))
-                     / len(list_distinct(list_concat(a.ts, b.ts))) END AS jaccard
-    FROM toks a JOIN toks b
-      ON a.source = b.source AND a.doc_id < b.doc_id
-    WHERE len(list_intersect(a.ts, b.ts))
-          / len(list_distinct(list_concat(a.ts, b.ts))) >= 0.5
-    """,
-    tags=("dedup", "similarity", "extension"),
-)
-def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact token-set Jaccard over same-source pairs — the
-    exact-verification stage that follows LSH candidate generation in
-    a production near-dup pipeline.
-
-    Executed block-matrix style (operators/ann.py::
-    jaccard_pairs_blocked): blocking on ``source`` bounds the pair
-    space exactly like the SQL join; sub-blocking by id hash restores
-    parallelism beyond the handful of sources; intersection counts
-    come from one integer matmul per block pair instead of millions
-    of interpreted array_intersect calls (~10x at sf0.1).
-    """
-    from ..operators.ann import jaccard_pairs_blocked
-
-    docs = load(spark, "documents", sf_dir)
-    toks = docs.select(
-        "doc_id",
-        "source",
-        F.split(
-            F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+"
-        ).alias("ts"),
-    )
-    return jaccard_pairs_blocked(
-        toks,
-        id_col="doc_id",
-        tokens_col="ts",
-        block_col="source",
-        threshold=0.5,
-    )
-
-
 @query("minhash_near_dups", oracle=None, tags=("dedup", "lsh", "extension"))
 def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-duplicate candidate pairs (rows-only check:

@@ -112,8 +112,8 @@ def image_etl_gridfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, "documents", sf_dir).select("doc_id")
     # eager O(1)-result row-count probe (metadata-cheap on parquet) —
-    # the byte-sizing input; same documented eager pattern as the
-    # simjoin's occurrence probe
+    # the byte-sizing input; same documented eager pattern as
+    # jaccard_pairs_blocked's sub-block probe
     out_blob = 224 * 224 * 3 + _HEADER
     nparts = bytes_sized_partitions(docs, docs.count(), out_blob)
     imgs = synthesize_images(

