@@ -76,9 +76,3 @@ def load(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_events_ts(spark.read.parquet(path))
     return spark.read.parquet(path)
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name in TABLES:
-        load(spark, name, sf_dir).createOrReplaceTempView(name)

@@ -142,25 +142,6 @@ def shingle_hashes(shingle_col) -> "F.Column":
     return F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
 
 
-def minhash_signature(hash_col, num_hashes: int = 64, seed: int = 42) -> "F.Column":
-    """MinHash signature array<long> over pre-hashed shingles.
-
-    sig_i = min over shingles of (a_i * h + b_i) mod p — cheap affine
-    passes over an already-hashed long array; a*h+b stays < 2^62 so
-    ANSI int64 arithmetic cannot overflow.
-    """
-    coeffs = _rand_coeffs(num_hashes, seed)
-
-    def affine(a: int, b: int):
-        # factory so the Column lambda keeps a 1-arg signature
-        # (PySpark maps lambda arity onto HOF arity)
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE)
-
-    return F.array(
-        *[F.array_min(F.transform(hash_col, affine(a, b))) for a, b in coeffs]
-    )
-
-
 def _minhash_doc_rows(
     id_field, k: int, num_hashes: int, bands: int, seed: int,
     with_new: bool = False,

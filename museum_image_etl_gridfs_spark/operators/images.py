@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import struct
 from collections.abc import Iterator
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -169,15 +168,6 @@ class PILCodec:
 
         Image = PILCodec._pil()
         return np.asarray(Image.fromarray(arr).resize(size))
-
-
-@dataclass(frozen=True)
-class ImageMeta:
-    """Typed metadata carried alongside the opaque binary column."""
-
-    width_col: str = "width"
-    height_col: str = "height"
-    format_col: str = "format"
 
 
 def synthesize_images(

@@ -27,13 +27,14 @@ VAL_CUT = 80
 
 
 def split_label(key: Column | str, seed: int = 42) -> Column:
-    """'train' | 'validation' | 'test' from an integer row key."""
+    """'train' | 'validation' | 'test' from an integer row key; NULL
+    for a NULL key (a row with no key belongs to no split)."""
     c = F.col(key) if isinstance(key, str) else key
     bucket = portable_bucket(c + F.lit(seed), 100)
     return (
         F.when(bucket < TRAIN_CUT, F.lit("train"))
         .when(bucket < VAL_CUT, F.lit("validation"))
-        .otherwise(F.lit("test"))
+        .when(bucket.isNotNull(), F.lit("test"))
     )
 
 
@@ -42,7 +43,8 @@ def split_label_sql(key_sql: str, seed: int = 42) -> str:
     bucket = portable_bucket_sql(f"({key_sql}) + {seed}", 100)
     return (
         f"CASE WHEN {bucket} < {TRAIN_CUT} THEN 'train' "
-        f"WHEN {bucket} < {VAL_CUT} THEN 'validation' ELSE 'test' END"
+        f"WHEN {bucket} < {VAL_CUT} THEN 'validation' "
+        f"WHEN {bucket} IS NOT NULL THEN 'test' END"
     )
 
 

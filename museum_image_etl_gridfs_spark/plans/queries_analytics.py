@@ -2,20 +2,12 @@
 the earlier families, each with an exact DuckDB oracle.
 
 - sketch/geometry: count-min heavy hitters, distributed SFS skyline
-- stats/ML: distributed OLS (sufficient statistics), A/B z-test,
-  time-decay features, int8 quantization audit, item-item CF cosine,
-  iterative PageRank
-- temporal: argmin/argmax OHLC (batch + streaming), sweep-line peak
-  concurrency
-- integrity: order-insensitive table checksums, blocked fuzzy entity
-  resolution
-- engine surfaces, driver-verified: grouped-agg pandas UDAF, python
-  UDTF via LATERAL, grouped-map applyInPandas, SQL-API windows,
-  INTERSECT, percent_rank/cume_dist/nth_value, partitioned parquet
-  sink round-trip, foreachBatch MERGE sink round-trip, the
-  format("museum_api") Python DataSource and the batch-HTTP/binary
-  fetch pipelines on their hermetic transports, stream-stream LEFT
-  OUTER interval join
+- graph: iterative PageRank
+- temporal: argmin/argmax OHLC (batch + streaming)
+- engine surfaces, driver-verified: percent_rank/cume_dist/nth_value,
+  foreachBatch MERGE sink round-trip, the format("museum_api") Python
+  DataSource and the batch-HTTP/binary fetch pipelines on their
+  hermetic transports, stream-stream LEFT OUTER interval join
 
 The reference (a 501-LoC pymongo ETL) has none of these; they
 complete the large-scale training-data/analytics surface the task
@@ -104,130 +96,6 @@ def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "udaf_quantity_stats",
-    oracle="""
-    SELECT l_returnflag,
-           CAST(SUM(l_quantity) AS DOUBLE) AS total_qty,
-           MAX(l_extendedprice) AS max_price,
-           CAST(COUNT(*) AS BIGINT) AS n_items
-    FROM lineitem
-    GROUP BY l_returnflag
-    """,
-    tags=("udaf", "pandas_udf", "agg"),
-)
-def udaf_quantity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.10 UDAF surface: grouped-agg ``pandas_udf``
-    aggregation (Arrow series in, scalar out) — Spark's user-defined
-    aggregate path, planned as ``AggregateInPandas``.
-
-    Chosen stats are order-independent AND bit-exact cross-engine
-    (integer-valued doubles sum exactly in float64; max/count are
-    exact), so the Python aggregation hash-matches the SQL oracle.
-    Built-ins would beat this in production — the query exists to
-    exercise and pin the UDAF path, the escape hatch for aggregates
-    Spark lacks (the partial-less single-stage shape is the cost:
-    grouped-agg pandas UDFs shuffle raw rows, not partials).
-    """
-    # explicit GROUPED_AGG functionType: this module uses PEP-563
-    # string annotations, which pandas_udf cannot infer types from
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def total_qty(q):
-        return float(q.sum())
-
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def max_price(p):
-        return float(p.max())
-
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def n_items(q):
-        return len(q)
-
-    li = load(spark, "lineitem", sf_dir)
-    return li.groupBy("l_returnflag").agg(
-        total_qty("l_quantity").alias("total_qty"),
-        max_price("l_extendedprice").alias("max_price"),
-        n_items("l_quantity").alias("n_items"),
-    )
-
-
-def _sql_row_hash(concat_expr: str) -> str:
-    """DuckDB rendering of the portable row hash: first 8 hex digits
-    of md5 folded to a BIGINT (mirrors Spark's conv(...,16,10))."""
-    return (
-        "list_reduce(list_prepend(0::BIGINT, "
-        f"list_transform(regexp_split_to_array(substr(md5({concat_expr}), 1, 8"
-        "), ''), c -> (strpos('0123456789abcdef', c) - 1)::BIGINT)), "
-        "(h, c) -> h * 16 + c)"
-    )
-
-
-def _spark_row_hash(*cols: str):
-    """Spark side of the portable row hash (pure JVM expressions)."""
-    return F.conv(
-        F.substring(F.md5(F.concat_ws("|", *cols)), 1, 8), 16, 10
-    ).cast("long")
-
-
-_CHECKSUM_TABLES = {
-    "orders": ("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"),
-    "customer": ("c_custkey", "c_name", "c_mktsegment"),
-    "part": ("p_partkey", "p_name", "p_brand", "p_type"),
-}
-
-_CHECKSUM_ORACLE = "\nUNION ALL\n".join(
-    f"""
-    SELECT '{tbl}' AS tbl, CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum({_sql_row_hash(
-               "concat_ws('|', " + ", ".join(
-                   f"CAST({c} AS VARCHAR)" for c in cols
-               ) + ")"
-           )}) AS BIGINT) AS checksum
-    FROM {tbl}
-    """
-    for tbl, cols in _CHECKSUM_TABLES.items()
-)
-
-
-@query(
-    "table_checksums",
-    oracle=_CHECKSUM_ORACLE,
-    tags=("fingerprint", "integrity", "agg"),
-)
-def table_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-insensitive table fingerprints: per table, row count plus
-    the sum of per-row md5-fold hashes over identity columns.
-
-    The data-engineering primitive behind replication diffing and
-    incremental-load verification: two copies of a table match iff
-    (n_rows, checksum) match, computable in one scan each side with a
-    map-side partial sum — no sort, no row shipping. Pure JVM
-    expressions (md5/conv are codegen'd); the hash is bit-identical
-    to the DuckDB oracle's hex fold.
-    """
-    pieces = []
-    for tbl, cols in _CHECKSUM_TABLES.items():
-        df = load(spark, tbl, sf_dir)
-        pieces.append(
-            df.select(
-                _spark_row_hash(
-                    *[F.col(c).cast("string") for c in cols]
-                ).alias("h")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("h").alias("checksum"),
-            )
-            .select(F.lit(tbl).alias("tbl"), "n_rows", "checksum")
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionAll(p)
-    return out
-
-
-@query(
     "hourly_ohlc",
     oracle="""
     WITH e AS (
@@ -271,54 +139,6 @@ def hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("value").alias("low_v"),
         F.max(pick)["value"].alias("close_v"),
         F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-@query(
-    "fuzzy_name_matches",
-    oracle="""
-    WITH names AS (SELECT DISTINCT p_name FROM part),
-    b AS (SELECT p_name, string_split(p_name, ' ')[-1] AS noun FROM names)
-    SELECT a.p_name AS name_a, c.p_name AS name_b,
-           CAST(levenshtein(a.p_name, c.p_name) AS INTEGER) AS dist
-    FROM b a
-    JOIN b c ON a.noun = c.noun AND a.p_name < c.p_name
-    WHERE levenshtein(a.p_name, c.p_name) <= 2
-    """,
-    tags=("entity-resolution", "fuzzy-join", "blocking"),
-)
-def fuzzy_name_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked fuzzy entity resolution over part names: candidate
-    pairs share a blocking key (the head-noun token), then edit
-    distance ≤ 2 on the full name.
-
-    The ER pattern at scale: dedup to distinct names FIRST (the
-    join's unit of work is the name, not the row), block to bound the
-    candidate pairs (no all-pairs cross join anywhere), and score
-    with the JVM-side ``levenshtein`` builtin so the whole pipeline
-    stays in whole-stage codegen.
-    """
-    names = (
-        load(spark, "part", sf_dir)
-        .select("p_name")
-        .distinct()
-        .withColumn("noun", F.substring_index("p_name", " ", -1))
-    )
-    a = names.select(
-        F.col("p_name").alias("name_a"), F.col("noun").alias("noun_a")
-    )
-    c = names.select(
-        F.col("p_name").alias("name_b"), F.col("noun").alias("noun_b")
-    )
-    return (
-        a.join(
-            c,
-            (F.col("noun_a") == F.col("noun_b"))
-            & (F.col("name_a") < F.col("name_b")),
-        )
-        .withColumn("dist", F.levenshtein("name_a", "name_b"))
-        .filter(F.col("dist") <= 2)
-        .select("name_a", "name_b", "dist")
     )
 
 
@@ -448,218 +268,6 @@ def brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "peak_concurrency",
-    oracle="""
-    WITH ep AS (
-        SELECT user_id, event_id, epoch_us(ts) AS t FROM events
-    ),
-    gapped AS (
-        SELECT user_id, event_id, t,
-               CASE WHEN LAG(t) OVER w IS NULL THEN 1
-                    WHEN t - LAG(t) OVER w > 1800000000 THEN 1
-                    ELSE 0 END AS new_session
-        FROM ep
-        WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id)
-    ),
-    numbered AS (
-        SELECT user_id, t,
-               SUM(new_session) OVER (PARTITION BY user_id
-                                      ORDER BY t, event_id
-                                      ROWS UNBOUNDED PRECEDING) AS sid
-        FROM gapped
-    ),
-    sess AS (
-        SELECT user_id, sid, MIN(t) AS s, MAX(t) + 1 AS e
-        FROM numbered GROUP BY user_id, sid
-    ),
-    pts AS (
-        SELECT s AS t, CAST(COUNT(*) AS BIGINT) AS d FROM sess GROUP BY s
-        UNION ALL
-        SELECT e AS t, -CAST(COUNT(*) AS BIGINT) AS d FROM sess GROUP BY e
-    ),
-    ag AS (SELECT t, SUM(d) AS d FROM pts GROUP BY t),
-    run AS (SELECT t, SUM(d) OVER (ORDER BY t) AS conc FROM ag)
-    SELECT CAST(conc AS BIGINT) AS peak_sessions, t AS at_us
-    FROM run ORDER BY conc DESC, t ASC LIMIT 1
-    """,
-    tags=("sweep-line", "sessionization", "events"),
-)
-def peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak number of concurrent user sessions (30-min-gap sessions,
-    half-open [start, end+1µs) intervals) and the earliest instant it
-    is reached — the sweep-line / interval-concurrency operator.
-
-    The running sum over event boundaries is computed as a
-    DISTRIBUTED prefix sum: boundaries aggregate per timestamp, a
-    day-partitioned window handles within-day prefixes in parallel,
-    and only the ~#days day totals pass through the global ordering —
-    no single-task sort of the full boundary stream (the trap a naive
-    ``Window.orderBy(t)`` would hit at 100 TB).
-    """
-    from pyspark.sql import Window
-
-    ev = load(spark, "events", sf_dir).select(
-        "user_id", "event_id", F.unix_micros(F.col("ts")).alias("t")
-    )
-    w_order = Window.partitionBy("user_id").orderBy("t", "event_id")
-    new_session = F.when(
-        F.lag("t").over(w_order).isNull()
-        | ((F.col("t") - F.lag("t").over(w_order)) > 1_800_000_000),
-        1,
-    ).otherwise(0)
-    numbered = ev.select(
-        "user_id",
-        "t",
-        F.sum(new_session)
-        .over(w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("sid"),
-    )
-    sess = numbered.groupBy("user_id", "sid").agg(
-        F.min("t").alias("s"), (F.max("t") + 1).alias("e")
-    )
-    # ±1 boundary events in ONE pass (r12, guide §2.4): the previous
-    # shape unioned two separate aggregates of ``sess`` (groupBy start
-    # / groupBy end), and each branch re-ran the whole scan +
-    # sessionization windows + session aggregate from source. One
-    # explode of (start, +1)/(end, −1) structs feeds a single
-    # map-side-combined groupBy — same per-timestamp deltas, one
-    # sessionization, one shuffle.
-    pts = sess.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s").alias("t"), F.lit(1).alias("d")),
-                F.struct(F.col("e").alias("t"), F.lit(-1).alias("d")),
-            )
-        ).alias("b")
-    ).select("b.t", "b.d")
-    ag = pts.groupBy("t").agg(F.sum("d").alias("d"))
-    # distributed prefix sum: per-day running sums in parallel, then a
-    # tiny global pass over day totals only
-    day = (F.col("t") / F.lit(86_400_000_000)).cast("long")
-    ag = ag.withColumn("day", day)
-    w_in_day = (
-        Window.partitionBy("day")
-        .orderBy("t")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    in_day = ag.withColumn("run_in_day", F.sum("d").over(w_in_day))
-    day_tot = ag.groupBy("day").agg(F.sum("d").alias("day_d"))
-    w_days = Window.orderBy("day").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = day_tot.select(
-        "day", F.coalesce(F.sum("day_d").over(w_days), F.lit(0)).alias("off")
-    )
-    conc = (
-        in_day.join(F.broadcast(offsets), "day")
-        .select("t", (F.col("off") + F.col("run_in_day")).alias("conc"))
-    )
-    best = conc.agg(F.max(F.struct(F.col("conc"), (-F.col("t")).alias("neg_t"))).alias("b"))
-    return best.select(
-        F.col("b.conc").alias("peak_sessions"),
-        (-F.col("b.neg_t")).alias("at_us"),
-    )
-
-
-_SQL_USER_ARM = (
-    "CASE WHEN list_reduce(list_prepend(0::BIGINT, "
-    "list_transform(regexp_split_to_array("
-    "substr(md5(CAST(user_id AS VARCHAR)), 1, 8), ''), "
-    "c -> (strpos('0123456789abcdef', c) - 1)::BIGINT)), "
-    "(h, c) -> h * 16 + c) % 2 = 0 THEN 'A' ELSE 'B' END"
-)
-
-
-@query(
-    "ab_conversion_lift",
-    oracle=f"""
-    WITH per_user AS (
-        SELECT user_id,
-               MAX(CASE WHEN event_type = 'purchase' AND value > 150.0 THEN 1 ELSE 0 END) AS conv,
-               {_SQL_USER_ARM} AS arm
-        FROM events
-        GROUP BY user_id
-    ),
-    arms AS (
-        SELECT CAST(SUM(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-               CAST(SUM(CASE WHEN arm = 'A' THEN conv ELSE 0 END) AS BIGINT) AS conv_a,
-               CAST(SUM(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-               CAST(SUM(CASE WHEN arm = 'B' THEN conv ELSE 0 END) AS BIGINT) AS conv_b
-        FROM per_user
-    )
-    SELECT n_a, conv_a, n_b, conv_b,
-           CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS rate_a,
-           CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS rate_b,
-           (CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-            - CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-           / sqrt(
-               (CAST(conv_a + conv_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-               * (1.0 - CAST(conv_a + conv_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE))
-               * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))
-             ) AS z_stat
-    FROM arms
-    """,
-    tags=("ab-test", "experiment", "stats"),
-)
-def ab_conversion_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Experiment readout: users hash-split into arms A/B (md5 fold —
-    the same deterministic assignment machinery as the train split),
-    per-arm conversion (≥1 purchase over 150), and the two-proportion
-    pooled z statistic.
-
-    Every float op is a single IEEE-correctly-rounded step on exact
-    integer counts with identical parenthesization on both engines,
-    so the z-stat matches bit-for-bit with NO rounding slack.
-    """
-    ev = load(spark, "events", sf_dir)
-    arm = F.when(
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 2
-        == 0,
-        "A",
-    ).otherwise("B")
-    per_user = ev.groupBy("user_id").agg(
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") > 150.0), 1
-            ).otherwise(0)
-        ).alias("conv"),
-        F.first(arm).alias("arm"),
-    )
-    arms = per_user.agg(
-        F.sum(F.when(F.col("arm") == "A", 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == "A", F.col("conv")).otherwise(0)).alias(
-            "conv_a"
-        ),
-        F.sum(F.when(F.col("arm") == "B", 1).otherwise(0)).alias("n_b"),
-        F.sum(F.when(F.col("arm") == "B", F.col("conv")).otherwise(0)).alias(
-            "conv_b"
-        ),
-    )
-    n_a, c_a = F.col("n_a").cast("double"), F.col("conv_a").cast("double")
-    n_b, c_b = F.col("n_b").cast("double"), F.col("conv_b").cast("double")
-    pool = (F.col("conv_a") + F.col("conv_b")).cast("double") / (
-        F.col("n_a") + F.col("n_b")
-    ).cast("double")
-    return arms.select(
-        "n_a",
-        "conv_a",
-        "n_b",
-        "conv_b",
-        (c_a / n_a).alias("rate_a"),
-        (c_b / n_b).alias("rate_b"),
-        (
-            (c_a / n_a - c_b / n_b)
-            / F.sqrt(
-                pool * (F.lit(1.0) - pool) * (F.lit(1.0) / n_a + F.lit(1.0) / n_b)
-            )
-        ).alias("z_stat"),
-    )
-
-
-@query(
     "http_ingest_pipeline",
     oracle="""
     SELECT doc_id AS object_id,
@@ -713,7 +321,6 @@ def http_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 def _scratch_dir(family: str, sf_dir: str) -> str:
     """Per-run unique scratch dir for sink round-trips, removed at
     process exit (unique so concurrent runs never race on each
@@ -732,368 +339,6 @@ def _scratch_dir(family: str, sf_dir: str) -> str:
     )
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     return out
-
-
-@query(
-    "segment_priority_chisq",
-    oracle="""
-    WITH cells AS (
-        SELECT c_mktsegment AS seg, o_orderpriority AS pri,
-               CAST(count(*) AS DOUBLE) AS obs
-        FROM orders JOIN customer ON c_custkey = o_custkey
-        GROUP BY 1, 2
-    ),
-    tot AS (
-        SELECT seg, pri, obs,
-               sum(obs) OVER (PARTITION BY seg) AS row_tot,
-               sum(obs) OVER (PARTITION BY pri) AS col_tot,
-               sum(obs) OVER () AS n
-        FROM cells
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_cells,
-           round(sum((obs - row_tot * col_tot / n)
-                     * (obs - row_tot * col_tot / n)
-                     / (row_tot * col_tot / n)), 6) AS chi2
-    FROM tot
-    """,
-    tags=("stats", "chi-square", "independence"),
-)
-def segment_priority_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square independence test between customer market segment
-    and order priority — the categorical-association audit a feature
-    store runs before trusting a segmentation.
-
-    One join + one 25-cell aggregate; marginals come from windows
-    over the CELLS (25 rows), never a second pass over the fact.
-    Observed counts are exact; the statistic is decimal-rounded for
-    cross-engine sum-order tolerance.
-    """
-    from pyspark.sql import Window
-
-    o = load(spark, "orders", sf_dir).select("o_custkey", "o_orderpriority")
-    c = load(spark, "customer", sf_dir).select("c_custkey", "c_mktsegment")
-    cells = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy(
-            F.col("c_mktsegment").alias("seg"),
-            F.col("o_orderpriority").alias("pri"),
-        )
-        .agg(F.count(F.lit(1)).cast("double").alias("obs"))
-    )
-    row_tot = F.sum("obs").over(Window.partitionBy("seg"))
-    col_tot = F.sum("obs").over(Window.partitionBy("pri"))
-    n = F.sum("obs").over(Window.partitionBy())
-    exp = row_tot * col_tot / n
-    return (
-        cells.select("obs", exp.alias("exp"))
-        .agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.round(
-                F.sum(
-                    (F.col("obs") - F.col("exp"))
-                    * (F.col("obs") - F.col("exp"))
-                    / F.col("exp")
-                ),
-                6,
-            ).alias("chi2"),
-        )
-    )
-
-
-@query(
-    "benford_price_digits",
-    oracle="""
-    WITH d AS (
-        SELECT substr(CAST(CAST(floor(o_totalprice * 100) AS BIGINT)
-                           AS VARCHAR), 1, 1) AS digit
-        FROM orders
-        WHERE o_totalprice > 0
-    )
-    SELECT digit,
-           CAST(count(*) AS BIGINT) AS n,
-           round(log10(1.0 + 1.0 / CAST(digit AS DOUBLE)), 6)
-               AS benford_share
-    FROM d
-    GROUP BY digit
-    """,
-    tags=("stats", "benford", "data-quality"),
-)
-def benford_price_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford's-law leading-digit audit over order totals — the
-    classic fraud/data-quality screen for financial columns.
-
-    The leading digit is extracted through integer-cents string
-    formatting (floor(x*100) as BIGINT), NOT log10 bucketing: both
-    engines floor identically, while log10 at power-of-ten boundaries
-    can straddle a ULP and flip the digit. Expected Benford shares
-    ride along per digit (rounded literals of log10(1+1/d)).
-    """
-    o = load(spark, "orders", sf_dir).filter(F.col("o_totalprice") > 0)
-    digit = F.substring(
-        F.floor(F.col("o_totalprice") * 100).cast("bigint").cast("string"), 1, 1
-    ).alias("digit")
-    return (
-        o.select(digit)
-        .groupBy("digit")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            "digit",
-            "n",
-            F.round(
-                F.log10(F.lit(1.0) + F.lit(1.0) / F.col("digit").cast("double")),
-                6,
-            ).alias("benford_share"),
-        )
-    )
-
-
-@query(
-    "ivm_join_delta",
-    oracle="""
-    SELECT o_orderkey, c_custkey, o_totalprice, c_mktsegment
-    FROM orders JOIN customer ON c_custkey = o_custkey
-    EXCEPT
-    SELECT o_orderkey, c_custkey, o_totalprice, c_mktsegment
-    FROM (SELECT * FROM orders WHERE o_orderkey % 97 <> 0) o
-    JOIN (SELECT * FROM customer WHERE c_custkey % 89 <> 0) c
-      ON c.c_custkey = o.o_custkey
-    """,
-    tags=("incremental-view-maintenance", "join-delta", "cdc"),
-)
-def ivm_join_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance for a JOIN view: given base
-    relations and delta rows (here carved deterministically out of
-    orders and customer), compute the join view's delta with the
-    three-term formula Δ(R⋈S) = ΔR⋈S_base ∪ R_base⋈ΔS ∪ ΔR⋈ΔS —
-    WITHOUT recomputing the full join.
-
-    The maintenance primitive behind materialized-view refresh and
-    foreachBatch view upkeep: every term has a delta side, so at
-    100 TB each refresh broadcasts the (small) deltas against the
-    base relations instead of re-joining base⋈base. The oracle is
-    the definitional recompute-and-subtract (full join EXCEPT base
-    join) — the formula must reproduce it exactly.
-    """
-    o = load(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    c = load(spark, "customer", sf_dir).select("c_custkey", "c_mktsegment")
-    o_base = o.filter(F.col("o_orderkey") % 97 != 0)
-    o_delta = o.filter(F.col("o_orderkey") % 97 == 0)
-    c_base = c.filter(F.col("c_custkey") % 89 != 0)
-    c_delta = c.filter(F.col("c_custkey") % 89 == 0)
-
-    def j(lo: DataFrame, rc: DataFrame) -> DataFrame:
-        return lo.join(rc, lo["o_custkey"] == rc["c_custkey"]).select(
-            "o_orderkey", "c_custkey", "o_totalprice", "c_mktsegment"
-        )
-
-    return (
-        j(o_delta, c_base)
-        .unionAll(j(o_base, c_delta))
-        .unionAll(j(o_delta, c_delta))
-    )
-
-
-@query(
-    "orc_sink_roundtrip",
-    oracle="""
-    SELECT n_nationkey, n_name, n_regionkey FROM nation
-    """,
-    tags=("sink", "orc", "roundtrip"),
-)
-def orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC interchange, driver-verified: the nation table written to
-    ORC (sources/files.py handles the batch interchange surface) and
-    read back, hash-checked against the parquet source of truth —
-    pins type round-tripping through a second columnar format.
-    """
-    out = _scratch_dir("museum_etl_orc_demo", sf_dir)
-    n = load(spark, "nation", sf_dir).select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    n.write.mode("overwrite").orc(out)
-    return spark.read.orc(out)
-
-
-@query(
-    "json_quarantine_stats",
-    oracle="""
-    WITH injected AS (
-        SELECT event_type,
-               CASE WHEN event_id % 13 = 0 THEN substr(props, 1, 3)
-                    ELSE props END AS body
-        FROM events
-    ),
-    parsed AS (
-        -- quarantine keyed on the PARSE OUTCOME of the corrupted
-        -- body (like Spark's from_json), not on the injection
-        -- condition: a naturally malformed/missing-k payload counts
-        -- as quarantined on both engines. TRY_CAST keeps the oracle
-        -- crash-proof on no-match extracts.
-        SELECT event_type,
-               TRY_CAST(regexp_extract(body, '"k":\\s*(\\d+)', 1) AS BIGINT)
-                   AS k
-        FROM injected
-    )
-    SELECT event_type,
-           CAST(SUM(CASE WHEN k IS NULL THEN 0 ELSE 1 END) AS BIGINT)
-               AS n_ok,
-           CAST(SUM(CASE WHEN k IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_quarantined,
-           CAST(SUM(COALESCE(k, 0)) AS BIGINT) AS sum_k
-    FROM parsed
-    GROUP BY event_type
-    """,
-    tags=("quarantine", "error-handling", "json", "2.11"),
-)
-def json_quarantine_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.11 driver-verified: PERMISSIVE-style bad-record
-    quarantine. A deterministic fault injector truncates every 13th
-    props payload; ``from_json`` returns NULL for the malformed rows,
-    which are counted into a quarantine column instead of being
-    dropped silently (the reference's try/except-continue pattern,
-    src/ingestion.py:51, made observable). Good rows aggregate
-    normally — the oracle reproduces both populations exactly.
-    """
-    ev = load(spark, "events", sf_dir)
-    body = F.when(
-        F.col("event_id") % 13 == 0, F.substring(F.col("props"), 1, 3)
-    ).otherwise(F.col("props"))
-    parsed = F.from_json(body, "k long")
-    return (
-        ev.select(
-            "event_type",
-            parsed["k"].alias("k"),
-            F.when(parsed["k"].isNull(), 1).otherwise(0).alias("bad"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum(F.lit(1) - F.col("bad")).alias("n_ok"),
-            F.sum("bad").alias("n_quarantined"),
-            F.sum(F.when(F.col("bad") == 0, F.col("k")).otherwise(0)).alias(
-                "sum_k"
-            ),
-        )
-    )
-
-
-@query(
-    "session_top_paths",
-    oracle="""
-    WITH ep AS (
-        SELECT user_id, event_id, event_type, epoch_us(ts) AS t FROM events
-    ),
-    gapped AS (
-        SELECT user_id, event_id, event_type, t,
-               CASE WHEN LAG(t) OVER w IS NULL THEN 1
-                    WHEN t - LAG(t) OVER w > 1800000000 THEN 1
-                    ELSE 0 END AS ns
-        FROM ep
-        WINDOW w AS (PARTITION BY user_id ORDER BY t, event_id)
-    ),
-    numbered AS (
-        SELECT user_id, event_id, event_type, t,
-               SUM(ns) OVER (PARTITION BY user_id ORDER BY t, event_id
-                             ROWS UNBOUNDED PRECEDING) AS sid
-        FROM gapped
-    ),
-    paths AS (
-        SELECT user_id, sid,
-               array_to_string(
-                   list_slice(list(event_type ORDER BY t, event_id), 1, 5),
-                   '>') AS path
-        FROM numbered GROUP BY user_id, sid
-    )
-    SELECT path, CAST(count(*) AS BIGINT) AS n
-    FROM paths GROUP BY 1 HAVING count(*) >= 20
-    """,
-    tags=("path-analysis", "sessionization", "events"),
-)
-def session_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-analytics path analysis: the ordered event-type
-    sequence of each 30-min-gap session (first 5 steps), counted
-    across sessions — "what do users actually do in a session".
-
-    The per-session sequence is built with sort_array over collected
-    (t, event_id, type) structs — grouped aggregation with map-side
-    partials on the session key, no per-row window pass — then
-    sliced, projected to types, and joined into a path string, all
-    JVM expressions. Deterministic via the (t, event_id) tiebreak.
-    """
-    from pyspark.sql import Window
-
-    ev = load(spark, "events", sf_dir).select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.unix_micros(F.col("ts")).alias("t"),
-    )
-    w_order = Window.partitionBy("user_id").orderBy("t", "event_id")
-    ns = F.when(
-        F.lag("t").over(w_order).isNull()
-        | ((F.col("t") - F.lag("t").over(w_order)) > 1_800_000_000),
-        1,
-    ).otherwise(0)
-    numbered = ev.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        "t",
-        F.sum(ns)
-        .over(w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("sid"),
-    )
-    paths = numbered.groupBy("user_id", "sid").agg(
-        F.concat_ws(
-            ">",
-            F.slice(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct("t", "event_id", "event_type"))
-                    ),
-                    lambda s: s["event_type"],
-                ),
-                1,
-                5,
-            ),
-        ).alias("path")
-    )
-    return (
-        paths.groupBy("path")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 20)
-    )
-
-
-@query(
-    "big_spender_segments_intersect",
-    oracle="""
-    SELECT c_mktsegment
-    FROM customer JOIN nation ON n_nationkey = c_nationkey
-    WHERE n_regionkey = 0 AND c_acctbal > 1000
-    INTERSECT
-    SELECT c_mktsegment
-    FROM customer JOIN nation ON n_nationkey = c_nationkey
-    WHERE n_regionkey = 1 AND c_acctbal > 1000
-    """,
-    tags=("set-op", "intersect"),
-)
-def big_spender_segments_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT (§2.7 completion — UNION and EXCEPT are covered by
-    nation_roles_union / rich_customer_nations_except): market
-    segments with high-balance customers in BOTH region 0 and
-    region 1. Spark plans ``intersect`` as a distinct + left-semi
-    hash join — both sides pre-filtered at the scan.
-    """
-    c = load(spark, "customer", sf_dir)
-    n = load(spark, "nation", sf_dir).select("n_nationkey", "n_regionkey")
-    base = c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"]).filter(
-        F.col("c_acctbal") > 1000
-    )
-    r0 = base.filter(F.col("n_regionkey") == 0).select("c_mktsegment")
-    r1 = base.filter(F.col("n_regionkey") == 1).select("c_mktsegment")
-    return r0.intersect(r1)
 
 
 @query(
@@ -1334,170 +579,6 @@ def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "applyinpandas_gap_stats",
-    oracle="""
-    WITH g AS (
-        SELECT user_id,
-               t - lag(t) OVER (PARTITION BY user_id
-                                ORDER BY t, event_id) AS gap
-        FROM (SELECT user_id, event_id, epoch_us(ts) AS t FROM events)
-    )
-    SELECT user_id,
-           CAST(count(gap) AS BIGINT) AS n_gaps,
-           CAST(quantile_cont(gap, 0.5) AS DOUBLE) AS median_gap_us,
-           CAST(max(gap) AS BIGINT) AS max_gap_us
-    FROM g WHERE gap IS NOT NULL
-    GROUP BY user_id
-    """,
-    tags=("applyInPandas", "grouped-map", "udf", "events"),
-)
-def applyinpandas_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.10 grouped-map surface (``applyInPandas`` /
-    FlatMapGroupsInPandas): per-user inter-event gap statistics
-    computed as an arbitrary pandas function over each group.
-
-    The grouped-map path is the escape hatch when per-group logic
-    needs a real dataframe (sorting, diffs, model fits) rather than
-    an aggregate expression. One shuffle on the group key; the oracle
-    reaches the same rows through a lag window. pandas' interpolated
-    median over integer microsecond gaps ≡ DuckDB quantile_cont(0.5)
-    (average of two middle integers — exact in double).
-    """
-    import pandas as pd
-
-    ev = load(spark, "events", sf_dir).select(
-        "user_id", "event_id", F.unix_micros(F.col("ts")).alias("t")
-    )
-
-    def stats(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(["t", "event_id"])
-        gaps = pdf["t"].diff().dropna()
-        if gaps.empty:
-            return pd.DataFrame(
-                columns=["user_id", "n_gaps", "median_gap_us", "max_gap_us"]
-            )
-        return pd.DataFrame(
-            {
-                "user_id": [int(pdf["user_id"].iloc[0])],
-                "n_gaps": [len(gaps)],
-                "median_gap_us": [float(gaps.median())],
-                "max_gap_us": [int(gaps.max())],
-            }
-        )
-
-    return ev.groupBy("user_id").applyInPandas(
-        stats, "user_id long, n_gaps long, median_gap_us double, max_gap_us long"
-    )
-
-
-@query(
-    "udtf_bigram_counts",
-    oracle="""
-    WITH w AS (
-        SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS w
-        FROM documents WHERE text IS NOT NULL AND trim(text) <> ''
-    ),
-    g AS (
-        SELECT unnest(CASE WHEN len(w) < 2 THEN CAST([] AS VARCHAR[])
-                      ELSE list_transform(range(1, len(w)),
-                                          i -> w[i] || ' ' || w[i + 1]) END)
-               AS bigram
-        FROM w
-    )
-    SELECT bigram, CAST(count(*) AS BIGINT) AS n
-    FROM g GROUP BY 1 HAVING count(*) >= 40
-    """,
-    tags=("udtf", "lateral", "text"),
-)
-def udtf_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.10 UDTF surface, driver-verified: a Python UDTF
-    (one row in, N rows out) registered in the catalog and invoked
-    through a SQL LATERAL join, then aggregated.
-
-    The UDTF is the escape hatch for row-expanding logic Spark's
-    generators can't express (cursor walks, recursive descent —
-    sources/paginated.py is the production use); here a bigram
-    expander keeps the oracle exact. Python is the slow path — the
-    JVM lead()-window form in frequent_bigrams is the production
-    shape — so this query exists to pin the UDTF execution path
-    itself (BatchEvalPythonUDTF) end-to-end against SQL.
-    """
-    from pyspark.sql.functions import udtf
-
-    from ..catalog import register_views
-
-    @udtf(returnType="bigram string")
-    class BigramsUDTF:
-        def eval(self, text: str):
-            # mirror the oracle's lower(trim(text)) + regex '\s+'
-            # EXACTLY: SQL trim() strips spaces only, and RE2 \s is
-            # [ \t\n\f\r] (NO vertical tab) — python
-            # .strip()/.split() are Unicode-aware, drop leading empty
-            # tokens, AND split on \v, all of which would diverge
-            import re
-
-            if text is None:
-                return
-            t = text.strip(" ").lower()
-            if t == "":
-                return
-            toks = re.split("[ \\t\\n\\r\\f]+", t)
-            for a, b in zip(toks, toks[1:]):
-                yield (f"{a} {b}",)
-
-    spark.udtf.register("bigrams_udtf", BigramsUDTF)
-    register_views(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT b.bigram, CAST(count(*) AS BIGINT) AS n
-        FROM documents d, LATERAL bigrams_udtf(d.text) b
-        GROUP BY b.bigram HAVING count(*) >= 40
-        """
-    )
-
-
-@query(
-    "partitioned_sink_roundtrip",
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus,
-           CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month
-    FROM orders
-    WHERE o_orderstatus = 'F'
-    """,
-    tags=("sink", "partitioned-write", "roundtrip"),
-)
-def partitioned_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partitioned parquet SINK, driver-verified via write → re-read:
-    orders written partitionBy(o_orderstatus) to scratch, read back
-    with a partition filter, hash-checked against the source-side SQL.
-
-    What this pins: (a) the writer round-trips values losslessly
-    (including the timestamp-derived month column), (b) the
-    partition-column filter on re-read prunes DIRECTORIES, not rows —
-    the layout that turns a 100 TB scan into a partition-sized one.
-    Hive-style partition values come back as strings; the explicit
-    cast restores the column's type contract.
-    """
-    out = _scratch_dir("museum_etl_sink_demo", sf_dir)
-    o = load(spark, "orders", sf_dir).select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        F.col("o_orderstatus"),
-        F.date_trunc("month", F.col("o_orderdate")).alias("month"),
-    )
-    o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    back = spark.read.parquet(out).filter(F.col("o_orderstatus") == "F")
-    return back.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        F.col("o_orderstatus").cast("string").alias("o_orderstatus"),
-        "month",
-    )
-
-
-@query(
     "stream_unconverted_clicks",
     oracle="""
     WITH clicks AS (
@@ -1568,325 +649,6 @@ def stream_unconverted_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_WINDOW_TEXT = """
-    SELECT c_mktsegment, c_name, c_acctbal, seg_rank
-    FROM (
-        SELECT c_mktsegment, c_name, c_acctbal,
-               CAST(RANK() OVER (PARTITION BY c_mktsegment
-                                 ORDER BY c_acctbal DESC, c_custkey)
-                    AS BIGINT) AS seg_rank
-        FROM customer
-    ) ranked
-    WHERE seg_rank <= 3
-"""
-
-
-@query(
-    "sql_surface_windows",
-    oracle=_SQL_WINDOW_TEXT,
-    tags=("sql-api", "window", "rank"),
-)
-def sql_surface_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANSI window functions through the SQL API end-to-end: the
-    engine registers its catalog and executes the EXACT oracle text
-    with ``spark.sql`` — a user's existing windowed SQL runs
-    unchanged (the windowed sibling of forecast_revenue_change's Q6
-    SQL-API proof). Plans as one partition-local sort + rank per
-    segment, no global ordering.
-    """
-    from ..catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_SQL_WINDOW_TEXT)
-
-
-@query(
-    "nation_share_of_region",
-    oracle="""
-    WITH nr AS (
-        SELECT r_name, n_name,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-                    AS DECIMAL(38,2)) AS rev
-        FROM orders
-        JOIN customer ON c_custkey = o_custkey
-        JOIN nation ON n_nationkey = c_nationkey
-        JOIN region ON r_regionkey = n_regionkey
-        GROUP BY 1, 2
-    )
-    SELECT r_name, n_name, CAST(rev AS DOUBLE) AS revenue,
-           CAST(rev AS DOUBLE)
-           / CAST(SUM(rev) OVER (PARTITION BY r_name) AS DOUBLE) AS share
-    FROM nr
-    """,
-    tags=("ratio-to-parent", "window", "join"),
-)
-def nation_share_of_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Share-of-parent in the region→nation hierarchy: each nation's
-    fraction of its region's revenue (the ratio_to_report window
-    shape). Revenue sums stay DECIMAL through the window so partial
-    order never matters; one double division at the end is bit-exact
-    both engines. Dim joins broadcast; the window partitions by
-    region over an already-aggregated (region, nation) relation —
-    25 rows, not the fact table.
-    """
-    from pyspark.sql import Window
-
-    o = load(spark, "orders", sf_dir).select("o_custkey", "o_totalprice")
-    c = load(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
-    n = load(spark, "nation", sf_dir).select(
-        "n_nationkey", "n_name", "n_regionkey"
-    )
-    r = load(spark, "region", sf_dir).select("r_regionkey", "r_name")
-    nr = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("decimal(38,2)")
-            .alias("rev")
-        )
-    )
-    w = Window.partitionBy("r_name")
-    return nr.select(
-        "r_name",
-        "n_name",
-        F.col("rev").cast("double").alias("revenue"),
-        (
-            F.col("rev").cast("double")
-            / F.sum("rev").over(w).cast("double")
-        ).alias("share"),
-    )
-
-
-@query(
-    "ols_price_trend",
-    oracle="""
-    WITH pts AS (
-        SELECT CAST(date_diff('day', TIMESTAMP '1995-01-01', o_orderdate)
-                    AS BIGINT) AS x,
-               CAST(o_totalprice AS DECIMAL(18,2)) AS y
-        FROM orders
-    ),
-    s AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS BIGINT) AS sx,
-               CAST(sum(x * x) AS BIGINT) AS sxx,
-               CAST(sum(y) AS DECIMAL(38,2)) AS sy,
-               CAST(sum(CAST(x AS DECIMAL(18,0)) * y) AS DECIMAL(38,2)) AS sxy
-        FROM pts
-    )
-    SELECT n,
-           (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-            - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-           / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-              - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope,
-           (CAST(sy AS DOUBLE)
-            - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-                - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-               / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-                  - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-              * CAST(sx AS DOUBLE))
-           / CAST(n AS DOUBLE) AS intercept
-    FROM s
-    """,
-    tags=("regression", "ols", "sufficient-statistics"),
-)
-def ols_price_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed least-squares: order price regressed on order date
-    (days since 1995-01-01), via sufficient statistics — one
-    mergeable aggregate pass collecting (n, Σx, Σx², Σy, Σxy), then
-    closed-form slope/intercept.
-
-    The scalable regression shape at 100 TB: partials combine
-    map-side, nothing but five numbers cross the shuffle. Integer x
-    and DECIMAL y keep every sum EXACT regardless of partitioning;
-    the final double arithmetic is an identical IEEE op sequence on
-    both engines, so the fit matches bit-for-bit with no rounding.
-    """
-    o = load(spark, "orders", sf_dir)
-    pts = o.select(
-        F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("timestamp"))
-        .cast("long")
-        .alias("x"),
-        F.col("o_totalprice").cast("decimal(18,2)").alias("y"),
-    )
-    s = pts.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum("y").cast("decimal(38,2)").alias("sy"),
-        F.sum(F.col("x").cast("decimal(18,0)") * F.col("y"))
-        .cast("decimal(38,2)")
-        .alias("sxy"),
-    )
-    n = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sxx = F.col("sxx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    return s.select(
-        "n",
-        slope.alias("slope"),
-        ((sy - slope * sx) / n).alias("intercept"),
-    )
-
-
-@query(
-    "brand_affinity_cosine",
-    oracle="""
-    WITH baskets AS (
-        SELECT o_custkey AS cust, p_brand AS brand,
-               CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
-        FROM lineitem
-        JOIN orders ON o_orderkey = l_orderkey
-        JOIN part ON p_partkey = l_partkey
-        GROUP BY 1, 2
-    ),
-    norms AS (
-        SELECT brand, CAST(SUM(q * q) AS BIGINT) AS nrm2
-        FROM baskets GROUP BY 1
-    ),
-    dots AS (
-        SELECT a.brand AS brand_a, b.brand AS brand_b,
-               CAST(SUM(a.q * b.q) AS BIGINT) AS dot
-        FROM baskets a
-        JOIN baskets b ON a.cust = b.cust AND a.brand < b.brand
-        GROUP BY 1, 2
-    )
-    SELECT brand_a, brand_b, dot,
-           CAST(dot AS DOUBLE)
-           / (sqrt(CAST(na.nrm2 AS DOUBLE)) * sqrt(CAST(nb.nrm2 AS DOUBLE)))
-               AS cosine
-    FROM dots
-    JOIN norms na ON na.brand = brand_a
-    JOIN norms nb ON nb.brand = brand_b
-    """,
-    tags=("collaborative-filtering", "similarity", "join"),
-)
-def brand_affinity_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Item-item collaborative similarity: cosine between brands over
-    customer purchase-quantity vectors (the classic CF preprocessing
-    step, brands as sparse vectors indexed by customer).
-
-    Distributed shape: the sparse dot products come from a self-join
-    keyed on the CUSTOMER (bounded basket fan-out — never an
-    all-pairs brand join), aggregated with map-side partials; the
-    tiny per-brand norm table broadcasts onto the pair results.
-    Integer quantities make every dot/norm exact, so the cosine is a
-    bit-identical IEEE sequence on both engines — no rounding slack.
-    """
-    li = load(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_partkey", F.col("l_quantity").cast("long").alias("q0")
-    )
-    o = load(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
-    p = load(spark, "part", sf_dir).select("p_partkey", "p_brand")
-    baskets = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
-        .groupBy(
-            F.col("o_custkey").alias("cust"), F.col("p_brand").alias("brand")
-        )
-        .agg(F.sum("q0").alias("q"))
-    )
-    norms = baskets.groupBy("brand").agg(
-        F.sum(F.col("q") * F.col("q")).alias("nrm2")
-    )
-    a = baskets.select(
-        "cust", F.col("brand").alias("brand_a"), F.col("q").alias("qa")
-    )
-    b = baskets.select(
-        F.col("cust").alias("cust2"),
-        F.col("brand").alias("brand_b"),
-        F.col("q").alias("qb"),
-    )
-    dots = (
-        a.join(
-            b,
-            (a["cust"] == b["cust2"]) & (a["brand_a"] < b["brand_b"]),
-        )
-        .groupBy("brand_a", "brand_b")
-        .agg(F.sum(F.col("qa") * F.col("qb")).alias("dot"))
-    )
-    na = F.broadcast(norms.select(F.col("brand").alias("brand_a"), F.col("nrm2").alias("nrm2_a")))
-    nb = F.broadcast(norms.select(F.col("brand").alias("brand_b"), F.col("nrm2").alias("nrm2_b")))
-    return (
-        dots.join(na, "brand_a")
-        .join(nb, "brand_b")
-        .select(
-            "brand_a",
-            "brand_b",
-            "dot",
-            (
-                F.col("dot").cast("double")
-                / (
-                    F.sqrt(F.col("nrm2_a").cast("double"))
-                    * F.sqrt(F.col("nrm2_b").cast("double"))
-                )
-            ).alias("cosine"),
-        )
-    )
-
-
-@query(
-    "embedding_quantization",
-    oracle="""
-    SELECT vec_id,
-           CAST(list_max(list_transform(embedding,
-                x -> abs(CAST(x AS DOUBLE)))) / 127.0 AS DOUBLE) AS scale,
-           CAST(list_max(list_transform(embedding, x ->
-                abs(CAST(x AS DOUBLE)
-                    - floor(CAST(x AS DOUBLE)
-                            / (list_max(list_transform(embedding,
-                               y -> abs(CAST(y AS DOUBLE)))) / 127.0)
-                            + 0.5)
-                      * (list_max(list_transform(embedding,
-                         y -> abs(CAST(y AS DOUBLE)))) / 127.0))))
-                AS DOUBLE) AS max_abs_err
-    FROM embeddings
-    WHERE list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) > 0
-    """,
-    tags=("vector", "quantization", "hof", "embeddings"),
-)
-def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symmetric int8 vector quantization audit: per-embedding scale
-    (max|x|/127) and the worst-case reconstruction error of
-    round-to-nearest int8 — the compression check a vector store runs
-    before shipping quantized embeddings to training.
-
-    Pure JVM higher-order array functions (transform/aggregate) — no
-    Python, no shuffle: embarrassingly parallel over the scan. The
-    rounding is spelled floor(x/scale + 0.5) so both engines follow
-    the identical IEEE op sequence (no round() half-up-vs-even
-    divergence), making the doubles bit-exact.
-    """
-    emb = load(spark, "embeddings", sf_dir)
-    absd = lambda c: F.abs(c.cast("double"))  # noqa: E731
-    max_abs = F.array_max(F.transform(F.col("embedding"), absd))
-    # hoist max_abs into a projection BEFORE the error lambda:
-    # interpreted HOFs do not CSE across lambda references, so
-    # spelling max_abs inline re-ran the full array_max scan twice PER
-    # ELEMENT (64 elems x 2 x 64 ops ~ 8k interpreted ops/row; 7.3 s
-    # solo at sf1 -> this shape scans each array once per stage).
-    # Same IEEE op sequence, so values (and the oracle) are unchanged.
-    staged = emb.select(
-        "vec_id", "embedding", max_abs.alias("ma")
-    ).filter(F.col("ma") > 0)
-    scale_c = F.col("ma") / F.lit(127.0)
-    err = F.array_max(
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.abs(
-                x.cast("double")
-                - F.floor(x.cast("double") / scale_c + F.lit(0.5)) * scale_c
-            ),
-        )
-    ).alias("max_abs_err")
-    return staged.select("vec_id", scale_c.alias("scale"), err)
-
-
 @query(
     "stream_hourly_ohlc",
     oracle="""
@@ -1923,50 +685,4 @@ def stream_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(
         stream_hourly_ohlc_bars(events_stream(spark, sf_dir)),
         f"q_ohlc_{uuid.uuid4().hex[:8]}",
-    )
-
-
-@query(
-    "decayed_user_value",
-    oracle="""
-    WITH ref AS (SELECT MAX(epoch_us(ts)) AS r FROM events)
-    SELECT user_id,
-           round(SUM(value * exp(-(((SELECT r FROM ref) - epoch_us(ts))
-                 / 86400000000.0 / 30.0))), 6) AS decayed_value
-    FROM events
-    GROUP BY user_id
-    """,
-    tags=("feature-engineering", "time-decay", "events"),
-)
-def decayed_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponentially time-decayed engagement score per user
-    (half-life-style recency weighting, 30-day scale) — the standard
-    feature-engineering aggregate for recommendation/training labels.
-
-    The global reference instant is a one-row aggregate broadcast into
-    the scan (no collect, no single-partition window); scores are
-    rounded to 6 decimals for cross-engine exp/sum-order tolerance.
-    """
-    ev = load(spark, "events", sf_dir).select(
-        "user_id", "value", F.unix_micros(F.col("ts")).alias("t")
-    )
-    ref = ev.agg(F.max("t").alias("r"))
-    return (
-        ev.crossJoin(F.broadcast(ref))
-        .groupBy("user_id")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("value")
-                    * F.exp(
-                        -(
-                            (F.col("r") - F.col("t"))
-                            / F.lit(86400000000.0)
-                            / F.lit(30.0)
-                        )
-                    )
-                ),
-                6,
-            ).alias("decayed_value")
-        )
     )

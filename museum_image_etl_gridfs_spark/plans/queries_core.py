@@ -162,41 +162,6 @@ def top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # J1-style FK joins + agg
 # ---------------------------------------------------------------------------
 @query(
-    "customer_order_stats",
-    oracle="""
-    SELECT c_mktsegment,
-           CAST(COUNT(DISTINCT c.c_custkey) AS BIGINT)                  AS n_customers,
-           CAST(COUNT(*) AS BIGINT)                                     AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)     AS sum_total,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_total
-    FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-    GROUP BY c_mktsegment
-    """,
-    tags=("join", "agg"),
-)
-def customer_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FK equi-join (J1) + grouped aggregation per segment.
-
-    The customer side is small relative to orders at any SF —
-    broadcast-hash join (hinted; AQE would also pick it), so the only
-    shuffle is the 5-group aggregate.
-    """
-    c = load(spark, "customer", sf_dir)
-    o = load(spark, "orders", sf_dir)
-    cnt = F.count(F.lit(1))
-    return (
-        o.join(F.broadcast(c), c["c_custkey"] == o["o_custkey"])
-        .groupBy("c_mktsegment")
-        .agg(
-            F.countDistinct("c_custkey").alias("n_customers"),
-            cnt.alias("n_orders"),
-            F.sum(dec("o_totalprice")).cast("double").alias("sum_total"),
-            (F.sum(dec("o_totalprice")).cast("double") / cnt).alias("avg_total"),
-        )
-    )
-
-
-@query(
     "revenue_by_nation",
     oracle="""
     SELECT r_name, n_name,
@@ -244,104 +209,8 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "shipping_priority",
-    oracle="""
-    SELECT l_orderkey,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-                AS DOUBLE) AS revenue,
-           o_orderdate
-    FROM customer JOIN orders ON c_custkey = o_custkey
-                  JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-01-01'
-      AND l_shipdate  > TIMESTAMP '1998-01-01'
-    GROUP BY l_orderkey, o_orderdate
-    ORDER BY revenue DESC, l_orderkey
-    LIMIT 10
-    """,
-    tags=("join", "agg", "topk"),
-)
-def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: selective join + agg + exact-decimal top-k.
-
-    Revenue is an exact decimal sum, so the top-10 cut is
-    deterministic across engines (no float-order ties).
-    """
-    c = load(spark, "customer", sf_dir).filter(F.col("c_mktsegment") == "BUILDING")
-    o = load(spark, "orders", sf_dir).filter(F.col("o_orderdate") < "1998-01-01")
-    li = load(spark, "lineitem", sf_dir).filter(F.col("l_shipdate") > "1998-01-01")
-    revenue = dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - dec("l_discount"))
-    return (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(F.sum(revenue).alias("rev_dec"))
-        .orderBy(F.col("rev_dec").desc(), F.col("l_orderkey"))
-        .limit(10)
-        .select(
-            "l_orderkey", F.col("rev_dec").cast("double").alias("revenue"), "o_orderdate"
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
-# Grouping sets: ROLLUP / CUBE (§2.4 absent-in-reference completions)
-# ---------------------------------------------------------------------------
-@query(
-    "region_nation_rollup",
-    oracle="""
-    SELECT r_name, n_name,
-           CAST(COUNT(*) AS BIGINT) AS n_cust,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_acctbal
-    FROM customer JOIN nation ON c_nationkey = n_nationkey
-                  JOIN region ON n_regionkey = r_regionkey
-    GROUP BY ROLLUP (r_name, n_name)
-    """,
-    tags=("rollup", "join"),
-)
-def region_nation_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP hierarchy totals (region → nation → grand total)."""
-    c = load(spark, "customer", sf_dir)
-    n = load(spark, "nation", sf_dir)
-    r = load(spark, "region", sf_dir)
-    return (
-        c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-        .rollup("r_name", "n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_cust"),
-            F.sum(dec("c_acctbal")).cast("double").alias("sum_acctbal"),
-        )
-    )
-
-
-@query(
-    "lineitem_cube",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    """,
-    tags=("cube",),
-)
-def lineitem_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over two low-cardinality dimensions."""
-    return (
-        load(spark, "lineitem", sf_dir)
-        .cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# DISTINCT / semi / anti / set ops (§2.3, §2.7 completions)
+# DISTINCT (§2.3)
 # ---------------------------------------------------------------------------
 @query(
     "distinct_segments",
@@ -351,100 +220,6 @@ def lineitem_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT — planned as a hash aggregate with map-side partials."""
     return load(spark, "customer", sf_dir).select("c_mktsegment").distinct()
-
-
-@query(
-    "customers_no_recent_orders",
-    oracle="""
-    SELECT c_custkey, c_mktsegment
-    FROM customer
-    WHERE c_custkey NOT IN (
-        SELECT o_custkey FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01'
-    )
-    """,
-    tags=("anti-join",),
-)
-def customers_no_recent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-anti join (S9/F3 are semantically anti-joins in the
-    reference's dedup-delete; here as an explicit operator)."""
-    c = load(spark, "customer", sf_dir)
-    recent = load(spark, "orders", sf_dir).filter(
-        F.col("o_orderdate") >= "2001-01-01"
-    )
-    return c.join(
-        recent, c["c_custkey"] == recent["o_custkey"], "left_anti"
-    ).select("c_custkey", "c_mktsegment")
-
-
-@query(
-    "segments_with_big_orders",
-    oracle="""
-    SELECT c_mktsegment, CAST(COUNT(*) AS BIGINT) AS n_customers
-    FROM customer
-    WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
-    GROUP BY c_mktsegment
-    """,
-    tags=("semi-join", "agg"),
-)
-def segments_with_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-semi join (EXISTS) + aggregate."""
-    c = load(spark, "customer", sf_dir)
-    big = load(spark, "orders", sf_dir).filter(F.col("o_totalprice") > 400000)
-    return (
-        c.join(big, c["c_custkey"] == big["o_custkey"], "left_semi")
-        .groupBy("c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-
-
-@query(
-    "nation_roles_union",
-    oracle="""
-    SELECT n_nationkey, role, CAST(COUNT(*) AS BIGINT) AS n
-    FROM (
-        SELECT c_nationkey AS n_nationkey, 'customer' AS role FROM customer
-        UNION ALL
-        SELECT s_nationkey AS n_nationkey, 'supplier' AS role FROM supplier
-    )
-    GROUP BY n_nationkey, role
-    """,
-    tags=("union",),
-)
-def nation_roles_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION ALL of two relations + aggregate (§2.7)."""
-    c = load(spark, "customer", sf_dir).select(
-        F.col("c_nationkey").alias("n_nationkey"), F.lit("customer").alias("role")
-    )
-    s = load(spark, "supplier", sf_dir).select(
-        F.col("s_nationkey").alias("n_nationkey"), F.lit("supplier").alias("role")
-    )
-    return c.unionAll(s).groupBy("n_nationkey", "role").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-@query(
-    "rich_customer_nations_except",
-    oracle="""
-    SELECT c_nationkey AS n_nationkey FROM customer WHERE c_acctbal > 4500
-    EXCEPT
-    SELECT s_nationkey AS n_nationkey FROM supplier WHERE s_acctbal > 4500
-    """,
-    tags=("except",),
-)
-def rich_customer_nations_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (set difference) between filtered projections."""
-    c = (
-        load(spark, "customer", sf_dir)
-        .filter(F.col("c_acctbal") > 4500)
-        .select(F.col("c_nationkey").alias("n_nationkey"))
-    )
-    s = (
-        load(spark, "supplier", sf_dir)
-        .filter(F.col("s_acctbal") > 4500)
-        .select(F.col("s_nationkey").alias("n_nationkey"))
-    )
-    return c.subtract(s)
 
 
 # ---------------------------------------------------------------------------
@@ -503,31 +278,6 @@ def running_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         "o_orderkey",
         F.sum(dec("o_totalprice")).over(w).cast("double").alias("running_total"),
-    )
-
-
-@query(
-    "order_gap_days",
-    oracle="""
-    SELECT o_custkey, o_orderkey,
-           CAST(date_diff('day',
-                LAG(o_orderdate) OVER (PARTITION BY o_custkey
-                                       ORDER BY o_orderdate, o_orderkey),
-                o_orderdate) AS INTEGER) AS gap_days
-    FROM orders
-    """,
-    tags=("window", "lag"),
-)
-def order_gap_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LAG: days since the customer's previous order (NULL for first)."""
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    prev = F.lag("o_orderdate").over(w)
-    return load(spark, "orders", sf_dir).select(
-        "o_custkey",
-        "o_orderkey",
-        F.datediff(F.col("o_orderdate").cast("date"), prev.cast("date"))
-        .cast("int")
-        .alias("gap_days"),
     )
 
 

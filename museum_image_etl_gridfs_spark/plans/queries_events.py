@@ -481,194 +481,3 @@ def stream_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(clicked, 1)).alias("clicked_after_view"),
         F.count(F.when(purchased, 1)).alias("purchased_full_path"),
     )
-
-
-@query(
-    "gapfilled_hourly_counts",
-    oracle="""
-    WITH a AS (
-        SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS h,
-               count(*) AS n
-        FROM events GROUP BY 1, 2),
-    b AS (SELECT min(h) AS lo, max(h) AS hi FROM a),
-    s AS (
-        SELECT t.event_type,
-               unnest(generate_series(b.lo, b.hi, INTERVAL 1 hour)) AS h
-        FROM (SELECT DISTINCT event_type FROM events) t CROSS JOIN b)
-    SELECT s.event_type, s.h AS hour_start,
-           CAST(coalesce(a.n, 0) AS BIGINT) AS n
-    FROM s LEFT JOIN a ON s.event_type = a.event_type AND s.h = a.h
-    """,
-    tags=("events", "gapfill", "timeseries", "extension"),
-)
-def gapfilled_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-filled hourly event counts per type (the hypertable
-    ``time_bucket_gapfill`` shape): every (type, hour) cell in the
-    observed global range appears, zero-filled where no events landed
-    — the dense series a downstream forecaster or dashboard needs.
-
-    Scale shape: the raw stream collapses to per-(type, hour) partials
-    FIRST (map-side combine; cells ≪ events), the dense scaffold is
-    generated from a 1-row bounds aggregate × the distinct type set
-    (both broadcast — ``sequence``/``explode`` build hours × types
-    rows, never touching raw events), and the left join runs scaffold
-    vs aggregate — cells vs cells, not cells vs events.
-    """
-    ev = load(spark, "events", sf_dir).select(
-        F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
-    )
-    agg = ev.groupBy("event_type", "h").agg(F.count(F.lit(1)).alias("n"))
-    bounds = agg.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
-    types = ev.select("event_type").distinct()
-    series = (
-        types.crossJoin(F.broadcast(bounds))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("lo", "hi", F.expr("interval 1 hour"))
-            ).alias("h"),
-        )
-    )
-    return (
-        series.join(agg, ["event_type", "h"], "left")
-        .select(
-            "event_type",
-            F.col("h").alias("hour_start"),
-            F.coalesce("n", F.lit(0)).cast("long").alias("n"),
-        )
-    )
-
-
-@query(
-    "trailing_24h_user_value",
-    oracle="""
-    SELECT event_id, user_id,
-           CAST(count(*) OVER w AS BIGINT) AS n_24h,
-           CAST(CAST(sum(CAST(value AS DECIMAL(18,6))) OVER w AS
-                     DECIMAL(38,6)) AS DOUBLE) AS sum_24h
-    FROM events
-    WINDOW w AS (PARTITION BY user_id
-                 ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-                 RANGE BETWEEN 86399 PRECEDING AND CURRENT ROW)
-    """,
-    tags=("events", "window", "timeseries", "extension"),
-)
-def trailing_24h_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-24-hour per-user activity at every event: a RANGE
-    (time-interval) window frame over event time — each row sees the
-    count/sum of that user's events in the preceding 86 400 seconds,
-    the moving-aggregate shape behind rate limits, spend caps, and
-    burst features. Unlike a ROWS frame, the result is defined by
-    VALUES (epoch seconds), so it is deterministic even when a user
-    has same-second events.
-
-    Scale shape: ONE shuffle on ``user_id`` (window partitioning);
-    within a partition Spark keeps a sliding frame over the sorted
-    run — O(events per user), no per-row rescan.
-    """
-    ev = load(spark, "events", sf_dir)
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").cast("long"))
-        .rangeBetween(-86399, Window.currentRow)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.count(F.lit(1)).over(w).alias("n_24h"),
-        F.sum(F.col("value").cast("decimal(18,6)"))
-        .over(w)
-        .cast("double")
-        .alias("sum_24h"),
-    )
-
-
-@query(
-    "hourly_anomaly_hours",
-    oracle="""
-    WITH hc AS (
-        SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS h,
-               CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
-    st AS (
-        SELECT event_type,
-               CAST(count(*) AS DOUBLE) AS k,
-               CAST(sum(n) AS DOUBLE) AS s,
-               CAST(sum(n * n) AS DOUBLE) AS q
-        FROM hc GROUP BY 1)
-    SELECT hc.event_type, hc.h AS hour_start, hc.n,
-           round((hc.n - s / k) / sqrt((q - s * s / k) / (k - 1)), 4) AS z
-    FROM hc JOIN st USING (event_type)
-    WHERE abs((hc.n - s / k) / sqrt((q - s * s / k) / (k - 1))) >= 2.0
-    """,
-    tags=("events", "anomaly", "timeseries", "extension"),
-)
-def hourly_anomaly_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Volume-anomaly detection: hours whose event count sits >= 2
-    standard deviations from that type's hourly mean — the monitoring
-    readout behind traffic-spike / outage alerts.
-
-    Cross-engine determinism: the per-type stats are the integer
-    sufficient statistics (k, Σn, Σn²) — exact longs — and mean/var/z
-    are derived from them with the same IEEE expression in both
-    engines, so the z filter cannot flip. Two map-combined aggregates
-    (raw→cells, cells→stats), stats broadcast back onto cells; the
-    raw stream is read once.
-    """
-    ev = load(spark, "events", sf_dir)
-    hc = (
-        ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("h"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    st = hc.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("double").alias("k"),
-        F.sum("n").cast("double").alias("s"),
-        F.sum(F.col("n") * F.col("n")).cast("double").alias("q"),
-    )
-    j = hc.join(F.broadcast(st), "event_type")
-    z = (F.col("n") - F.col("s") / F.col("k")) / F.sqrt(
-        (F.col("q") - F.col("s") * F.col("s") / F.col("k")) / (F.col("k") - 1)
-    )
-    return (
-        j.filter(F.abs(z) >= 2.0)
-        .select(
-            "event_type",
-            F.col("h").alias("hour_start"),
-            "n",
-            F.round(z, 4).alias("z"),
-        )
-    )
-
-
-@query(
-    "dow_hour_profile",
-    oracle="""
-    SELECT CAST(isodow(ts) AS INTEGER) AS dow,
-           CAST(extract(hour FROM ts) AS INTEGER) AS hod,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-    FROM events GROUP BY dow, hod
-    """,
-    tags=("events", "seasonality", "date", "extension"),
-)
-def dow_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly seasonality profile: the (ISO day-of-week × hour-of-day)
-    traffic matrix — the baseline surface anomaly detectors and
-    capacity planners compare against. Engine date-function parity
-    trap: Spark ``dayofweek`` is 1=Sunday while DuckDB ``dayofweek``
-    is 0=Sunday — both sides use ISO numbering (1=Monday) instead
-    (Spark ``weekday``+1 ≡ DuckDB ``isodow``). One map-combined
-    aggregate over a 7 × 24 key space."""
-    ev = load(spark, "events", sf_dir)
-    return (
-        ev.groupBy(
-            (F.weekday("ts") + 1).cast("int").alias("dow"),
-            F.hour("ts").cast("int").alias("hod"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-    )

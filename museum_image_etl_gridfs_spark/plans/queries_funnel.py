@@ -1,7 +1,6 @@
 """Event-sequence analytics + inverted-index build.
 
-Product-analytics shapes over ``events`` (ordered funnel, weekly
-retention cohorts, event-type transition matrix) and a two-pass
+The ordered-funnel product-analytics shape over ``events`` and a two-pass
 inverted-index build over ``documents`` — the aggregation patterns a
 training-data / analytics user runs daily that the reference's
 row-at-a-time loops could only express by materializing everything
@@ -11,10 +10,6 @@ cursor iteration).
 Scale notes (100 TB):
 - funnel: ONE shuffle on ``user_id`` with map-side partial min();
   the final global rollup reduces per-partition partials only.
-- retention: the events⇄first-seen join shuffles both sides on
-  ``user_id``; the first-seen side is an aggregate over the same key,
-  so its Exchange is reused — no extra shuffle.
-- transitions: one window shuffle on ``user_id``, then a 25-group agg.
 - inverted index: COUNT-FIRST two-pass — postings lists are collected
   only for terms that survive the document-frequency band, so no
   executor ever materializes the posting list of a stopword-class hot
@@ -23,7 +18,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
@@ -80,87 +75,6 @@ def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("t_view").alias("viewed"),
         F.count(F.when(clicked, 1)).alias("clicked_after_view"),
         F.count(F.when(purchased, 1)).alias("purchased_full_path"),
-    )
-
-
-@query(
-    "weekly_retention",
-    oracle="""
-    WITH f AS (
-        SELECT user_id, date_trunc('week', min(ts)) AS cw
-        FROM events GROUP BY user_id),
-    a AS (
-        SELECT e.user_id, f.cw, date_trunc('week', e.ts) AS aw
-        FROM events e JOIN f USING (user_id))
-    SELECT cw AS cohort_week,
-           CAST(date_diff('day', cw, aw) // 7 AS INTEGER) AS week_offset,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS active_users
-    FROM a GROUP BY 1, 2
-    """,
-    tags=("events", "retention", "extension"),
-)
-def weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly retention cohorts: cohort = ISO week (Monday-truncated)
-    of a user's first event; a cell counts the distinct cohort users
-    active ``week_offset`` weeks later.
-
-    Both Spark and DuckDB truncate weeks to Monday, so the day-diff
-    between two week-starts is an exact multiple of 7 and the integer
-    division is lossless.
-    """
-    ev = load(spark, "events", sf_dir)
-    first = ev.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("cw")
-    )
-    act = (
-        ev.join(first, "user_id")
-        .select(
-            "user_id",
-            "cw",
-            F.date_trunc("week", F.col("ts")).alias("aw"),
-        )
-    )
-    return (
-        act.groupBy(
-            F.col("cw").alias("cohort_week"),
-            (F.datediff("aw", "cw") / 7).cast("int").alias("week_offset"),
-        )
-        .agg(F.countDistinct("user_id").alias("active_users"))
-    )
-
-
-@query(
-    "event_transitions",
-    oracle="""
-    WITH seq AS (
-        SELECT user_id, event_type,
-               lag(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_type
-        FROM events)
-    SELECT prev_type, event_type AS next_type,
-           CAST(count(*) AS BIGINT) AS n
-    FROM seq WHERE prev_type IS NOT NULL
-    GROUP BY prev_type, next_type
-    """,
-    tags=("events", "window", "extension"),
-)
-def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user event-type transition matrix (Markov first-order
-    counts): how often does event type A immediately precede B in a
-    user's timeline. ``event_id`` breaks same-timestamp ties so the
-    sequence — and therefore the matrix — is deterministic.
-    """
-    ev = load(spark, "events", sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "user_id",
-        F.col("event_type").alias("next_type"),
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-    return (
-        seq.filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", "next_type")
-        .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
@@ -291,68 +205,6 @@ def unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("nw").alias("n_words"),
         F.round(-F.col("s").cast("double") / F.col("nw"), 4).alias("avg_nll"),
-    )
-
-
-@query(
-    "incremental_rollup_merge",
-    oracle="""
-    SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-           event_type,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-           min(value) AS min_value,
-           max(value) AS max_value
-    FROM events
-    GROUP BY window_start, event_type
-    """,
-    tags=("events", "incremental", "extension"),
-)
-def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental (continuous-aggregate) rollup maintenance: a
-    pre-aggregated BASE (events with ``event_id % 100 < 90``, standing
-    in for the already-rolled-up history) is merged with a freshly
-    aggregated DELTA (the remaining 10%) by RE-AGGREGATING the partial
-    states — count/sum/min/max are all mergeable, so the refresh
-    touches only delta-sized input plus the base's aggregate rows,
-    never the raw history. The oracle is the full recompute, proving
-    merge(partials) ≡ recompute(raw).
-
-    At 100 TB this is the only affordable refresh shape: the base
-    aggregate is O(windows × types), the delta is one partition's
-    worth of raw rows, and the merge shuffles only those. The decimal
-    sum keeps merged doubles bit-identical to the recompute.
-    """
-    ev = load(spark, "events", sf_dir)
-    bucket = F.window("ts", "1 hour").alias("w")
-
-    def rollup(df: DataFrame) -> DataFrame:
-        return df.groupBy(bucket, "event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("sum_dec"),
-            F.min("value").alias("min_value"),
-            F.max("value").alias("max_value"),
-        )
-
-    base = rollup(ev.filter(F.col("event_id") % 100 < 90))
-    delta = rollup(ev.filter(F.col("event_id") % 100 >= 90))
-    merged = (
-        base.unionByName(delta)
-        .groupBy("w", "event_type")
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("sum_dec").alias("sum_dec"),
-            F.min("min_value").alias("min_value"),
-            F.max("max_value").alias("max_value"),
-        )
-    )
-    return merged.select(
-        F.col("w.start").alias("window_start"),
-        "event_type",
-        "n",
-        F.col("sum_dec").cast("double").alias("sum_value"),
-        "min_value",
-        "max_value",
     )
 
 

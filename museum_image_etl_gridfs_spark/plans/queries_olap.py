@@ -1,6 +1,7 @@
-"""Classic OLAP shapes completing the engine surface: correlated
-scalar subqueries, pivot, exact percentiles, time-bucketed trends.
-All pure Catalyst — no UDFs — with exact DuckDB oracles.
+"""OLAP shapes over the TPC-H-ish fixtures: upsert markers, per-group
+rank boards and top-k arrays, SCD2 version history and point-in-time
+lookup, and the brand co-occurrence edge source shared with
+``queries_stats``. No UDFs; exact DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -11,173 +12,6 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..operators.lifecycle import tracked_local_checkpoint
 from .registry import query
-
-
-@query(
-    "small_quantity_revenue",
-    oracle="""
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0
-           AS avg_yearly
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE p.p_type = 'MEDIUM'
-      AND l.l_quantity < (
-        SELECT 0.2 * AVG(l2.l_quantity) FROM lineitem l2
-        WHERE l2.l_partkey = l.l_partkey
-      )
-    """,
-    tags=("subquery", "join", "agg"),
-)
-def small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated scalar subquery (per-part average
-    quantity) gating a fact filter.
-
-    Spark plans the correlated aggregate as a de-correlated join
-    against a pre-aggregated per-key relation — expressed here
-    directly as that join so the plan is explicit: one aggregate over
-    lineitem (shuffle on partkey), broadcast of the filtered part
-    dimension, no per-row subquery execution anywhere.
-    """
-    li = load(spark, "lineitem", sf_dir)
-    part = load(spark, "part", sf_dir).filter(
-        F.col("p_type") == "MEDIUM"
-    ).select("p_partkey")
-    per_part = li.groupBy("l_partkey").agg(
-        (F.lit(0.2) * F.avg("l_quantity")).alias("qty_cut")
-    )
-    return (
-        li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
-        .join(per_part, ["l_partkey"])
-        .filter(F.col("l_quantity") < F.col("qty_cut"))
-        .agg(
-            (
-                F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double")
-                / F.lit(7.0)
-            ).alias("avg_yearly")
-        )
-    )
-
-
-@query(
-    "returnflag_pivot",
-    oracle="""
-    SELECT l_linestatus,
-           CAST(COUNT(*) FILTER (WHERE l_returnflag = 'A') AS BIGINT) AS flag_a,
-           CAST(COUNT(*) FILTER (WHERE l_returnflag = 'N') AS BIGINT) AS flag_n,
-           CAST(COUNT(*) FILTER (WHERE l_returnflag = 'R') AS BIGINT) AS flag_r
-    FROM lineitem
-    GROUP BY l_linestatus
-    """,
-    tags=("pivot", "agg"),
-)
-def returnflag_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT: return-flag columns per line status. Explicit pivot
-    values keep the plan a single-pass aggregate (no extra pass to
-    discover the value domain)."""
-    li = load(spark, "lineitem", sf_dir)
-    wide = (
-        li.groupBy("l_linestatus")
-        .pivot("l_returnflag", ["A", "N", "R"])
-        .agg(F.count(F.lit(1)))
-    )
-    return wide.select(
-        "l_linestatus",
-        F.coalesce(F.col("A"), F.lit(0)).alias("flag_a"),
-        F.coalesce(F.col("N"), F.lit(0)).alias("flag_n"),
-        F.coalesce(F.col("R"), F.lit(0)).alias("flag_r"),
-    )
-
-
-@query(
-    "price_percentiles",
-    oracle="""
-    SELECT o_orderpriority,
-           CAST(quantile_cont(o_totalprice, 0.5) AS DOUBLE)  AS p50,
-           CAST(quantile_cont(o_totalprice, 0.95) AS DOUBLE) AS p95,
-           CAST(MAX(o_totalprice) AS DOUBLE)                 AS p_max
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
-    tags=("percentile", "agg"),
-)
-def price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact percentiles per group (Spark ``percentile`` ≡ DuckDB
-    ``quantile_cont``: both linear-interpolation on the sorted set).
-    Exact percentile sorts within groups — fine at dimension-key
-    cardinality; for high-cardinality measures at 100 TB switch to
-    ``percentile_approx`` (t-digest, mergeable partials)."""
-    o = load(spark, "orders", sf_dir)
-    return o.groupBy("o_orderpriority").agg(
-        F.expr("percentile(o_totalprice, 0.5)").alias("p50"),
-        F.expr("percentile(o_totalprice, 0.95)").alias("p95"),
-        F.max("o_totalprice").alias("p_max"),
-    )
-
-
-_Q6_SQL = """
-    SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue_delta
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-      AND l_shipdate <  TIMESTAMP '1998-01-01'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24
-"""
-
-
-@query(
-    "forecast_revenue_change",
-    oracle=_Q6_SQL,
-    tags=("sql-api", "agg", "filter"),
-)
-def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape through the SQL API end-to-end: the engine
-    registers its catalog as views and executes the EXACT oracle text
-    with spark.sql — proving a user of the reference could bring
-    plain ANSI SQL and run it unchanged. All four predicates push
-    into the Parquet scan."""
-    from ..catalog import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_Q6_SQL)
-
-
-@query(
-    "monthly_revenue_trend",
-    oracle="""
-    SELECT date_trunc('month', o_orderdate) AS month,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-           CAST(SUM(SUM(CAST(o_totalprice AS DECIMAL(18,2))))
-                OVER (ORDER BY date_trunc('month', o_orderdate)
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS DOUBLE) AS cumulative_revenue
-    FROM orders
-    GROUP BY month
-    """,
-    tags=("date", "window", "agg"),
-)
-def monthly_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """date_trunc month buckets + cumulative window over the
-    aggregate — the standard reporting-trend shape. The cumulative
-    sum runs over ~tens of month rows (post-aggregation), so the
-    unpartitioned window is driver-scale-safe."""
-    from pyspark.sql import Window
-
-    o = load(spark, "orders", sf_dir)
-    monthly = o.groupBy(
-        F.date_trunc("month", F.col("o_orderdate")).alias("month")
-    ).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev_dec"),
-    )
-    w = Window.orderBy("month").rowsBetween(Window.unboundedPreceding, 0)
-    return monthly.select(
-        "month",
-        "n_orders",
-        F.col("rev_dec").cast("double").alias("revenue"),
-        F.sum("rev_dec").over(w).cast("double").alias("cumulative_revenue"),
-    )
 
 
 @query(
@@ -215,78 +49,6 @@ def upsert_transform_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merged = merge_upsert(target, updates, ["o_orderkey"])
     return merged.select("o_orderkey", "marker", "o_custkey")
-
-
-@query(
-    "large_order_customers",
-    oracle="""
-    SELECT c.c_custkey, o.o_orderkey, o.o_orderdate,
-           CAST(o.o_totalprice AS DOUBLE) AS o_totalprice,
-           CAST(sum_qty AS DOUBLE) AS sum_qty
-    FROM orders o
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN (
-        SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sum_qty
-        FROM lineitem GROUP BY l_orderkey
-        HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 150
-    ) big ON big.l_orderkey = o.o_orderkey
-    """,
-    tags=("subquery", "having", "join"),
-)
-def large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: orders whose total quantity exceeds a
-    threshold (IN-subquery with HAVING, de-correlated as an
-    aggregate-then-join — the aggregate shuffles once on orderkey and
-    its HAVING filter shrinks the join input before the shuffle
-    join)."""
-    li = load(spark, "lineitem", sf_dir)
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("qty_dec"))
-        .filter(F.col("qty_dec") > 150)
-    )
-    o = load(spark, "orders", sf_dir)
-    c = load(spark, "customer", sf_dir)
-    return (
-        o.join(big, o["o_orderkey"] == big["l_orderkey"])
-        .join(F.broadcast(c), c["c_custkey"] == o["o_custkey"])
-        .select(
-            "c_custkey",
-            "o_orderkey",
-            "o_orderdate",
-            F.col("o_totalprice").cast("double").alias("o_totalprice"),
-            F.col("qty_dec").cast("double").alias("sum_qty"),
-        )
-    )
-
-
-@query(
-    "customer_order_distribution",
-    oracle="""
-    SELECT n_orders, CAST(COUNT(*) AS BIGINT) AS n_customers
-    FROM (
-        SELECT c.c_custkey, CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders
-        FROM customer c
-        LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-        GROUP BY c.c_custkey
-    )
-    GROUP BY n_orders
-    """,
-    tags=("join", "agg", "histogram"),
-)
-def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: customers-per-order-count histogram. The
-    LEFT join keeps zero-order customers (COUNT of the nullable side
-    counts only matches); two aggregations reuse the custkey
-    partitioning."""
-    c = load(spark, "customer", sf_dir)
-    o = load(spark, "orders", sf_dir)
-    per_cust = (
-        c.join(o, c["c_custkey"] == o["o_custkey"], "left")
-        .groupBy(c["c_custkey"])
-        .agg(F.count(o["o_orderkey"]).alias("n_orders"))
-    )
-    return per_cust.groupBy("n_orders").agg(F.count(F.lit(1)).alias("n_customers"))
 
 
 @query(
@@ -349,34 +111,6 @@ def supplier_rank_board(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("pct_rank"),
         "best_supp",
-    )
-
-
-@query(
-    "price_quantity_stats",
-    oracle="""
-    SELECT l_returnflag,
-           round(corr(l_quantity, l_extendedprice), 6)        AS corr_qty_price,
-           round(stddev_samp(l_quantity), 6)                  AS sd_qty,
-           round(covar_samp(l_quantity, l_extendedprice), 4)  AS cov_qty_price,
-           round(avg(l_tax), 6)                               AS avg_tax
-    FROM lineitem
-    GROUP BY l_returnflag
-    """,
-    tags=("stats", "agg"),
-)
-def price_quantity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregates (corr / stddev / covar): both engines
-    use numerically-stable single-pass update formulas; rounding to
-    4-6 dp absorbs partial-merge-order ulps so the hash matches."""
-    li = load(spark, "lineitem", sf_dir)
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-        F.round(F.stddev_samp("l_quantity"), 6).alias("sd_qty"),
-        F.round(F.covar_samp("l_quantity", "l_extendedprice"), 4).alias(
-            "cov_qty_price"
-        ),
-        F.round(F.avg("l_tax"), 6).alias("avg_tax"),
     )
 
 
@@ -545,61 +279,12 @@ def pit_customer_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_id", "custkey", "version_key", "attr_price")
 
 
-@query(
-    "priority_ship_lead_times",
-    oracle="""
-    SELECT o_orderpriority,
-           CAST(count(*) AS BIGINT) AS n,
-           round(CAST(sum(date_diff('day', o_orderdate, l_shipdate))
-                      AS DOUBLE) / count(*), 4) AS avg_lead_days,
-           CAST(max(date_diff('day', o_orderdate, l_shipdate)) AS BIGINT)
-               AS max_lead_days,
-           round(CAST(count(*) FILTER (WHERE
-                          date_diff('day', o_orderdate, l_shipdate) > 90)
-                      AS DOUBLE) / count(*), 4) AS slow_frac
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    GROUP BY o_orderpriority
-    """,
-    tags=("olap", "date", "logistics"),
-)
-def priority_ship_lead_times(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order→ship lead-time profile per order priority: average and
-    worst order-date→ship-date lag per line item, plus the fraction
-    slower than 90 days — the Q12 family generalized from two buckets
-    to full per-priority statistics.
-
-    Determinism: lags are integer day counts, so the averages are
-    exact-integer sums divided once in double — no float summation
-    order anywhere. The only exchange is the lineitem⇄orders join
-    (AQE broadcasts the pruned orders side at bench scale; SMJ on
-    orderkey at 100 TB); the final aggregate is 5 groups with
-    map-side combine.
-    """
-    li = load(spark, "lineitem", sf_dir).select("l_orderkey", "l_shipdate")
-    o = load(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    j = li.join(o, li["l_orderkey"] == o["o_orderkey"])
-    lead = F.datediff("l_shipdate", "o_orderdate")
-    return j.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(
-            F.sum(lead).cast("double") / F.count(F.lit(1)), 4
-        ).alias("avg_lead_days"),
-        F.max(lead).cast("long").alias("max_lead_days"),
-        F.round(
-            F.count(F.when(lead > 90, 1)).cast("double") / F.count(F.lit(1)),
-            4,
-        ).alias("slow_frac"),
-    )
-
-
 def order_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (l_orderkey, p_brand) projection — the shared edge
-    source for every brand co-occurrence graph query
-    (``brand_cooccurrence``, ``brand_triangle_stats``,
-    ``recursive_brand_reach``). The part join is left to the planner:
-    at fixture scale AQE broadcasts it anyway, while a hard-coded
+    source for the brand co-occurrence graph queries
+    (``brand_triangle_stats``, ``recursive_brand_reach``). The part
+    join is left to the planner: at fixture scale AQE broadcasts it
+    anyway, while a hard-coded
     hint would force an oversized broadcast once the part dimension
     grows with SF. The distinct collapses the fact with map-side
     combine."""
@@ -629,49 +314,4 @@ def brand_edges(
     )
     return tracked_local_checkpoint(
         a.join(b, "k").filter(cond).select("b1", "b2").distinct()
-    )
-
-
-@query(
-    "brand_cooccurrence",
-    oracle="""
-    WITH ob AS (
-        SELECT DISTINCT l_orderkey, p_brand
-        FROM lineitem JOIN part ON l_partkey = p_partkey)
-    SELECT a.p_brand AS brand_a, b.p_brand AS brand_b,
-           CAST(count(*) AS BIGINT) AS n_orders
-    FROM ob a JOIN ob b
-      ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-    GROUP BY brand_a, brand_b
-    """,
-    tags=("olap", "market-basket", "self-join"),
-)
-def brand_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket co-occurrence: how often two part brands appear
-    in the same order — the association-mining primitive behind
-    recommendations ("customers who bought X's brand also bought...").
-
-    Scale shape: brands arrive via a planner-chosen part join (AQE
-    broadcasts the small dim at fixture scale; no lineitem shuffle),
-    the per-order distinct collapses the fact to
-    (order, brand) pairs with map-side combine, and the pair fan-out
-    is a self-join on the orderkey partitioning — per-order cost is
-    (brands-per-order choose 2), bounded by basket width, never by
-    catalog size. The brand<brand guard halves the pairs and makes
-    the matrix triangular/deterministic.
-    """
-    ob = order_brand_pairs(spark, sf_dir)
-    a = ob.alias("a")
-    b = ob.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.p_brand") < F.col("b.p_brand")),
-        )
-        .groupBy(
-            F.col("a.p_brand").alias("brand_a"),
-            F.col("b.p_brand").alias("brand_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_orders"))
     )

@@ -269,57 +269,3 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(key10 == 5, F.lit("X-RECHECK")).otherwise(F.col("priority")),
     )
     return snapshot_diff_frames(a, b, "o_orderkey", ["priority"])
-
-
-@query(
-    "fk_integrity_audit",
-    oracle="""
-    SELECT 'lineitem->orders' AS rel,
-           CAST(count(*) AS BIGINT) AS orphans
-    FROM lineitem l ANTI JOIN orders o ON l.l_orderkey = o.o_orderkey
-    UNION ALL
-    SELECT 'orders->customer',
-           CAST(count(*) AS BIGINT)
-    FROM orders o ANTI JOIN customer c ON o.o_custkey = c.c_custkey
-    UNION ALL
-    SELECT 'customer->nation',
-           CAST(count(*) AS BIGINT)
-    FROM customer c ANTI JOIN nation n ON c.c_nationkey = n.n_nationkey
-    """,
-    tags=("pipeline", "data-quality", "anti-join", "extension"),
-)
-def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential-integrity audit (the dbt-tests surface): orphan
-    counts for each FK relationship via left-anti joins — the check a
-    pipeline runs before trusting a new data drop. All three counts
-    are zero on consistent fixtures; a nonzero row names the broken
-    relationship.
-
-    Scale shape: each anti join needs only the key column from its
-    parent side — nation broadcasts; customer/orders parent sides
-    shuffle-free when AQE elects broadcast, else one key-pruned
-    shuffle each; counts reduce map-side. No fact table is read twice
-    for the same relationship.
-    """
-
-    def orphans(child, ckey, parent, pkey, rel):
-        c = load(spark, child, sf_dir).select(F.col(ckey))
-        p = load(spark, parent, sf_dir).select(F.col(pkey))
-        return (
-            c.join(p, c[ckey] == p[pkey], "left_anti")
-            .agg(F.count(F.lit(1)).alias("orphans"))
-            .select(F.lit(rel).alias("rel"), "orphans")
-        )
-
-    return (
-        orphans("lineitem", "l_orderkey", "orders", "o_orderkey",
-                "lineitem->orders")
-        .unionByName(
-            orphans("orders", "o_custkey", "customer", "c_custkey",
-                    "orders->customer")
-        )
-        .unionByName(
-            orphans("customer", "c_nationkey", "nation", "n_nationkey",
-                    "customer->nation")
-        )
-    )

@@ -1,8 +1,8 @@
 """Data-profiling queries: the ANALYZE/data-quality surface a
 training-data pipeline runs before trusting a new drop of data.
 
-Both are single-pass aggregates — at 100 TB a profile that scans the
-table once per column is 6 scans too many; these compute every
+``table_profile`` is a single-pass aggregate — at 100 TB a profile that
+scans the table once per column is 6 scans too many; it computes every
 per-column statistic in ONE aggregate (multi-distinct goes through
 Spark's Expand, still one scan) and reshape to rows afterwards with
 ``stack`` (a narrow Generate, no extra shuffle).
@@ -108,40 +108,6 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "price_histogram",
-    oracle="""
-    SELECT CAST(LEAST(GREATEST(FLOOR((o_totalprice - 0.0) / 30000.0), 0), 19)
-                AS INTEGER) AS bucket,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(CAST(MIN(o_totalprice) AS DECIMAL(18,2)) AS DOUBLE) AS lo,
-           CAST(CAST(MAX(o_totalprice) AS DECIMAL(18,2)) AS DOUBLE) AS hi
-    FROM orders
-    GROUP BY bucket
-    """,
-    tags=("profile", "histogram", "agg"),
-)
-def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width histogram of order totals: 20 buckets of 30k over
-    [0, 600k), top bucket clamped (width_bucket semantics, spelled
-    with FLOOR arithmetic because DuckDB has no width_bucket — the
-    identical IEEE double ops on both engines make the bucket ids
-    bit-stable). One map-side-combined aggregate; 20 output rows."""
-    o = load(spark, "orders", sf_dir)
-    bucket = F.least(
-        F.greatest(F.floor((F.col("o_totalprice") - 0.0) / 30000.0), F.lit(0)),
-        F.lit(19),
-    ).cast("int")
-    return (
-        o.groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("o_totalprice").cast("decimal(18,2)").cast("double").alias("lo"),
-            F.max("o_totalprice").cast("decimal(18,2)").cast("double").alias("hi"),
-        )
-    )
-
-
-@query(
     "price_deciles",
     oracle="""
     WITH t AS (
@@ -160,8 +126,7 @@ def price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("profile", "equi-depth", "window"),
 )
 def price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth decile profile of ``l_extendedprice`` (the
-    complement of ``price_histogram``'s equi-width buckets),
+    """Equi-depth decile profile of ``l_extendedprice``,
     reproducing ntile(10) over a deterministic total order (price,
     orderkey, linenumber) WITHOUT a global window.
 
@@ -308,8 +273,8 @@ def corpus_power_laws(spark: SparkSession, sf_dir: str) -> DataFrame:
     templated/synthetic text.
 
     Top-100-per-source via :func:`~..operators.topk.grouped_topk`
-    (two-phase partial merge — no per-source sort task), then the
-    ``ols_price_trend`` sufficient-statistics route: ln's rounded to
+    (two-phase partial merge — no per-source sort task), then an OLS
+    fit over exact sufficient statistics: ln's rounded to
     8 dp into DECIMAL, products/sums exact, one identical IEEE op
     sequence per source for slope/R² (degenerate variance → NULL on
     both engines).

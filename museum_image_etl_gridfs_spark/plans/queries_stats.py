@@ -6,26 +6,16 @@ with an exact DuckDB oracle:
 
 - inequality / divergence / robust stats: ``gini_customer_spend``
   (distributed global rank), ``ks_returned_price`` (distributed
-  prefix-sum CDFs), ``psi_price_drift``,
-  ``hhi_supplier_concentration``, ``mad_outlier_quantities``,
-  ``trimmed_mean_prices``, ``pairwise_price_correlations`` (one-pass
-  integer sufficient statistics), ``order_streak_islands``
-  (gaps-and-islands);
-- text / embeddings: ``pmi_collocations``,
-  ``matryoshka_energy_profile``;
+  prefix-sum CDFs), ``mad_outlier_quantities``;
+- text: ``pmi_collocations``;
 - graph / dedup: ``near_dup_components_exact`` (exact-dedup-first
   components, recursive-CTE oracle), ``prefix_join_near_dups``
   (exact Jaccard pairs, block-matrix matmul), ``brand_triangle_stats``
   (exact triangle census + transitivity);
 - training-data sampling: ``negative_sampling_pairs`` (deterministic
   hash draws), ``order_cluster_sample`` (hierarchical sampling);
-- event sequences: ``event_pattern_matches`` (CEP-lite regex over
-  ordered event strings);
-- engine surfaces: ``order_share_of_customer`` (correlated scalar
-  subquery), ``unpivot_returnflag_metrics`` (UNPIVOT),
-  ``group_by_all_revenue`` (GROUP BY ALL), ``recursive_brand_reach``
-  (Spark 4 WITH RECURSIVE), ``user_event_type_map`` (map<k,v>
-  functions), ``schema_evolution_merge`` (mergeSchema read).
+- engine surfaces: ``recursive_brand_reach`` (Spark 4 WITH RECURSIVE),
+  ``schema_evolution_merge`` (mergeSchema read).
 
 The reference (a 501-LoC row-at-a-time pymongo ETL,
 /root/reference/src/transform_load.py) has no aggregate surface at
@@ -211,66 +201,6 @@ def ks_returned_price(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.first("nr").alias("n_returned"),
             F.first("no").alias("n_other"),
         )
-    )
-
-
-@query(
-    "order_streak_islands",
-    oracle="""
-    WITH m AS (
-        SELECT DISTINCT o_custkey,
-               CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT)
-                   AS mth
-        FROM orders),
-    grp AS (
-        SELECT o_custkey, mth,
-               mth - row_number() OVER (PARTITION BY o_custkey
-                                        ORDER BY mth) AS island
-        FROM m),
-    runs AS (
-        SELECT o_custkey, island, CAST(count(*) AS BIGINT) AS run_len
-        FROM grp GROUP BY o_custkey, island)
-    SELECT o_custkey,
-           CAST(count(*) AS BIGINT) AS n_streaks,
-           max(run_len) AS longest_streak,
-           CAST(sum(run_len) AS BIGINT) AS active_months
-    FROM runs GROUP BY o_custkey
-    """,
-    tags=("stats", "gaps-and-islands", "window"),
-)
-def order_streak_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands: per customer, runs of CONSECUTIVE calendar
-    months containing at least one order — number of streaks, the
-    longest streak, and total active months.
-
-    The classic ``month_index − row_number()`` island key groups
-    consecutive months into one run; everything is integer-exact.
-
-    Scale shape: one shuffle on ``o_custkey`` (distinct + window +
-    both groupBys all share the key, so Catalyst reuses the
-    partitioning); no global window, no skew risk beyond a single
-    customer's month count (bounded by the calendar).
-    """
-    m = (
-        load(spark, "orders", sf_dir)
-        .select(
-            "o_custkey",
-            (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-            .cast("long")
-            .alias("mth"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("o_custkey").orderBy("mth")
-    runs = (
-        m.withColumn("island", F.col("mth") - F.row_number().over(w))
-        .groupBy("o_custkey", "island")
-        .agg(F.count(F.lit(1)).alias("run_len"))
-    )
-    return runs.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_streaks"),
-        F.max("run_len").alias("longest_streak"),
-        F.sum("run_len").alias("active_months"),
     )
 
 
@@ -506,128 +436,6 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.desc("pmi"), "bigram").limit(_PMI_TOP_K)
 
 
-#: leading-dimension prefix whose retained energy is profiled
-_MATRYOSHKA_DIMS = 8
-
-
-@query(
-    "matryoshka_energy_profile",
-    oracle=f"""
-    WITH r AS (
-        SELECT label,
-               CAST(round(sqrt(
-                   list_reduce(list_transform(embedding[1:{_MATRYOSHKA_DIMS}],
-                                              x -> CAST(x AS DOUBLE)
-                                                   * CAST(x AS DOUBLE)),
-                               (a, b) -> a + b)
-                   / list_reduce(list_transform(embedding,
-                                                x -> CAST(x AS DOUBLE)
-                                                     * CAST(x AS DOUBLE)),
-                                 (a, b) -> a + b)), 6)
-                    AS DECIMAL(10,6)) AS retained
-        FROM embeddings)
-    SELECT label,
-           CAST(count(*) AS BIGINT) AS n_vecs,
-           round(CAST(SUM(retained) AS DOUBLE) / count(*), 6)
-               AS avg_energy_{_MATRYOSHKA_DIMS}d
-    FROM r GROUP BY label
-    """,
-    tags=("embeddings", "matryoshka", "fold"),
-)
-def matryoshka_energy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Matryoshka-truncation quality per label: the average fraction
-    of each embedding's L2 energy retained by its first
-    8 dimensions (≡ cosine similarity between the
-    full vector and its zero-padded prefix).
-
-    Determinism: both engines fold the squared terms LEFT-TO-RIGHT in
-    array order (Spark ``aggregate`` from 0.0, DuckDB ``list_reduce``
-    from the first element — identical because 0.0 + x ≡ x), the
-    per-row double is rounded to DECIMAL, and the cross-row mean sums
-    decimals exactly.
-
-    Scale shape: pure per-row JVM fold (no Python, no shuffle) + one
-    map-side-combined groupBy on a tiny label key.
-    """
-
-    def sumsq(col):
-        return F.aggregate(
-            col,
-            F.lit(0.0),
-            lambda a, v: a + v.cast("double") * v.cast("double"),
-        )
-
-    emb = load(spark, "embeddings", sf_dir)
-    r = emb.select(
-        "label",
-        F.round(
-            F.sqrt(
-                sumsq(F.slice("embedding", 1, _MATRYOSHKA_DIMS))
-                / sumsq(F.col("embedding"))
-            ),
-            6,
-        )
-        .cast("decimal(10,6)")
-        .alias("retained"),
-    )
-    return r.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.round(
-            F.sum("retained").cast("double") / F.count(F.lit(1)),
-            6,
-        ).alias(f"avg_energy_{_MATRYOSHKA_DIMS}d"),
-    )
-
-
-@query(
-    "unpivot_returnflag_metrics",
-    oracle="""
-    UNPIVOT (
-        SELECT l_returnflag,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-                   AS sum_qty,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                   AS sum_price,
-               CAST(count(*) AS DOUBLE) AS n_items
-        FROM lineitem GROUP BY l_returnflag)
-    ON sum_qty, sum_price, n_items
-    INTO NAME metric VALUE value
-    """,
-    tags=("sql-surface", "unpivot"),
-)
-def unpivot_returnflag_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.8 relational-surface twin of ``returnflag_pivot``:
-    the native UNPIVOT (wide metrics → long key/value rows) via
-    ``DataFrame.unpivot`` ≡ DuckDB ``UNPIVOT``.
-
-    The wide aggregate routes money sums through DECIMAL, then every
-    metric is cast DOUBLE so the melted ``value`` column has one
-    stable type on both engines.
-
-    Scale shape: one map-side-combined groupBy to a 3-row wide table;
-    the unpivot itself is a zero-shuffle Expand.
-    """
-    wide = (
-        load(spark, "lineitem", sf_dir)
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
-            F.count(F.lit(1)).cast("double").alias("n_items"),
-        )
-    )
-    return wide.unpivot(
-        ["l_returnflag"],
-        ["sum_qty", "sum_price", "n_items"],
-        "metric",
-        "value",
-    )
-
-
 @query(
     "near_dup_components_exact",
     oracle="""
@@ -769,413 +577,6 @@ def near_dup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cluster_size").cast("long").alias("cluster_size"),
         )
     )
-
-
-#: fixed-width PSI bucket size over o_totalprice (range ≈ [900, 600k])
-_PSI_BUCKET_WIDTH = 60000.0
-_PSI_BUCKETS = 10
-
-
-@query(
-    "psi_price_drift",
-    oracle=f"""
-    WITH b AS (
-        SELECT CAST(least(floor(o_totalprice / {_PSI_BUCKET_WIDTH}),
-                          {_PSI_BUCKETS - 1}) AS INTEGER) + 1 AS bucket,
-               CASE WHEN year(o_orderdate) <= 1994 THEN 1 ELSE 0 END AS base
-        FROM orders),
-    counts0 AS (
-        SELECT bucket,
-               CAST(SUM(base) AS BIGINT) AS n_base,
-               CAST(SUM(1 - base) AS BIGINT) AS n_cur
-        FROM b GROUP BY bucket),
-    spine AS (
-        SELECT CAST(x AS INTEGER) AS bucket
-        FROM range(1, {_PSI_BUCKETS + 1}) t(x)),
-    counts AS (
-        SELECT spine.bucket,
-               COALESCE(n_base, 0) AS n_base,
-               COALESCE(n_cur, 0) AS n_cur
-        FROM spine LEFT JOIN counts0 USING (bucket)),
-    tot AS (SELECT SUM(n_base) AS tb, SUM(n_cur) AS tc FROM counts)
-    SELECT bucket, n_base, n_cur,
-           round((CAST(n_base + 1 AS DOUBLE)
-                      / CAST(tot.tb + {_PSI_BUCKETS} AS DOUBLE)
-                  - CAST(n_cur + 1 AS DOUBLE)
-                      / CAST(tot.tc + {_PSI_BUCKETS} AS DOUBLE))
-                 * ln((CAST(n_base + 1 AS DOUBLE)
-                           / CAST(tot.tb + {_PSI_BUCKETS} AS DOUBLE))
-                      / (CAST(n_cur + 1 AS DOUBLE)
-                             / CAST(tot.tc + {_PSI_BUCKETS} AS DOUBLE))),
-                 8) AS psi_term
-    FROM counts CROSS JOIN tot
-    """,
-    tags=("stats", "drift", "psi"),
-)
-def psi_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population-stability-index drift audit: the order-price
-    distribution of the baseline period (orders through 1994) vs the
-    current period, banded into fixed-width buckets, one Laplace-
-    smoothed PSI term per bucket (the standard model-monitoring
-    drift metric; Σ terms ≥ 0.2 conventionally flags drift).
-
-    Bucket ids come from plain floor-division arithmetic (identical
-    double ops on both engines — no engine-specific width_bucket),
-    counts are exact integers, and each PSI term is one shared IEEE
-    expression over those integers, rounded at the end.
-
-    All ``_PSI_BUCKETS`` buckets contribute a term even when empty in
-    both periods (full 1..k spine, counts left-joined with 0 fill):
-    Laplace smoothing divides by ``tot + k``, so the emitted
-    probabilities must sum to 1 across exactly k buckets — dropping
-    an empty bucket's nonzero smoothed term would make the statistic
-    silently non-standard (ADVICE r3).
-
-    Scale shape: one map-side-combined groupBy onto ≤ 10 bucket rows;
-    the totals row is broadcast. Nothing else moves.
-    """
-    b = load(spark, "orders", sf_dir).select(
-        (
-            F.least(
-                F.floor(F.col("o_totalprice") / F.lit(_PSI_BUCKET_WIDTH)),
-                F.lit(_PSI_BUCKETS - 1),
-            ).cast("int")
-            + 1
-        ).alias("bucket"),
-        F.when(F.year("o_orderdate") <= 1994, 1).otherwise(0).alias("base"),
-    )
-    counts0 = b.groupBy("bucket").agg(
-        F.sum("base").alias("n_base"),
-        F.sum(1 - F.col("base")).alias("n_cur"),
-    )
-    spine = spark.range(1, _PSI_BUCKETS + 1).select(
-        F.col("id").cast("int").alias("bucket")
-    )
-    counts = spine.join(counts0, "bucket", "left").select(
-        "bucket",
-        F.coalesce("n_base", F.lit(0).cast("long")).alias("n_base"),
-        F.coalesce("n_cur", F.lit(0).cast("long")).alias("n_cur"),
-    )
-    tot = counts.agg(F.sum("n_base").alias("tb"), F.sum("n_cur").alias("tc"))
-    k = F.lit(float(_PSI_BUCKETS))
-    p = (F.col("n_base") + 1).cast("double") / (F.col("tb") + k).cast("double")
-    q = (F.col("n_cur") + 1).cast("double") / (F.col("tc") + k).cast("double")
-    return counts.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        "n_base",
-        "n_cur",
-        F.round((p - q) * F.log(p / q), 8).alias("psi_term"),
-    )
-
-
-_SHARE_SQL = """
-    SELECT o.o_orderkey, o.o_custkey, o.o_totalprice,
-           round(o.o_totalprice /
-                 (SELECT CAST(SUM(CAST(o2.o_totalprice AS DECIMAL(18,2)))
-                              AS DOUBLE)
-                  FROM {orders} o2
-                  WHERE o2.o_custkey = o.o_custkey), 6) AS share
-    FROM {orders} o
-    WHERE o.o_totalprice > 400000
-"""
-
-
-@query(
-    "order_share_of_customer",
-    oracle=_SHARE_SQL.format(orders="orders"),
-    tags=("sql-surface", "correlated-subquery"),
-)
-def order_share_of_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery surface: each large order's share of
-    its customer's lifetime spend, written as correlated SQL on BOTH
-    engines (the same statement verbatim) — exercising Catalyst's
-    subquery decorrelation, which rewrites the per-row subquery into
-    one aggregate + join.
-
-    The inner sum routes through DECIMAL so the double division is
-    order-independent; Spark's decorrelated plan is a broadcast-able
-    aggregate join, not N subquery executions — the scale story the
-    row-at-a-time reference (one find() per document) cannot have.
-    """
-    load(spark, "orders", sf_dir).createOrReplaceTempView("stats_share_orders")
-    return spark.sql(_SHARE_SQL.format(orders="stats_share_orders"))
-
-
-@query(
-    "hhi_supplier_concentration",
-    oracle="""
-    WITH rev AS (
-        SELECT s.s_nationkey, l.l_suppkey,
-               SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS rev
-        FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
-        GROUP BY s.s_nationkey, l.l_suppkey),
-    tot AS (
-        SELECT s_nationkey,
-               SUM(rev) AS total_rev,
-               CAST(count(*) AS BIGINT) AS n_suppliers
-        FROM rev GROUP BY s_nationkey),
-    terms AS (
-        SELECT rev.s_nationkey,
-               CAST(round((CAST(rev.rev AS DOUBLE) / CAST(tot.total_rev AS DOUBLE))
-                          * (CAST(rev.rev AS DOUBLE) / CAST(tot.total_rev AS DOUBLE)),
-                          10) AS DECIMAL(12,10)) AS term
-        FROM rev JOIN tot USING (s_nationkey))
-    SELECT n.n_name,
-           ANY_VALUE(tot.n_suppliers) AS n_suppliers,
-           round(CAST(SUM(terms.term) AS DOUBLE), 6) AS hhi
-    FROM terms
-    JOIN tot USING (s_nationkey)
-    JOIN nation n ON n.n_nationkey = terms.s_nationkey
-    GROUP BY n.n_name
-    """,
-    tags=("stats", "concentration", "hhi"),
-)
-def hhi_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herfindahl–Hirschman market-concentration index per nation:
-    the sum of squared supplier revenue shares (1/n = perfectly
-    competitive, 1.0 = monopoly) — the standard concentration audit
-    over a marketplace fact table.
-
-    Shares divide exact DECIMAL revenue sums as doubles in the same
-    op order on both engines; each squared share is rounded to
-    DECIMAL before the cross-supplier sum, so the per-nation total is
-    aggregation-order-independent.
-
-    Scale shape: lineitem shuffles ONCE on supplier key (map-side
-    partials); everything after operates on the supplier-level
-    aggregate (≪ fact); nation and the per-nation totals broadcast.
-    The supplier dimension join is planner-chosen (NOT a forced
-    broadcast — supplier grows with SF; AQE broadcasts it while it is
-    small and falls back to shuffle join when it is not, same policy
-    as order_brand_pairs).
-    """
-    li = load(spark, "lineitem", sf_dir).select("l_suppkey", "l_extendedprice")
-    sup = load(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
-    nat = load(spark, "nation", sf_dir).select("n_nationkey", "n_name")
-    rev = (
-        li.join(sup, li.l_suppkey == sup.s_suppkey)
-        .groupBy("s_nationkey", "l_suppkey")
-        .agg(
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("rev")
-        )
-    )
-    tot = rev.groupBy("s_nationkey").agg(
-        F.sum("rev").alias("total_rev"),
-        F.count(F.lit(1)).alias("n_suppliers"),
-    )
-    share = F.col("rev").cast("double") / F.col("total_rev").cast("double")
-    terms = rev.join(F.broadcast(tot), "s_nationkey").select(
-        "s_nationkey",
-        "n_suppliers",
-        F.round(share * share, 10).cast("decimal(12,10)").alias("term"),
-    )
-    return (
-        terms.join(F.broadcast(nat), terms.s_nationkey == nat.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.first("n_suppliers").alias("n_suppliers"),
-            F.round(F.sum("term").cast("double"), 6).alias("hhi"),
-        )
-    )
-
-
-@query(
-    "trimmed_mean_prices",
-    oracle="""
-    WITH q AS (
-        SELECT l_returnflag, l_extendedprice AS price
-        FROM lineitem),
-    fences AS (
-        SELECT l_returnflag,
-               quantile_cont(price, 0.05) AS p05,
-               quantile_cont(price, 0.95) AS p95
-        FROM q GROUP BY l_returnflag)
-    SELECT q.l_returnflag,
-           round(ANY_VALUE(fences.p05), 4) AS p05,
-           round(ANY_VALUE(fences.p95), 4) AS p95,
-           CAST(count(*) AS BIGINT) AS n_kept,
-           round(CAST(SUM(CAST(q.price AS DECIMAL(18,2))) AS DOUBLE)
-                 / count(*), 4) AS trimmed_mean
-    FROM q JOIN fences USING (l_returnflag)
-    WHERE q.price >= fences.p05 AND q.price <= fences.p95
-    GROUP BY q.l_returnflag
-    """,
-    tags=("stats", "robust", "trimmed-mean"),
-)
-def trimmed_mean_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5–95% trimmed mean of line-item prices per return flag — the
-    robust location estimate that ignores both tails (companion to
-    the MAD fence audit).
-
-    The exact 5th/95th percentiles (Spark ``percentile`` ≡ DuckDB
-    ``quantile_cont``, same interpolation) bound identically on both
-    engines; the kept-rows mean routes through DECIMAL so it is
-    aggregation-order-independent.
-
-    Scale shape: one grouped percentile pass (swap approx_percentile
-    at 100 TB — identical plan shape), tiny fence table broadcast
-    back, one map-side-combined re-aggregation.
-    """
-    q = load(spark, "lineitem", sf_dir).select(
-        "l_returnflag", F.col("l_extendedprice").alias("price")
-    )
-    # one percentile buffer, both fences (r12): two separate
-    # F.percentile aggregates each build and sort their own
-    # per-group value-count state over the full measure column; the
-    # array form shares ONE buffer and evaluates both interpolation
-    # points from it — same Percentile implementation, same values.
-    fences = q.groupBy("l_returnflag").agg(
-        F.percentile("price", F.array(F.lit(0.05), F.lit(0.95))).alias("ps")
-    ).select(
-        "l_returnflag",
-        F.element_at("ps", 1).alias("p05"),
-        F.element_at("ps", 2).alias("p95"),
-    )
-    return (
-        q.join(F.broadcast(fences), "l_returnflag")
-        .filter((F.col("price") >= F.col("p05")) & (F.col("price") <= F.col("p95")))
-        .groupBy("l_returnflag")
-        .agg(
-            F.round(F.first("p05"), 4).alias("p05"),
-            F.round(F.first("p95"), 4).alias("p95"),
-            F.count(F.lit(1)).alias("n_kept"),
-            F.round(
-                F.sum(F.col("price").cast("decimal(18,2)")).cast("double")
-                / F.count(F.lit(1)),
-                4,
-            ).alias("trimmed_mean"),
-        )
-    )
-
-
-#: numeric lineitem measures whose pairwise correlations are audited
-_CORR_VARS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-
-
-def _corr_pairs() -> list[tuple[str, str]]:
-    vs = _CORR_VARS
-    return [(vs[i], vs[j]) for i in range(len(vs)) for j in range(i + 1, len(vs))]
-
-
-def _sql_corr_expr(x: str, y: str) -> str:
-    """Pearson r from exact integer sufficient statistics, combined in
-    one fixed double op order (shared between engines)."""
-    return (
-        f"round((CAST(n AS DOUBLE) * CAST(s_{x}_{y} AS DOUBLE)"
-        f" - CAST(s_{x} AS DOUBLE) * CAST(s_{y} AS DOUBLE))"
-        f" / (sqrt(CAST(n AS DOUBLE) * CAST(s_{x}_{x} AS DOUBLE)"
-        f" - CAST(s_{x} AS DOUBLE) * CAST(s_{x} AS DOUBLE))"
-        f" * sqrt(CAST(n AS DOUBLE) * CAST(s_{y}_{y} AS DOUBLE)"
-        f" - CAST(s_{y} AS DOUBLE) * CAST(s_{y} AS DOUBLE))), 8)"
-    )
-
-
-def _scaled(v: str) -> str:
-    # exact integer rep of a ≤2-decimal money/ratio double; round()
-    # yields an exact N.0 so the BIGINT cast is identical on both
-    # engines despite their different double→int cast rules
-    return f"CAST(round({v} * 100) AS BIGINT)"
-
-
-def _corr_stats_sql() -> str:
-    stats = ["CAST(count(*) AS BIGINT) AS n"]
-    for v in _CORR_VARS:
-        stats.append(f"SUM({_scaled(v)}) AS s_{v}")
-    for i, x in enumerate(_CORR_VARS):
-        for y in _CORR_VARS[i:]:
-            stats.append(
-                f"SUM(CAST({_scaled(x)} * {_scaled(y)} AS DECIMAL(38,0)))"
-                f" AS s_{x}_{y}"
-            )
-    return ",\n               ".join(stats)
-
-
-_CORR_ORACLE = (
-    "    WITH s AS (\n        SELECT "
-    + _corr_stats_sql()
-    + "\n        FROM lineitem)\n    "
-    + "\n    UNION ALL\n    ".join(
-        f"SELECT '{x}' AS var_x, '{y}' AS var_y, {_sql_corr_expr(x, y)} AS corr"
-        f" FROM s"
-        for x, y in _corr_pairs()
-    )
-)
-
-
-@query(
-    "pairwise_price_correlations",
-    oracle=_CORR_ORACLE,
-    tags=("stats", "correlation", "sufficient-stats"),
-)
-def pairwise_price_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson correlation matrix (upper triangle) of the four numeric
-    line-item measures in ONE pass — the distributed-corr recipe:
-    each measure is scaled to an exact integer (×100 — r is invariant
-    under linear scaling, so no rescale is ever needed), every Σx,
-    Σx², Σxy is then an exact integer/DECIMAL sum (order-
-    independent; no decimal×decimal, which overflows DuckDB's 38-digit
-    multiply), and r is one shared double expression over those
-    scalars, so both engines produce identical bits (the
-    ols_price_trend route generalized to a matrix).
-
-    Scale shape: a single map-side-combined global aggregate (one
-    reduce to 1 row); the 6-row matrix is built by re-projecting that
-    row — no second pass over the fact, no Python, no shuffle beyond
-    the 1-row reduce.
-    """
-    li = load(spark, "lineitem", sf_dir)
-
-    def scaled(v: str):
-        return F.round(F.col(v) * 100, 0).cast("long")
-
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for v in _CORR_VARS:
-        aggs.append(F.sum(scaled(v)).alias(f"s_{v}"))
-    for i, x in enumerate(_CORR_VARS):
-        for y in _CORR_VARS[i:]:
-            aggs.append(
-                F.sum((scaled(x) * scaled(y)).cast("decimal(38,0)"))
-                .alias(f"s_{x}_{y}")
-            )
-    s = li.agg(*aggs)
-    # ONE stack over the single aggregate row — a 6-way union of
-    # selects would rely on exchange reuse to avoid 6 fact scans
-    stack_args = ", ".join(
-        f"'{x}', '{y}', {_sql_corr_expr(x, y)}" for x, y in _corr_pairs()
-    )
-    return s.selectExpr(
-        f"stack({len(_corr_pairs())}, {stack_args}) AS (var_x, var_y, corr)"
-    )
-
-
-_GBA_SQL = """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) *
-                    CAST(1.0 - l_discount AS DECIMAL(8,4))) AS DOUBLE)
-               AS revenue,
-           CAST(count(*) AS BIGINT) AS n_items
-    FROM {lineitem}
-    GROUP BY ALL
-"""
-
-
-@query(
-    "group_by_all_revenue",
-    oracle=_GBA_SQL.format(lineitem="lineitem"),
-    tags=("sql-surface", "group-by-all"),
-)
-def group_by_all_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``GROUP BY ALL`` SQL surface (infer grouping keys from the
-    non-aggregate select list) — the same statement runs verbatim on
-    Spark 4 and DuckDB; revenue routes through DECIMAL as everywhere.
-
-    Scale shape: ordinary map-side-combined hash aggregate on a 6-row
-    group space.
-    """
-    load(spark, "lineitem", sf_dir).createOrReplaceTempView(
-        "stats_gba_lineitem"
-    )
-    return spark.sql(_GBA_SQL.format(lineitem="stats_gba_lineitem"))
 
 
 #: the recursive clause — shared verbatim between engines; only the
@@ -1528,111 +929,6 @@ def brand_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_olap import brand_edges
 
     return triangle_census(brand_edges(spark, sf_dir, directed=False))
-
-
-@query(
-    "user_event_type_map",
-    oracle="""
-    SELECT user_id,
-           CAST(count(DISTINCT event_type) AS INTEGER) AS n_types,
-           CAST(count(*) FILTER (WHERE event_type = 'view') AS BIGINT)
-               AS views,
-           CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT)
-               AS clicks,
-           CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT)
-               AS purchases
-    FROM events GROUP BY user_id
-    """,
-    tags=("sql-surface", "map-type", "events"),
-)
-def user_event_type_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map-typed column surface (§2.8): per-user event-type counts are
-    materialized as a genuine ``map<string,bigint>`` column
-    (``map_from_entries`` over collected structs), then consumed with
-    map functions — ``map_keys``/``size`` for the distinct-type count
-    and ``element_at`` lookups — before flattening to plain columns
-    the oracle can check.
-
-    Scale shape: one user_id-keyed two-level aggregate (map-side
-    partials on (user, type) first, so no collect_list ever sees more
-    than the 5-type fan-in per user); the map stays JVM-side.
-    """
-    ev = load(spark, "events", sf_dir).select("user_id", "event_type")
-    per_type = ev.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    mapped = per_type.groupBy("user_id").agg(
-        F.map_from_entries(
-            F.sort_array(F.collect_list(F.struct("event_type", "n")))
-        ).alias("m")
-    )
-    return mapped.select(
-        "user_id",
-        F.size(F.map_keys(F.col("m"))).alias("n_types"),
-        F.coalesce(F.element_at("m", F.lit("view")), F.lit(0)).alias("views"),
-        F.coalesce(F.element_at("m", F.lit("click")), F.lit(0)).alias("clicks"),
-        F.coalesce(F.element_at("m", F.lit("purchase")), F.lit(0)).alias(
-            "purchases"
-        ),
-    )
-
-
-@query(
-    "event_pattern_matches",
-    oracle="""
-    WITH s AS (
-        SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-               string_agg(substr(event_type, 1, 1), ''
-                          ORDER BY ts, event_id) AS seq
-        FROM events GROUP BY user_id)
-    SELECT user_id, n_events,
-           CAST(CASE WHEN regexp_matches(seq, 'v[^p]*c[^p]*p')
-                THEN 1 ELSE 0 END AS INTEGER) AS matched
-    FROM s
-    """,
-    tags=("events", "cep", "sequence-pattern"),
-)
-def event_pattern_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Complex-event-processing-lite: regex over each user's ordered
-    event-initial string — here "a view, then a click with no
-    intervening purchase, then a purchase" as ``v[^p]*c[^p]*p`` (the
-    MATCH_RECOGNIZE-class pattern a funnel can't express, because the
-    NEGATION [^p]* constrains what happens BETWEEN steps).
-
-    The per-user sequence is deterministic — events sort by
-    (ts, event_id) inside ``sort_array`` — and the pattern class used
-    (literals + negated character classes) behaves identically in
-    Java regex and RE2.
-
-    Scale shape: one user-keyed aggregate; each user's string is
-    bounded by their event count, built JVM-side from the sorted
-    collect_list, and the regex evaluates in the same stage — no
-    second shuffle, no Python.
-    """
-    ev = load(spark, "events", sf_dir).select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.substring("event_type", 1, 1).alias("ini"),
-    )
-    s = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("ts", "event_id", "ini"))),
-                lambda x: x["ini"],
-            ),
-            "",
-        ).alias("seq"),
-    )
-    return s.select(
-        "user_id",
-        "n_events",
-        F.when(F.col("seq").rlike("v[^p]*c[^p]*p"), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("matched"),
-    )
 
 
 #: 1-in-20 order clusters (~5%) kept whole in the sample

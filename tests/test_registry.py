@@ -6,6 +6,9 @@ tools/check_correctness.py at sf0.01 — this is the fast gate.)
 
 from __future__ import annotations
 
+import ast
+import os
+
 import duckdb
 import pytest
 
@@ -35,6 +38,27 @@ def test_registry_in_registration_order():
 
     keys = [key(q) for q in QUERIES.values()]
     assert keys == sorted(keys)
+
+
+def test_benchmark_queries_are_registered():
+    """Every query a perfbench workload builds by name is registered,
+    so a registry cut that breaks the benchmark fails here rather than
+    as failed operations in a benchmark run. The name lists are read
+    from the workloads module's source, not imported."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "perfbench",
+        "workloads.py",
+    )
+    lists = {}
+    for node in ast.parse(open(path).read()).body:
+        target = getattr(node, "targets", [None])[0]
+        if getattr(target, "id", None) in ("QUERY_MIX", "NEAR_DUP"):
+            # NAME = ("a b " "c d").split()
+            lists[target.id] = node.value.func.value.value.split()
+    assert set(lists) == {"QUERY_MIX", "NEAR_DUP"}
+    for names in lists.values():
+        assert names and set(names) <= set(QUERIES), set(names) - set(QUERIES)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

@@ -7,6 +7,7 @@ growth. sklearn's exact permutation is explicitly NOT the contract.
 
 from __future__ import annotations
 
+import duckdb
 from pyspark.sql import functions as F
 
 from museum_image_etl_gridfs_spark.operators.split import (
@@ -73,3 +74,22 @@ def test_sql_rendering_matches_spark(spark):
     via_col = assign_split(df, "k")
     assert via_sql.subtract(via_col).count() == 0
     assert via_col.subtract(via_sql).count() == 0
+
+
+def test_null_key_gets_null_split_on_both_engines(spark):
+    """A row with no key belongs to no split: both renderings give it a
+    NULL label instead of falling through to 'test'."""
+    df = spark.createDataFrame([(None,), (7,)], "k bigint")
+    got = {r["k"]: r["split"] for r in assign_split(df, "k").collect()}
+    assert got[None] is None and got[7] is not None
+    df.createOrReplaceTempView("__split_null_keys")
+    via_sql = spark.sql(
+        f"SELECT {split_label_sql('k')} AS split FROM __split_null_keys"
+        " WHERE k IS NULL"
+    ).collect()
+    assert via_sql[0]["split"] is None
+    duck = duckdb.sql(
+        f"SELECT {split_label_sql('k')} FROM (VALUES (NULL::BIGINT), (7)) t(k)"
+        " ORDER BY k NULLS FIRST"
+    ).fetchall()
+    assert duck == [(None,), (got[7],)]

@@ -60,9 +60,6 @@ EXPECTED_PYTHON = {
     # eagerly inside build() (sketch merge), so the RETURNED plan —
     # the candidate recount — is Python-free and needs no entry here.
     "pareto_frontier_parts",     # SFS skyline kernel (numpy)
-    "udaf_quantity_stats",       # grouped-agg pandas UDAF surface (§2.10)
-    "udtf_bigram_counts",        # python UDTF surface (§2.10)
-    "applyinpandas_gap_stats",   # grouped-map applyInPandas surface (§2.10)
     "http_ingest_pipeline",      # batch-HTTP fetch stage (S2/U1, hermetic)
     "binary_fetch_pipeline",     # binary blob fetch stage (S3/F2, hermetic)
     "pq_adc_topk",               # PQ encode + ADC table gather (numpy)
