@@ -1,9 +1,4 @@
-"""Surrogate keys and portable deterministic hashing.
-
-The reference generates per-row ObjectId surrogate keys
-(``str(ObjectId())``, ``src/ingestion.py:60``) — semantics required:
-uniqueness only. We provide both a random form (``uuid()``) and a
-deterministic content-derived form (sha2) for testability.
+"""Portable deterministic hashing.
 
 ``portable_bucket`` is a multiplicative hash (Knuth's 2654435761)
 expressible identically in Spark and ANSI SQL — used for the
@@ -19,35 +14,29 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-KNUTH = 2654435761  # golden-ratio multiplier, fits results in int64 for keys < 2^32
+KNUTH = 2654435761  # golden-ratio multiplier
 
-
-def surrogate_key() -> Column:
-    """Random unique row id (ObjectId-equivalent)."""
-    return F.expr("uuid()")
-
-
-def deterministic_key(*cols: Column | str) -> Column:
-    """Content-derived stable id: sha2 over concatenated columns."""
-    parts = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.sha2(F.concat_ws("\x1f", *[p.cast("string") for p in parts]), 256)
+_M32 = 2**32
 
 
 def portable_bucket(key: Column | str, n_buckets: int = 100) -> Column:
     """Deterministic bucket in [0, n_buckets) from an integer key.
 
-    ``(key * 2654435761) mod 2^32 mod n`` — identical arithmetic in
-    int64 on Spark and DuckDB (`pmod` guards negative keys).
+    ``(key * 2654435761) mod 2^32 mod n`` for any int64 key. The key is
+    reduced mod 2^32 first and multiplied in two 16-bit halves, so no
+    intermediate leaves int64 (a raw ``key * KNUTH`` overflows once
+    |key| ≥ 2^63 / KNUTH, about 3.47e9).
     """
     c = F.col(key) if isinstance(key, str) else key
-    return F.pmod(
-        F.pmod(c.cast("long") * F.lit(KNUTH), F.lit(2**32)), F.lit(n_buckets)
-    ).cast("int")
+    k = F.pmod(c.cast("long"), F.lit(_M32))
+    lo = k.bitwiseAND(0xFFFF) * KNUTH
+    hi = F.shiftright(k, 16) * KNUTH % 65536 * 65536
+    return ((lo + hi) % _M32 % n_buckets).cast("int")
 
 
 def portable_bucket_sql(key_sql: str, n_buckets: int = 100) -> str:
     """The DuckDB-side rendering of :func:`portable_bucket`."""
-    return (
-        f"CAST((((({key_sql}) * {KNUTH}) % 4294967296 + 4294967296) % 4294967296)"
-        f" % {n_buckets} AS INTEGER)"
-    )
+    k = f"((({key_sql}) % {_M32} + {_M32}) % {_M32})"
+    lo = f"(({k} & 65535) * {KNUTH})"
+    hi = f"(((({k} >> 16) * {KNUTH}) % 65536) * 65536)"
+    return f"CAST((({lo} + {hi}) % {_M32}) % {n_buckets} AS INTEGER)"

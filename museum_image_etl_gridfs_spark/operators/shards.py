@@ -64,8 +64,8 @@ def write_training_shards(
 
     ``repartition(n_shards, shard)`` clusters each shard's rows into
     one task before the partitioned write — without it every task
-    would open a file in every shard directory (the small-files
-    explosion ``sources/files.py::compact_parquet`` exists to undo).
+    would open a file in every shard directory (a small-files
+    explosion).
     """
     out = assign_shards(df, key, n_shards, salt=salt)
     (

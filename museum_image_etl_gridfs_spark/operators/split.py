@@ -30,7 +30,9 @@ def split_label(key: Column | str, seed: int = 42) -> Column:
     """'train' | 'validation' | 'test' from an integer row key; NULL
     for a NULL key (a row with no key belongs to no split)."""
     c = F.col(key) if isinstance(key, str) else key
-    bucket = portable_bucket(c + F.lit(seed), 100)
+    # reduce before adding the seed: the bucket only sees key mod 2^32,
+    # and a key at its type's maximum must not overflow
+    bucket = portable_bucket(c.cast("long") % F.lit(2**32) + F.lit(seed), 100)
     return (
         F.when(bucket < TRAIN_CUT, F.lit("train"))
         .when(bucket < VAL_CUT, F.lit("validation"))
@@ -40,7 +42,7 @@ def split_label(key: Column | str, seed: int = 42) -> Column:
 
 def split_label_sql(key_sql: str, seed: int = 42) -> str:
     """DuckDB rendering of :func:`split_label` (for oracle checks)."""
-    bucket = portable_bucket_sql(f"({key_sql}) + {seed}", 100)
+    bucket = portable_bucket_sql(f"({key_sql}) % {2**32} + {seed}", 100)
     return (
         f"CASE WHEN {bucket} < {TRAIN_CUT} THEN 'train' "
         f"WHEN {bucket} < {VAL_CUT} THEN 'validation' "

@@ -208,45 +208,6 @@ def unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "grouping_sets_revenue",
-    oracle="""
-    SELECT r_name, n_name,
-           CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal,
-           CAST(count(*) AS BIGINT) AS n_custs
-    FROM customer
-    JOIN nation ON c_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    GROUP BY GROUPING SETS ((r_name), (n_name), ())
-    """,
-    tags=("olap", "grouping-sets", "sql-surface"),
-)
-def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS — the general form cube/rollup specialize
-    (SURVEY §2.4 cube/rollup family): per-region totals, per-nation
-    totals, and the grand total in ONE pass over customer, via the
-    engine's SQL surface (Spark's DataFrame API exposes only
-    cube/rollup; arbitrary grouping sets are SQL).
-
-    One Expand node fans each row into its 3 grouping memberships
-    before a single hash aggregate — no self-union, no re-scan.
-    """
-    for t in ("customer", "nation", "region"):
-        load(spark, t, sf_dir).createOrReplaceTempView(f"gs_{t}")
-    return spark.sql(
-        """
-        SELECT r_name, n_name,
-               CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)
-                   AS total_bal,
-               count(*) AS n_custs
-        FROM gs_customer
-        JOIN gs_nation ON c_nationkey = n_nationkey
-        JOIN gs_region ON n_regionkey = r_regionkey
-        GROUP BY GROUPING SETS ((r_name), (n_name), ())
-        """
-    )
-
-
 #: first-8-hex-digits-of-md5 bucket in [0, 1e6) — the finer-grained
 #: mirror of queries_quality._SQL_HASH_BUCKET_1000
 _SQL_HASH_BUCKET_1M = (

@@ -126,16 +126,3 @@ def salted_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "o_orderpriority", "n", F.col("sum_total").cast("double").alias("sum_total")
     )
-
-
-@query("approx_distinct_parts", oracle=None, tags=("approx", "extension"))
-def approx_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog++ distinct-count of partkeys in lineitem (rows-only
-    check: HLL estimates differ across engines by design; the ±5%
-    accuracy bound vs the exact count is asserted in
-    tests/test_joins_skew.py)."""
-    li = load(spark, "lineitem", sf_dir)
-    return li.agg(
-        F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx_parts"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )

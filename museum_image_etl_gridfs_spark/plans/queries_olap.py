@@ -163,53 +163,6 @@ def top_balances_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "scd2_customer_versions",
-    oracle="""
-    SELECT o_custkey AS custkey,
-           o_orderkey AS version_key,
-           o_totalprice AS attr_price,
-           o_orderdate AS valid_from,
-           lead(o_orderdate) OVER w AS valid_to,
-           (row_number() OVER (PARTITION BY o_custkey
-                               ORDER BY o_orderdate DESC, o_orderkey DESC) = 1)
-               AS is_current
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    """,
-    tags=("window", "scd", "history"),
-)
-def scd2_customer_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension type 2 history build: each customer's
-    orders become attribute versions with [valid_from, valid_to)
-    effective ranges (valid_to = next version's start, NULL while
-    current) plus an is_current flag — the standard
-    change-log -> dimension-history transform, as two window
-    expressions over one hash partitioning on the natural key.
-
-    One shuffle total: both windows share PARTITION BY o_custkey, so
-    Catalyst plans a single Exchange; the two sort orders each get an
-    in-partition Sort + Window over that one partitioning (plan-
-    asserted). At 100 TB the custkey hash partitioning is exactly how
-    the table would already be bucketed.
-    """
-    from pyspark.sql import Window
-
-    orders = load(spark, "orders", sf_dir)
-    w_fwd = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    w_rev = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_orderdate"), F.desc("o_orderkey")
-    )
-    return orders.select(
-        F.col("o_custkey").alias("custkey"),
-        F.col("o_orderkey").alias("version_key"),
-        F.col("o_totalprice").alias("attr_price"),
-        F.col("o_orderdate").alias("valid_from"),
-        F.lead("o_orderdate").over(w_fwd).alias("valid_to"),
-        (F.row_number().over(w_rev) == 1).alias("is_current"),
-    )
-
-
-@query(
     "pit_customer_versions",
     oracle="""
     WITH v0 AS (

@@ -1660,8 +1660,7 @@ def distinct_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct is the honest audit number and shuffles each distinct
     (source, gram) pair once; if an approximate audit suffices,
     ``approx_count_distinct`` drops the distinct shuffle entirely
-    (same plan otherwise) — the exact/approx choice mirrors
-    ``distinct_segments`` vs ``approx_distinct_parts``.
+    (same plan otherwise).
     """
     docs = spread(load(spark, "documents", sf_dir), "doc_id")
     wdf = docs.select(

@@ -169,8 +169,8 @@ def signlsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH approximate top-k with an EXACT oracle: vectors bucket
     by the sign pattern of their first ``_SIGN_B`` dimensions (a fixed
     axis-aligned hyperplane family — deterministic and
-    SQL-expressible, unlike ``lsh_bucketed_ann``'s xxhash-derived
-    random planes), and each query scores only its own bucket.
+    SQL-expressible, unlike xxhash-derived random planes), and each
+    query scores only its own bucket.
 
     Scale shape: the candidate join is BUCKET-LOCAL — corpus rows
     join broadcast queries on the bucket key, so the scored stream is
@@ -206,49 +206,6 @@ def signlsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return grouped_topk(
         scored, ["qid"], [("score", False), ("neighbor_id", True)], _TOP_K
     ).select("qid", "neighbor_id", "score")
-
-
-@query("lsh_bucketed_ann", oracle=None, tags=("similarity", "lsh", "extension"))
-def lsh_bucketed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale path for ANN: random-hyperplane LSH bucketing.
-
-    Vectors hash into 2^8 sign-pattern buckets (8 fixed pseudo-random
-    hyperplanes derived from xxhash64 of (dim index, plane index));
-    candidate pairs only form within a bucket, turning the O(n^2)
-    scan into bucket-local joins — at 100 TB the buckets shard across
-    executors. Returns (bucket, n_vectors) bucket occupancy;
-    pair-generation quality is tested in tests/test_similarity.py.
-    """
-    emb = load(spark, "embeddings", sf_dir)
-    planes = 8
-    # deterministic pseudo-random hyperplane component for (i, p):
-    # ((xxhash64(i*planes+p) % 1000) / 500 - 1)  in [-1, 1)
-    sign_bits = []
-    for p in range(planes):
-        proj = F.aggregate(
-            F.zip_with(
-                F.col("embedding"),
-                F.sequence(F.lit(0), F.size("embedding") - 1),
-                lambda x, i: x.cast("double")
-                * (
-                    (F.pmod(F.xxhash64(i * F.lit(planes) + F.lit(p)), F.lit(1000)))
-                    .cast("double")
-                    / F.lit(500.0)
-                    - F.lit(1.0)
-                ),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sign_bits.append(F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
-    bucket = sign_bits[0]
-    for b in sign_bits[1:]:
-        bucket = bucket + b
-    return (
-        emb.select(bucket.cast("int").alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n_vectors"))
-    )
 
 
 @query("pq_adc_topk", oracle=None, tags=("similarity", "pq", "extension"))

@@ -74,18 +74,6 @@ def test_partial_probe_recall(spark, sf_dir):
     assert per_q <= TOP_K
 
 
-def test_lsh_bucket_histogram_invariants(spark, sf_dir):
-    """lsh_bucketed_ann (rows-only in the driver): bucket ids fit the
-    8-plane signature space and the histogram covers the corpus."""
-    from museum_image_etl_gridfs_spark.plans import all_queries
-
-    q = all_queries()["lsh_bucketed_ann"]
-    rows = q.build(spark, sf_dir).collect()
-    assert all(0 <= r["bucket"] < 256 for r in rows)
-    total = sum(r["n_vectors"] for r in rows)
-    assert total == _emb(spark, sf_dir).count()
-
-
 def test_ivf_plan_has_no_per_qid_rank_window(spark, sf_dir):
     """VERDICT r10 #2: the final rank must be the two-phase
     grouped_topk merge, not a per-qid row_number window over the

@@ -1,5 +1,5 @@
-"""Document chunking: Catalyst/UDTF parity, chunk grammar edge cases,
-and pandas grouped-agg UDAF value parity with native aggregates."""
+"""Document chunking: Catalyst/UDTF parity and chunk grammar edge
+cases."""
 
 from __future__ import annotations
 
@@ -9,10 +9,6 @@ from museum_image_etl_gridfs_spark.catalog import load
 from museum_image_etl_gridfs_spark.functions.chunking import (
     chunk_documents,
     make_chunk_udtf,
-)
-from museum_image_etl_gridfs_spark.functions.pandas_agg import (
-    pd_median,
-    pd_trimmed_mean_10,
 )
 
 
@@ -88,33 +84,3 @@ def test_udtf_matches_catalyst_chunker(spark):
         ).collect()
     )
     assert got == want
-
-
-def test_pd_median_matches_native_percentile(spark, sf_dir):
-    docs = load(spark, "documents", sf_dir)
-    got = {
-        r.source: r.med
-        for r in docs.groupBy("source")
-        .agg(pd_median(F.col("n_chars").cast("double")).alias("med"))
-        .collect()
-    }
-    want = {
-        r.source: float(r.med)
-        for r in docs.groupBy("source")
-        .agg(F.expr("percentile(n_chars, 0.5)").alias("med"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_pd_trimmed_mean_drops_tails(spark):
-    # 1..9 plus an outlier 1000: 10% trim drops 1 and 1000
-    vals = [(float(v),) for v in list(range(1, 10)) + [1000]]
-    df = spark.createDataFrame(vals, "x double")
-    got = df.agg(pd_trimmed_mean_10(F.col("x")).alias("m")).collect()[0].m
-    import pandas as pd
-
-    s = pd.Series([float(v) for v in list(range(1, 10)) + [1000]])
-    lo, hi = s.quantile(0.10), s.quantile(0.90)
-    assert got == float(s[(s >= lo) & (s <= hi)].mean())
-    assert got < 100  # outlier influence removed

@@ -13,10 +13,12 @@ sys.path.insert(
 
 from plan_audit import EXPECTED_PYTHON, audit, read_committed  # noqa: E402
 
+from museum_image_etl_gridfs_spark.plans import all_queries  # noqa: E402
+
 
 def test_no_unexpected_python_nodes_anywhere(spark, sf_dir):
     results = audit(spark, sf_dir)
-    assert len(results) >= 100  # the whole registry got audited
+    assert set(results) == set(all_queries())  # the whole registry got audited
     offenders = {
         name: row["python"]
         for name, row in results.items()
@@ -42,8 +44,10 @@ def test_plan_features_match_committed_audit(spark, sf_dir):
     and the new audit committed — plan drift is never silent.
     """
     committed = read_committed()
-    assert len(committed) >= 100, "PLAN_AUDIT.md missing or truncated"
     live = audit(spark, sf_dir)
+    assert len(committed) == sum("error" not in row for row in live.values()), (
+        "PLAN_AUDIT.md missing or truncated"
+    )
     drift: dict[str, str] = {}
     for name, row in live.items():
         if "error" in row:

@@ -113,44 +113,6 @@ def test_range_join_is_broadcast_nested_loop(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_exists_plans_as_semi_join_with_residual(spark, sf_dir):
-    """Q4-shape EXISTS must plan a LEFT SEMI join (not inner+distinct)
-    carrying the non-equi shipdate correlation as a join residual."""
-    plan = _plan(QUERIES["priority_exists_counts"].build(spark, sf_dir))
-    assert "LeftSemi" in plan
-    assert "Distinct" not in plan
-
-
-def test_not_exists_plans_as_anti_join(spark, sf_dir):
-    """Q21-shape NOT EXISTS must plan a LEFT ANTI join; the supplier
-    dimension must broadcast."""
-    plan = _plan(QUERIES["sole_return_suppliers"].build(spark, sf_dir))
-    assert "LeftAnti" in plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_disjunction_derives_single_side_pushdown(spark, sf_dir):
-    """Q19-shape OR-of-ANDs: Catalyst must derive the per-side
-    implications and push the quantity bracket into the lineitem scan
-    (visible as a pushed-down range filter), leaving the residual OR
-    post-join."""
-    plan = _plan(QUERIES["disjunctive_bracket_revenue"].build(spark, sf_dir))
-    scan_section = plan.split("PushedFilters")
-    assert len(scan_section) >= 2
-    assert "l_quantity" in plan.split("PushedFilters")[1][:400] or (
-        "l_quantity" in plan.split("PushedFilters")[-1][:400]
-    )
-
-
-def test_global_scalar_subquery_not_collected(spark, sf_dir):
-    """Q11-shape global-total threshold must stay in the plan as a
-    broadcast join (single-row build side), never a driver collect —
-    the plan has a BroadcastNestedLoopJoin/BroadcastHashJoin and no
-    scalar literal baked in."""
-    plan = _plan(QUERIES["important_part_values"].build(spark, sf_dir))
-    assert "Broadcast" in plan
-
-
 def test_curation_queries_stay_jvm_side(spark, sf_dir):
     """The curation suite must plan zero row-at-a-time Python
     evaluation. eval_contamination deliberately uses Arrow-batched
@@ -191,47 +153,6 @@ def test_no_hof_lambda_leaks_into_filters(spark, sf_dir):
                 assert "lambdafunction" not in line, (name, line[:200])
 
 
-def test_scd2_single_exchange(spark, sf_dir):
-    """Both SCD2 windows share one hash partitioning: exactly one
-    Exchange, two in-partition Sort+Window stages."""
-    import re
-
-    plan = _plan(QUERIES["scd2_customer_versions"].build(spark, sf_dir))
-    assert len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)) == 1, plan
-
-
-def test_min_cost_supplier_single_fact_exchange(spark, sf_dir):
-    """Q2 shape: the explicit repartition(l_partkey) must satisfy BOTH
-    the (partkey, suppkey) aggregate and the partkey window — exactly
-    one shuffle Exchange; every dimension arrives via broadcast."""
-    import re
-
-    plan = _plan(QUERIES["min_cost_supplier"].build(spark, sf_dir))
-    assert len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)) == 1, plan
-    assert "BroadcastHashJoin" in plan
-
-
-def test_market_share_only_fact_join_shuffles(spark, sf_dir):
-    """Q8 shape: part/supplier/nation/region/customer all broadcast;
-    any sort-merge join may only be the lineitem⋈orders orderkey pair."""
-    plan = _plan(QUERIES["nation_market_share"].build(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 4
-    for line in plan.splitlines():
-        if "SortMergeJoin" in line:
-            for dim_key in ("p_partkey", "s_suppkey", "n_nationkey", "c_custkey"):
-                assert dim_key not in line, line
-
-
-def test_promo_ratio_pushes_month_filter(spark, sf_dir):
-    """Q14 shape: the one-month shipdate range must reach the parquet
-    scan as pushed filters (row-group pruning does the heavy lifting
-    at scale), and part must broadcast."""
-    plan = _plan(QUERIES["promo_revenue_ratio"].build(spark, sf_dir))
-    pushed = plan.split("PushedFilters:")[1].splitlines()[0]
-    assert "GreaterThanOrEqual(l_shipdate" in pushed and "LessThan(l_shipdate" in pushed
-    assert "BroadcastHashJoin" in plan
-
-
 def test_doc_chunks_zero_exchange(spark, sf_dir):
     """Chunking is narrow end-to-end: sequence→explode→substring must
     introduce no shuffle (and no Python eval)."""
@@ -240,14 +161,6 @@ def test_doc_chunks_zero_exchange(spark, sf_dir):
     plan = _plan(QUERIES["doc_chunks"].build(spark, sf_dir))
     assert len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)) == 0, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_grouping_sets_single_expand_no_union(spark, sf_dir):
-    """GROUPING SETS must plan ONE Expand + one aggregate pair — not a
-    self-union of three scans."""
-    plan = _plan(QUERIES["grouping_sets_revenue"].build(spark, sf_dir))
-    assert plan.count("Expand") >= 1
-    assert "Union" not in plan
 
 
 def test_inverted_index_broadcasts_df_band(spark, sf_dir):

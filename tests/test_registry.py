@@ -7,6 +7,7 @@ tools/check_correctness.py at sf0.01 — this is the fast gate.)
 from __future__ import annotations
 
 import ast
+import glob
 import os
 
 import duckdb
@@ -40,25 +41,169 @@ def test_registry_in_registration_order():
     assert keys == sorted(keys)
 
 
-def test_benchmark_queries_are_registered():
-    """Every query a perfbench workload builds by name is registered,
-    so a registry cut that breaks the benchmark fails here rather than
-    as failed operations in a benchmark run. The name lists are read
-    from the workloads module's source, not imported."""
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "perfbench",
-        "workloads.py",
-    )
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "museum_image_etl_gridfs_spark"
+
+#: queries kept because a test uses them as the reference or driver for
+#: other code: (query, the test that drives it)
+TEST_DRIVERS = (
+    ("events_sliding_1h_30m", "test_streaming.py::test_sliding_matches_batch"),
+    ("event_funnel", "test_streaming.py::test_stream_event_funnel_matches_batch"),
+    ("hourly_ohlc", "test_streaming.py::test_hourly_ohlc_matches_batch"),
+    ("distinct_segments",
+     "test_sweep_rows.py::test_full_compare_rows_carry_split_and_noise"),
+    ("top_orders", "test_sweep_rows.py::test_count_only_rows_carry_split_and_noise"),
+    ("table_profile", "test_plan_audit.py::test_relational_flagships_are_shuffle_lean"),
+)
+
+#: queries that no workload, parity tag or driving test keeps yet; each
+#: awaits a keep/drop decision. The list may only shrink.
+PENDING_KEEP_DROP = (
+    # queries_core
+    "top_parts_per_brand",
+    # queries_text
+    "text_quality", "lang_id", "token_length_histogram",
+    "lang_confusion_matrix", "doc_chunks",
+    # queries_dedup
+    "exact_dedup_stats", "simhash_fingerprints", "near_dup_clusters",
+    "dup_gram_stats", "incremental_minhash_near_dups", "substring_dedup_rewrite",
+    "ngram_novelty_profile",
+    # queries_vector
+    "l2_nearest", "embedding_norm_stats", "signlsh_topk", "ivf_topk_ann",
+    "hard_negative_mining", "pq_adc_topk", "ivfpq_topk_ann", "pca_projection",
+    # queries_events
+    "stream_user_totals", "stream_expired_sessions", "stream_attribution_pairs",
+    "stream_enriched_segments", "stream_event_funnel",
+    # queries_images
+    "multimodal_transform", "audio_resample_plan", "video_frame_sample_plan",
+    # queries_joins
+    "asof_prev_order_price", "quantity_tier_revenue", "salted_order_counts",
+    # queries_traindata
+    "embedding_near_dup_pairs", "bpe_learn_merges", "bpe_token_stats",
+    "rolling_fingerprints", "training_shards", "corpus_curation_pipeline",
+    "weighted_sample_by_source",
+    # queries_olap
+    "top_balances_per_nation", "supplier_rank_board", "pit_customer_versions",
+    # queries_quality
+    "pii_redaction_stats", "stratified_sample", "tfidf_top_terms",
+    "source_mixture_epoch", "bm25_scores", "frequent_bigrams",
+    "unigram_entropy", "dsir_importance_weights", "temperature_mixture_sample",
+    "unimax_mixture_sample", "linear_quality_classifier", "softdedup_weights",
+    "distinct_ngram_diversity", "doremi_domain_weights",
+    "data_constrained_epochs", "source_overlap_matrix",
+    "gopher_top_ngram_fraction", "gopher_dup_ngram_chars",
+    "gopher_dup_line_stats", "source_unigram_kl", "filter_agreement_kappa",
+    "token_budget_packing", "zorder_layout_stats", "kmeans_cluster_profile",
+    "semantic_dedup_keep", "length_outliers_by_lang",
+    "ccnet_perplexity_buckets", "classifier_calibration",
+    # queries_profile
+    "corpus_power_laws", "price_deciles", "customer_ltv_deciles",
+    # queries_funnel
+    "inverted_index", "unigram_lm_scores", "weighted_sample_topk",
+    # queries_analytics
+    "brand_pagerank", "http_ingest_pipeline", "stream_merge_sink_roundtrip",
+    "binary_fetch_pipeline", "python_datasource_scan",
+    "stream_unconverted_clicks", "stream_hourly_ohlc", "heavy_hitter_tokens",
+    "pareto_frontier_parts", "acctbal_distribution_ranks",
+    # queries_stats
+    "pmi_collocations", "recursive_brand_reach", "negative_sampling_pairs",
+    "incremental_near_dups", "brand_triangle_stats", "order_cluster_sample",
+    "schema_evolution_merge", "gini_customer_spend", "ks_returned_price",
+    "mad_outlier_quantities",
+)
+
+
+def _benchmark_lists() -> dict[str, list[str]]:
+    """``QUERY_MIX`` / ``NEAR_DUP`` as written in perfbench/workloads.py,
+    read from its source rather than imported."""
+    path = os.path.join(ROOT, "perfbench", "workloads.py")
     lists = {}
     for node in ast.parse(open(path).read()).body:
         target = getattr(node, "targets", [None])[0]
         if getattr(target, "id", None) in ("QUERY_MIX", "NEAR_DUP"):
             # NAME = ("a b " "c d").split()
             lists[target.id] = node.value.func.value.value.split()
+    return lists
+
+
+def test_benchmark_queries_are_registered():
+    """Every query a perfbench workload builds by name is registered,
+    so a registry cut that breaks the benchmark fails here rather than
+    as failed operations in a benchmark run."""
+    lists = _benchmark_lists()
     assert set(lists) == {"QUERY_MIX", "NEAR_DUP"}
     for names in lists.values():
         assert names and set(names) <= set(QUERIES), set(names) - set(QUERIES)
+
+
+def test_every_query_has_a_keep_reason():
+    """A registered query is benchmarked, tagged ``reference-parity``,
+    drives a named test, or awaits its keep/drop decision in
+    ``PENDING_KEEP_DROP``. A new query needs one of the first three."""
+    benchmarked = {n for names in _benchmark_lists().values() for n in names}
+    parity = {n for n, q in QUERIES.items() if "reference-parity" in q.tags}
+    drivers = {n for n, _ in TEST_DRIVERS}
+    pending = set(PENDING_KEEP_DROP)
+    assert len(pending) == len(PENDING_KEEP_DROP)
+    # every listed name is registered, so the lists can only shrink
+    assert (drivers | pending) <= set(QUERIES), (drivers | pending) - set(QUERIES)
+    assert not pending & (benchmarked | parity | drivers)
+    for name, test in TEST_DRIVERS:
+        file, fn = test.split("::")
+        tree = ast.parse(open(os.path.join(ROOT, "tests", file)).read())
+        assert fn in {n.name for n in tree.body if isinstance(n, ast.FunctionDef)}, test
+    unkept = set(QUERIES) - benchmarked - parity - drivers - pending
+    assert not unkept, sorted(unkept)
+
+
+def _imported_modules(path: str, module: str | None) -> set[str]:
+    """Dotted names that ``path`` imports (relative imports resolved
+    against ``module``): for ``from pkg import name`` both ``pkg`` and
+    ``pkg.name``; plus every string constant, which is how modules
+    named by string (``_QUERY_MODULES``, ``WORKER_DAEMON_MODULE``)
+    are reached."""
+    is_pkg = path.endswith("__init__.py")
+    out = set()
+    for node in ast.walk(ast.parse(open(path).read())):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                parts = module.split(".")
+                parts = parts[: len(parts) - node.level + is_pkg]
+                base = ".".join(parts + ([base] if base else []))
+            out.add(base)
+            out.update(f"{base}.{a.name}" for a in node.names)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            out.add(node.value)
+    return out
+
+
+def test_every_module_has_a_non_test_importer():
+    """Every package module is imported (or named by string) by another
+    package module, perfbench, tools or the driver entry point; tests
+    do not count. A package counts as imported when any of its
+    submodules is. A module only its own tests reach fails here."""
+    modules = {}
+    for dirpath, _, files in os.walk(os.path.join(ROOT, PACKAGE)):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                rel = os.path.relpath(path, ROOT)[: -len(".py")]
+                modules[rel.replace(os.sep, ".").removesuffix(".__init__")] = path
+    imported = set()
+    for module, path in modules.items():
+        imported |= _imported_modules(path, module) - {module}
+    for pattern in ("perfbench/*.py", "tools/*.py", "__spark_entry__.py"):
+        for path in glob.glob(os.path.join(ROOT, pattern)):
+            imported |= _imported_modules(path, None)
+    # a submodule import imports each enclosing package
+    for name in list(imported):
+        parts = name.split(".")
+        imported.update(".".join(parts[:i]) for i in range(1, len(parts)))
+    orphans = sorted(set(modules) - imported)
+    assert not orphans, orphans
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

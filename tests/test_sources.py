@@ -1,4 +1,4 @@
-"""HTTP source (S1-S3) with hermetic fake transport + Mongo edge.
+"""HTTP source (S1-S3) with hermetic fake transport.
 
 All transports/url-builders are defined INSIDE the tests: nested
 functions cloudpickle by value, while module-level functions in a
@@ -8,7 +8,6 @@ import.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from museum_image_etl_gridfs_spark.sources.http import (
@@ -17,9 +16,6 @@ from museum_image_etl_gridfs_spark.sources.http import (
     ids_dataframe,
     make_json_transport,
     project_metadata,
-)
-from museum_image_etl_gridfs_spark.sources.mongo import (
-    write_documents_partition,
 )
 
 
@@ -105,43 +101,3 @@ def test_end_to_end_ingest_slice(spark):
     rows = with_imgs.collect()
     assert len(rows) == 1  # only object 1 has a non-empty URL
     assert bytes(rows[0]["data"]) == b"IMAGEBYTES"
-
-
-class FakeCollection:
-    def __init__(self):
-        self.batches = []
-
-    def insert_many(self, docs):
-        self.batches.append(list(docs))
-
-
-class FakeClient:
-    def __init__(self, coll):
-        self._coll = coll
-
-    def __getitem__(self, db):
-        return {"artwork_metadata": self._coll}
-
-
-def test_mongo_partition_writer_batches():
-    coll = FakeCollection()
-    rows = [{"doc_id": i} for i in range(2500)]
-    n = write_documents_partition(
-        iter(rows), lambda: FakeClient(coll), "museum_db", "artwork_metadata",
-        batch_size=1000,
-    )
-    assert n == 2500
-    assert [len(b) for b in coll.batches] == [1000, 1000, 500]
-    assert coll.batches[0][0] == {"doc_id": 0}
-
-
-def test_mongo_requires_pymongo_or_fake():
-    from museum_image_etl_gridfs_spark.sources import mongo
-
-    try:
-        import pymongo  # noqa: F401
-
-        pytest.skip("pymongo installed in this env")
-    except ImportError:
-        with pytest.raises(ImportError, match="pymongo"):
-            mongo._require_pymongo()

@@ -7,10 +7,19 @@ growth. sklearn's exact permutation is explicitly NOT the contract.
 
 from __future__ import annotations
 
+import random
+
 import duckdb
 from pyspark.sql import functions as F
 
+from museum_image_etl_gridfs_spark.functions.keys import (
+    KNUTH,
+    portable_bucket,
+    portable_bucket_sql,
+)
 from museum_image_etl_gridfs_spark.operators.split import (
+    TRAIN_CUT,
+    VAL_CUT,
     assign_split,
     split_label_sql,
 )
@@ -93,3 +102,53 @@ def test_null_key_gets_null_split_on_both_engines(spark):
         " ORDER BY k NULLS FIRST"
     ).fetchall()
     assert duck == [(None,), (got[7],)]
+
+
+def _ref_bucket(k: int, n: int) -> int:
+    """The bucket formula on unbounded Python ints."""
+    return (k * KNUTH) % 2**32 % n
+
+
+def _ref_split(k: int, seed: int = 42) -> str:
+    b = _ref_bucket(k + seed, 100)
+    return "train" if b < TRAIN_CUT else "validation" if b < VAL_CUT else "test"
+
+
+def test_extreme_keys_bucket_without_overflow_on_both_engines(spark):
+    """Keys whose raw ``key * KNUTH`` leaves int64 bucket like every
+    other key on Spark (ANSI) and DuckDB, and the keys that always
+    worked keep their old buckets."""
+    rng = random.Random(7)
+    extreme = [4_000_000_000, -4_000_000_000, 3_474_675_966, 2**62,
+               2**63 - 1, -(2**63 - 1)]
+    # |k| * KNUTH < 2^63: the range the unreduced formula handled
+    ordinary = [0, 1, -1, 42] + [rng.randrange(-3_474_675_965, 3_474_675_966)
+                                 for _ in range(200)]
+    keys = extreme + ordinary
+    n = 97
+    want = {k: _ref_bucket(k, n) for k in keys}
+
+    df = spark.createDataFrame([(k,) for k in keys], "k bigint")
+    col = {r["k"]: r["b"] for r in
+           df.select("k", portable_bucket("k", n).alias("b")).collect()}
+    df.createOrReplaceTempView("__bucket_keys")
+    via_sql = {r["k"]: r["b"] for r in spark.sql(
+        f"SELECT k, {portable_bucket_sql('k', n)} AS b FROM __bucket_keys"
+    ).collect()}
+    values = ", ".join(f"(({k})::BIGINT)" for k in keys)
+    duck = dict(duckdb.sql(
+        f"SELECT k, {portable_bucket_sql('k', n)} FROM (VALUES {values}) t(k)"
+    ).fetchall())
+    assert col == want and via_sql == want and duck == want
+
+    # the split adds its seed without overflowing the key's own type
+    top = 2**31 - 1
+    ints = spark.createDataFrame([(top,), (-top - 1,)], "k int")
+    got = {r["k"]: r["split"] for r in assign_split(ints, "k").collect()}
+    assert got == {top: _ref_split(top), -top - 1: _ref_split(-top - 1)}
+    for typ, ks in (("INTEGER", [top, -top - 1]), ("BIGINT", [2**63 - 1])):
+        values = ", ".join(f"(({k})::{typ})" for k in ks)
+        duck_split = dict(duckdb.sql(
+            f"SELECT k, {split_label_sql('k')} FROM (VALUES {values}) t(k)"
+        ).fetchall())
+        assert duck_split == {k: _ref_split(k) for k in ks}
