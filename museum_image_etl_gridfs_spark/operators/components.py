@@ -1,115 +1,105 @@
-"""Connected components — the iterative clustering step of near-dup
+"""Connected components — the clustering step of near-dup
 deduplication (pairs -> clusters -> one canonical doc per cluster).
 
 LSH/MinHash emits PAIRS; a training pipeline needs CLUSTERS (a dup
-chain a-b, b-c must collapse to one survivor). That closure is an
-iterative fixpoint no single SQL query expresses — the canonical
-"iterative algorithm" case of the driver's rows-only category.
+chain a-b, b-c must collapse to one survivor). That closure is a
+fixpoint no single non-recursive SQL query expresses, so its queries
+are checked by rows, goldens or a recursive-CTE oracle.
 
-Algorithm: label propagation ("hash-min"). Every vertex starts
-labeled with its own id; each round every vertex takes the min label
-in its neighborhood (incl. itself); converged when no label changes.
-Rounds = graph diameter, and near-dup graphs are shallow (dup
-clusters are cliques or short chains), so 3-6 rounds cover real
-corpora.
+Algorithm: one numpy union-find over the whole edge list, run in a
+single grouped-map Python stage (``groupBy(<constant>).applyInArrow``).
+``np.unique`` maps ids to dense indices in id order; each round hooks
+the larger ROOT of every edge whose endpoints' roots still differ
+under the smaller (``np.minimum.at``), then pointer-jumps
+``parent = parent[parent]`` to a fixpoint. Every hook points a root at
+a smaller index, so each component ends rooted at its least index —
+its min id, as ``np.unique`` sorts: the result is the min reachable
+id, whatever the graph's diameter. Rounds shrink the
+unresolved edge set geometrically in practice (a randomly relabelled
+10^6-vertex chain resolves in 13); hooking LABELS instead of roots is
+quadratic in chain length.
 
-Scale posture per round: one groupBy(vertex) over the edge list —
-shuffle on vertex id; labels are persisted and lineage is truncated
-with localCheckpoint so the plan does not grow exponentially with
-iterations (the classic iterative-Spark trap).
+The stage is lazy: building it runs no Spark job and creates no
+checkpoint; the edge producer executes once, when the caller's action
+runs.
+
+Scale ceiling: the whole edge list, plus a few int64 arrays over its
+2·E endpoints, must fit in ONE Python worker; 10^7 random edges
+resolve in ~7 s on one x86 core. A graph beyond that needs a
+distributed closure (per-block union-find with a cross-block merge).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-from .lifecycle import release_df, tracked_local_checkpoint
+
+def _min_root(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """``parent`` over dense vertex indices ``0..n-1`` such that
+    ``parent[i]`` is the least index connected to ``i`` by the edges
+    ``(u[k], v[k])``."""
+    parent = np.arange(n)
+    while True:
+        ru, rv = parent[u], parent[v]
+        open_ = ru != rv
+        if not open_.any():
+            return parent
+        # roots only merge, so an edge whose ends share a root is done
+        u, v, ru, rv = u[open_], v[open_], ru[open_], rv[open_]
+        np.minimum.at(parent, np.maximum(ru, rv), np.minimum(ru, rv))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _components_kernel(src: str, dst: str):
+    def kernel(edges: pa.Table) -> pa.Table:
+        u, v = edges.column("u"), edges.column("v")
+        for name, col, other in ((src, u, v), (dst, v, u)):
+            if col.null_count:
+                at = col.is_null().index(True).as_py()
+                raise ValueError(
+                    f"connected_components: NULL {name} endpoint on the edge "
+                    f"with other end {other[at].as_py()!r}"
+                )
+        ids = pa.chunked_array(u.chunks + v.chunks, type=u.type)
+        uniq, dense = np.unique(
+            ids.to_numpy(zero_copy_only=False), return_inverse=True
+        )
+        parent = _min_root(dense[: len(u)], dense[len(u):], len(uniq))
+        vertex = pa.array(uniq, type=u.type)
+        return pa.table({"vertex": vertex, "component": vertex.take(parent)})
+
+    return kernel
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    *,
-    max_iterations: int = 20,
+    edges: DataFrame, src: str = "id_a", dst: str = "id_b"
 ) -> DataFrame:
     """(vertex, component) for every vertex in ``edges``; component =
-    min vertex id reachable. Raises if not converged within
-    ``max_iterations`` (shallow graphs converge in a handful)."""
-    # reset first: a call that raises must not leave the previous
-    # call's round count behind for a reader
-    connected_components.last_rounds = 0
-    sym = tracked_local_checkpoint(
-        # every propagation round joins sym; without a checkpoint the
-        # edge producer (e.g. a blocked-matmul similarity stage)
-        # re-executes per round (measured 20 s -> ~6 s at sf0.1).
-        # The dedup aggregate runs OVER a repartition("v") (r13, guide
-        # §2.4): hashpartitioning(v) satisfies the (u, v) dedup's
-        # clustering (v ⊆ keys) AND is exactly the per-round join's
-        # requirement — localCheckpoint preserves the physical
-        # partitioning in its LogicalRDD, so every propagation round
-        # shuffles only the LABEL table while the edge list (the big
-        # side at corpus scale) stays put. One exchange at build,
-        # diameter-many edge-list shuffles gone.
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionByName(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .repartition("v")
-        .dropDuplicates(["u", "v"])
+    min vertex id reachable. Ids keep ``src``'s type (``dst`` is cast
+    to it). Edge direction, duplicates and self-loops do not matter; a
+    NULL endpoint raises ``ValueError`` when the result is computed.
+    The whole edge list is resolved in one Python worker (module
+    docstring: scale ceiling)."""
+    id_type = edges.schema[src].dataType
+    pairs = edges.select(
+        F.lit(0).alias("g"),
+        F.col(src).alias("u"),
+        F.col(dst).cast(id_type).alias("v"),
     )
-    labels = tracked_local_checkpoint(
-        sym.select(F.col("u").alias("vertex"))
-        .distinct()
-        .withColumn("label", F.col("vertex")),
-        eager=True,
+    return pairs.groupBy("g").applyInArrow(
+        _components_kernel(src, dst),
+        StructType(
+            [StructField("vertex", id_type), StructField("component", id_type)]
+        ),
     )
-
-    labels_cp = labels  # raw checkpoint handle for early release
-    for _round in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym["v"] == labels["vertex"])
-            .groupBy(F.col("u").alias("vertex"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        # The convergence flag rides INSIDE the propagation select: the
-        # old label is already present in this join, so a label change
-        # (nbr_label < label; NULL when no neighbor improved → false)
-        # is known per row with zero extra work. The previous shape —
-        # a separate new⋈old join + count per round — paid one full
-        # shuffle join of the label table every iteration just to ask
-        # "did anything move?" (guide §2.4: remove shuffles outright);
-        # now the check is a narrow scan of the just-materialized
-        # checkpoint blocks.
-        # LAZY checkpoint + the changed-count as its materializing
-        # action (r13): eager=True ran one job to persist the blocks
-        # and a second to count changes; a full count() computes EVERY
-        # partition (no limit short-circuit), so the persist happens as
-        # a side effect and each round is ONE job. Lineage is still
-        # truncated at the localCheckpoint boundary once materialized.
-        new_cp = tracked_local_checkpoint(
-            labels.join(neighbor_min, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-                (F.col("nbr_label") < F.col("label")).alias("__changed"),
-            ),
-        )
-        changed = new_cp.filter(F.col("__changed")).count()
-        # round i's labels are dead once round i+1 is materialized —
-        # releasing here caps in-flight checkpoint storage at O(1)
-        # rounds instead of O(diameter)
-        release_df(labels_cp)
-        labels_cp = new_cp
-        labels = new_cp.select("vertex", "label")
-        if changed == 0:
-            # measurement hook (r13): rounds-to-convergence, readable
-            # by benchmarks/tests without changing the return type
-            connected_components.last_rounds = _round + 1
-            release_df(sym)  # the returned labels no longer need sym
-            return labels.select("vertex", F.col("label").alias("component"))
-    raise RuntimeError(f"did not converge in {max_iterations} iterations")
 
 
 def canonical_per_cluster(components: DataFrame) -> DataFrame:

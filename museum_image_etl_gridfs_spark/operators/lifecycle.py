@@ -1,8 +1,8 @@
 """Caller-scoped release of ``localCheckpoint`` storage.
 
 Several operators truncate lineage with ``localCheckpoint`` (the
-global-order machinery in :mod:`.quantiles`, the iterative fixpoints
-in :mod:`.components` and the pagerank query, the shared edge list in
+global-order machinery in :mod:`.quantiles`, the iterative fixpoint
+of the pagerank query, the shared edge list in
 the OLAP graph queries). Checkpoint blocks live in executor
 MEMORY_AND_DISK until the RDD is unpersisted or the session dies —
 Spark has no automatic scope for them, so a long-lived session that

@@ -71,8 +71,10 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-SQL-expressible category): MinHash-LSH candidate pairs ->
     connected components -> per-cluster canonical doc + size — the
     full dedup decision a training pipeline acts on (keep canonical,
-    drop the rest). Correctness of the component closure is pinned on
-    known graphs in tests/test_components.py."""
+    drop the rest). The closure is one lazy union-find stage over all
+    candidate pairs in a single Python worker; its correctness is
+    pinned on known, long-chain and random graphs in
+    tests/test_components.py."""
     from ..operators.components import canonical_per_cluster, connected_components
 
     docs = load(spark, "documents", sf_dir)

@@ -470,8 +470,8 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def near_dup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the EXACT near-duplicate graph
     (token-set Jaccard ≥ 0.5, blocked by source) — the oracle-checked
-    twin of ``near_dup_clusters``: the same iterative min-label
-    propagation (operators/components.py), but on a deterministic
+    twin of ``near_dup_clusters``: the same union-find closure
+    (operators/components.py), but on a deterministic
     SQL-expressible edge set so DuckDB's recursive CTE can hash-match
     the full cluster decision (component id ≡ min reachable doc_id,
     keep-first canonical, cluster size).
@@ -487,10 +487,10 @@ def near_dup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-edges, membership re-expands by fingerprint at the end, and
     the min-doc_id labels are preserved because each representative
     IS its group's min. Pair edges then come from the blocked-matmul
-    Jaccard stage; each label-propagation round is one shuffle join
-    on vertex id (lineage checkpoint-truncated) — rounds scale with
-    graph DIAMETER, never corpus size. The quadratic recursive CTE is
-    oracle-only.
+    Jaccard stage and close in ONE lazy grouped stage: a numpy
+    union-find over the whole representative edge list in a single
+    Python worker, no per-round jobs or checkpoints whatever the
+    graph's diameter. The quadratic recursive CTE is oracle-only.
     """
     from ..operators.components import connected_components
     from ..operators.lifecycle import tracked_local_checkpoint

@@ -1,6 +1,9 @@
-"""Connected components: known graphs, convergence, canonical pick."""
+"""Connected components: known graphs, long chains, random graphs
+against a BFS reference, NULL rejection, canonical pick."""
 
 from __future__ import annotations
+
+import random
 
 import pytest
 
@@ -28,7 +31,7 @@ def test_separate_components(spark):
 
 
 def test_long_chain_converges(spark):
-    n = 12  # diameter 11 — exercises multiple propagation rounds
+    n = 12  # diameter 11
     cc = connected_components(_edges(spark, [(i, i + 1) for i in range(n)]))
     comps = {r["component"] for r in cc.collect()}
     assert comps == {0}
@@ -43,23 +46,82 @@ def test_canonical_per_cluster(spark):
     assert cans == {5: (5, 3), 2: (2, 2)}
 
 
-def test_nonconvergence_guard(spark):
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(
-            _edges(spark, [(i, i + 1) for i in range(8)]), max_iterations=1
-        )
+def test_null_endpoint_raises(spark):
+    # a NULL id is no vertex: dropping its edge would silently split a
+    # cluster, so the closure refuses the input
+    edges = _edges(spark, [(1, 2), (2, None), (None, 3), (4, 4)])
+    with pytest.raises(Exception, match="NULL id_a endpoint"):
+        connected_components(edges).collect()
 
 
+def test_relabelled_long_chain_is_one_component(spark):
+    # diameter 9,999 under a random labelling: the path order carries
+    # no hint of the min id
+    n = 10_000
+    ids = random.Random(7).sample(range(10**9), n)
+    cc = connected_components(_edges(spark, list(zip(ids, ids[1:]))))
+    got = cc.collect()
+    assert len(got) == n
+    assert {r["component"] for r in got} == {min(ids)}
 
-def test_last_rounds_reset_when_a_call_raises(spark):
-    connected_components(_edges(spark, [(1, 2), (2, 3), (3, 4)])).collect()
-    stale = connected_components.last_rounds
-    assert stale > 0
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(
-            _edges(spark, [(i, i + 1) for i in range(8)]), max_iterations=1
-        )
-    assert connected_components.last_rounds != stale
+
+def _bfs_min_component(pairs):
+    """Reference closure: breadth-first search per component."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    comp: dict = {}
+    for start in adj:
+        if start in comp:
+            continue
+        seen, frontier = {start}, [start]
+        while frontier:
+            frontier = [w for x in frontier for w in adj[x] if w not in seen]
+            seen.update(frontier)
+        for x in seen:
+            comp[x] = min(seen)
+    return comp
+
+
+def _random_graph(seed, n=600):
+    """Long, branching components (each vertex hooks to one of the
+    three before it in a random order, with ~1% breaks), a few
+    long-range edges, self-loops, duplicates and reversed edges."""
+    rng = random.Random(seed)
+    ids = rng.sample(range(10**6), n)
+    pairs = [
+        (ids[k], ids[k - rng.randint(1, min(3, k))])
+        for k in range(1, n)
+        if rng.random() > 0.01
+    ]
+    pairs += [(rng.choice(ids), rng.choice(ids)) for _ in range(3)]
+    pairs += [(x, x) for x in rng.sample(ids, 10)]
+    pairs += [(b, a) for a, b in rng.sample(pairs, 20)]
+    pairs += rng.sample(pairs, 20)
+    rng.shuffle(pairs)
+    return pairs
+
+
+@pytest.mark.parametrize("seed", range(4))
+def test_random_graphs_match_bfs(spark, seed):
+    pairs = _random_graph(seed)
+    cc = connected_components(_edges(spark, pairs))
+    got = {r["vertex"]: r["component"] for r in cc.collect()}
+    assert got == _bfs_min_component(pairs)
+
+
+def test_string_ids_keep_their_type(spark):
+    names = [f"doc-{i:03d}" for i in range(40)]
+    random.Random(3).shuffle(names)
+    edges = spark.createDataFrame(
+        list(zip(names, names[1:])), "id_a string, id_b string"
+    )
+    cc = connected_components(edges)
+    assert [f.dataType.simpleString() for f in cc.schema] == ["string", "string"]
+    got = cc.collect()
+    assert len(got) == 40
+    assert {r["component"] for r in got} == {"doc-000"}
 
 
 # ---- triangle_census (non-complete graphs the fixture never has) ----

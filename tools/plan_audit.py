@@ -37,6 +37,9 @@ _PYTHON_NODES = (
     "ArrowEvalPython",
     "MapInPandas",
     "FlatMapGroupsInPandas",
+    "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInPandas",
+    "FlatMapCoGroupsInArrow",
     "MapInArrow",
     "AggregateInPandas",
     "ArrowAggregatePython",  # grouped-agg pandas UDAF (Spark 4 name)
@@ -66,6 +69,8 @@ EXPECTED_PYTHON = {
     "ivfpq_topk_ann",            # IVF-PQ residual encode + probed ADC
     "prefix_join_near_dups",     # block-matrix intersection matmul
     "incremental_near_dups",     # same matmul, incremental mode
+    "near_dup_components_exact",  # matmul + union-find closure (numpy)
+    "near_dup_clusters",         # minhash sketch + union-find closure
 }
 
 
