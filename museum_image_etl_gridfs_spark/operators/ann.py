@@ -53,9 +53,9 @@ def _np_id_dtype(spark_type: str) -> str:
 
 def _blocks_for(n_rows: int, target_rows: int, *, floor: int) -> int:
     """Block count so blocks stay ≈ ``target_rows`` rows — the
-    derive-from-measured-input rule shared by the blocked pair
-    kernels (a count tuned at one SF is a memory cliff at the next:
-    the quadratic per-cell matrices scale with (rows/blocks)²)."""
+    derive-from-measured-input rule of the blocked pair kernel (a
+    count tuned at one SF is a memory cliff at the next: the quadratic
+    per-cell matrices scale with (rows/blocks)²)."""
     return max(floor, -(-n_rows // max(target_rows, 1)))
 
 
@@ -110,142 +110,6 @@ def assign_cells(
     return centroids, assigned
 
 
-def cosine_pairs_blocked(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.5,
-    n_blocks: int | None = None,
-    round_to: int = 4,
-    target_block_rows: int = 4096,
-) -> DataFrame:
-    """All-pairs cosine ≥ threshold via block-matrix products.
-
-    The naive pair join evaluates O(n²) interpreted dot products; this
-    packs each of ``n_blocks`` hash blocks into ONE row (ids + L2-
-    normalized matrix), cross-joins the upper-triangular block pairs
-    (n_blocks·(n_blocks+1)/2 rows), and lets numpy do each block-pair
-    as a single matmul. No driver collect; memory per task =
-    2 · (n/n_blocks) · dim doubles for the operands PLUS the
-    (n/n_blocks)² sim matrix — the sim matrix is the term that grows
-    QUADRATICALLY with block size, so ``n_blocks`` must scale with
-    the corpus. By default it is DERIVED from a count so blocks stay
-    ≈ ``target_block_rows`` rows (sim ≈ 134 MB at the 4096 default):
-    a fixed block count that was fine at one SF turns into multi-GB
-    per-task matrices at 3× (measured 417 s at sf3 with the old
-    fixed 8; the count is one cheap column-pruned job at build time —
-    the same build-time measurement as :func:`jaccard_pairs_blocked`'s
-    sub-block count). Callers that must stay LAZY
-    at plan-construction time (explain-only plan audits) pass
-    ``n_blocks`` explicitly — that parameter IS the
-    precomputed-count path and skips the build-time job. Total work stays O(n²), as
-    all-pairs must; the win is a vectorized constant factor and
-    BOUNDED task memory.
-
-    Returns (id_a, id_b, cos_sim) with id_a < id_b. ``threshold``
-    must be > 0: diagonal cells keep each unordered pair once by
-    ZEROING the id_a ≥ id_b entries (an id-based mask — order-
-    independent across the self-join's two collect_list branches), so
-    a non-positive threshold would re-admit the zeroed entries (and
-    an all-pairs run at threshold ≤ 0 is the full quadratic output
-    anyway).
-    """
-    if threshold <= 0:
-        raise ValueError("cosine_pairs_blocked: threshold must be > 0")
-    if n_blocks is None:
-        n_rows = emb.select(id_col).count()
-        n_blocks = _blocks_for(n_rows, target_block_rows, floor=8)
-    blocked = emb.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("blk"),
-    )
-    packed = blocked.groupBy("blk").agg(
-        F.collect_list(F.struct("id", "v")).alias("ms")
-    )
-    # Round-robin the O(blocks²) pair rows across cores: the join's
-    # output inherits hash-partitioning on blk (n_blocks rows), so
-    # without this the CPU-bound matmul stage runs ~n_blocks-wide on
-    # any machine — the exact ceiling measured and fixed on
-    # jaccard_pairs_blocked (8/32 cores busy, 40 s → 15 s solo sf1).
-    para = emb.sparkSession.sparkContext.defaultParallelism
-    pairs = (
-        packed.alias("a")
-        .join(packed.alias("b"), F.col("a.blk") <= F.col("b.blk"))
-        .select(
-            F.col("a.blk").alias("blk_a"),
-            F.col("b.blk").alias("blk_b"),
-            F.col("a.ms").alias("ms_a"),
-            F.col("b.ms").alias("ms_b"),
-        )
-        .repartition(max(para, n_blocks))
-    )
-
-    id_type = blocked.schema["id"].dataType.simpleString()
-    score = _cosine_score_fn(threshold, round_to, _np_id_dtype(id_type))
-    return pairs.mapInPandas(
-        score, f"id_a {id_type}, id_b {id_type}, cos_sim double"
-    )
-
-
-def _cosine_score_fn(threshold: float, round_to: int, id_np: str):
-    """Batch kernel for :func:`cosine_pairs_blocked` (module-level so
-    the diagonal id-mask is directly testable against PERMUTED packed
-    lists — local-mode end-to-end runs can't exercise permutation)."""
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        def unpack(ms):
-            ids = np.array([m["id"] for m in ms])
-            mat = np.array([np.asarray(m["v"], dtype=np.float64) for m in ms])
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            return ids, mat / norms
-
-        for pdf in batches:
-            for blk_a, blk_b, ms_a, ms_b in zip(
-                pdf["blk_a"], pdf["blk_b"], pdf["ms_a"], pdf["ms_b"]
-            ):
-                ia, ma = unpack(ms_a)
-                ib, mb = unpack(ms_b)
-                sim = np.round(ma @ mb.T, round_to)
-                if blk_a == blk_b and sim.size:
-                    # diagonal cell: keep each unordered pair once by
-                    # masking on the IDS (id_a < id_b), never on array
-                    # INDEX (np.triu): the self-join's two branches
-                    # each recompute the collect_list, whose element
-                    # order is not guaranteed identical across
-                    # executors/retries/AQE — an index triangle would
-                    # silently drop or duplicate pairs when the lists
-                    # are permuted relative to each other. The id mask
-                    # is order-independent, so the output stays
-                    # duplicate-free by construction (each id lives in
-                    # exactly one block) without a dropDuplicates
-                    # shuffle of the quadratic pair stream.
-                    sim = np.where(ia[:, None] < ib[None, :], sim, 0.0)
-                ai, bj = np.nonzero(sim >= threshold)
-                if not ai.size:
-                    continue
-                # vectorized emit: a python per-pair append loop was
-                # the sf3 wall (hundreds of millions of hits)
-                xa, yb, sv = ia[ai], ib[bj], sim[ai, bj]
-                keep = xa != yb
-                xa, yb, sv = xa[keep], yb[keep], sv[keep]
-                lo = np.where(xa < yb, xa, yb)
-                hi = np.where(xa < yb, yb, xa)
-                yield pd.DataFrame(
-                    {"id_a": lo, "id_b": hi, "cos_sim": sv.astype(np.float64)}
-                )
-            yield pd.DataFrame(
-                {"id_a": [], "id_b": [], "cos_sim": []}
-            ).astype({"id_a": id_np, "id_b": id_np, "cos_sim": "float64"})
-
-    return score
-
-
 def jaccard_pairs_blocked(
     docs: DataFrame,
     *,
@@ -258,9 +122,8 @@ def jaccard_pairs_blocked(
     target_sub_rows: int = 2048,
 ) -> DataFrame:
     """All-pairs exact token-set Jaccard ≥ threshold, block-matrix
-    style (same shape as :func:`cosine_pairs_blocked`). The engine's
-    one exact Jaccard-threshold join: every exact near-dup pair query
-    runs through it.
+    style. The engine's one exact Jaccard-threshold join: every exact
+    near-dup pair query runs through it.
 
     Each (block, sub-block) packs into one row; block-local sub-block
     pairs cross-join; per pair numpy builds incidence matrices over
@@ -268,14 +131,13 @@ def jaccard_pairs_blocked(
     one integer matmul (|A∩B| = Ia @ Ib.T; |A∪B| = |a|+|b|-∩).
     ``block_col`` is the blocking key (e.g. source) — pairs across
     blocks are never considered, exactly like the blocked SQL join.
-    ``threshold`` must be > 0 (diagonal cells zero their id_a ≥ id_b
-    entries — see :func:`cosine_pairs_blocked`).
+    ``threshold`` must be > 0: diagonal cells zero their id_a ≥ id_b
+    entries, so a non-positive threshold would re-admit them.
 
     ``n_sub_blocks`` is DERIVED by default from ONE measured
     aggregate (max blocking-group size + group count) under two
-    constraints — the same rule :func:`cosine_pairs_blocked` adopted
-    after its fixed block count turned into a 2.8 GB-per-task / 417 s
-    cliff at sf3:
+    constraints (a fixed block count once turned into a
+    2.8 GB-per-task / 417 s cliff at sf3):
 
     - memory ceiling: sub-blocks stay ≈ ``target_sub_rows`` rows —
       the inter/union/jac matrices grow QUADRATICALLY with sub-block
@@ -369,7 +231,7 @@ def jaccard_pairs_blocked(
 def _jaccard_score_fn(threshold: float, id_np: str):
     """Batch kernel for :func:`jaccard_pairs_blocked` (module-level so
     the diagonal id-mask is directly testable against PERMUTED packed
-    lists — see :func:`_cosine_score_fn`)."""
+    lists — local-mode end-to-end runs can't exercise permutation)."""
 
     def score(batches):
         import numpy as np

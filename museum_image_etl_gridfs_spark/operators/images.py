@@ -116,6 +116,12 @@ class RawCodec:
         magic, w, h = _HEADER.unpack_from(blob)
         if magic != _MAGIC:
             raise ValueError("not a RAW0 blob")
+        # checked before the reshape, which would infer a -1 dimension
+        if w <= 0 or h <= 0 or len(blob) != _HEADER.size + w * h * 3:
+            raise ValueError(
+                f"RAW0 header {w}x{h} does not match "
+                f"{len(blob) - _HEADER.size} payload bytes"
+            )
         return np.frombuffer(blob, dtype=np.uint8, offset=_HEADER.size).reshape(
             h, w, 3
         )
@@ -292,32 +298,25 @@ def decoded_length(image_col) -> "F.Column":
     """JVM-side typed-metadata read: pixel-byte length implied by the
     RAW0 header (w*h*3), without decoding the raster. Filters and
     planning on image dims stay codegen'd; only the real pixel work
-    crosses into Python."""
+    crosses into Python. NULL wherever :meth:`RawCodec.decode` rejects
+    the header: a magic other than RAW0, a dimension <= 0 as a signed
+    int32, or dimensions no real payload can match (w*h*3 >= 2^62)."""
     c = F.col(image_col) if isinstance(image_col, str) else image_col
+
     # header is little-endian: magic(4) | int32 w | int32 h — read each
-    # int32 by reversing its bytes into big-endian hex and converting
-    w = (
-        F.conv(
-            F.concat(
-                F.hex(F.substring(c, 8, 1)),
-                F.hex(F.substring(c, 7, 1)),
-                F.hex(F.substring(c, 6, 1)),
-                F.hex(F.substring(c, 5, 1)),
-            ),
-            16,
-            10,
-        )
-    ).cast("long")
-    h = (
-        F.conv(
-            F.concat(
-                F.hex(F.substring(c, 12, 1)),
-                F.hex(F.substring(c, 11, 1)),
-                F.hex(F.substring(c, 10, 1)),
-                F.hex(F.substring(c, 9, 1)),
-            ),
-            16,
-            10,
-        )
-    ).cast("long")
-    return (w * h * 3).alias("decoded_length")
+    # int32 unsigned by reversing its bytes into big-endian hex
+    def u32(pos: int) -> "F.Column":
+        digits = [F.hex(F.substring(c, pos + i, 1)) for i in (3, 2, 1, 0)]
+        return F.conv(F.concat(*digits), 16, 10).cast("long")
+
+    w, h = u32(5), u32(9)
+    # a signed int32 is > 0 exactly when its unsigned read is in [1, 2^31);
+    # the product bound (in double, which cannot overflow) keeps w*h*3
+    # inside a long
+    valid = (
+        (F.hex(F.substring(c, 1, 4)) == _MAGIC.hex().upper())
+        & w.between(1, 2**31 - 1)
+        & h.between(1, 2**31 - 1)
+        & (w.cast("double") * h * 3 < 2.0**62)
+    )
+    return F.when(valid, w * h * 3).alias("decoded_length")

@@ -518,69 +518,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.withColumn("rk", rk).filter(F.col("rk") <= 3)
 
 
-#: per-source mixing weight: even-numbered sources down-sampled to
-#: 0.3 epochs, odd-numbered up-sampled to 1.7 (repetition)
-_SQL_MIX_W = (
-    "CASE WHEN CAST(substr(source, 4) AS INTEGER) % 2 = 0 "
-    "THEN 0.3 ELSE 1.7 END"
-)
-
-
-@query(
-    "source_mixture_epoch",
-    oracle=f"""
-    WITH w AS (
-        SELECT doc_id, source, {_SQL_MIX_W} AS wt, {_SQL_HASH_BUCKET_1000} AS b
-        FROM documents),
-    c AS (
-        SELECT doc_id, source,
-               CAST(floor(wt) AS INTEGER)
-               + (CASE WHEN b < CAST(round((wt - floor(wt)) * 1000, 0) AS INTEGER)
-                       THEN 1 ELSE 0 END) AS n_copies
-        FROM w)
-    SELECT doc_id, source, CAST(unnest(range(1, n_copies + 1)) AS INTEGER) AS copy
-    FROM c WHERE n_copies > 0
-    """,
-    tags=("sampling", "mixing", "extension"),
-)
-def source_mixture_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-mixing epoch construction: each source gets a sampling
-    weight (0.3 = keep 30%, 1.7 = every doc once plus 70% twice) and
-    the epoch materializes as (doc, copy) rows. The integer part
-    replicates deterministically; the fractional part is decided by
-    the same md5 hash bucket as stratified_sample — so the epoch is
-    reproducible row-for-row across engines, partitionings and reruns,
-    which is what makes training-data mixing auditable.
-
-    One narrow pass: weight/bucket projection, sequence + explode.
-    No shuffle at any scale.
-    """
-    docs = load(spark, "documents", sf_dir)
-    wt = F.when(
-        F.substring("source", 4, 10).cast("int") % 2 == 0, F.lit(0.3)
-    ).otherwise(F.lit(1.7))
-    c = docs.select(
-        "doc_id",
-        "source",
-        (
-            F.floor(wt).cast("int")
-            + F.when(
-                Q.hash_bucket("doc_id", 1000)
-                < F.round((wt - F.floor(wt)) * 1000, 0).cast("int"),
-                1,
-            ).otherwise(0)
-        ).alias("n_copies"),
-    )
-    return (
-        c.filter(F.col("n_copies") > 0)
-        .select(
-            "doc_id",
-            "source",
-            F.explode(F.sequence(F.lit(1), F.col("n_copies"))).alias("copy"),
-        )
-    )
-
-
 _BM25_TERMS = ("spark", "table", "fast")
 _BM25_K1, _BM25_B = 1.2, 0.75
 
@@ -910,408 +847,6 @@ def length_outliers_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: DSIR hashed-feature space size (the paper hashes word n-grams into
-#: a fixed bucket count; 4096 keeps the distribution tables broadcast-
-#: sized at ANY corpus scale — the whole point of hashing the vocab)
-_DSIR_B = 4096
-#: stand-in "target distribution" slice: English documents
-_DSIR_TARGET = "en"
-
-
-@query(
-    "dsir_importance_weights",
-    oracle=f"""
-    WITH w AS (
-        SELECT doc_id, lang, {_SQL_WORDS_LOWER} AS w FROM documents),
-    g AS (
-        SELECT doc_id, lang, g
-        FROM w, UNNEST(list_concat(w,
-            CASE WHEN len(w) < 2 THEN CAST([] AS VARCHAR[])
-                 ELSE list_transform(range(1, len(w)),
-                                     i -> w[i] || ' ' || w[i+1]) END)) AS t(g)),
-    b AS (
-        SELECT doc_id, lang, {_sql_hash_bucket('g', _DSIR_B)} AS b FROM g),
-    pd AS (
-        SELECT doc_id, lang, b, CAST(count(*) AS BIGINT) AS cnt
-        FROM b GROUP BY 1, 2, 3),
-    dist AS (
-        SELECT b, CAST(sum(cnt) AS BIGINT) AS r_cnt,
-               CAST(sum(CASE WHEN lang = '{_DSIR_TARGET}' THEN cnt
-                             ELSE 0 END) AS BIGINT) AS t_cnt
-        FROM pd GROUP BY 1),
-    tot AS (
-        SELECT CAST(sum(r_cnt) AS BIGINT) AS r_tot,
-               CAST(sum(t_cnt) AS BIGINT) AS t_tot
-        FROM dist),
-    ratio AS (
-        SELECT b, CAST(ln((t_cnt + 1.0) / (t_tot + {_DSIR_B}))
-                       - ln((r_cnt + 1.0) / (r_tot + {_DSIR_B}))
-                   AS DECIMAL(18, 12)) AS w_b
-        FROM dist CROSS JOIN tot),
-    s AS (
-        SELECT doc_id, sum(CAST(cnt AS DECIMAL(9, 0)) * w_b) AS s
-        FROM pd JOIN ratio USING (b) GROUP BY 1)
-    SELECT d.doc_id, coalesce(round(CAST(s.s AS DOUBLE), 4), 0.0) AS dsir_logw
-    FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id
-    """,
-    tags=("quality", "sampling", "dsir", "extension"),
-)
-def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights (Xie et al., NeurIPS'23 "Data Selection
-    for Language Models via Importance Resampling" — public method):
-    per-document log importance weight under hashed n-gram feature
-    distributions, log p_target(doc) − p_raw(doc) =
-    Σ_b cnt_b · [ln p̂_t(b) − ln p̂_r(b)], with word unigram+bigram
-    features hashed into {_DSIR_B} buckets and add-one smoothing.
-    Target distribution = the English slice; raw = the whole corpus.
-    Downstream, resampling ∝ exp(weight) selects raw data that looks
-    like the target — the published scalable alternative to model-
-    based quality scoring.
-
-    Scale shape (100 TB): ONE pass over the exploded feature stream
-    into per-(doc, bucket) counts (map-side combined); the raw and
-    target bucket distributions cascade off those counts — never a
-    second corpus scan; both distribution tables are O({_DSIR_B})
-    rows regardless of corpus size (that is WHY DSIR hashes features)
-    and broadcast to the scoring join. Per-doc accumulation is
-    DECIMAL-exact (order-independent across partitionings/engines,
-    registry determinism rule); hash buckets use the engine-portable
-    md5 fold (functions/quality.hash_bucket), so any engine can
-    recompute which rows a resample would keep.
-
-    Extension beyond the reference (no curation surface there;
-    SURVEY.md §2.12)."""
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    wdf = docs.select(
-        "doc_id", "lang", Q.words(F.lower(F.col("text"))).alias("w")
-    )
-    feats = wdf.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.concat(F.col("w"), Q.word_ngrams(F.col("w"), 2))
-        ).alias("g"),
-    )
-    per_doc = (
-        feats.select(
-            "doc_id", "lang", Q.hash_bucket(F.col("g"), _DSIR_B).alias("b")
-        )
-        .groupBy("doc_id", "lang", "b")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    dist = per_doc.groupBy("b").agg(
-        F.sum("cnt").alias("r_cnt"),
-        F.sum(
-            F.when(F.col("lang") == _DSIR_TARGET, F.col("cnt")).otherwise(
-                F.lit(0)
-            )
-        ).alias("t_cnt"),
-    )
-    tot = dist.groupBy().agg(
-        F.sum("r_cnt").alias("r_tot"), F.sum("t_cnt").alias("t_tot")
-    )
-    ratio = dist.crossJoin(F.broadcast(tot)).select(
-        "b",
-        (
-            F.log((F.col("t_cnt") + 1.0) / (F.col("t_tot") + _DSIR_B))
-            - F.log((F.col("r_cnt") + 1.0) / (F.col("r_tot") + _DSIR_B))
-        )
-        .cast("decimal(18,12)")
-        .alias("w_b"),
-    )
-    scored = (
-        per_doc.join(F.broadcast(ratio), "b")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("cnt").cast("decimal(9,0)") * F.col("w_b")).alias("s"))
-    )
-    return docs.select("doc_id").join(scored, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(F.round(F.col("s").cast("double"), 4), F.lit(0.0)).alias(
-            "dsir_logw"
-        ),
-    )
-
-
-#: temperature-sampling exponent (XLM-R / mC4 use 0.7 to up-weight
-#: low-resource slices) and the epoch's sampling budget (fraction of
-#: the corpus)
-_TEMP_TAU = 0.7
-_TEMP_BUDGET = 0.5
-
-
-@query(
-    "temperature_mixture_sample",
-    oracle=f"""
-    WITH n AS (
-        SELECT source, CAST(count(*) AS BIGINT) AS n_s
-        FROM documents GROUP BY 1),
-    packed AS (
-        SELECT list(n_s ORDER BY source) AS ns_arr,
-               CAST(sum(n_s) AS BIGINT) AS n
-        FROM n),
-    tot AS (
-        SELECT list_reduce(
-                   list_prepend(CAST(0.0 AS DOUBLE),
-                       list_transform(ns_arr,
-                           x -> pow(CAST(x AS DOUBLE), {_TEMP_TAU}))),
-                   (a, b) -> a + b) AS z,
-               n
-        FROM packed),
-    r AS (
-        SELECT source,
-               CAST(round(least(1.0,
-                        (floor({_TEMP_BUDGET} * n)
-                         * (pow(n_s, {_TEMP_TAU}) / z)) / n_s)
-                    * 1000000, 0) AS BIGINT) AS rate_ppm
-        FROM n CROSS JOIN tot)
-    SELECT d.doc_id, d.source, r.rate_ppm
-    FROM documents d JOIN r USING (source)
-    WHERE {_sql_hash_bucket('CAST(doc_id AS VARCHAR)', 1_000_000)} < rate_ppm
-    """,
-    tags=("sampling", "mixing", "temperature", "extension"),
-)
-def temperature_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-based mixture resampling (the multilingual
-    temperature-sampling knob of XLM-R / mC4, public method): the
-    sampled epoch's source mixture follows q_s ∝ n_s^τ (τ = 0.7
-    up-weights small sources relative to their raw share), realized as
-    a per-source keep rate r_s = min(1, K·q_s / n_s) over a sampling
-    budget K = ⌊{_TEMP_BUDGET} · N⌋, with membership decided by the
-    engine-portable md5 hash bucket — no RNG, reproducible
-    row-for-row across engines, partitionings and reruns. Where
-    ``source_mixture_epoch`` applies FIXED per-source weights, this
-    derives the weights FROM the measured source sizes.
-
-    Determinism of the normalizer: z = Σ_s n_s^τ is a FLOAT sum, and
-    a bare SUM() leaves its accumulation order to the engine — a
-    last-ulp difference (across engines or partitionings) could flip
-    ``round(…·1e6)`` by 1 ppm and change which doc_ids pass the hash
-    gate. Both engines therefore fold the SAME doubles in the SAME
-    source-sorted order: Spark ``aggregate(sorted array, 0.0, +)``,
-    DuckDB ``list_reduce(list(… ORDER BY source), +)`` — bit-identical
-    left-to-right summation, no order left to the engine. O(sources)
-    array in one row — sources is a mixture-definition-sized set, not
-    data-sized.
-
-    Scale shape: one tiny per-source count (map-side combined) packed
-    into a single sorted O(sources) row, rates derived by exploding it
-    — ONE eagerly-built subplan broadcast back (the r7 shape nested a
-    second broadcast(tot) inside broadcast(r), re-running the source
-    scan and paying two serial broadcast materializations — the bulk
-    of its flat ~2 s overhead at every SF). The corpus-side pass is a
-    narrow filter at scan speed — no corpus shuffle at any scale.
-    ``rate_ppm`` is an exact integer so the compare has no float
-    column.
-    """
-    docs = load(spark, "documents", sf_dir)
-    packed = (
-        docs.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_s"))
-        .groupBy()
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("source", "n_s"))
-            ).alias("arr"),
-            F.sum("n_s").alias("n"),
-        )
-        .withColumn(
-            "z",
-            F.aggregate(
-                F.expr(
-                    f"transform(arr, x -> pow(CAST(x.n_s AS DOUBLE), {_TEMP_TAU}D))"
-                ),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            ),
-        )
-    )
-    r = packed.select(
-        F.explode("arr").alias("x"), "n", "z"
-    ).select(
-        F.col("x.source").alias("source"),
-        F.round(
-            F.least(
-                F.lit(1.0),
-                (
-                    F.floor(_TEMP_BUDGET * F.col("n"))
-                    * (F.pow(F.col("x.n_s"), F.lit(_TEMP_TAU)) / F.col("z"))
-                )
-                / F.col("x.n_s"),
-            )
-            * 1_000_000,
-            0,
-        )
-        .cast("long")
-        .alias("rate_ppm"),
-    )
-    return (
-        docs.join(F.broadcast(r), "source")
-        .filter(Q.hash_bucket("doc_id", 1_000_000) < F.col("rate_ppm"))
-        .select("doc_id", "source", "rate_ppm")
-    )
-
-
-#: UniMax parameters: per-slice epoch cap E and the sampling budget as
-#: a multiple of the corpus size (B = floor(1.5·N) examples — above
-#: 1·N so the low-resource slices actually hit the epoch cap, the
-#: regime UniMax was designed for).
-_UNIMAX_EPOCHS = 2
-_UNIMAX_BUDGET = 1.5
-
-
-@query(
-    "unimax_mixture_sample",
-    oracle=f"""
-    WITH n AS (
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_l
-        FROM documents GROUP BY 1),
-    w AS (
-        SELECT lang, n_l, {_UNIMAX_EPOCHS} * n_l AS cap,
-               ROW_NUMBER() OVER (ORDER BY n_l, lang) AS i,
-               COALESCE(SUM({_UNIMAX_EPOCHS} * n_l) OVER (
-                   ORDER BY n_l, lang
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   AS cum_prev,
-               COUNT(*) OVER () AS k,
-               CAST(floor({_UNIMAX_BUDGET} * (SUM(n_l) OVER ())) AS BIGINT)
-                   AS budget
-        FROM n),
-    c AS (
-        SELECT *, (cap * (k - i + 1) <= budget - cum_prev) AS is_capped
-        FROM w),
-    s AS (
-        SELECT *,
-               SUM(CASE WHEN is_capped THEN 1 ELSE 0 END) OVER () AS n_capped,
-               COALESCE(SUM(CASE WHEN is_capped THEN cap END) OVER (), 0)
-                   AS capped_total
-        FROM c),
-    r AS (
-        SELECT lang,
-               CASE WHEN is_capped THEN CAST({_UNIMAX_EPOCHS} AS DOUBLE)
-                    ELSE (CAST(budget - capped_total AS DOUBLE)
-                          / CAST(k - n_capped AS DOUBLE))
-                         / CAST(n_l AS DOUBLE) END AS rate
-        FROM s),
-    e AS (
-        SELECT lang, CAST(floor(rate) AS INTEGER) AS full_epochs,
-               CAST(round((rate - floor(rate)) * 1000000, 0) AS BIGINT)
-                   AS frac_ppm
-        FROM r)
-    SELECT d.doc_id, d.lang,
-           CAST(e.full_epochs
-                + CASE WHEN {_sql_hash_bucket('CAST(doc_id AS VARCHAR)', 1_000_000)}
-                            < e.frac_ppm
-                       THEN 1 ELSE 0 END AS INTEGER) AS copies
-    FROM documents d JOIN e USING (lang)
-    WHERE e.full_epochs
-          + CASE WHEN {_sql_hash_bucket('CAST(doc_id AS VARCHAR)', 1_000_000)}
-                      < e.frac_ppm
-                 THEN 1 ELSE 0 END > 0
-    """,
-    tags=("sampling", "mixing", "unimax", "extension"),
-)
-def unimax_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UniMax mixture sampling (Chung et al., ICLR'23 "UniMax: Fairer
-    and More Effective Language Sampling for Large-Scale Multilingual
-    Pretraining" — public method): instead of a temperature knob, give
-    every language slice as close to a UNIFORM share of the budget as
-    possible subject to a per-slice epoch cap E — low-resource slices
-    repeat up to E epochs, high-resource slices are downsampled to the
-    leftover uniform share. The allocation is the classic waterfill:
-    the threshold t with Σ_l min(E·n_l, t) = B, alloc_l = min(E·n_l, t).
-
-    Solved here in CLOSED FORM over the O(langs) count table — no
-    iterative driver loop: sort slices by capacity ascending; slice i
-    is capped iff cap_i·(k−i+1) ≤ B − Σ_{{j<i}} cap_j (an all-INTEGER
-    test, so the capped set is bit-identical across engines); the
-    water level for the uncapped remainder is one double division of
-    integer aggregates. Per-doc realization: ``copies`` = ⌊rate⌋ full
-    epochs + 1 more iff the md5 hash bucket clears the fractional part
-    in ppm — RNG-free, row-for-row reproducible (same convention as
-    ``temperature_mixture_sample``, which this complements: that
-    derives q_s ∝ n_s^τ, this derives the UniMax allocation).
-
-    Scale shape: one map-side-combined per-lang count; every window
-    here runs over the O(langs) MIXTURE table (mixture-definition
-    sized, not data-sized — a global window over it is O(langs), never
-    a corpus sort); the rate table broadcasts back and the corpus pass
-    is a narrow filter at scan speed.
-    """
-    from pyspark.sql.window import Window
-
-    docs = load(spark, "documents", sf_dir)
-    asc = Window.orderBy("n_l", "lang")
-    prev = asc.rowsBetween(Window.unboundedPreceding, -1)
-    full = asc.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    e = (
-        docs.groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_l"))
-        .withColumn("cap", F.lit(_UNIMAX_EPOCHS) * F.col("n_l"))
-        .withColumn("i", F.row_number().over(asc))
-        .withColumn(
-            "cum_prev", F.coalesce(F.sum("cap").over(prev), F.lit(0))
-        )
-        .withColumn("k", F.count(F.lit(1)).over(full))
-        .withColumn(
-            "budget",
-            F.floor(F.lit(_UNIMAX_BUDGET) * F.sum("n_l").over(full)).cast(
-                "long"
-            ),
-        )
-        .withColumn(
-            "is_capped",
-            F.col("cap") * (F.col("k") - F.col("i") + 1)
-            <= F.col("budget") - F.col("cum_prev"),
-        )
-        .withColumn(
-            "n_capped", F.sum(F.col("is_capped").cast("int")).over(full)
-        )
-        .withColumn(
-            "capped_total",
-            F.coalesce(
-                F.sum(F.when(F.col("is_capped"), F.col("cap"))).over(full),
-                F.lit(0),
-            ),
-        )
-        .withColumn(
-            "rate",
-            F.when(
-                F.col("is_capped"), F.lit(float(_UNIMAX_EPOCHS))
-            ).otherwise(
-                (
-                    (F.col("budget") - F.col("capped_total")).cast("double")
-                    / (F.col("k") - F.col("n_capped")).cast("double")
-                )
-                / F.col("n_l").cast("double")
-            ),
-        )
-        .withColumn("full_epochs", F.floor("rate").cast("int"))
-        .withColumn(
-            "frac_ppm",
-            F.round((F.col("rate") - F.floor("rate")) * 1_000_000, 0).cast(
-                "long"
-            ),
-        )
-        .select("lang", "full_epochs", "frac_ppm")
-    )
-    return (
-        docs.join(F.broadcast(e), "lang")
-        .withColumn(
-            "copies",
-            (
-                F.col("full_epochs")
-                + (Q.hash_bucket("doc_id", 1_000_000) < F.col("frac_ppm")).cast(
-                    "int"
-                )
-            ).cast("int"),
-        )
-        .filter(F.col("copies") > 0)
-        .select("doc_id", "lang", "copies")
-    )
-
-
 @query(
     "ccnet_perplexity_buckets",
     oracle=f"""
@@ -1404,219 +939,14 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: hashed-feature bucket count for the linear quality classifier —
+#: hashed-feature bucket count for the linear quality classifier in
+#: ``filter_agreement_kappa`` —
 #: weights are exact multiples of 1/4096, so integer-unit accumulation
 #: is lossless.
 _FT_B = 4096
 #: Knuth's multiplicative-hash constant: spreads bucket ids into
 #: pseudo-random but fully deterministic stand-in weights.
 _FT_MIX = 2654435761
-
-
-@query(
-    "linear_quality_classifier",
-    oracle=f"""
-    WITH w AS (
-        SELECT doc_id, {_SQL_WORDS_LOWER} AS w FROM documents),
-    g AS (
-        SELECT doc_id,
-               list_concat(w,
-                   CASE WHEN len(w) < 2 THEN CAST([] AS VARCHAR[])
-                        ELSE list_transform(range(1, len(w)),
-                                            i -> w[i] || ' ' || w[i+1]) END)
-                   AS g
-        FROM w),
-    s AS (
-        SELECT doc_id, len(g) AS n_tok,
-               list_reduce(list_prepend(0::BIGINT,
-                   list_transform(g,
-                       t -> ({_sql_hash_bucket('t', _FT_B)} * {_FT_MIX})
-                            % {_FT_B} - {_FT_B // 2})),
-                   (a, b) -> a + b) AS num
-        FROM g)
-    SELECT doc_id,
-           -- + 0.0 folds IEEE negative zero (round of a tiny negative
-           -- score) to +0.0 so both engines hash identically
-           CASE WHEN n_tok > 0
-                THEN round(CAST(num AS DOUBLE) / ({_FT_B}.0 * n_tok), 4) + 0.0
-                ELSE 0.0 END AS ft_score,
-           (n_tok > 0 AND num > 0) AS keep
-    FROM s
-    """,
-    tags=("quality", "classifier", "extension"),
-)
-def linear_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-based quality filtering via a fastText-style linear text
-    classifier (Joulin et al., EACL'17 "Bag of Tricks for Efficient
-    Text Classification" — the public method behind the CCNet /
-    LLaMA-lineage quality filters): hashed bag of word uni+bigrams,
-    mean of per-feature weights, sign threshold. The weights here are
-    a deterministic stand-in (Knuth multiplicative mix of the bucket
-    id into exact multiples of 1/{_FT_B}) — a trained model would ship
-    a real weight table through the identical plan: hash → weight
-    lookup → mean → threshold is exactly fastText's inference path.
-
-    Exactness: per-feature weights are integer UNITS (numerator over
-    the fixed {_FT_B} denominator), so the per-doc accumulation is a
-    BIGINT sum — order-independent across engines and partitionings by
-    construction (the registry determinism rule, same reasoning as
-    dsir_importance_weights' DECIMAL sums); the single double division
-    happens once per doc on identical operands.
-
-    Scale shape: one feature explode into a map-side-combined per-doc
-    BIGINT sum — whole-stage codegen end to end, one narrow-key
-    shuffle, zero Python. Two rejected shapes, both measured at sf1:
-    an ``aggregate()`` higher-order fold (interpreted per-token lambda,
-    154 s — the duplicated_spans r7 lesson), and carrying
-    ``n_tok = size(g)`` through the explode as a group key (404 s:
-    CollapseProject inlines a once-referenced alias, so the full
-    regexp tokenization re-evaluated per EXPLODED row inside the
-    aggregate). ``n_tok`` is instead ``count(t)`` in the SAME
-    aggregate — explode_outer emits one NULL for empty docs and
-    count() skips it, so the token count is exact with no carried
-    expression. This shape: ~12 s at sf1. The "model" is O(1) in the
-    plan (an arithmetic expression); a real weight table would be an
-    O({_FT_B}) broadcast join on the exploded stream.
-    """
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    # w staged in its own projection — see classifier_calibration:
-    # word_ngrams' element_at lambda re-evaluates outer-referenced
-    # subtrees per element, so a raw tokenizer expression here is
-    # O(n^2) re-tokenization per document
-    wdf = docs.select("doc_id", Q.words(F.lower(F.col("text"))).alias("w"))
-    w = F.col("w")
-    g = F.concat(w, Q.word_ngrams(w, 2))
-    feats = wdf.select(
-        "doc_id",
-        F.explode_outer(g).alias("t"),  # keep zero-token docs (NULL t)
-    )
-    unit = F.when(F.col("t").isNull(), F.lit(0).cast("long")).otherwise(
-        (Q.hash_bucket(F.col("t"), _FT_B).cast("long") * F.lit(_FT_MIX))
-        % F.lit(_FT_B)
-        - F.lit(_FT_B // 2)
-    )
-    out = (
-        feats.select("doc_id", "t", unit.alias("u"))
-        .groupBy("doc_id")
-        .agg(F.count("t").alias("n_tok"), F.sum("u").alias("num"))
-    )
-    return out.select(
-        "doc_id",
-        F.when(
-            F.col("n_tok") > 0,
-            # + 0.0 folds IEEE -0.0 (round of a tiny negative score)
-            # to +0.0, mirroring the oracle — the hash formats floats
-            # by value STRING, and "-0" != "0"
-            F.round(
-                F.col("num").cast("double")
-                / (F.lit(float(_FT_B)) * F.col("n_tok")),
-                4,
-            )
-            + F.lit(0.0),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("ft_score"),
-        ((F.col("n_tok") > 0) & (F.col("num") > 0)).alias("keep"),
-    )
-
-
-#: word n-gram order for the SoftDeDup commonness measure — 4-grams,
-#: long enough that repeats signal shared boilerplate rather than
-#: common phrases, short enough that most docs have many.
-_SD_N = 4
-
-
-@query(
-    "softdedup_weights",
-    oracle=f"""
-    WITH w AS (SELECT doc_id, {{words}} AS w FROM documents),
-    g AS (
-        SELECT doc_id, unnest({{grams}}) AS gram
-        FROM w),
-    cnt AS (SELECT gram, COUNT(*) AS cf FROM g GROUP BY gram),
-    doc AS (
-        SELECT g.doc_id, COUNT(*) AS n_grams,
-               CAST(SUM(cnt.cf) AS BIGINT) AS cf_sum
-        FROM g JOIN cnt USING (gram) GROUP BY g.doc_id)
-    SELECT d.doc_id,
-           COALESCE(doc.n_grams, 0) AS n_grams,
-           COALESCE(doc.cf_sum, 0) AS cf_sum,
-           round(1.0 / (1.0 + CAST(COALESCE(doc.cf_sum, 0) AS DOUBLE)
-                              / GREATEST(COALESCE(doc.n_grams, 1), 1)),
-                 9) AS weight
-    FROM documents d LEFT JOIN doc USING (doc_id)
-    """.format(words=_SQL_WORDS_LOWER, grams=_sql_word_ngrams(_SD_N)),
-    tags=("dedup", "softdedup", "quality", "extension"),
-)
-def softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SoftDeDup data reweighting (He et al., ACL'24 Findings
-    "SoftDedup: an Efficient Data Reweighting Method for Speeding Up
-    Language Model Pre-training" — public method): instead of DROPPING
-    near-duplicates, downweight documents by their "data commonness" —
-    how often their word n-grams recur across the corpus — so common
-    boilerplate is sampled less without discarding its unique tail.
-
-    Commonness here is the mean corpus occurrence count of the doc's
-    {n}-grams; the sampling weight is ``1 / (1 + commonness)``,
-    rounded to 9 dp. Exactness route: the per-doc accumulation is a
-    BIGINT sum of BIGINT per-gram corpus counts — order- and
-    partitioning-independent — with exactly ONE double division at the
-    end, so both engines compute bit-identical weights (the
-    ``linear_quality_classifier`` integer-units lesson).
-
-    Scale shape (100 TB): gram->count is ONE map-side-combined
-    shuffle keyed by gram; the count join back is size-gated —
-    broadcast while the measured gram vocabulary fits, shuffle join
-    on ``gram`` above the threshold (a web-corpus gram table is
-    corpus-sized, not dimension-sized); the per-doc sum shuffles
-    (doc_id) once with partial aggregation. The gram EXPLOSION runs
-    twice (count side + join side — ADVICE r9): tokenization is
-    cheap, narrow, and pipelined into each consumer, whereas
-    checkpointing the exploded gram stream would materialize a
-    relation ~10x the corpus — the recompute is the cheaper side of
-    that trade at every scale measured (only the O(vocab) count table
-    is checkpointed, inside ``size_gated_broadcast``). Docs shorter
-    than {n} words have no grams and keep weight 1.0 via the left
-    join.
-    """
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    wdf = docs.select(
-        "doc_id", Q.words(F.lower(F.col("text"))).alias("w")
-    )
-    grams = wdf.select(
-        "doc_id", F.explode(Q.word_ngrams(F.col("w"), _SD_N)).alias("gram")
-    )
-    cnt = size_gated_broadcast(
-        grams.groupBy("gram").agg(F.count(F.lit(1)).alias("cf"))
-    )
-    doc = (
-        grams.join(cnt, "gram")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_grams"),
-            F.sum("cf").alias("cf_sum"),
-        )
-    )
-    out = docs.select("doc_id").join(doc, "doc_id", "left")
-    n_g = F.coalesce(F.col("n_grams"), F.lit(0)).cast("long")
-    cf = F.coalesce(F.col("cf_sum"), F.lit(0)).cast("long")
-    return out.select(
-        "doc_id",
-        n_g.alias("n_grams"),
-        cf.alias("cf_sum"),
-        F.round(
-            F.lit(1.0)
-            / (
-                F.lit(1.0)
-                + cf.cast("double")
-                / F.greatest(n_g, F.lit(1).cast("long"))
-            ),
-            9,
-        ).alias("weight"),
-    )
-
-
-softdedup_weights.__doc__ = softdedup_weights.__doc__.format(n=_SD_N)
 
 
 @query(
@@ -1698,350 +1028,6 @@ def distinct_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: DoReMi multiplicative-weights step size (one update step of the
-#: published Group-DRO loop, run as a batch query).
-_DOREMI_ETA = 1.0
-
-
-@query(
-    "doremi_domain_weights",
-    oracle=f"""
-    WITH t AS (
-        SELECT lang, unnest(w) AS term
-        FROM (SELECT lang, {{words}} AS w FROM documents)),
-    cnt AS (SELECT term, count(*) AS c FROM t GROUP BY term),
-    tot AS (SELECT sum(c) AS n FROM cnt),
-    per_lang AS (
-        SELECT t.lang, count(*) AS n_tok,
-               sum(CAST(round(ln(cnt.c / tot.n), 8) AS DECIMAL(20,8))) AS s
-        FROM t JOIN cnt USING (term) CROSS JOIN tot
-        GROUP BY t.lang),
-    scored AS (
-        SELECT lang, n_tok,
-               round(-CAST(s AS DOUBLE) / n_tok, 6) AS avg_nll
-        FROM per_lang),
-    ex AS (
-        SELECT lang, n_tok, avg_nll,
-               round(avg_nll - min(avg_nll) OVER (), 6) AS excess,
-               sum(n_tok) OVER () AS all_tok
-        FROM scored),
-    un AS (
-        SELECT lang, n_tok, avg_nll, excess,
-               CAST(round((CAST(n_tok AS DOUBLE) / all_tok)
-                          * exp({_DOREMI_ETA} * excess), 9)
-                    AS DECIMAL(20,9)) AS u
-        FROM ex)
-    SELECT lang, CAST(n_tok AS BIGINT) AS n_tok, avg_nll, excess,
-           round(CAST(u AS DOUBLE) / CAST(sum(u) OVER () AS DOUBLE), 6)
-               AS weight
-    FROM un
-    """.format(words=_SQL_WORDS_LOWER),
-    tags=("mixture", "doremi", "quality", "extension"),
-)
-def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One DoReMi domain-reweighting step (Xie et al., NeurIPS'23
-    "DoReMi: Optimizing Data Mixtures Speeds Up Language Model
-    Pretraining" — public method): domains (languages here) whose
-    text scores HIGH excess loss under a proxy model get their
-    mixture weight multiplied up, ``w_i ∝ α_i · exp(η · excess_i)``,
-    normalized. The proxy loss is the corpus-unigram LM's per-domain
-    average NLL (the same exactness route as ``unigram_lm_scores``);
-    the reference mixture α is the corpus token share.
-
-    Exactness route: per-token log-probs rounded to 8 dp and
-    DECIMAL-summed per domain (order-independent); avg_nll and excess
-    rounded to 6 dp BEFORE the exp so both engines exponentiate
-    bit-identical inputs; the unnormalized weights are rounded to 9 dp
-    and DECIMAL-summed for the normalizer — the one cross-domain sum
-    is exact, so the final division is bit-identical.
-
-    Scale shape: token explode + one size-gated vocabulary join (the
-    unigram_lm plan) feeding a groupBy(domain) — O(domains) rows from
-    there on; the window normalizations run over the O(domains) table,
-    never the corpus. The token explode itself runs twice (count side
-    + join side — ADVICE r9): recomputing the narrow, pipelined
-    tokenization beats materializing a corpus-sized exploded stream;
-    only the O(vocab) count table is checkpointed (inside
-    ``size_gated_broadcast``).
-    """
-    from pyspark.sql import Window
-
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    t = docs.select(
-        "lang",
-        F.explode_outer(Q.words(F.lower(F.col("text")))).alias("term"),
-    ).filter(F.col("term").isNotNull())
-    cnt = size_gated_broadcast(
-        t.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-    )
-    tot = cnt.groupBy().agg(F.sum("c").alias("n"))
-    logp = F.round(F.log(F.col("c") / F.col("n")), 8).cast("decimal(20,8)")
-    per_lang = (
-        t.join(cnt, "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_tok"), F.sum(logp).alias("s"))
-    )
-    scored = per_lang.select(
-        "lang",
-        "n_tok",
-        F.round(-F.col("s").cast("double") / F.col("n_tok"), 6).alias(
-            "avg_nll"
-        ),
-    )
-    w_all = Window.partitionBy()
-    ex = scored.select(
-        "lang",
-        "n_tok",
-        "avg_nll",
-        F.round(
-            F.col("avg_nll") - F.min("avg_nll").over(w_all), 6
-        ).alias("excess"),
-        F.sum("n_tok").over(w_all).alias("all_tok"),
-    )
-    un = ex.select(
-        "lang",
-        "n_tok",
-        "avg_nll",
-        "excess",
-        F.round(
-            (F.col("n_tok").cast("double") / F.col("all_tok"))
-            * F.exp(F.lit(_DOREMI_ETA) * F.col("excess")),
-            9,
-        )
-        .cast("decimal(20,9)")
-        .alias("u"),
-    )
-    return un.select(
-        "lang",
-        F.col("n_tok").cast("long").alias("n_tok"),
-        "avg_nll",
-        "excess",
-        F.round(
-            F.col("u").cast("double")
-            / F.sum("u").over(w_all).cast("double"),
-            6,
-        ).alias("weight"),
-    )
-
-
-#: fitted repetition-value decay constant from Muennighoff et al.
-#: (NeurIPS'23, "Scaling Data-Constrained Language Models"): repeated
-#: epochs decay in value with half-life ~r_d* ≈ 15.39 epochs.
-_DC_RSTAR = 15.39
-#: token budget as a multiple of the corpus's total RAW tokens —
-#: the "how many epochs can I afford" planning input.
-_DC_BUDGET_X = 2.0
-
-
-@query(
-    "data_constrained_epochs",
-    oracle=f"""
-    WITH d AS (
-        SELECT source, md5(coalesce(text, '')) AS fp,
-               len({{words}}) AS nw
-        FROM documents),
-    u AS (
-        SELECT source, fp, count(*) AS copies, min(nw) AS nw
-        FROM d GROUP BY source, fp),
-    per_src AS (
-        SELECT source,
-               CAST(sum(copies) AS BIGINT) AS n_docs,
-               CAST(count(*) AS BIGINT) AS n_unique_docs,
-               CAST(sum(copies * nw) AS BIGINT) AS total_tokens,
-               CAST(sum(nw) AS BIGINT) AS unique_tokens
-        FROM u GROUP BY source),
-    g AS (
-        SELECT *, sum(total_tokens) OVER () AS all_total
-        FROM per_src)
-    SELECT source, n_docs, n_unique_docs, total_tokens, unique_tokens,
-           round(greatest(
-               ({_DC_BUDGET_X} * all_total)
-                   * (CAST(total_tokens AS DOUBLE) / all_total)
-                   / unique_tokens - 1.0, 0.0), 6) AS repeats,
-           round(unique_tokens
-                 + unique_tokens * {_DC_RSTAR}
-                   * (1.0 - exp(-round(greatest(
-                       ({_DC_BUDGET_X} * all_total)
-                           * (CAST(total_tokens AS DOUBLE) / all_total)
-                           / unique_tokens - 1.0, 0.0), 6)
-                       / {_DC_RSTAR})), 4) AS effective_tokens
-    FROM g
-    """.format(words=_SQL_WORDS_LOWER),
-    tags=("mixture", "scaling", "quality", "extension"),
-)
-def data_constrained_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeated-epoch value accounting per source (Muennighoff et
-    al., NeurIPS'23 "Scaling Data-Constrained Language Models" —
-    public method): when the token budget exceeds the unique data,
-    repeated epochs still help but decay in value; the paper's fitted
-    form counts ``U + U·r*·(1 − exp(−R/r*))`` effective tokens for
-    ``R`` repeat epochs over ``U`` unique tokens (r* ≈ 15.39). This
-    query computes, per source: raw vs unique (exact-dedup by md5
-    content fingerprint) token counts, the repeat epochs a
-    proportional-to-raw-size allocation of a {x}× budget implies, and
-    the effective-token value of that allocation — the planning table
-    for "which sources are worth re-epoching".
-
-    Exactness: all counts are BIGINTs off one (source, fingerprint)
-    aggregate; repeats is rounded to 6 dp BEFORE the exp so both
-    engines exponentiate identical inputs; one window-total over the
-    O(sources) table.
-
-    Scale shape: one narrow scan projecting (source, md5(text),
-    n_words) → groupBy(source, fp) with map-side combine (the
-    exact-dedup shuffle, keyed by fingerprint so duplicates collide)
-    → groupBy(source) → O(sources) math. No Python, no second corpus
-    pass — the same single-shuffle shape as ``exact_dedup_stats``.
-    """
-    from pyspark.sql import Window
-
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    d = docs.select(
-        "source",
-        F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fp"),
-        F.size(Q.words(F.lower(F.col("text")))).alias("nw"),
-    )
-    u = d.groupBy("source", "fp").agg(
-        F.count(F.lit(1)).alias("copies"), F.min("nw").alias("nw")
-    )
-    per_src = u.groupBy("source").agg(
-        F.sum("copies").cast("long").alias("n_docs"),
-        F.count(F.lit(1)).cast("long").alias("n_unique_docs"),
-        F.sum(F.col("copies") * F.col("nw")).cast("long").alias(
-            "total_tokens"
-        ),
-        F.sum("nw").cast("long").alias("unique_tokens"),
-    )
-    g = per_src.withColumn(
-        "all_total", F.sum("total_tokens").over(Window.partitionBy())
-    )
-    repeats = F.round(
-        F.greatest(
-            (F.lit(_DC_BUDGET_X) * F.col("all_total"))
-            * (F.col("total_tokens").cast("double") / F.col("all_total"))
-            / F.col("unique_tokens")
-            - F.lit(1.0),
-            F.lit(0.0),
-        ),
-        6,
-    )
-    return g.select(
-        "source",
-        "n_docs",
-        "n_unique_docs",
-        "total_tokens",
-        "unique_tokens",
-        repeats.alias("repeats"),
-        F.round(
-            F.col("unique_tokens")
-            + F.col("unique_tokens")
-            * F.lit(_DC_RSTAR)
-            * (F.lit(1.0) - F.exp(-repeats / F.lit(_DC_RSTAR))),
-            4,
-        ).alias("effective_tokens"),
-    )
-
-
-data_constrained_epochs.__doc__ = data_constrained_epochs.__doc__.format(
-    x=_DC_BUDGET_X
-)
-
-
-@query(
-    "source_overlap_matrix",
-    oracle=f"""
-    WITH w AS (SELECT source, {_SQL_WORDS_LOWER} AS w FROM documents),
-    d AS (
-        SELECT DISTINCT source,
-               md5(array_to_string(w[1:8], ' ')) AS fp
-        FROM w WHERE len(w) >= 1),
-    sz AS (SELECT source, count(*) AS n FROM d GROUP BY source),
-    ov AS (
-        SELECT a.source AS source_a, b.source AS source_b,
-               count(*) AS n_shared
-        FROM d a JOIN d b USING (fp)
-        WHERE a.source < b.source
-        GROUP BY a.source, b.source)
-    SELECT ov.source_a, ov.source_b,
-           CAST(sa.n AS BIGINT) AS n_a,
-           CAST(sb.n AS BIGINT) AS n_b,
-           CAST(ov.n_shared AS BIGINT) AS n_shared,
-           round(CAST(ov.n_shared AS DOUBLE)
-                 / (sa.n + sb.n - ov.n_shared), 9) AS jaccard
-    FROM ov
-    JOIN sz sa ON sa.source = ov.source_a
-    JOIN sz sb ON sb.source = ov.source_b
-    """,
-    tags=("dedup", "audit", "overlap", "extension"),
-)
-def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source document-overlap audit (the WIMBD cross-corpus
-    overlap analysis — Elazar et al., ICLR'24 "What's In My Big
-    Data?", public method): for every pair of sources, how many
-    DISTINCT document OPENINGS (md5 of the first 8 lowercased words —
-    the prefix-fingerprint flavor of WIMBD's common-snippet analysis,
-    which also catches re-hosted docs with divergent tails) they
-    share, and the Jaccard overlap of their distinct-opening sets.
-    The standard pre-mixing audit: high overlap between two sources
-    means their mixture weights double-count the same text (and
-    train/test splits drawn per-source leak).
-
-    Plan: one narrow projection to (source, fp) → map-side-combined
-    DISTINCT (the dedup shuffle, keyed by fp) → self-join on fp.
-    Fingerprints shared by k sources meet in one fp-partition and
-    expand to k(k-1)/2 pairs map-side off that single exchange — the
-    join never shuffles the corpus twice (both sides are the same
-    checkpointed relation). Output is O(sources²) rows; per-source
-    sizes broadcast back onto it. Exactness: counts are BIGINTs; one
-    double division per pair, rounded to 9 dp.
-
-    A 100 TB caveat the plan already handles: a fingerprint present
-    in EVERY source expands quadratically in the number of sources —
-    bounded by the source universe (O(sources²) per fp), not by
-    corpus size.
-    """
-    from ..operators.lifecycle import tracked_local_checkpoint
-
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    ws = Q.words(F.lower(F.col("text")))
-    d = tracked_local_checkpoint(
-        docs.filter(F.size(ws) >= 1)
-        .select(
-            "source",
-            F.md5(F.concat_ws(" ", F.slice(ws, 1, 8))).alias("fp"),
-        )
-        .distinct()
-    )
-    sz = d.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    a = d.select(F.col("source").alias("source_a"), "fp")
-    b = d.select(F.col("source").alias("source_b"), "fp")
-    ov = (
-        a.join(b, "fp")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sza = F.broadcast(sz.select(F.col("source").alias("source_a"), F.col("n").alias("n_a")))
-    szb = F.broadcast(sz.select(F.col("source").alias("source_b"), F.col("n").alias("n_b")))
-    return (
-        ov.join(sza, "source_a")
-        .join(szb, "source_b")
-        .select(
-            "source_a",
-            "source_b",
-            F.col("n_a").cast("long").alias("n_a"),
-            F.col("n_b").cast("long").alias("n_b"),
-            F.col("n_shared").cast("long").alias("n_shared"),
-            F.round(
-                F.col("n_shared").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")),
-                9,
-            ).alias("jaccard"),
-        )
-    )
-
-
 #: Gopher repetition-rule thresholds on the top n-gram fraction
 #: (Rae et al. 2021, Table A1: 0.20 / 0.18 / 0.16 for n = 2 / 3 / 4)
 _GOPHER_TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
@@ -2105,7 +1091,7 @@ def gopher_top_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``doc_id``. No Python, no window, no driver state.
     """
     docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    # w staged in its own projection — see classifier_calibration:
+    # w staged in its own projection:
     # each _tag(n)'s gram lambda would otherwise re-tokenize the whole
     # document per gram position (O(n^2) per doc, three times over)
     wdf = docs.select("doc_id", Q.words(F.lower(F.col("text"))).alias("w"))
@@ -2149,169 +1135,6 @@ def gopher_top_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         tops[3].alias("top3_frac"),
         tops[4].alias("top4_frac"),
         keep.alias("repetition_pass"),
-    )
-
-
-@query(
-    "classifier_calibration",
-    oracle=f"""
-    WITH w AS (
-        SELECT doc_id, {{words}} AS w FROM documents),
-    g AS (
-        SELECT doc_id,
-               list_concat(w,
-                   CASE WHEN len(w) < 2 THEN CAST([] AS VARCHAR[])
-                        ELSE list_transform(range(1, len(w)),
-                                            i -> w[i] || ' ' || w[i+1]) END)
-                   AS g,
-               len(w) AS n,
-               CASE WHEN len(w) = 0 THEN 0.0
-                    ELSE len(list_intersect(w, {{stops}}))
-                         / CAST(len(w) AS DOUBLE) END AS stop_frac
-        FROM w),
-    s AS (
-        SELECT doc_id, len(g) AS n_tok,
-               list_reduce(list_prepend(0::BIGINT,
-                   list_transform(g,
-                       t -> ({{bucket}} * {{mix}})
-                            % {{b}} - {{b}} // 2)),
-                   (a, b) -> a + b) AS num,
-               (n >= 10 AND stop_frac >= 0.01) AS rule_pass
-        FROM g),
-    scored AS (
-        SELECT doc_id, num, n_tok, rule_pass,
-               CASE WHEN n_tok > 0
-                    THEN round(CAST(num AS DOUBLE) / ({{b}}.0 * n_tok), 4)
-                         + 0.0
-                    ELSE 0.0 END AS ft_score
-        FROM s),
-    deciled AS (
-        SELECT *, ntile(10) OVER (ORDER BY ft_score, doc_id) AS decile
-        FROM scored)
-    SELECT CAST(decile AS INTEGER) AS decile,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN rule_pass THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_rule_pass,
-           round(sum(CASE WHEN rule_pass THEN 1 ELSE 0 END)
-                 / CAST(count(*) AS DOUBLE), 6) AS rule_pass_rate,
-           round(CAST(sum(num) AS DOUBLE)
-                 / ({{b}}.0 * greatest(sum(n_tok), 1)), 6)
-               AS token_weighted_score
-    FROM deciled GROUP BY 1
-    """.format(
-        words=_SQL_WORDS_LOWER,
-        stops=_STOPS_SQL,
-        bucket=_sql_hash_bucket("t", _FT_B),
-        mix=_FT_MIX,
-        b=_FT_B,
-    ),
-    tags=("quality", "classifier", "evaluation", "extension"),
-)
-def classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calibration curve of the fastText-style linear quality score
-    (``linear_quality_classifier``) against an independent rule-based
-    keep verdict — the eval every model-based filter deployment runs
-    before trusting scores at corpus scale (the FineWeb-Edu /
-    DataComp-LM practice: bin classifier scores, inspect agreement
-    per bin). Docs are cut into EXACT score deciles; each decile
-    reports size, the rule-pass count/rate, and the token-weighted
-    mean score.
-
-    The rule label here is a cheap independent heuristic (word count
-    ≥ 10 AND distinct-stopword-hits / words ≥ 0.01) — distinct
-    signals from the classifier's hashed n-grams, so agreement is
-    informative.
-
-    Exactness: deciles via :func:`~..operators.quantiles.ntile_exact`
-    over the (rounded score, doc_id) total order — no global-sort
-    window; per-decile outputs are BIGINT sums (pass counts, score
-    NUMERATORS in integer units over the fixed {b} denominator;
-    n_tok) with one final IEEE division each — bit-identical across
-    engines, the ``linear_quality_classifier`` route.
-
-    Scale shape: one feature explode into a map-side-combined per-doc
-    BIGINT sum (the classifier plan), a narrow per-doc rule stage,
-    the ntile range-id machinery (no single-task stage), and an
-    O(10)-row output aggregate.
-    """
-    from ..operators.quantiles import ntile_exact
-
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    # Materialize the word array in its OWN projection before any
-    # consumer (r12): word_ngrams' gram lambda indexes the token array
-    # with element_at, and a lambda that references anything but its
-    # bound variables re-evaluates the referenced subtree PER ELEMENT
-    # — with ``w`` as the raw words(lower(text)) expression every
-    # bigram position re-tokenized the whole document (O(n²) per doc;
-    # the NOTES round-12 HOF lesson). As a non-cheap alias referenced
-    # more than once, ``w`` is safe from CollapseProject inlining.
-    # sf1 A/B: 61 s / 1312 CPU-s → see OPTIMIZATION_r12.md.
-    wdf = docs.select(
-        "doc_id", Q.words(F.lower(F.col("text"))).alias("w")
-    )
-    w = F.col("w")
-    g = F.concat(w, Q.word_ngrams(w, 2))
-    feats = wdf.select(
-        "doc_id", F.explode_outer(g).alias("t")
-    )
-    unit = F.when(F.col("t").isNull(), F.lit(0).cast("long")).otherwise(
-        (Q.hash_bucket(F.col("t"), _FT_B).cast("long") * F.lit(_FT_MIX))
-        % F.lit(_FT_B)
-        - F.lit(_FT_B // 2)
-    )
-    per_doc = (
-        feats.select("doc_id", "t", unit.alias("u"))
-        .groupBy("doc_id")
-        .agg(F.count("t").alias("n_tok"), F.sum("u").alias("num"))
-    )
-    rule = wdf.select(
-        "doc_id",
-        (
-            (F.size(w) >= 10)
-            & (
-                F.when(F.size(w) == 0, F.lit(0.0)).otherwise(
-                    Q.stopword_hits(w) / F.size(w).cast("double")
-                )
-                >= 0.01
-            )
-        ).alias("rule_pass"),
-    )
-    scored = per_doc.join(rule, "doc_id").select(
-        "doc_id",
-        "num",
-        "n_tok",
-        "rule_pass",
-        F.when(
-            F.col("n_tok") > 0,
-            F.round(
-                F.col("num").cast("double")
-                / (F.lit(float(_FT_B)) * F.col("n_tok")),
-                4,
-            )
-            + F.lit(0.0),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("ft_score"),
-    )
-    deciled = ntile_exact(scored, ["ft_score", "doc_id"], 10, out_col="decile")
-    return deciled.groupBy(F.col("decile").cast("int").alias("decile")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("rule_pass"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_rule_pass"),
-        F.round(
-            F.sum(F.when(F.col("rule_pass"), 1).otherwise(0)).cast("double")
-            / F.count(F.lit(1)).cast("double"),
-            6,
-        ).alias("rule_pass_rate"),
-        F.round(
-            F.sum("num").cast("double")
-            / (
-                F.lit(float(_FT_B))
-                * F.greatest(F.sum("n_tok"), F.lit(1)).cast("double")
-            ),
-            6,
-        ).alias("token_weighted_score"),
     )
 
 
@@ -2554,147 +1377,6 @@ def gopher_dup_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: bucket count for the per-source distribution audit (same hashed-
-#: vocabulary rationale as DSIR: the table stays O(B) at any corpus)
-_KL_B = 4096
-
-
-@query(
-    "source_unigram_kl",
-    oracle=f"""
-    WITH w AS (
-        SELECT doc_id, source, {_SQL_WORDS_LOWER} AS w FROM documents),
-    tok AS (
-        SELECT source, {_sql_hash_bucket('g', _KL_B)} AS b
-        FROM w, UNNEST(w.w) AS t(g)),
-    cnt AS (
-        SELECT source, b, CAST(count(*) AS BIGINT) AS c
-        FROM tok GROUP BY 1, 2),
-    gb AS (
-        SELECT b, CAST(sum(c) AS BIGINT) AS g FROM cnt GROUP BY 1),
-    ns AS (
-        SELECT source, CAST(sum(c) AS BIGINT) AS n_s FROM cnt GROUP BY 1),
-    tot AS (SELECT CAST(sum(g) AS BIGINT) AS n FROM gb),
-    dense AS (
-        SELECT s.source, s.n_s, r.b,
-               coalesce(c.c, 0) AS c,
-               coalesce(g.g, 0) AS g,
-               t.n
-        FROM ns s
-        CROSS JOIN (SELECT unnest(range(0, {_KL_B})) AS b) r
-        CROSS JOIN tot t
-        LEFT JOIN cnt c ON c.source = s.source AND c.b = r.b
-        LEFT JOIN gb g ON g.b = r.b),
-    terms AS (
-        SELECT source, n_s,
-               CAST(c + 1 AS DECIMAL(18, 0))
-                 * CAST(ln(((c + 1.0) * (n + {_KL_B}.0))
-                           / ((n_s + {_KL_B}.0) * (g + 1.0)))
-                        AS DECIMAL(18, 12)) AS kl_num,
-               abs(CAST(c + 1 AS DECIMAL(19, 0)) * (n + {_KL_B})
-                   - CAST(g + 1 AS DECIMAL(19, 0)) * (n_s + {_KL_B}))
-                   AS tv_num,
-               (n_s + {_KL_B}.0) * (n + {_KL_B}.0) AS denom
-        FROM dense)
-    SELECT source,
-           max(n_s) AS n_tokens,
-           round(CAST(sum(kl_num) AS DOUBLE) / max(n_s + {_KL_B}.0), 6)
-               AS kl_nats,
-           round(CAST(sum(tv_num) AS DOUBLE) / (2.0 * max(denom)), 6)
-               AS tv_dist
-    FROM terms GROUP BY source
-    """,
-    tags=("quality", "distribution", "drift", "extension"),
-)
-def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source unigram-distribution divergence from the corpus:
-    add-one-smoothed KL(p_source ‖ p_corpus) in nats and exact total
-    variation distance, over a hashed {_KL_B}-bucket vocabulary — the
-    standard domain-drift diagnostic feeding mixture decisions
-    (complements ``dsir_importance_weights``' per-doc weights and
-    ``doremi_domain_weights``' reweighting step; hashing rationale as
-    in Xie et al. NeurIPS'23: the distribution tables stay O(B) at
-    any corpus size).
-
-    Exactness: KL terms are ``(c+1) × DECIMAL-cast ln(ratio)`` summed
-    as DECIMAL (order-independent; the ratio is the same IEEE op
-    sequence in both engines — the dsir/doremi ln-parity precedent),
-    one final double division per source. TV is fully exact integer
-    arithmetic (|(c+1)(N+B) − (g+1)(N_s+B)| summed as DECIMAL) with
-    one division. ALL {_KL_B} buckets are enumerated per source
-    (smoothing gives zero-count buckets nonzero mass), so the bucket
-    set is engine-independent.
-
-    Scale shape (100 TB): one tokenize + map-side-combined
-    (source, bucket) count — the only corpus-sized stage; everything
-    after runs on O(sources × {_KL_B}) rows, broadcast-joined.
-
-    Extension beyond the reference (no curation surface there)."""
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    cnt = (
-        docs.select(
-            "source",
-            F.explode(Q.words(F.lower(F.col("text")))).alias("g"),
-        )
-        .select("source", Q.hash_bucket(F.col("g"), _KL_B).alias("b"))
-        .groupBy("source", "b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    gb = cnt.groupBy("b").agg(F.sum("c").alias("g"))
-    ns = cnt.groupBy("source").agg(F.sum("c").alias("n_s"))
-    tot = gb.groupBy().agg(F.sum("g").alias("n"))
-    buckets = spark.range(_KL_B).select(F.col("id").cast("int").alias("b"))
-    dense = (
-        ns.crossJoin(F.broadcast(buckets))
-        .crossJoin(F.broadcast(tot))
-        .join(F.broadcast(cnt), ["source", "b"], "left")
-        .join(F.broadcast(gb), "b", "left")
-        .select(
-            "source",
-            "n_s",
-            "n",
-            F.coalesce("c", F.lit(0)).alias("c"),
-            F.coalesce("g", F.lit(0)).alias("g"),
-        )
-    )
-    kl_num = (F.col("c") + 1).cast("decimal(18,0)") * F.log(
-        ((F.col("c") + F.lit(1.0)) * (F.col("n") + F.lit(float(_KL_B))))
-        / (
-            (F.col("n_s") + F.lit(float(_KL_B)))
-            * (F.col("g") + F.lit(1.0))
-        )
-    ).cast("decimal(18,12)")
-    tv_num = F.abs(
-        (F.col("c") + 1).cast("decimal(19,0)") * (F.col("n") + _KL_B)
-        - (F.col("g") + 1).cast("decimal(19,0)") * (F.col("n_s") + _KL_B)
-    )
-    denom = (F.col("n_s") + F.lit(float(_KL_B))) * (
-        F.col("n") + F.lit(float(_KL_B))
-    )
-    return (
-        dense.select(
-            "source",
-            "n_s",
-            kl_num.alias("kl_num"),
-            tv_num.alias("tv_num"),
-            denom.alias("denom"),
-        )
-        .groupBy("source")
-        .agg(
-            F.max("n_s").cast("bigint").alias("n_tokens"),
-            F.round(
-                F.sum("kl_num").cast("double")
-                / F.max(F.col("n_s") + F.lit(float(_KL_B))),
-                6,
-            ).alias("kl_nats"),
-            F.round(
-                F.sum("tv_num").cast("double") / (F.lit(2.0) * F.max("denom")),
-                6,
-            ).alias("tv_dist"),
-        )
-    )
-
-
 @query(
     "filter_agreement_kappa",
     oracle=f"""
@@ -2766,11 +1448,10 @@ def source_unigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def filter_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between two document filters — the rule-based
-    verdict and the fastText-style linear classifier's sign (both as
-    in ``classifier_calibration``) — the standard inter-rater
-    agreement statistic a filter-deployment eval reports next to the
-    calibration curve (chance-corrected: two filters that both pass
-    90% of docs agree 82% by luck alone).
+    verdict and the fastText-style linear classifier's sign — the
+    standard inter-rater agreement statistic a filter-deployment eval
+    reports next to the calibration curve (chance-corrected: two
+    filters that both pass 90% of docs agree 82% by luck alone).
 
     Exactness: the 2x2 contingency table is BIGINT counts; observed /
     chance agreement and kappa are two or three IEEE divisions over
@@ -2785,7 +1466,7 @@ def filter_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     # w staged in its own projection: word_ngrams' element_at lambda
     # re-evaluates outer-referenced subtrees PER ELEMENT — with the
     # raw tokenizer expression that is O(n^2) re-tokenization per doc
-    # (see classifier_calibration / NOTES round-12 HOF lesson)
+    # (NOTES round-12 HOF lesson)
     wdf = docs.select("doc_id", Q.words(F.lower(F.col("text"))).alias("w"))
     w = F.col("w")
     g = F.concat(w, Q.word_ngrams(w, 2))

@@ -41,7 +41,6 @@ _QUERY_MODULES = (
     "museum_image_etl_gridfs_spark.plans.queries_images",
     "museum_image_etl_gridfs_spark.plans.queries_joins",
     "museum_image_etl_gridfs_spark.plans.queries_olap",
-    "museum_image_etl_gridfs_spark.plans.queries_traindata",
     "museum_image_etl_gridfs_spark.plans.queries_quality",
     "museum_image_etl_gridfs_spark.plans.queries_profile",
     "museum_image_etl_gridfs_spark.plans.queries_funnel",

@@ -13,7 +13,6 @@ import numpy as np
 import pandas as pd
 
 from museum_image_etl_gridfs_spark.operators.ann import (
-    _cosine_score_fn,
     _jaccard_score_fn,
     _np_id_dtype,
 )
@@ -25,35 +24,6 @@ def _collect(score, batch):
         return set()
     out = pd.concat(frames)
     return {(a, b) for a, b in zip(out.iloc[:, 0], out.iloc[:, 1])}
-
-
-def test_cosine_diagonal_mask_is_order_independent():
-    rng = np.random.default_rng(7)
-    vecs = {i: rng.normal(size=8) for i in range(10)}
-    ms = [{"id": i, "v": list(vecs[i])} for i in range(10)]
-    perm = [ms[j] for j in rng.permutation(10)]
-    score = _cosine_score_fn(0.01, 4, "int64")
-
-    # brute-force expected pair set at threshold 0.01
-    def cos(a, b):
-        return round(
-            float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b))), 4
-        )
-
-    want = {
-        (i, j)
-        for i in range(10)
-        for j in range(i + 1, 10)
-        if cos(vecs[i], vecs[j]) >= 0.01
-    }
-    aligned = _collect(
-        score, pd.DataFrame({"blk_a": [0], "blk_b": [0], "ms_a": [ms], "ms_b": [ms]})
-    )
-    permuted = _collect(
-        score, pd.DataFrame({"blk_a": [0], "blk_b": [0], "ms_a": [ms], "ms_b": [perm]})
-    )
-    assert aligned == want
-    assert permuted == want  # np.triu by index would fail this
 
 
 def test_jaccard_diagonal_mask_is_order_independent():
@@ -96,9 +66,9 @@ def test_empty_sentinel_dtype_follows_id_type():
 
 
 def test_block_count_scales_with_input():
-    """VERDICT r11 #1: BOTH blocked pair kernels must derive their
-    block count from measured input size — a fixed count tuned at one
-    SF is a quadratic memory cliff at the next (cosine's fixed 8 cost
+    """VERDICT r11 #1: the blocked pair kernel must derive its block
+    count from measured input size — a fixed count tuned at one SF is
+    a quadratic memory cliff at the next (a fixed 8 blocks cost
     2.8 GB/task and 417 s at sf3 before the adaptive rule)."""
     from museum_image_etl_gridfs_spark.operators.ann import _blocks_for
 
@@ -109,7 +79,7 @@ def test_block_count_scales_with_input():
     n = 250_000
     b = _blocks_for(n, 2048, floor=2)
     assert b == -(-n // 2048) and n / b <= 2048
-    # cosine's derivation routes through the same helper
+    # a larger target and floor scale the same way
     assert _blocks_for(50_000, 4096, floor=8) == 13
     assert _blocks_for(150_000, 4096, floor=8) == 37
 
@@ -157,19 +127,3 @@ def test_jaccard_derived_blocks_match_explicit(spark, sf_dir):
         for r in jaccard_pairs_blocked(toks, n_sub_blocks=5, **kw).collect()
     }
     assert derived == explicit and derived
-
-
-def test_cosine_pairs_matmul_stage_width(spark, sf_dir):
-    """VERDICT r10 #1 pin: the CPU-bound numpy matmul stage must run
-    defaultParallelism-wide, not inherit the block-count-wide hash
-    partitioning of the self-join (task COUNT, not exchange count —
-    the SOLO_r10 lesson)."""
-    from museum_image_etl_gridfs_spark.catalog import load
-    from museum_image_etl_gridfs_spark.operators.ann import (
-        cosine_pairs_blocked,
-    )
-
-    emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
-    out = cosine_pairs_blocked(emb, threshold=0.5, n_blocks=4)
-    para = spark.sparkContext.defaultParallelism
-    assert out.rdd.getNumPartitions() >= max(para, 4)

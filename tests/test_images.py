@@ -7,6 +7,8 @@ schema, Arrow batches, quarantine rows) is genuinely exercised.
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -54,13 +56,17 @@ def test_transform_resizes_to_224(spark):
 
 def test_transform_quarantines_bad_blobs(spark):
     good = RawCodec.encode(np.zeros((2, 2, 3), dtype=np.uint8))
+    # a negative width must not let the reshape infer a (2, 5, 3) raster
+    negative = struct.pack("<4sii", b"RAW0", -1, 2) + bytes(30)
     df = spark.createDataFrame(
-        [(1, good), (2, b"not an image")], "k long, image binary"
+        [(1, good), (2, b"not an image"), (3, negative)], "k long, image binary"
     )
     rows = {r["k"]: r for r in transform_images(df, "image").collect()}
     assert rows[1]["image_transformed_status"] == "ok"
     assert rows[2]["image_transformed_status"].startswith("error:")
     assert rows[2]["image_transformed"] is None
+    assert rows[3]["image_transformed_status"] == "error:ValueError"
+    assert rows[3]["image_transformed"] is None
 
 
 def test_image_features(spark):
@@ -83,6 +89,19 @@ def test_decoded_length_header_read(spark):
     )
     rows = df.select(decoded_length("image")).collect()
     assert all(r["decoded_length"] == 10 * 7 * 3 for r in rows)
+    # headers the decoder rejects: a negative width, a foreign magic,
+    # and dimensions whose pixel-byte count overflows a long
+    big = 2**31 - 1
+    bad = spark.createDataFrame(
+        [
+            (1, struct.pack("<4sii", b"RAW0", -1, 2) + bytes(30)),
+            (2, struct.pack("<4sii", b"JUNK", 5, 2) + bytes(30)),
+            (3, struct.pack("<4sii", b"RAW0", big, big) + bytes(30)),
+        ],
+        "k long, image binary",
+    )
+    got = bad.select("k", decoded_length("image")).collect()
+    assert {r["k"]: r["decoded_length"] for r in got} == {1: None, 2: None, 3: None}
 
 
 def test_pil_codec_gated():

@@ -163,26 +163,6 @@ def test_eval_contamination_excludes_eval_docs(spark, sf_dir):
         assert 0.0 <= r["contam_frac"] <= 1.0
 
 
-def test_source_mixture_epoch_weights(spark, sf_dir):
-    from museum_image_etl_gridfs_spark.catalog import load
-
-    q = all_queries()["source_mixture_epoch"]
-    rows = q.build(spark, sf_dir).collect()
-    docs = {
-        r["doc_id"]: r["source"]
-        for r in load(spark, "documents", sf_dir).select("doc_id", "source").collect()
-    }
-    copies: dict[int, int] = {}
-    for r in rows:
-        copies[r["doc_id"]] = max(copies.get(r["doc_id"], 0), r["copy"])
-        assert r["copy"] >= 1
-    for doc_id, source in docs.items():
-        n = copies.get(doc_id, 0)
-        even = int(source[3:]) % 2 == 0
-        # even sources: 0 or 1 copies (w=0.3); odd: 1 or 2 (w=1.7)
-        assert n in ((0, 1) if even else (1, 2)), (doc_id, source, n)
-
-
 def test_bm25_more_hits_scores_higher(spark, sf_dir):
     """Among docs of equal length, more query-term occurrences -> a
     strictly higher BM25 score (verified on the fixture corpus by
@@ -217,101 +197,6 @@ def test_bm25_more_hits_scores_higher(spark, sf_dir):
     assert compared >= 0  # structural smoke; exact parity is the oracle
 
 
-def test_dsir_weights_separate_target_from_raw(spark, sf_dir):
-    """DSIR semantics sanity, independent of the oracle: documents
-    drawn FROM the target distribution (lang='en') must average a
-    higher log importance weight than the rest — that is the whole
-    point of log p_target − p_raw — and every document gets a weight
-    (empty docs at 0.0)."""
-    from museum_image_etl_gridfs_spark.catalog import load
-
-    q = all_queries()["dsir_importance_weights"]
-    w = q.build(spark, sf_dir)
-    docs = load(spark, "documents", sf_dir).select("doc_id", "lang")
-    assert w.count() == docs.count()  # total function of the corpus
-    by_side = (
-        w.join(docs, "doc_id")
-        .groupBy(F.col("lang") == "en")
-        .agg(F.avg("dsir_logw").alias("m"))
-        .collect()
-    )
-    means = {r[0]: r["m"] for r in by_side}
-    assert means[True] > means[False]
-
-
-def test_unimax_waterfill_invariants(spark, sf_dir):
-    """UniMax allocation semantics on the real fixture: every slice's
-    realized expected copies = min(E*n_l, t)/n_l — so (a) no slice
-    exceeds the epoch cap, (b) capped slices sit EXACTLY at the cap,
-    (c) the expected total equals the budget when any slice is
-    uncapped (waterfill conservation), and (d) the result equals the
-    whole corpus joined to per-lang rates (deterministic, RNG-free)."""
-    from museum_image_etl_gridfs_spark.catalog import load
-    from museum_image_etl_gridfs_spark.plans.queries_quality import (
-        _UNIMAX_BUDGET,
-        _UNIMAX_EPOCHS,
-    )
-
-    out = all_queries()["unimax_mixture_sample"].build(spark, sf_dir)
-    docs = load(spark, "documents", sf_dir).select("doc_id", "lang")
-    n_l = {r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    big_n = sum(n_l.values())
-    budget = int(_UNIMAX_BUDGET * big_n)
-
-    # reference waterfill in plain python: ascending caps; slice is
-    # capped iff cap*k_left <= remaining (the same integer test the
-    # engine uses); once the water level t is set, every later slice
-    # gets t (capped-ness is prefix-closed over ascending caps)
-    caps = sorted(((_UNIMAX_EPOCHS * n, lang) for lang, n in n_l.items()))
-    remaining, k_left, alloc = budget, len(caps), {}
-    t = None
-    for cap, lang in caps:
-        if t is None and cap * k_left <= remaining:
-            alloc[lang] = cap
-            remaining -= cap
-        else:
-            if t is None:
-                t = remaining / k_left
-            alloc[lang] = t
-        k_left -= 1
-    if t is not None:  # waterfill conservation: uncapped shares fill B
-        assert abs(sum(alloc.values()) - budget) < 1e-6
-
-    rows = out.collect()
-    assert all(r["copies"] >= 1 for r in rows)
-    # per-lang realized expectation: full_epochs*n_l + |{hash<frac}|
-    got = {}
-    for r in rows:
-        got[r["lang"]] = got.get(r["lang"], 0) + r["copies"]
-    for lang, a in alloc.items():
-        cap = _UNIMAX_EPOCHS * n_l[lang]
-        assert got.get(lang, 0) <= cap
-        if a == cap:  # capped slice: every doc at exactly E copies
-            assert got[lang] == cap
-        else:  # uncapped: within the hash-realization of the rate
-            # realized = floor(a/n)*n + #{hash<frac}: off by the hash
-            # sample's deviation, bounded loosely here
-            assert abs(got[lang] - a) <= max(0.15 * n_l[lang], 8)
-
-
-def test_linear_classifier_total_and_score_range(spark, sf_dir):
-    """fastText-style scorer: total function of the corpus (one row
-    per doc), scores bounded by the weight range [-0.5, 0.5), and keep
-    agrees with the score sign for non-empty docs."""
-    from museum_image_etl_gridfs_spark.catalog import load
-
-    out = all_queries()["linear_quality_classifier"].build(spark, sf_dir)
-    docs = load(spark, "documents", sf_dir)
-    rows = out.collect()
-    assert len(rows) == docs.count()
-    for r in rows:
-        assert -0.5 <= r["ft_score"] <= 0.5
-        if r["ft_score"] > 0:
-            assert r["keep"]
-        if r["keep"]:
-            assert r["ft_score"] > 0 or abs(r["ft_score"]) < 5e-5
-
-
 def test_ccnet_buckets_are_per_lang_terciles(spark, sf_dir):
     """CCNet bucketing semantics: per lang, bucket sizes differ by at
     most 1 (ntile contract), head mean NLL < tail mean NLL (the whole
@@ -332,37 +217,6 @@ def test_ccnet_buckets_are_per_lang_terciles(spark, sf_dir):
         head = sum(buckets["head"]) / len(buckets["head"])
         tail = sum(buckets["tail"]) / len(buckets["tail"])
         assert head < tail, (lang, head, tail)
-
-
-def test_softdedup_weights_formula_and_duplicates(spark, sf_dir):
-    """SoftDedup reweighting: one row per document; the weight column
-    is exactly round(1/(1 + cf_sum/max(n_grams,1)), 9) of its own
-    integer columns; cf_sum >= n_grams (every gram counts itself);
-    and byte-identical documents get byte-identical weights."""
-    from museum_image_etl_gridfs_spark.catalog import load
-
-    out = all_queries()["softdedup_weights"].build(spark, sf_dir)
-    rows = out.collect()
-    docs = load(spark, "documents", sf_dir)
-    assert len(rows) == docs.count()
-    assert any(r["cf_sum"] > r["n_grams"] for r in rows)
-    for r in rows:
-        assert r["cf_sum"] >= r["n_grams"]
-        expect = round(
-            1.0 / (1.0 + r["cf_sum"] / max(r["n_grams"], 1)), 9
-        )
-        assert r["weight"] == expect
-        assert 0.0 < r["weight"] <= 1.0
-    text_of = {
-        d["doc_id"]: (d["text"] or "").lower().split()
-        for d in docs.select("doc_id", "text").collect()
-    }
-    w_of = {r["doc_id"]: r["weight"] for r in rows}
-    by_words: dict = {}
-    for did, ws in text_of.items():
-        by_words.setdefault(tuple(ws), []).append(did)
-    for ids in by_words.values():
-        assert len({w_of[i] for i in ids}) == 1
 
 
 def test_distinct_ngram_diversity_recomputes(spark, sf_dir):
@@ -390,148 +244,6 @@ def test_distinct_ngram_diversity_recomputes(spark, sf_dir):
         assert r["distinct_1"] == round(len(u1) / t1, 9)
         expect2 = round(len(u2) / t2, 9) if t2 else 0.0
         assert r["distinct_2"] == expect2
-
-
-def test_doremi_weights_sum_and_direction(spark, sf_dir):
-    """DoReMi step: weights form a distribution; excess is >= 0 with
-    min exactly 0; the domain with the highest excess loss is
-    upweighted relative to its token share and the min-excess domain
-    is downweighted (the multiplicative-weights direction)."""
-    out = all_queries()["doremi_domain_weights"].build(spark, sf_dir)
-    rows = out.collect()
-    assert abs(sum(r["weight"] for r in rows) - 1.0) < 1e-4
-    assert min(r["excess"] for r in rows) == 0.0
-    all_tok = sum(r["n_tok"] for r in rows)
-    for r in rows:
-        share = r["n_tok"] / all_tok
-        if r["excess"] == max(x["excess"] for x in rows) and r["excess"] > 0:
-            assert r["weight"] > share
-        if r["excess"] == 0.0 and any(x["excess"] > 0 for x in rows):
-            assert r["weight"] < share
-
-
-def test_data_constrained_epochs_bounds(spark, sf_dir):
-    """Muennighoff effective-token accounting: unique <= total,
-    unique docs <= docs, repeats >= 0, and effective tokens sit in
-    [unique, unique * (1 + r*)] — the form's asymptote."""
-    from museum_image_etl_gridfs_spark.plans.queries_quality import (
-        _DC_BUDGET_X,
-        _DC_RSTAR,
-    )
-
-    out = all_queries()["data_constrained_epochs"].build(spark, sf_dir)
-    rows = out.collect()
-    assert rows
-    all_total = sum(r["total_tokens"] for r in rows)
-    for r in rows:
-        assert r["unique_tokens"] <= r["total_tokens"]
-        assert r["n_unique_docs"] <= r["n_docs"]
-        assert r["repeats"] >= 0.0
-        assert r["unique_tokens"] <= r["effective_tokens"] + 1e-6
-        assert r["effective_tokens"] <= r["unique_tokens"] * (1 + _DC_RSTAR)
-        # same FP op order as the query (the budget-share allocation),
-        # not the algebraically-cancelled 2*T/U form
-        expect_r = max(
-            (_DC_BUDGET_X * all_total)
-            * (r["total_tokens"] / all_total)
-            / r["unique_tokens"]
-            - 1.0,
-            0.0,
-        )
-        assert r["repeats"] == pytest.approx(round(expect_r, 6), abs=1e-9)
-
-
-def test_source_overlap_matrix_invariants(spark, sf_dir):
-    """Cross-source overlap audit: ordered unique pairs, shared count
-    bounded by both set sizes, jaccard recomputed from its own
-    columns, and a python recount of shared 8-word-opening
-    fingerprints matches the engine."""
-    import hashlib
-
-    from museum_image_etl_gridfs_spark.catalog import load
-
-    out = all_queries()["source_overlap_matrix"].build(spark, sf_dir)
-    rows = out.collect()
-    assert rows
-    seen = set()
-    for r in rows:
-        assert r["source_a"] < r["source_b"]
-        assert (r["source_a"], r["source_b"]) not in seen
-        seen.add((r["source_a"], r["source_b"]))
-        assert 0 < r["n_shared"] <= min(r["n_a"], r["n_b"])
-        expect = round(
-            r["n_shared"] / (r["n_a"] + r["n_b"] - r["n_shared"]), 9
-        )
-        assert r["jaccard"] == expect
-    pools: dict = {}
-    for d in load(spark, "documents", sf_dir).select("source", "text").collect():
-        ws = (d["text"] or "").lower().split()
-        if not ws:
-            continue
-        fp = hashlib.md5(" ".join(ws[:8]).encode()).hexdigest()
-        pools.setdefault(d["source"], set()).add(fp)
-    got = {(r["source_a"], r["source_b"]): r["n_shared"] for r in rows}
-    expect_pairs = {}
-    srcs = sorted(pools)
-    for i, a in enumerate(srcs):
-        for b in srcs[i + 1 :]:
-            n = len(pools[a] & pools[b])
-            if n:
-                expect_pairs[(a, b)] = n
-    assert got == expect_pairs
-
-
-def test_source_unigram_kl_matches_python_reference(spark, sf_dir):
-    """source_unigram_kl: recompute smoothed KL and exact TV in plain
-    python (hashlib md5 fold, math.log) and compare at 6 dp."""
-    import hashlib
-    import math
-    from collections import Counter
-
-    from museum_image_etl_gridfs_spark.catalog import load
-    from museum_image_etl_gridfs_spark.plans.queries_quality import (
-        _KL_B,
-        source_unigram_kl,
-    )
-
-    got = {
-        r["source"]: (r["n_tokens"], r["kl_nats"], r["tv_dist"])
-        for r in source_unigram_kl(spark, sf_dir).collect()
-    }
-
-    def bucket(tok: str) -> int:
-        return int(hashlib.md5(tok.encode()).hexdigest()[:8], 16) % _KL_B
-
-    rows = load(spark, "documents", sf_dir).select("source", "text").collect()
-    per_src: dict = {}
-    glob: Counter = Counter()
-    for r in rows:
-        ws = (r["text"] or "").strip().lower().split()
-        c = per_src.setdefault(r["source"], Counter())
-        for t in ws:
-            b = bucket(t)
-            c[b] += 1
-            glob[b] += 1
-    n = sum(glob.values())
-    for src, c in per_src.items():
-        n_s = sum(c.values())
-        kl = 0.0
-        tv_num = 0
-        for b in range(_KL_B):
-            cb, gb = c.get(b, 0), glob.get(b, 0)
-            # mirror the engine arithmetic: DECIMAL(18,12)-rounded ln
-            # times integer (c+1), one final division
-            lnr = ((cb + 1.0) * (n + float(_KL_B))) / (
-                (n_s + float(_KL_B)) * (gb + 1.0)
-            )
-            kl += (cb + 1) * round(math.log(lnr), 12)
-            tv_num += abs((cb + 1) * (n + _KL_B) - (gb + 1) * (n_s + _KL_B))
-        kl /= n_s + float(_KL_B)
-        tv = tv_num / (2.0 * (n_s + float(_KL_B)) * (n + float(_KL_B)))
-        want = (n_s, round(kl, 6), round(tv, 6))
-        assert got[src][0] == want[0], src
-        assert abs(got[src][1] - want[1]) <= 2e-6, (src, got[src], want)
-        assert abs(got[src][2] - want[2]) <= 2e-6, (src, got[src], want)
 
 
 def test_token_chunks_fixed_width(spark):

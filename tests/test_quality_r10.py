@@ -1,5 +1,5 @@
 """Behavioral pins for the round-10 curation/eval queries —
-gopher_top_ngram_fraction, classifier_calibration, corpus_power_laws.
+gopher_top_ngram_fraction and corpus_power_laws.
 Cross-engine value equality is the oracle harness's job; these pin
 the SEMANTICS on constructed inputs where the right answer is known
 by hand."""
@@ -62,23 +62,6 @@ def test_gopher_all_unique_grams_pass(spark, sf_dir):
     )
     # every document gets a row; fractions live in (0, 1]
     assert out["n"] > 0 and 0.0 <= out["mn"] and out["mx"] <= 1.0
-
-
-def test_calibration_deciles_partition_the_corpus(spark, sf_dir):
-    from museum_image_etl_gridfs_spark.catalog import load
-    from museum_image_etl_gridfs_spark.plans.registry import all_queries
-
-    out = all_queries()["classifier_calibration"].build(spark, sf_dir)
-    rows = out.collect()
-    n_docs = load(spark, "documents", sf_dir).count()
-    assert sorted(r["decile"] for r in rows) == list(range(1, 11))
-    assert sum(r["n_docs"] for r in rows) == n_docs
-    # decile sizes differ by at most 1 (exact ANSI ntile contract)
-    sizes = [r["n_docs"] for r in rows]
-    assert max(sizes) - min(sizes) <= 1
-    for r in rows:
-        assert 0 <= r["n_rule_pass"] <= r["n_docs"]
-        assert abs(r["rule_pass_rate"] - round(r["n_rule_pass"] / r["n_docs"], 6)) < 1e-12
 
 
 def test_zipf_slope_recovers_synthetic_power_law(spark):

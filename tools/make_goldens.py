@@ -51,7 +51,6 @@ FULL_GOLDENS = {
     "pca_projection": ["vec_id"],
     "pq_adc_topk": ["qid", "neighbor_id"],
     "ivfpq_topk_ann": ["qid", "neighbor_id"],
-    "bpe_learn_merges": ["step"],
 }
 
 

@@ -56,7 +56,6 @@ EXPECTED_PYTHON = {
     "video_frame_sample_plan",  # frame codec
     "kmeans_cluster_profile",   # Lloyd's iterations (numpy)
     "semantic_dedup_keep",      # embedding math over kmeans output
-    "embedding_near_dup_pairs",  # block-matrix cosine (numpy matmul)
     "eval_contamination",        # vectorized bigram shingling
     "pca_projection",            # covariance partials + projection (numpy)
     # NOTE: heavy_hitter_tokens' CMS mapInPandas stage executes
