@@ -27,9 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-#: Dimension tables small enough to broadcast at any scale factor.
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 

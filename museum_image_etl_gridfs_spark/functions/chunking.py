@@ -23,7 +23,7 @@ windows; ``size == stride`` tiles exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

@@ -44,17 +44,3 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     na, nb = norm(a), norm(b)
     return F.when((na == 0) | (nb == 0), F.lit(0.0)).otherwise(d / (na * nb))
 
-
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                _col(a),
-                _col(b),
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )

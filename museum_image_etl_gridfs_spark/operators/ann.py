@@ -1,37 +1,26 @@
-"""IVF-style approximate nearest neighbor (scale path for similarity
-search, alongside the LSH-bucketed variant in queries_vector).
+"""Blocked exact Jaccard pair kernel: every token-set pair of a
+corpus whose Jaccard similarity reaches a threshold, without a
+quadratic Spark join.
 
-Classic inverted-file ANN: partition the corpus into Voronoi cells
-around K centroids, then search only the ``n_probe`` cells nearest
-the query. Recall/cost trades on n_probe; brute force is the
-n_probe=K degenerate case.
+Documents pack into (block, new, sub-block) cells, one row each, and
+the block-local cell pairs cross-join. Per cell pair, numpy builds
+the two token-incidence matrices over the pair's vocabulary and gets
+every intersection count from one float matmul
+(|A∩B| = Ia @ Ib.T; |A∪B| = |a| + |b| - |A∩B|). The sub-block count
+is derived from one measured aggregate, so cells stay memory-bounded
+at any scale factor while still filling every core.
 
-Spark-first shape:
-- centroids are a deterministic sample (first K by id — the fixture
-  embeddings are i.i.d., so this is as good as kmeans++ seeding for
-  cell balance and keeps the operator fully deterministic/testable;
-  swap in MLlib KMeans fits for production skew);
-- cell assignment is a broadcast-nested-loop min over K centroids —
-  corpus never shuffles to assign;
-- a query probes its n_probe nearest cells; scoring happens only
-  inside probed cells (a broadcast semi-filter + the same JVM cosine
-  as the brute-force baseline).
-
-At 100 TB: the corpus is written PARTITIONED BY cell (partition
-pruning turns a probe into reading n_probe/K of the data); here the
-cell filter plays that role in-plan.
+The exact near-dup pair queries (``near_dup_components_exact``,
+``prefix_join_near_dups`` and ``incremental_near_dups``) run through
+:func:`jaccard_pairs_blocked`.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.vectors import cosine
-from ..partitioning import spread
-from .topk import grouped_topk
 
 
 def _np_id_dtype(spark_type: str) -> str:
@@ -69,45 +58,6 @@ def _sub_blocks_for(
     mem = _blocks_for(max_rows, target_rows, floor=2)
     par = math.ceil(math.sqrt(8 * max(parallelism, 1) / max(n_keys, 1)))
     return max(mem, min(par, max(max_rows, 1)))
-
-
-def assign_cells(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k_cells: int = 16,
-) -> tuple[DataFrame, DataFrame]:
-    """Return (centroids, corpus-with-cell).
-
-    Centroids: the K lowest-id vectors. Cell = argmax cosine to a
-    centroid, computed via a broadcast join + per-row window min —
-    the corpus is touched once, no shuffle for assignment itself.
-    """
-    centroids = (
-        emb.orderBy(id_col)
-        .limit(k_cells)
-        .select(
-            F.col(id_col).alias("cell_id"), F.col(vec_col).alias("centroid")
-        )
-    )
-    scored = (
-        spread(emb, id_col)
-        .join(F.broadcast(centroids))
-        .select(
-            id_col,
-            vec_col,
-            "cell_id",
-            cosine(F.col(vec_col), F.col("centroid")).alias("__sim"),
-        )
-    )
-    w = Window.partitionBy(id_col).orderBy(F.col("__sim").desc(), F.col("cell_id"))
-    assigned = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, vec_col, "cell_id")
-    )
-    return centroids, assigned
 
 
 def jaccard_pairs_blocked(
@@ -335,69 +285,3 @@ def _jaccard_score_fn(threshold: float, id_np: str):
 
     return score
 
-
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qv",
-    k_cells: int = 16,
-    n_probe: int = 4,
-    top_k: int = 5,
-) -> DataFrame:
-    """Approximate cosine top-k: probe the ``n_probe`` cells nearest
-    each query, score only within them. Returns (qid, neighbor_id,
-    score) — same shape as the brute-force baseline so recall is
-    directly measurable (tests/test_ann.py).
-
-    INPUT CONTRACT: ``queries`` must have UNIQUE ``qid_col`` rows
-    (like the threshold>0 contract on the blocked kernels). The
-    no-dedup candidate path below relies on it: duplicate qid rows
-    would make the probe window emit the same cell more than once per
-    qid, and the duplicated (qid, neighbor) candidates could occupy
-    multiple top-k slots. Duplicate qids with DIFFERENT vectors are
-    ambiguous anyway — no dedup here could pick the right one.
-    """
-    centroids, assigned = assign_cells(
-        emb, id_col=id_col, vec_col=vec_col, k_cells=k_cells
-    )
-
-    q_cells = (
-        queries.join(F.broadcast(centroids))
-        .select(
-            qid_col,
-            qvec_col,
-            "cell_id",
-            cosine(F.col(qvec_col), F.col("centroid")).alias("__sim"),
-        )
-    )
-    wq = Window.partitionBy(qid_col).orderBy(F.col("__sim").desc(), F.col("cell_id"))
-    probes = (
-        q_cells.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= n_probe)
-        .select(qid_col, qvec_col, "cell_id")
-    )
-
-    # Score only inside probed cells (the partition-pruning analog).
-    # (qid, neighbor) pairs are distinct BY CONSTRUCTION — cell
-    # assignment is argmin-unique per vector (row_number == 1 above)
-    # and probes are distinct cells per query — so no dedup shuffle
-    # of the candidate stream is needed.
-    cand = assigned.join(
-        F.broadcast(probes), on="cell_id"
-    ).filter(F.col(id_col) != F.col(qid_col))
-    scored = cand.select(
-        qid_col,
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine(F.col(qvec_col), F.col(vec_col)), 4).alias("score"),
-    )
-    # final rank via the two-phase partial top-k merge: a per-qid
-    # row_number window would funnel ~n_probe/K of the corpus through
-    # one task per query at scale — the shape grouped_topk exists to
-    # kill (same routing as cosine_topk / l2_nearest).
-    return grouped_topk(
-        scored, [qid_col], [("score", False), ("neighbor_id", True)], top_k
-    )

@@ -22,7 +22,6 @@ Scale notes:
 
 from __future__ import annotations
 
-import math
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window

@@ -113,6 +113,8 @@ class RawCodec:
     def decode(blob: bytes):
         import numpy as np
 
+        if len(blob) < _HEADER.size:
+            raise ValueError(f"{len(blob)}-byte blob is shorter than a RAW0 header")
         magic, w, h = _HEADER.unpack_from(blob)
         if magic != _MAGIC:
             raise ValueError("not a RAW0 blob")

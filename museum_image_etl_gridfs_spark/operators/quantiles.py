@@ -15,7 +15,7 @@ All operators here share one machinery:
    so the id is codegen'd, value-monotone, and a pure function of the
    row (stable across jobs);
 2. per-bucket partials (counts / sums) → the only ``collect()``,
-   O(buckets) rows (the kmeans-partials pattern) → broadcast
+   O(buckets) rows → broadcast
    cumulative offsets;
 3. a WITHIN-bucket window for local positions / running sums;
 4. global value = bucket offset + local value.

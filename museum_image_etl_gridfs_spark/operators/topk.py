@@ -4,8 +4,7 @@ The idiomatic ``row_number() OVER (PARTITION BY g ORDER BY …) <= k``
 funnels EVERY row of a group through one window task — for a handful
 of groups (brands, nations, anchor queries) that is a straggler at
 any scale, and for a broadcast-fan-out input (ANN scoring: corpus ×
-anchors) the straggler carries the whole fan-out (ADVICE r9,
-hard_negative_mining).
+anchors) the straggler carries the whole fan-out (ADVICE r9).
 
 :func:`grouped_topk` replaces it with the classic two-phase merge:
 

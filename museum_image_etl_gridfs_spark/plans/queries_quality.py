@@ -646,51 +646,6 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query(
-    "kmeans_cluster_profile",
-    oracle=None,  # iterative algorithm — rows-only check; numpy parity
-    # is pinned in tests/test_kmeans.py instead
-    tags=("similarity", "clustering", "extension"),
-)
-def kmeans_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic distributed k-means (operators/kmeans.py) over the
-    embeddings, profiled per cluster: size and mean squared distance to
-    the centroid. The model behind SemDeDup-style semantic dedup and
-    IVF index training. Lloyd's is iterative (one corpus scan per
-    iteration, driver-side k×dim state) — not SQL-expressible, so this
-    is a rows-only driver check with exact numpy parity pinned in
-    tests."""
-    from ..operators.kmeans import kmeans_assign, kmeans_fit
-
-    emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
-    centroids = kmeans_fit(emb, k=8, n_iter=5)
-    assigned = kmeans_assign(emb, centroids)
-    return assigned.groupBy("cluster").agg(
-        F.count("*").cast("int").alias("n_points"),
-        F.round(F.avg("sq_dist"), 4).alias("mean_sq_dist"),
-    )
-
-
-@query(
-    "semantic_dedup_keep",
-    oracle=None,  # iterative (kmeans inside) — rows-only + tests
-    tags=("dedup", "similarity", "extension"),
-)
-def semantic_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup-style pruning: cluster the embedding space, then keep
-    only the 10 points per cluster farthest from their centroid
-    (dropping the near-centroid redundancy). The embedding-space
-    counterpart of MinHash dedup — at 100 TB this is how you cut a
-    corpus 2-5x with minimal quality loss."""
-    from ..operators.kmeans import semantic_dedup
-
-    emb = load(spark, "embeddings", sf_dir).select("vec_id", "embedding")
-    kept = semantic_dedup(emb, k=8, n_iter=5, keep_per_cluster=10)
-    return kept.select(
-        "vec_id", "cluster", F.round("sq_dist", 4).alias("sq_dist")
-    )
-
-
-@query(
     "frequent_bigrams",
     oracle=f"""
     WITH s AS (

@@ -58,8 +58,11 @@ def test_transform_quarantines_bad_blobs(spark):
     good = RawCodec.encode(np.zeros((2, 2, 3), dtype=np.uint8))
     # a negative width must not let the reshape infer a (2, 5, 3) raster
     negative = struct.pack("<4sii", b"RAW0", -1, 2) + bytes(30)
+    # shorter than the 12-byte header: rejected before the unpack
+    short = b"RAW"
     df = spark.createDataFrame(
-        [(1, good), (2, b"not an image"), (3, negative)], "k long, image binary"
+        [(1, good), (2, b"not an image"), (3, negative), (4, short)],
+        "k long, image binary",
     )
     rows = {r["k"]: r for r in transform_images(df, "image").collect()}
     assert rows[1]["image_transformed_status"] == "ok"
@@ -67,6 +70,8 @@ def test_transform_quarantines_bad_blobs(spark):
     assert rows[2]["image_transformed"] is None
     assert rows[3]["image_transformed_status"] == "error:ValueError"
     assert rows[3]["image_transformed"] is None
+    assert rows[4]["image_transformed_status"] == "error:ValueError"
+    assert rows[4]["image_transformed"] is None
 
 
 def test_image_features(spark):

@@ -69,9 +69,6 @@ PENDING_KEEP_DROP = (
     "exact_dedup_stats", "simhash_fingerprints", "near_dup_clusters",
     "dup_gram_stats", "incremental_minhash_near_dups", "substring_dedup_rewrite",
     "ngram_novelty_profile",
-    # queries_vector
-    "l2_nearest", "embedding_norm_stats", "signlsh_topk", "ivf_topk_ann",
-    "hard_negative_mining", "pq_adc_topk", "ivfpq_topk_ann", "pca_projection",
     # queries_events
     "stream_user_totals", "stream_expired_sessions", "stream_attribution_pairs",
     "stream_enriched_segments", "stream_event_funnel",
@@ -87,7 +84,6 @@ PENDING_KEEP_DROP = (
     "distinct_ngram_diversity", "gopher_top_ngram_fraction",
     "gopher_dup_ngram_chars", "gopher_dup_line_stats",
     "filter_agreement_kappa", "token_budget_packing", "zorder_layout_stats",
-    "kmeans_cluster_profile", "semantic_dedup_keep",
     "length_outliers_by_lang", "ccnet_perplexity_buckets",
     # queries_profile
     "corpus_power_laws", "price_deciles", "customer_ltv_deciles",
@@ -199,6 +195,33 @@ def test_every_module_has_a_non_test_importer():
     assert not orphans, orphans
 
 
+def _unused_imports(path: str) -> list[str]:
+    """Names a module binds by import but never refers to."""
+    tree = ast.parse(open(path).read())
+    bound = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            bound.update(a.asname or a.name.split(".")[0] for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            bound.update(a.asname or a.name for a in node.names)
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return sorted(bound - used)
+
+
+def test_no_unused_imports_in_package():
+    """Every name a package module imports is referred to in that
+    module. ``__init__.py`` files are skipped: their imports are
+    re-exports."""
+    unused = []
+    for dirpath, _, files in os.walk(os.path.join(ROOT, PACKAGE)):
+        for f in files:
+            if f.endswith(".py") and f != "__init__.py":
+                path = os.path.join(dirpath, f)
+                rel = os.path.relpath(path, ROOT)
+                unused += [f"{rel}:{name}" for name in _unused_imports(path)]
+    assert not unused, unused
+
+
 #: public package definitions (``<module>.<name>`` under the package)
 #: that only tests call today; each awaits deletion or a non-test
 #: caller. The list may only shrink.
@@ -229,14 +252,16 @@ _DOTTED = re.compile(r"[A-Za-z_][\w.]*")
 def _referenced_names(tree: ast.Module) -> set[tuple[str | None, str]]:
     """(enclosing top-level definition or None, name) for every name a
     module refers to: loads, attributes, imported names, and each part
-    of a string constant that is a (dotted) name. Docstrings and other
-    prose strings name nothing."""
+    of a string constant that is a (dotted) name. Assignment targets
+    bind rather than refer; docstrings and other prose strings name
+    nothing."""
     out = set()
     for top in tree.body:
         owner = getattr(top, "name", None)
         for node in ast.walk(top):
             if isinstance(node, ast.Name):
-                out.add((owner, node.id))
+                if not isinstance(node.ctx, ast.Store):
+                    out.add((owner, node.id))
             elif isinstance(node, ast.Attribute):
                 out.add((owner, node.attr))
             elif isinstance(node, ast.alias):
@@ -247,13 +272,36 @@ def _referenced_names(tree: ast.Module) -> set[tuple[str | None, str]]:
     return out
 
 
+def _public_definitions(node: ast.stmt) -> list[str]:
+    """Public names a top-level statement defines: a function or class
+    (``@query`` builders excluded, the registry reaches them) or the
+    plain-name targets of a module-level constant (``NAME = ...``)."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        builder = any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+            for d in node.decorator_list
+        )
+        names = [] if builder else [node.name]
+    elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+        targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+        names = [
+            n.id
+            for t in targets
+            for n in ast.walk(t)
+            if isinstance(n, ast.Name)
+        ]
+    else:
+        names = []
+    return [n for n in names if not n.startswith("_")]
+
+
 def test_every_public_definition_has_a_non_test_caller():
-    """Every public top-level function or class in the package is
-    referred to by some other definition in the package, perfbench,
-    tools or the driver entry point; tests do not count, nor does a
-    definition referring to itself. ``@query`` builders count as
-    reached through the registry. Names are matched by name, so a
-    caller anywhere keeps every definition of that name."""
+    """Every public top-level function, class or constant in the
+    package is referred to by some other definition in the package,
+    perfbench, tools or the driver entry point; tests do not count,
+    nor does a definition referring to itself. ``@query`` builders
+    count as reached through the registry. Names are matched by name,
+    so a caller anywhere keeps every definition of that name."""
     defs = {}  # "<module>.<name>" -> name
     callers = set()  # (module or None, owner, name)
     pkg = os.path.join(ROOT, PACKAGE)
@@ -265,16 +313,8 @@ def test_every_public_definition_has_a_non_test_caller():
             module = os.path.relpath(path, pkg)[: -len(".py")].replace(os.sep, ".")
             tree = ast.parse(open(path).read())
             for node in tree.body:
-                if not isinstance(
-                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-                ) or node.name.startswith("_"):
-                    continue
-                builder = any(
-                    isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
-                    for d in node.decorator_list
-                )
-                if not builder:
-                    defs[f"{module}.{node.name}"] = node.name
+                for name in _public_definitions(node):
+                    defs[f"{module}.{name}"] = name
             callers |= {(module, o, n) for o, n in _referenced_names(tree)}
     for pattern in ("perfbench/*.py", "tools/*.py", "__spark_entry__.py"):
         for path in glob.glob(os.path.join(ROOT, pattern)):

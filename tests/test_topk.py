@@ -2,7 +2,7 @@
 ``row_number() OVER (PARTITION BY g ORDER BY …) <= k`` result — on
 skewed groups, groups smaller than k, DESC keys, and multi-key
 orders — without a per-group sort task (VERDICT r9 #1 follow-through
-/ ADVICE r9 hard_negative_mining straggler)."""
+/ ADVICE r9 ranking-window straggler)."""
 
 from __future__ import annotations
 

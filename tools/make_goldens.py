@@ -41,16 +41,10 @@ GOLDENS = {
 #: per row so the serialized order is total.
 FULL_SF_DIR = "/root/testdata/sf0.01"
 FULL_GOLDENS = {
-    "kmeans_cluster_profile": ["cluster"],
-    "semantic_dedup_keep": ["vec_id"],
     "minhash_near_dups": ["id_a", "id_b"],
     "incremental_minhash_near_dups": ["id_a", "id_b"],
     "simhash_fingerprints": ["doc_id"],
     "near_dup_clusters": ["component"],
-    "ivf_topk_ann": ["qid", "neighbor_id"],
-    "pca_projection": ["vec_id"],
-    "pq_adc_topk": ["qid", "neighbor_id"],
-    "ivfpq_topk_ann": ["qid", "neighbor_id"],
 }
 
 

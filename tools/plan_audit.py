@@ -54,18 +54,13 @@ EXPECTED_PYTHON = {
     "image_etl_gridfs",         # binary image codec
     "audio_resample_plan",      # PCM codec
     "video_frame_sample_plan",  # frame codec
-    "kmeans_cluster_profile",   # Lloyd's iterations (numpy)
-    "semantic_dedup_keep",      # embedding math over kmeans output
     "eval_contamination",        # vectorized bigram shingling
-    "pca_projection",            # covariance partials + projection (numpy)
     # NOTE: heavy_hitter_tokens' CMS mapInPandas stage executes
     # eagerly inside build() (sketch merge), so the RETURNED plan —
     # the candidate recount — is Python-free and needs no entry here.
     "pareto_frontier_parts",     # SFS skyline kernel (numpy)
     "http_ingest_pipeline",      # batch-HTTP fetch stage (S2/U1, hermetic)
     "binary_fetch_pipeline",     # binary blob fetch stage (S3/F2, hermetic)
-    "pq_adc_topk",               # PQ encode + ADC table gather (numpy)
-    "ivfpq_topk_ann",            # IVF-PQ residual encode + probed ADC
     "prefix_join_near_dups",     # block-matrix intersection matmul
     "incremental_near_dups",     # same matmul, incremental mode
     "near_dup_components_exact",  # matmul + union-find closure (numpy)
