@@ -265,7 +265,9 @@ def image_features(
 ) -> DataFrame:
     """Feature extraction: width/height from the typed header plus
     per-channel means — the embedding-stub shape a training pipeline
-    feeds downstream (array<float> column)."""
+    feeds downstream (array<float> column). A NULL blob, or one the
+    codec rejects, keeps its row with NULL features (the quarantine
+    rows of :func:`transform_images` carry NULL images)."""
     out_fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
@@ -280,14 +282,23 @@ def image_features(
             for pdf in _bounded_measured(full, per_row.tolist()):
                 ws, hs, means = [], [], []
                 for blob in pdf[image_col]:
-                    arr = codec.decode(bytes(blob))
+                    try:
+                        arr = None if blob is None else codec.decode(bytes(blob))
+                    except Exception:  # noqa: BLE001 - quarantine row
+                        arr = None
+                    if arr is None:
+                        ws.append(None)
+                        hs.append(None)
+                        means.append(None)
+                        continue
                     h, w, _ = arr.shape
                     ws.append(w)
                     hs.append(h)
                     means.append([float(m) for m in arr.mean(axis=(0, 1))])
                 pdf = pdf.copy()
-                pdf["width"] = ws
-                pdf["height"] = hs
+                # nullable ints: a plain int column would turn NULLs to NaN
+                pdf["width"] = pd.Series(ws, index=pdf.index, dtype="Int32")
+                pdf["height"] = pd.Series(hs, index=pdf.index, dtype="Int32")
                 pdf["channel_means"] = pd.Series(means, index=pdf.index, dtype=object)
                 yield pdf
 

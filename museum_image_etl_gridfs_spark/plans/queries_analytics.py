@@ -1,7 +1,7 @@
 """Advanced analytics wave (round 3): operators and surfaces beyond
 the earlier families, each with an exact DuckDB oracle.
 
-- sketch/geometry: count-min heavy hitters, distributed SFS skyline
+- geometry: distributed SFS skyline
 - graph: iterative PageRank
 - temporal: argmin/argmax OHLC (batch + streaming)
 - engine surfaces, driver-verified: percent_rank/cume_dist/nth_value,
@@ -21,45 +21,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.lifecycle import tracked_local_checkpoint
-from ..operators.sketches import cms_heavy_hitters, tokens_of
 from ..operators.skyline import skyline
 from ..partitioning import spread
 from .registry import query
-
-#: heavy-hitter share-of-corpus threshold (3% of all tokens)
-_HH_FRAC = 0.03
-
-
-@query(
-    "heavy_hitter_tokens",
-    oracle=f"""
-    WITH toks AS (
-        SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS item
-        FROM documents
-        WHERE text IS NOT NULL AND trim(text) <> ''
-    ),
-    f AS (SELECT item, CAST(count(*) AS BIGINT) AS freq FROM toks GROUP BY 1)
-    SELECT item, freq
-    FROM f
-    WHERE freq >= CAST(ceil({_HH_FRAC} * (SELECT sum(freq) FROM f)) AS BIGINT)
-    """,
-    tags=("sketch", "heavy-hitters", "mapInPandas", "documents"),
-)
-def heavy_hitter_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus heavy hitters via count-min sketch + exact verify
-    (operators/sketches.py): tokens holding ≥ 3% of all token
-    occurrences.
-
-    The corpus is never shuffled — each partition emits a tiny CMS
-    partial and its pigeonhole-safe local candidates; only surviving
-    candidates are recounted exactly (broadcast semi-join), so the
-    output is exact and the oracle can hash-match it.
-    """
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    toks = docs.select(
-        F.explode_outer(tokens_of(F.col("text"))).alias("item")
-    ).filter(F.col("item").isNotNull())
-    return cms_heavy_hitters(toks, "item", _HH_FRAC)
 
 
 @query(

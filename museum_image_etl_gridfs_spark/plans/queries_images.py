@@ -134,78 +134,3 @@ def image_etl_gridfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("image_transformed_status").alias("status"),
     )
-
-
-@query(
-    "audio_resample_plan",
-    oracle="""
-    SELECT doc_id,
-           CAST(2000 AS INTEGER) AS sample_rate,
-           CAST(0.1 AS DOUBLE)   AS duration_s,
-           CAST(200 AS BIGINT)   AS n_samples,
-           'ok' AS status
-    FROM documents
-    """,
-    tags=("multimodal", "audio", "extension"),
-)
-def audio_resample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio modality through the driver gate: synthesize 0.1 s PCM
-    clips keyed by doc_id, resample 8 kHz -> 2 kHz, verify the typed
-    metadata consequences (rate, preserved duration, sample count)."""
-    from ..operators.audio import audio_features, resample_audio, synthesize_audio
-
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    clips = synthesize_audio(
-        spread(docs, "doc_id"), "doc_id", sample_rate=8000, n_samples=800
-    )
-    out = resample_audio(clips, dst_rate=2000)
-    feats = audio_features(
-        out.select(
-            "doc_id",
-            F.col("audio_resampled").alias("audio"),
-            F.col("resample_status").alias("status"),
-        )
-    )
-    return feats.select(
-        "doc_id",
-        "sample_rate",
-        "duration_s",
-        (F.col("duration_s") * F.col("sample_rate")).cast("long").alias("n_samples"),
-        "status",
-    )
-
-
-@query(
-    "video_frame_sample_plan",
-    oracle="""
-    SELECT doc_id,
-           CAST(4 AS INTEGER) AS n_frames_kept,
-           CAST(2 AS INTEGER) AS fps,
-           CAST(2.0 AS DOUBLE) AS duration_s,
-           'ok' AS status
-    FROM documents
-    """,
-    tags=("multimodal", "video", "extension"),
-)
-def video_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video modality through the driver gate: 20-frame 10 fps clips,
-    1-in-5 frame sampling (the pre-shuffle bandwidth lever), features
-    confirm kept-frame count, scaled fps, and preserved duration."""
-    from ..operators.video import sample_frames, synthesize_video, video_features
-
-    docs = load(spark, "documents", sf_dir).select("doc_id")
-    clips = synthesize_video(
-        spread(docs, "doc_id"), "doc_id", fps=10, n_frames=20
-    )
-    sampled = sample_frames(clips, every=5)
-    feats = video_features(
-        sampled.select(
-            "doc_id",
-            F.col("video_sampled").alias("video"),
-            "n_frames_kept",
-            F.col("sample_status").alias("status"),
-        )
-    )
-    return feats.select(
-        "doc_id", "n_frames_kept", "fps", "duration_s", "status"
-    )

@@ -1,7 +1,6 @@
 """OLAP shapes over the TPC-H-ish fixtures: upsert markers, per-group
-rank boards and top-k arrays, SCD2 version history and point-in-time
-lookup, and the brand co-occurrence edge source shared with
-``queries_stats``. No UDFs; exact DuckDB oracles.
+rank boards and top-k arrays, and the brand co-occurrence edge source
+shared with ``queries_stats``. No UDFs; exact DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -160,76 +159,6 @@ def top_balances_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(ordered, lambda b: b.cast("string")), ","
         ).alias("top_bals")
     )
-
-
-@query(
-    "pit_customer_versions",
-    oracle="""
-    WITH v0 AS (
-        SELECT o_custkey AS custkey, o_orderkey AS version_key,
-               o_totalprice AS attr_price, o_orderdate AS valid_from,
-               row_number() OVER (PARTITION BY o_custkey, o_orderdate
-                                  ORDER BY o_orderkey DESC) AS vr
-        FROM orders),
-    v AS (SELECT custkey, version_key, attr_price, valid_from
-          FROM v0 WHERE vr = 1),
-    e AS (SELECT event_id, user_id AS custkey, ts FROM events),
-    j AS (
-        SELECT e.event_id, e.custkey, v.version_key, v.attr_price,
-               row_number() OVER (PARTITION BY e.event_id
-                                  ORDER BY v.valid_from DESC,
-                                           v.version_key DESC) AS rn
-        FROM e LEFT JOIN v
-          ON e.custkey = v.custkey AND v.valid_from <= e.ts)
-    SELECT event_id, custkey, version_key, attr_price
-    FROM j WHERE rn = 1
-    """,
-    tags=("join", "temporal", "scd", "extension"),
-)
-def pit_customer_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time (temporal) join: each event looks up the SCD2
-    customer version in effect at its event time — the PIT-correct
-    feature lookup a training pipeline needs to avoid label leakage.
-
-    Versions sharing an effective date are pre-collapsed to the
-    superseding one (max version key) so the as-of carry is tie-free
-    and deterministic. The lookup itself is the union+window as-of
-    operator (one shuffle on the key, one carried row of state) —
-    NOT an interval self-join, which would explode to O(events ×
-    versions) pairs per key before filtering; the oracle replays
-    exactly that explosion in SQL because DuckDB can afford it at
-    sf0.01.
-    """
-    from pyspark.sql import Window
-
-    from ..operators.joins import asof_join
-
-    orders = load(spark, "orders", sf_dir)
-    vr = Window.partitionBy("o_custkey", "o_orderdate").orderBy(
-        F.desc("o_orderkey")
-    )
-    versions = (
-        orders.withColumn("vr", F.row_number().over(vr))
-        .filter(F.col("vr") == 1)
-        .select(
-            F.col("o_custkey").alias("custkey"),
-            F.col("o_orderkey").alias("version_key"),
-            F.col("o_totalprice").alias("attr_price"),
-            F.col("o_orderdate").alias("valid_from"),
-        )
-    )
-    events = load(spark, "events", sf_dir).select(
-        "event_id", F.col("user_id").alias("custkey"), "ts"
-    )
-    return asof_join(
-        events,
-        versions,
-        on=["custkey"],
-        left_time="ts",
-        right_time="valid_from",
-        right_values=["version_key", "attr_price"],
-        strict=False,
-    ).select("event_id", "custkey", "version_key", "attr_price")
 
 
 def order_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

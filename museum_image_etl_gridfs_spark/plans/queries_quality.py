@@ -597,54 +597,6 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select("doc_id", F.round("score", 4).alias("bm25"))
 
 
-def _zorder_oracle() -> str:
-    from ..operators.layout import zorder_key2_sql
-
-    z = zorder_key2_sql("l_partkey", "l_suppkey")
-    return f"""
-    WITH z AS (SELECT {z} AS zkey, l_partkey, l_suppkey FROM lineitem)
-    SELECT CAST(zkey >> 24 AS INTEGER) AS bucket,
-           count(*) AS n_rows,
-           min(l_partkey) AS min_pk, max(l_partkey) AS max_pk,
-           min(l_suppkey) AS min_sk, max(l_suppkey) AS max_sk
-    FROM z GROUP BY 1
-    """
-
-
-@query(
-    "zorder_layout_stats",
-    oracle=_zorder_oracle(),
-    tags=("layout", "extension"),
-)
-def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Morton/Z-order clustering stats: interleave the bits of
-    (l_partkey, l_suppkey), bucket rows by the top z-key byte, and
-    report each bucket's min-max envelope on BOTH dimensions — the
-    exact quantities parquet stores per file/row-group and Spark uses
-    to prune scans. Narrow envelopes on both columns are the proof the
-    curve clusters both at once (tests/test_layout.py asserts the
-    locality quantitatively; operators/layout.py::write_zordered is
-    the writer that realizes it on disk).
-
-    All closed-form shift-or-mask bit arithmetic — codegen'd JVM
-    expressions, one map-side-combined aggregation, no UDFs.
-    """
-    from ..operators.layout import zorder_key2
-
-    li = load(spark, "lineitem", sf_dir)
-    z = li.select(
-        zorder_key2("l_partkey", "l_suppkey").alias("zkey"),
-        "l_partkey", "l_suppkey",
-    )
-    return z.groupBy(
-        F.shiftright(F.col("zkey"), 24).cast("int").alias("bucket")
-    ).agg(
-        F.count("*").alias("n_rows"),
-        F.min("l_partkey").alias("min_pk"), F.max("l_partkey").alias("max_pk"),
-        F.min("l_suppkey").alias("min_sk"), F.max("l_suppkey").alias("max_sk"),
-    )
-
-
 @query(
     "frequent_bigrams",
     oracle=f"""

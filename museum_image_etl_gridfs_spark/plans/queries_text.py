@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ..functions import quality as Q
 from ..functions import text as TX
-from ..functions.chunking import chunk_documents, chunk_oracle_sql
 from ..partitioning import spread
 from .registry import query
 
@@ -173,20 +172,6 @@ def token_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-
-
-@query(
-    "doc_chunks",
-    oracle=chunk_oracle_sql(size=160, stride=120),
-    tags=("text", "chunking", "extension"),
-)
-def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-window document chunking (160-char windows, 120 stride =
-    40-char overlap) — the curation→tokenization bridge. Pure
-    Catalyst sequence/explode/substring; see functions/chunking.py
-    for the grammar and the 100 TB posture (narrow, zero-exchange)."""
-    docs = load(spark, "documents", sf_dir)
-    return chunk_documents(docs, size=160, stride=120)
 
 
 def _lang_confusion_oracle() -> str:

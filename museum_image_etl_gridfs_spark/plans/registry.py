@@ -39,7 +39,6 @@ _QUERY_MODULES = (
     "museum_image_etl_gridfs_spark.plans.queries_vector",
     "museum_image_etl_gridfs_spark.plans.queries_events",
     "museum_image_etl_gridfs_spark.plans.queries_images",
-    "museum_image_etl_gridfs_spark.plans.queries_joins",
     "museum_image_etl_gridfs_spark.plans.queries_olap",
     "museum_image_etl_gridfs_spark.plans.queries_quality",
     "museum_image_etl_gridfs_spark.plans.queries_profile",

@@ -5,8 +5,6 @@ shorter than n, and never plan a single-task stage."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from museum_image_etl_gridfs_spark.operators.spans import (
     GOPHER_DUP_NGRAM_THRESHOLDS,
     dup_ngram_char_fraction,

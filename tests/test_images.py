@@ -7,6 +7,7 @@ schema, Arrow batches, quarantine rows) is genuinely exercised.
 
 from __future__ import annotations
 
+import importlib.util
 import struct
 
 import numpy as np
@@ -88,6 +89,25 @@ def test_image_features(spark):
         assert np.allclose(got, want, atol=1e-4)
 
 
+def test_image_features_quarantines_bad_blobs(spark):
+    """A blob the codec rejects, or a NULL one, keeps its row with NULL
+    features instead of failing the job."""
+    good = RawCodec.encode(np.full((2, 3, 3), 9, dtype=np.uint8))
+    negative = struct.pack("<4sii", b"RAW0", -1, 2) + bytes(30)
+    df = spark.createDataFrame(
+        [(1, good), (2, b"not an image"), (3, negative), (4, b"RAW"), (5, None)],
+        "k long, image binary",
+    )
+    rows = {r["k"]: r for r in image_features(df).collect()}
+    assert len(rows) == 5
+    assert (rows[1]["width"], rows[1]["height"]) == (3, 2)
+    assert rows[1]["channel_means"] == [9.0, 9.0, 9.0]
+    for k in (2, 3, 4, 5):
+        assert rows[k]["width"] is None, k
+        assert rows[k]["height"] is None, k
+        assert rows[k]["channel_means"] is None, k
+
+
 def test_decoded_length_header_read(spark):
     df = synthesize_images(
         spark.range(3).select(F.col("id").alias("k")), "k", width=10, height=7
@@ -110,13 +130,10 @@ def test_decoded_length_header_read(spark):
 
 
 def test_pil_codec_gated():
-    try:
-        import PIL  # noqa: F401
-
+    if importlib.util.find_spec("PIL") is not None:
         pytest.skip("PIL installed in this env")
-    except ImportError:
-        with pytest.raises(ImportError, match="Pillow"):
-            PILCodec.decode(b"\xff\xd8")
+    with pytest.raises(ImportError, match="Pillow"):
+        PILCodec.decode(b"\xff\xd8")
 
 
 def test_bounded_measured_skew_never_overshoots():

@@ -11,8 +11,6 @@ multi-partition input and asserts the barrier is gone, and a
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from museum_image_etl_gridfs_spark.catalog import load
 from museum_image_etl_gridfs_spark.operators.dedup import (
     minhash_near_duplicates,

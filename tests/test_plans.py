@@ -9,9 +9,6 @@ pruning, broadcast choice, or early-termination.
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from museum_image_etl_gridfs_spark.catalog import load
 from museum_image_etl_gridfs_spark.plans import all_queries
 
@@ -106,13 +103,6 @@ def test_partial_aggregation_before_shuffle(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_range_join_is_broadcast_nested_loop(spark, sf_dir):
-    """quantity_tier_revenue's interval probe must broadcast the
-    bounds (no shuffle of the fact side for the join itself)."""
-    plan = _plan(QUERIES["quantity_tier_revenue"].build(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan
-
-
 def test_curation_queries_stay_jvm_side(spark, sf_dir):
     """The curation suite must plan zero row-at-a-time Python
     evaluation. eval_contamination deliberately uses Arrow-batched
@@ -151,16 +141,6 @@ def test_no_hof_lambda_leaks_into_filters(spark, sf_dir):
         for line in logical.splitlines():
             if "Filter" in line:
                 assert "lambdafunction" not in line, (name, line[:200])
-
-
-def test_doc_chunks_zero_exchange(spark, sf_dir):
-    """Chunking is narrow end-to-end: sequence→explode→substring must
-    introduce no shuffle (and no Python eval)."""
-    import re
-
-    plan = _plan(QUERIES["doc_chunks"].build(spark, sf_dir))
-    assert len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)) == 0, plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_inverted_index_broadcasts_df_band(spark, sf_dir):

@@ -44,6 +44,8 @@ def test_registry_in_registration_order():
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "museum_image_etl_gridfs_spark"
+#: the non-test code outside the package that may use it
+NON_TEST_CALLERS = ("perfbench/*.py", "tools/*.py", "__spark_entry__.py")
 
 #: queries kept because a test uses them as the reference or driver for
 #: other code: (query, the test that drives it)
@@ -64,7 +66,7 @@ PENDING_KEEP_DROP = (
     "top_parts_per_brand",
     # queries_text
     "text_quality", "lang_id", "token_length_histogram",
-    "lang_confusion_matrix", "doc_chunks",
+    "lang_confusion_matrix",
     # queries_dedup
     "exact_dedup_stats", "simhash_fingerprints", "near_dup_clusters",
     "dup_gram_stats", "incremental_minhash_near_dups", "substring_dedup_rewrite",
@@ -73,17 +75,15 @@ PENDING_KEEP_DROP = (
     "stream_user_totals", "stream_expired_sessions", "stream_attribution_pairs",
     "stream_enriched_segments", "stream_event_funnel",
     # queries_images
-    "multimodal_transform", "audio_resample_plan", "video_frame_sample_plan",
-    # queries_joins
-    "asof_prev_order_price", "quantity_tier_revenue", "salted_order_counts",
+    "multimodal_transform",
     # queries_olap
-    "top_balances_per_nation", "supplier_rank_board", "pit_customer_versions",
+    "top_balances_per_nation", "supplier_rank_board",
     # queries_quality
     "pii_redaction_stats", "stratified_sample", "tfidf_top_terms",
     "bm25_scores", "frequent_bigrams", "unigram_entropy",
     "distinct_ngram_diversity", "gopher_top_ngram_fraction",
     "gopher_dup_ngram_chars", "gopher_dup_line_stats",
-    "filter_agreement_kappa", "token_budget_packing", "zorder_layout_stats",
+    "filter_agreement_kappa", "token_budget_packing",
     "length_outliers_by_lang", "ccnet_perplexity_buckets",
     # queries_profile
     "corpus_power_laws", "price_deciles", "customer_ltv_deciles",
@@ -92,7 +92,7 @@ PENDING_KEEP_DROP = (
     # queries_analytics
     "brand_pagerank", "http_ingest_pipeline", "stream_merge_sink_roundtrip",
     "binary_fetch_pipeline", "python_datasource_scan",
-    "stream_unconverted_clicks", "stream_hourly_ohlc", "heavy_hitter_tokens",
+    "stream_unconverted_clicks", "stream_hourly_ohlc",
     "pareto_frontier_parts", "acctbal_distribution_ranks",
     # queries_stats
     "pmi_collocations", "recursive_brand_reach", "negative_sampling_pairs",
@@ -184,7 +184,7 @@ def test_every_module_has_a_non_test_importer():
     imported = set()
     for module, path in modules.items():
         imported |= _imported_modules(path, module) - {module}
-    for pattern in ("perfbench/*.py", "tools/*.py", "__spark_entry__.py"):
+    for pattern in NON_TEST_CALLERS:
         for path in glob.glob(os.path.join(ROOT, pattern)):
             imported |= _imported_modules(path, None)
     # a submodule import imports each enclosing package
@@ -222,11 +222,22 @@ def test_no_unused_imports_in_package():
     assert not unused, unused
 
 
+def test_no_unused_imports_outside_package():
+    """The same for the tests and the non-test callers. A module that
+    only probes whether a package is installed uses
+    ``importlib.util.find_spec``, not an import it never refers to."""
+    unused = []
+    for pattern in ("tests/*.py", *NON_TEST_CALLERS):
+        for path in sorted(glob.glob(os.path.join(ROOT, pattern))):
+            rel = os.path.relpath(path, ROOT)
+            unused += [f"{rel}:{name}" for name in _unused_imports(path)]
+    assert not unused, unused
+
+
 #: public package definitions (``<module>.<name>`` under the package)
 #: that only tests call today; each awaits deletion or a non-test
 #: caller. The list may only shrink.
 PENDING_DEFINITIONS = (
-    "functions.chunking.make_chunk_udtf",
     "functions.cleaning.na_standardize",
     "operators.dedup.exact_dedup",
     "operators.dedup.duplicate_groups",
@@ -237,7 +248,6 @@ PENDING_DEFINITIONS = (
     "operators.gridfs.file_descriptors",
     "operators.gridfs.reassemble_with_files",
     "operators.images.PILCodec",
-    "operators.layout.write_zordered",
     "operators.lifecycle.checkpoint_scope",
     "operators.lifecycle.tracked_count",
     "operators.spans.gram_occurrences",
@@ -272,8 +282,20 @@ def _referenced_names(tree: ast.Module) -> set[tuple[str | None, str]]:
     return out
 
 
-def _public_definitions(node: ast.stmt) -> list[str]:
-    """Public names a top-level statement defines: a function or class
+def _package_trees():
+    """(module path relative to the package, parsed tree) for every
+    package module."""
+    pkg = os.path.join(ROOT, PACKAGE)
+    for dirpath, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                module = os.path.relpath(path, pkg)[: -len(".py")]
+                yield module.replace(os.sep, "."), ast.parse(open(path).read())
+
+
+def _definitions(node: ast.stmt) -> list[str]:
+    """Names a top-level statement defines: a function or class
     (``@query`` builders excluded, the registry reaches them) or the
     plain-name targets of a module-level constant (``NAME = ...``)."""
     if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
@@ -292,7 +314,7 @@ def _public_definitions(node: ast.stmt) -> list[str]:
         ]
     else:
         names = []
-    return [n for n in names if not n.startswith("_")]
+    return names
 
 
 def test_every_public_definition_has_a_non_test_caller():
@@ -304,19 +326,13 @@ def test_every_public_definition_has_a_non_test_caller():
     so a caller anywhere keeps every definition of that name."""
     defs = {}  # "<module>.<name>" -> name
     callers = set()  # (module or None, owner, name)
-    pkg = os.path.join(ROOT, PACKAGE)
-    for dirpath, _, files in os.walk(pkg):
-        for f in files:
-            if not f.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, f)
-            module = os.path.relpath(path, pkg)[: -len(".py")].replace(os.sep, ".")
-            tree = ast.parse(open(path).read())
-            for node in tree.body:
-                for name in _public_definitions(node):
+    for module, tree in _package_trees():
+        for node in tree.body:
+            for name in _definitions(node):
+                if not name.startswith("_"):
                     defs[f"{module}.{name}"] = name
-            callers |= {(module, o, n) for o, n in _referenced_names(tree)}
-    for pattern in ("perfbench/*.py", "tools/*.py", "__spark_entry__.py"):
+        callers |= {(module, o, n) for o, n in _referenced_names(tree)}
+    for pattern in NON_TEST_CALLERS:
         for path in glob.glob(os.path.join(ROOT, pattern)):
             tree = ast.parse(open(path).read())
             callers |= {(None, o, n) for o, n in _referenced_names(tree)}
@@ -335,6 +351,29 @@ def test_every_public_definition_has_a_non_test_caller():
     assert uncalled <= pending, sorted(uncalled - pending)
     # a pending definition that gained a caller leaves the list
     assert not pending - uncalled, sorted(pending - uncalled)
+
+
+def test_every_private_definition_is_referred_to():
+    """Every module-level private function, class or constant
+    (``_name``, dunders aside) in the package is referred to somewhere
+    in the package other than its own definition. A helper whose last
+    caller was deleted fails here; tests do not keep one alive."""
+    defs = set()  # (module, name)
+    refs = set()  # (module, owner, name)
+    for module, tree in _package_trees():
+        for node in tree.body:
+            defs |= {
+                (module, n)
+                for n in _definitions(node)
+                if n.startswith("_") and not n.startswith("__")
+            }
+        refs |= {(module, o, n) for o, n in _referenced_names(tree)}
+    orphans = sorted(
+        f"{module}.{name}"
+        for module, name in defs
+        if not any(n == name and (m, o) != (module, name) for m, o, n in refs)
+    )
+    assert not orphans, orphans
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))

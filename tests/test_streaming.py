@@ -7,7 +7,6 @@ produce exactly the rows of its batch twin over the same parquet
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from museum_image_etl_gridfs_spark.catalog import load

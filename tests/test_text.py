@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import functions as F
-
 from museum_image_etl_gridfs_spark.functions import text as TX
 
 

@@ -14,7 +14,6 @@ import shutil
 import uuid
 from datetime import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 

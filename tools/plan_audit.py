@@ -52,12 +52,7 @@ EXPECTED_PYTHON = {
     "incremental_minhash_near_dups",  # same sketch, batch-vs-corpus mode
     "multimodal_transform",     # binary image codec
     "image_etl_gridfs",         # binary image codec
-    "audio_resample_plan",      # PCM codec
-    "video_frame_sample_plan",  # frame codec
     "eval_contamination",        # vectorized bigram shingling
-    # NOTE: heavy_hitter_tokens' CMS mapInPandas stage executes
-    # eagerly inside build() (sketch merge), so the RETURNED plan —
-    # the candidate recount — is Python-free and needs no entry here.
     "pareto_frontier_parts",     # SFS skyline kernel (numpy)
     "http_ingest_pipeline",      # batch-HTTP fetch stage (S2/U1, hermetic)
     "binary_fetch_pipeline",     # binary blob fetch stage (S3/F2, hermetic)
