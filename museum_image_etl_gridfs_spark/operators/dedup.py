@@ -463,7 +463,7 @@ def minhash_near_duplicates(
     # distinct texts — usually a small fraction of the fan-out. The
     # per-doc sig relation reads the checkpoint (never re-sketches);
     # it is broadcast when provably small (one cheap aggregate over the
-    # checkpoint blocks — the size_gated_broadcast pattern), else a
+    # checkpoint blocks), else a
     # shuffle join that still moves each signature once instead of
     # ``bands`` times. The estimate counts the ids' own bytes: string
     # and binary ids by their measured octet length, others by their

@@ -1,5 +1,7 @@
-"""Distributed exact global order statistics — ntile / row_number /
-running totals — without a global window.
+"""Distributed exact global order statistics — ``ntile_exact``,
+``global_row_number`` and ``running_totals`` — without a global window.
+There is no per-group variant: a ``PARTITION BY`` window is left to
+Spark's own window operator.
 
 A bare ``Window.orderBy`` (no partitionBy) moves every row into ONE
 task: the classic scale-killer (measured 12x superlinear at sf1 on
@@ -40,8 +42,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..partitioning import plan_size_bytes
 from .lifecycle import tracked_local_checkpoint
+
+#: range buckets per core: ``_with_range_pid`` cuts the lead key into
+#: ``max(defaultParallelism, 2) * _BUCKETS_PER_CORE`` count-balanced
+#: buckets.
+_BUCKETS_PER_CORE = 4
 
 
 def _monotone_double(df: DataFrame, key: str) -> Column | None:
@@ -66,9 +72,7 @@ def _monotone_double(df: DataFrame, key: str) -> Column | None:
     return None
 
 
-def _with_range_pid(
-    df: DataFrame, order_keys: Sequence[str], buckets_per_core: int
-) -> DataFrame | None:
+def _with_range_pid(df: DataFrame, order_keys: Sequence[str]) -> DataFrame | None:
     """Append a job-stable, count-balanced range id ``__pid``.
 
     ``__pid`` is weakly monotone w.r.t. the ``order_keys`` total order
@@ -98,7 +102,7 @@ def _with_range_pid(
     """
     lead = order_keys[0]
     spark = df.sparkSession
-    nb = max(spark.sparkContext.defaultParallelism, 2) * buckets_per_core
+    nb = max(spark.sparkContext.defaultParallelism, 2) * _BUCKETS_PER_CORE
     # The machinery reads its input 3-4x (probe, split points,
     # per-bucket partials, final join). A lazy checkpoint materializes
     # the upstream ONCE at the probe and pins its partitioning; without
@@ -232,7 +236,7 @@ def _with_range_pid(
         key2 = F.when(leadd == F.lit(h), branch_expr).otherwise(key2)
 
     # long, not int: pid is O(2*nb^2) with nb = defaultParallelism *
-    # buckets_per_core — int32 would silently wrap around nb ~ 33k
+    # _BUCKETS_PER_CORE — int32 would silently wrap around nb ~ 33k
     # (plausible at extreme cluster parallelism) and corrupt bucket
     # ordering in non-ANSI mode
     return df.withColumn(
@@ -266,10 +270,10 @@ def _offset_lookup(offsets: dict[int, object], dt) -> Column | None:
 
 
 def _global_positions(
-    df: DataFrame, order_keys: Sequence[str], buckets_per_core: int
+    df: DataFrame, order_keys: Sequence[str]
 ) -> tuple[DataFrame, int] | None:
     """(df + ``__gpos`` global 1-based row number, total row count)."""
-    t = _with_range_pid(df, order_keys, buckets_per_core)
+    t = _with_range_pid(df, order_keys)
     if t is None:
         return None
     spark = df.sparkSession
@@ -305,7 +309,6 @@ def global_row_number(
     order_keys: Sequence[str],
     *,
     out_col: str = "row_num",
-    buckets_per_core: int = 4,
 ) -> DataFrame:
     """Append ``out_col`` = ``row_number() OVER (ORDER BY order_keys)``
     with no single-task stage.
@@ -313,7 +316,7 @@ def global_row_number(
     The first key must be numeric and NON-NULL/NaN-free; the full key
     list must be a strict total order for deterministic numbering.
     """
-    got = _global_positions(df, order_keys, buckets_per_core)
+    got = _global_positions(df, order_keys)
     if got is None:
         return df.withColumn(out_col, F.lit(None).cast("long"))
     pos, _ = got
@@ -324,11 +327,8 @@ def running_totals(
     df: DataFrame,
     order_keys: Sequence[str],
     value_cols: Sequence[str],
-    *,
-    prefix: str = "cum_",
-    buckets_per_core: int = 4,
 ) -> DataFrame:
-    """Append ``prefix + c`` = running ``SUM(c) OVER (ORDER BY
+    """Append ``"cum_" + c`` = running ``SUM(c) OVER (ORDER BY
     order_keys ROWS UNBOUNDED PRECEDING)`` for each value column,
     distributively (the two-pass prefix-sum: per-bucket totals →
     broadcast exclusive offsets → within-bucket running window).
@@ -346,12 +346,12 @@ def running_totals(
         .agg(*[F.sum(c).alias(f"__off_{c}") for c in value_cols])
         .schema.fields
     }
-    t = _with_range_pid(df, order_keys, buckets_per_core)
+    t = _with_range_pid(df, order_keys)
     if t is None:
         out = df
         for c in value_cols:
             out = out.withColumn(
-                prefix + c, F.col(c).cast(sum_types[f"__off_{c}"])
+                "cum_" + c, F.col(c).cast(sum_types[f"__off_{c}"])
             )
         return out
     spark = df.sparkSession
@@ -415,7 +415,7 @@ def running_totals(
     for c in value_cols:
         dt = sum_types[f"__off_{c}"]
         out = out.withColumn(
-            prefix + c,
+            "cum_" + c,
             # the + may widen decimals one more digit; cast back to the
             # sum type (lossless — a prefix sum is bounded by the total)
             (
@@ -426,519 +426,12 @@ def running_totals(
     return out.drop("__pid", *[f"__off_{c}" for c in value_cols])
 
 
-def running_totals_grouped(
-    df: DataFrame,
-    group_keys: Sequence[str],
-    order_keys: Sequence[str],
-    value_cols: Sequence[str],
-    *,
-    prefix: str = "cum_",
-    buckets_per_core: int = 4,
-) -> DataFrame:
-    """Append ``prefix + c`` = running ``SUM(c) OVER (PARTITION BY
-    group_keys ORDER BY order_keys ROWS UNBOUNDED PRECEDING)`` for
-    each value column — the grouped sibling of :func:`running_totals`,
-    with the same pathology warning as :func:`grouped_rank_stats`: a
-    window partitioned by a low-cardinality group (source, shard,
-    tenant) pushes every row of the biggest group through ONE task.
-
-    Shape: range buckets over the ORDER keys, per-``(group, bucket)``
-    value sums, per-group EXCLUSIVE prefix offsets computed as a
-    window over the tiny O(groups × buckets) sums relation (never
-    collected — unlike the global variant's driver lookup), broadcast
-    back, then a within-``(group, bucket)`` running window.
-
-    Contracts shared with :func:`running_totals`: exact value types
-    (integral / DECIMAL) so bucket boundaries can't change the result;
-    NULL values refused loudly; ``order_keys`` must totally order rows
-    within each group for a deterministic running sum (ANSI's own
-    rule). The offsets relation must be broadcastable: group
-    cardinalities up to ~10⁵.
-    """
-    sum_types = {
-        f.name: f.dataType
-        for f in df.groupBy()
-        .agg(*[F.sum(c).alias(f"__off_{c}") for c in value_cols])
-        .schema.fields
-    }
-    t = _with_range_pid(df, order_keys, buckets_per_core)
-    if t is None:
-        out = df
-        for c in value_cols:
-            out = out.withColumn(
-                prefix + c, F.col(c).cast(sum_types[f"__off_{c}"])
-            )
-        return out
-    gks = list(group_keys)
-    # NULL guard: one tiny job over the (checkpointed) input — a NULL
-    # value would silently become a NULL running sum for every row of
-    # its bucket before the first non-NULL
-    nulls = t.groupBy().agg(
-        *[(F.count(F.lit(1)) - F.count(c)).alias(c) for c in value_cols]
-    ).first()
-    for c in value_cols:
-        if nulls[c]:
-            raise ValueError(
-                f"running_totals_grouped: NULL values in {c!r} are not "
-                "supported (running-sum carry would diverge from SQL "
-                "semantics)"
-            )
-    agg = t.groupBy(*gks, "__pid").agg(
-        *[F.sum(c).alias(f"__s_{c}") for c in value_cols]
-    )
-    wo = (
-        Window.partitionBy(*gks)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = agg.select(
-        *gks,
-        "__pid",
-        *[
-            F.coalesce(
-                F.sum(f"__s_{c}").over(wo),
-                F.lit(0).cast(sum_types[f"__off_{c}"]),
-            ).alias(f"__off_{c}")
-            for c in value_cols
-        ],
-    )
-    # eager checkpoint before the self-join — same constraint-
-    # inference lambda-capture hazard as _join_grouped_offsets
-    offs = tracked_local_checkpoint(offs, eager=True)
-    out = _nullsafe_offsets_join(t, offs, gks)
-    local = (
-        Window.partitionBy(*gks, "__pid")
-        .orderBy(*order_keys)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    for c in value_cols:
-        dt = sum_types[f"__off_{c}"]
-        out = out.withColumn(
-            prefix + c,
-            (F.sum(c).over(local) + F.col(f"__off_{c}")).cast(dt),
-        )
-    return out.drop("__pid", *[f"__off_{c}" for c in value_cols])
-
-
-def _nullsafe_offsets_join(
-    t: DataFrame, offs: DataFrame, gks: list[str]
-) -> DataFrame:
-    """Inner-join ``t`` onto the broadcast offsets relation on
-    ``(group keys, __pid)`` with NULL-SAFE equality on the group keys.
-
-    ANSI windows keep a NULL partition key as its own partition (and
-    the DuckDB oracles do too); a plain equality join here would
-    silently DROP every row whose group key is NULL — the one place
-    in the grouped machinery where NULL groups could vanish without a
-    trace (``_with_range_pid`` already raises loudly on NULL ORDER
-    keys). ``__pid`` itself is never NULL.
-
-    Mechanism: each group key is wrapped in a one-field struct on
-    both sides and the join stays a name-list USING join — struct
-    ``EqualTo`` compares fields null-safely (the classic null-safe
-    join idiom), and the name-list form keeps the plan in the shape
-    the eager offsets checkpoint already protects. An explicit
-    ``eqNullSafe`` join CONDITION was tried and rejected: under a
-    self-referencing compare (subtract against a same-lineage window)
-    Catalyst's attribute dedup re-binds the condition against the
-    deduplicated branch and dies with INTERNAL_ERROR_ATTRIBUTE_NOT_
-    FOUND — the same inference hazard documented at the checkpoint
-    site below.
-    """
-    jks = []
-    for i, g in enumerate(gks):
-        jk = f"__gjk_{i}"
-        wrapped = F.struct(F.col(g).alias("v")).alias(jk)
-        t = t.withColumn(jk, wrapped)
-        offs = offs.withColumn(jk, wrapped).drop(g)
-        jks.append(jk)
-    return t.join(F.broadcast(offs), [*jks, "__pid"]).drop(*jks)
-
-
-def _join_grouped_offsets(t: DataFrame, gks: list[str]) -> DataFrame:
-    """Join per-``(group, __pid)`` exclusive prefix counts back onto
-    ``t`` as ``__goff`` (rows of the group in earlier buckets) and
-    ``__gn`` (group total).
-
-    The counts relation has O(groups × buckets) rows; its prefix sums
-    are a WINDOW over the counts relation itself (each window
-    partition holds ≤ ``buckets`` rows — never a single-task stage
-    over data) and the result is broadcast to the join.
-    """
-    cnts = t.groupBy(*gks, "__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    wo = (
-        Window.partitionBy(*gks)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wg = Window.partitionBy(*gks)
-    offs = cnts.select(
-        *gks,
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(wo), F.lit(0)).alias("__goff"),
-        F.sum("__cnt").over(wg).alias("__gn"),
-    )
-    # EAGER checkpoint of the O(groups × buckets) offsets before the
-    # self-join: with both join branches sharing the __pid alias
-    # lineage, Catalyst's constraint inference pushes a filter into
-    # the deduplicated right branch whose HOF lambda still captures
-    # the LEFT side's attribute (unrewritten lambda body), and
-    # execution dies with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on some
-    # single-order-key inputs. An opaque (materialized) right side
-    # leaves the inference nothing to substitute into — and the tiny
-    # relation is computed once instead of per consumer.
-    offs = tracked_local_checkpoint(offs, eager=True)
-    return _nullsafe_offsets_join(t, offs, gks)
-
-
-def grouped_rank_stats(
-    df: DataFrame,
-    group_keys: Sequence[str],
-    order_keys: Sequence[str],
-    *,
-    row_number_col: str | None = None,
-    rank_col: str | None = None,
-    percent_rank_col: str | None = None,
-    cume_dist_col: str | None = None,
-    n_col: str | None = None,
-    ntile_k: int | None = None,
-    ntile_col: str = "bucket",
-    buckets_per_core: int = 4,
-) -> DataFrame:
-    """Append exact per-group rank statistics — any of ``row_number``
-    / ``rank`` / ``percent_rank`` / ``cume_dist`` / ``ntile(k)``
-    (``ntile_k`` buckets into ``ntile_col``) / group size —
-    equivalent to the ANSI windows
-
-        <fn>() OVER (PARTITION BY group_keys ORDER BY order_keys)
-
-    with NO per-group global sort. Same pathology and same cure as
-    :func:`ntile_exact_grouped`: a window partitioned by a
-    low-cardinality group (language, market segment, tenant) funnels
-    every row of the biggest group through ONE task; here the rows
-    keep their count-balanced range bucket (``__pid`` from
-    :func:`_with_range_pid`) and only per-``(group, bucket)`` offsets
-    travel (O(groups × buckets), broadcast — see
-    :func:`_join_grouped_offsets`).
-
-    Exact ANSI tie semantics: ``__pid`` is a pure weakly-monotone
-    function of the order-key VALUES (hot-value sub-bucketing splits
-    only by the SECOND key, and only when the lead value is unique in
-    double space — ``_with_range_pid``), so rows tied on the full
-    ``order_keys`` list always share one ``__pid`` and tie handling
-    is local to the within-bucket window:
-
-    - ``rank``       = ``__goff + rank() OVER (group, pid ORDER BY keys)``
-      (1 + rows strictly below — ANSI RANK);
-    - ``percent_rank`` = ``(rank − 1) / (n − 1)`` (0.0 for n = 1) —
-      exact integers into one IEEE division, bit-identical across
-      engines;
-    - ``cume_dist``  = ``(rank − 1 + ties) / n`` where ``ties`` is the
-      tie-group size (a count over the unordered window partitioned by
-      ``(group, pid, *order_keys)`` — rows ≤ current value);
-    - ``row_number`` = ``__goff + row_number()`` — deterministic only
-      when ``order_keys`` is a strict total order (caller's contract,
-      as in ANSI).
-
-    Contract: offsets relation O(groups × buckets) and broadcast —
-    group cardinalities up to ~10⁵, not per-user grouping. Order-key
-    rules are :func:`ntile_exact`'s: numeric non-NULL lead key.
-    """
-    outs = {
-        c: None
-        for c in (
-            row_number_col, rank_col, percent_rank_col, cume_dist_col, n_col
-        )
-        if c is not None
-    }
-    if ntile_k is not None:
-        outs[ntile_col] = None
-    if not outs:
-        raise ValueError("grouped_rank_stats: no output column requested")
-    t = _with_range_pid(df, order_keys, buckets_per_core)
-    if t is None:
-        out = df
-        for c in outs:
-            if c in (percent_rank_col, cume_dist_col):
-                dt = "double"
-            elif ntile_k is not None and c == ntile_col:
-                dt = "int"
-            else:
-                dt = "bigint"
-            out = out.withColumn(c, F.lit(None).cast(dt))
-        return out
-    gks = list(group_keys)
-    t = _join_grouped_offsets(t, gks)
-    local = Window.partitionBy(*gks, "__pid").orderBy(*order_keys)
-    gn = F.col("__gn")
-    rk = (F.col("__goff") + F.rank().over(local)).cast("bigint")
-    if row_number_col:
-        t = t.withColumn(
-            row_number_col,
-            (F.col("__goff") + F.row_number().over(local)).cast("bigint"),
-        )
-    if rank_col:
-        t = t.withColumn(rank_col, rk)
-    if percent_rank_col:
-        t = t.withColumn(
-            percent_rank_col,
-            F.when(gn == 1, F.lit(0.0)).otherwise(
-                (rk - F.lit(1)).cast("double") / (gn - F.lit(1)).cast("double")
-            ),
-        )
-    if cume_dist_col:
-        ties = F.count(F.lit(1)).over(
-            Window.partitionBy(*gks, "__pid", *order_keys)
-        )
-        t = t.withColumn(
-            cume_dist_col,
-            (rk - F.lit(1) + ties).cast("double") / gn.cast("double"),
-        )
-    if n_col:
-        t = t.withColumn(n_col, gn.cast("bigint"))
-    if ntile_k is not None:
-        # ANSI ntile arithmetic over the exact per-group row number
-        # (first n % k buckets get ceil(n/k) rows) — same expression
-        # as ntile_exact_grouped, reusing this call's gpos
-        gpos = F.col("__goff") + F.row_number().over(local)
-        base = F.floor(gn / ntile_k)
-        rem = gn % ntile_k
-        cut = rem * (base + 1)
-        bucket = F.when(gpos <= cut, (gpos - 1) / (base + 1)).otherwise(
-            rem + (gpos - cut - 1) / F.greatest(base, F.lit(1))
-        )
-        t = t.withColumn(ntile_col, (F.floor(bucket) + 1).cast("int"))
-    return t.drop("__pid", "__goff", "__gn")
-
-
-#: input-size ceiling (bytes, Catalyst optimized-plan estimate) under
-#: which :func:`grouped_percentiles_auto` uses Spark's own Percentile
-#: aggregate. Measured at sf1 (60M lineitem rows): the buffer path
-#: runs the whole MAD query in ~6 s where the rank machinery takes
-#: 17 s (median) + 71 s (MAD) — the machinery pays an input
-#: checkpoint + probe + counts + full within-bucket sort, while
-#: Percentile's buffer is an OpenHashMap of value→count (O(distinct
-#: values) per group, NOT O(rows) — tiny for integral domains like
-#: quantities). The machinery is the escape hatch for CONTINUOUS
-#: value domains at corpus scale, where that map degenerates to
-#: O(rows)/group.
-PCTL_BUFFER_MAX_BYTES = 4 << 30
-
-
-def grouped_percentiles_auto(
-    df: DataFrame,
-    group_keys: Sequence[str],
-    value_col: str,
-    ps: Sequence[float],
-    *,
-    out_cols: Sequence[str],
-    buckets_per_core: int = 4,
-) -> DataFrame:
-    """Exact grouped percentiles with a SCALE-ADAPTIVE plan: below the
-    input-size gate, one ``F.percentile`` aggregate (single pass,
-    per-group value-count map — the measured-fastest exact form at
-    every SF the driver benches, see ``PCTL_BUFFER_MAX_BYTES``); above
-    it, :func:`grouped_exact_percentiles` (bounded per-task state, no
-    value buffers). Both paths are bit-identical —
-    ``grouped_exact_percentiles`` reproduces Percentile's
-    interpolation arithmetic term for term, pinned against
-    ``F.percentile`` itself in tests/test_quantiles.py — so the gate
-    can never move a query's oracle hash.
-
-    NULL values are skipped on both sides (a group with no non-NULL
-    value gets NULL percentiles); a NaN value fails the query on both
-    sides with the same message — NaN has no order the engines agree
-    on.
-    """
-    if len(ps) != len(out_cols) or not ps:
-        raise ValueError(
-            "grouped_percentiles_auto: |ps| must equal |out_cols| >= 1"
-        )
-    est = plan_size_bytes(df)
-    if isinstance(df.schema[value_col].dataType, (T.FloatType, T.DoubleType)):
-        v = F.col(value_col)
-        nan_msg = f"NaN in value column {value_col!r}: it has no agreed order"
-        df = df.withColumn(
-            value_col,
-            F.when(F.isnan(v), F.raise_error(F.lit(nan_msg))).otherwise(v),
-        )
-    if est is not None and est <= PCTL_BUFFER_MAX_BYTES:
-        return df.groupBy(*group_keys).agg(
-            *[
-                F.percentile(value_col, F.lit(float(p))).alias(o)
-                for p, o in zip(ps, out_cols)
-            ]
-        )
-    out = grouped_exact_percentiles(
-        df.filter(F.col(value_col).isNotNull()),
-        group_keys,
-        value_col,
-        ps,
-        out_cols=out_cols,
-        buckets_per_core=buckets_per_core,
-    )
-    if not group_keys:
-        return out
-    all_null = (
-        df.groupBy(*group_keys)
-        .agg(F.count(value_col).alias("__nv"))
-        .filter(F.col("__nv") == 0)
-        .select(
-            *group_keys, *[F.lit(None).cast("double").alias(o) for o in out_cols]
-        )
-    )
-    return out.unionByName(all_null)
-
-
-def grouped_exact_percentiles(
-    df: DataFrame,
-    group_keys: Sequence[str],
-    value_col: str,
-    ps: Sequence[float],
-    *,
-    out_cols: Sequence[str],
-    buckets_per_core: int = 4,
-) -> DataFrame:
-    """One row per group: ``out_cols[i]`` = exact
-    ``percentile(value_col, ps[i])`` — WITHOUT per-group value
-    buffers.
-
-    Spark's exact ``Percentile`` aggregate buffers EVERY value of a
-    group in one ObjectHashAggregate buffer; partitioned by a
-    low-cardinality key (return flag, language) that is an unbounded
-    single-buffer sort at corpus scale — the same pathology
-    :func:`ntile_exact_grouped` removes for window ntile. Here the
-    percentile is reproduced from exact order statistics instead:
-
-    1. per-group global row numbers + group sizes from
-       :func:`grouped_rank_stats` (count-balanced range buckets over
-       the VALUE, per-(group, bucket) offsets — every stage n/p per
-       task, state bounded by bucket size);
-    2. for each requested ``p``, only the one or two rows at the
-       interpolation ranks ``floor/ceil(p·(n−1))`` survive a filter;
-    3. a final tiny per-group aggregate (O(groups × |ps|) rows) picks
-       the boundary values and interpolates.
-
-    The interpolation reproduces ``Percentile.getPercentile``'s
-    arithmetic term for term — ``(higher − pos)·v_lo + (pos −
-    lower)·v_hi`` on doubles (NOT the algebraically equal ``v_lo +
-    (v_hi − v_lo)·frac``, which differs in the last ulp) — pinned by
-    ``tests/test_quantiles.py`` against ``F.percentile`` itself, so
-    swapping a query onto this operator cannot move its oracle hash.
-
-    Contracts: ``value_col`` numeric and NULL/NaN-free (Percentile
-    skips NULLs; this operator refuses them loudly via the range-id
-    probe, same as every operator in this module), group keys
-    NULL-safe (rank machinery handles NULL groups), ties in the value
-    are interchangeable at equal rank (equal values — interpolation
-    result identical regardless of which tied row takes which rank).
-    """
-    if len(ps) != len(out_cols) or not ps:
-        raise ValueError("grouped_exact_percentiles: |ps| must equal |out_cols| >= 1")
-    for p in ps:
-        if not 0.0 <= p <= 1.0:
-            raise ValueError(f"percentile {p} outside [0, 1]")
-    gks = list(group_keys)
-    t = grouped_rank_stats(
-        df.select(*gks, value_col),
-        gks,
-        [value_col],
-        row_number_col="__rn",
-        n_col="__n",
-        buckets_per_core=buckets_per_core,
-    )
-    # 0-based rank + the interpolation positions for every p; a row
-    # survives iff it sits AT some p's floor or ceil rank. All pure
-    # row-local arithmetic on (__rn, __n) — no extra shuffle before
-    # the final tiny aggregate.
-    i0 = (F.col("__rn") - 1).cast("double")
-    keep = F.lit(False)
-    for p in ps:
-        pos = F.lit(float(p)) * (F.col("__n") - 1).cast("double")
-        keep = keep | (i0 == F.floor(pos)) | (i0 == F.ceil(pos))
-    picked = t.filter(keep).select(
-        *gks,
-        i0.alias("__i"),
-        F.col("__n").alias("__gn2"),
-        F.col(value_col).cast("double").alias("__v"),
-    )
-    aggs = []
-    for p, out in zip(ps, out_cols):
-        pos = F.lit(float(p)) * (F.col("__gn2") - 1).cast("double")
-        v_lo = F.max(F.when(F.col("__i") == F.floor(pos), F.col("__v")))
-        v_hi = F.max(F.when(F.col("__i") == F.ceil(pos), F.col("__v")))
-        pos0 = F.lit(float(p)) * (F.max("__gn2") - 1).cast("double")
-        aggs.append(
-            F.when(F.ceil(pos0) == F.floor(pos0), v_lo)
-            .otherwise(
-                (F.ceil(pos0) - pos0) * v_lo + (pos0 - F.floor(pos0)) * v_hi
-            )
-            .alias(out)
-        )
-    return picked.groupBy(*gks).agg(*aggs)
-
-
-def ntile_exact_grouped(
-    df: DataFrame,
-    group_keys: Sequence[str],
-    order_keys: Sequence[str],
-    k: int,
-    *,
-    out_col: str = "bucket",
-    buckets_per_core: int = 4,
-) -> DataFrame:
-    """Append ``out_col`` = exact ``ntile(k) OVER (PARTITION BY
-    group_keys ORDER BY order_keys)`` with no per-group global sort.
-
-    ``ntile`` partitioned by a low-cardinality group (language,
-    source, tenant) is the classic hidden scale-killer: every row of
-    a group flows through ONE window task, so the biggest language of
-    a 100 TB corpus becomes a single-task sort. This operator reuses
-    the global range-id machinery — count-balanced ``__pid`` buckets
-    over the ORDER keys — and layers the grouping on top:
-
-    1. ``__pid`` from :func:`_with_range_pid` (group-agnostic — the
-       buckets balance the overall order-key distribution; any one
-       group's rows within a bucket are bounded by the bucket size);
-    2. per ``(group, __pid)`` counts → per-group exclusive prefix
-       sums + totals, computed as a WINDOW over the counts relation
-       itself (O(groups × buckets) rows — never collected, never a
-       single-task stage over data);
-    3. broadcast-join the offsets back, within-``(group, __pid)``
-       ``row_number`` → exact per-group rank → ANSI ntile arithmetic
-       (first ``n % k`` buckets get ``⌈n/k⌉`` rows) as columns.
-
-    Contract: the offsets relation has ``groups × buckets`` rows and
-    is broadcast — intended for group cardinalities up to ~10⁵
-    (languages, sources), not per-user grouping. Order-key rules are
-    :func:`ntile_exact`'s: numeric non-NULL lead key, strict total
-    order over the full key list.
-    """
-    t = _with_range_pid(df, order_keys, buckets_per_core)
-    if t is None:
-        return df.withColumn(out_col, F.lit(None).cast("int"))
-    gks = list(group_keys)
-    t = _join_grouped_offsets(t, gks)
-    local = Window.partitionBy(*gks, "__pid").orderBy(*order_keys)
-    gpos = F.col("__goff") + F.row_number().over(local)
-    base = F.floor(F.col("__gn") / k)
-    rem = F.col("__gn") % k
-    cut = rem * (base + 1)
-    bucket = F.when(gpos <= cut, (gpos - 1) / (base + 1)).otherwise(
-        rem + (gpos - cut - 1) / F.greatest(base, F.lit(1))
-    )
-    return t.withColumn(out_col, (F.floor(bucket) + 1).cast("int")).drop(
-        "__pid", "__goff", "__gn"
-    )
-
-
 def ntile_exact(
     df: DataFrame,
     order_keys: Sequence[str],
     k: int,
     *,
     out_col: str = "bucket",
-    buckets_per_core: int = 4,
 ) -> DataFrame:
     """Append ``out_col`` = exact ``ntile(k)`` over the total order
     ``order_keys`` (the first key must be numeric and NON-NULL —
@@ -951,7 +444,7 @@ def ntile_exact(
     against DuckDB in the decile queries — but with no single-task
     stage.
     """
-    got = _global_positions(df, order_keys, buckets_per_core)
+    got = _global_positions(df, order_keys)
     if got is None:
         return df.withColumn(out_col, F.lit(None).cast("int"))
     pos, n = got

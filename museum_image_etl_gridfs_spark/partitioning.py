@@ -63,36 +63,3 @@ def plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-#: default row ceiling for :func:`size_gated_broadcast` — ~2M small
-#: rows (a (term, count) pair is tens of bytes) keeps the broadcast
-#: well under typical executor budgets while covering every real
-#: fixture/SF vocabulary.
-BROADCAST_MAX_ROWS = 2_000_000
-
-
-def size_gated_broadcast(
-    df: DataFrame, *, max_rows: int = BROADCAST_MAX_ROWS
-) -> DataFrame:
-    """Broadcast ``df`` only when it is PROVABLY small.
-
-    An unconditional ``F.broadcast(vocab)`` is the mirror-image scale
-    bug to an unconditional ``repartition``: a corpus-derived
-    dimension (vocabulary counts, per-entity aggregates) is tiny at
-    fixture scale but can reach billions of rows at 100 TB, where the
-    hint OOMs the driver/executors. This helper materializes ``df``
-    once behind a tracked local checkpoint, counts it (an O(1)-result
-    job over the checkpoint), and attaches the broadcast hint only
-    under ``max_rows``; above, it returns the checkpointed relation
-    unhinted so Catalyst plans a shuffle join on the key.
-
-    The checkpoint does double duty: the gating count never re-runs
-    the upstream aggregation, and every downstream consumer (the join
-    AND any derived total) reads the materialized relation. Release
-    via ``lifecycle.release_checkpoints`` after the caller's results
-    are materialized, as usual.
-    """
-    from .operators.lifecycle import tracked_local_checkpoint
-
-    df = tracked_local_checkpoint(df)
-    n = df.count()
-    return F.broadcast(df) if n <= max_rows else df

@@ -4,10 +4,10 @@ the earlier families, each with an exact DuckDB oracle.
 - geometry: distributed SFS skyline
 - graph: iterative PageRank
 - temporal: argmin/argmax OHLC (batch + streaming)
-- engine surfaces, driver-verified: percent_rank/cume_dist/nth_value,
-  foreachBatch MERGE sink round-trip, the format("museum_api") Python
-  DataSource and the batch-HTTP/binary fetch pipelines on their
-  hermetic transports, stream-stream LEFT OUTER interval join
+- engine surfaces, driver-verified: foreachBatch MERGE sink
+  round-trip, the format("museum_api") Python DataSource and the
+  batch-HTTP/binary fetch pipelines on their hermetic transports,
+  stream-stream LEFT OUTER interval join
 
 The reference (a 501-LoC pymongo ETL) has none of these; they
 complete the large-scale training-data/analytics surface the task
@@ -169,7 +169,7 @@ def brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     case — the same pairs the join built, without the shuffle. The
     graph is symmetric so there are no dangling nodes. Scores are
     rounded to 9 decimals for cross-engine float-sum-order
-    independence (same route as unigram_lm_scores).
+    independence.
     """
     li = load(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     brands = load(spark, "part", sf_dir).select("p_partkey", "p_brand")
@@ -303,82 +303,6 @@ def _scratch_dir(family: str, sf_dir: str) -> str:
     )
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     return out
-
-
-@query(
-    "acctbal_distribution_ranks",
-    oracle="""
-    WITH ranked AS (
-        SELECT c_custkey, c_mktsegment, c_acctbal,
-               percent_rank() OVER w AS pr,
-               cume_dist() OVER w AS cd,
-               nth_value(c_name, 3) OVER (
-                   PARTITION BY c_mktsegment
-                   ORDER BY c_acctbal DESC, c_custkey
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
-               ) AS third_richest
-        FROM customer
-        WINDOW w AS (PARTITION BY c_mktsegment
-                     ORDER BY c_acctbal DESC, c_custkey)
-    )
-    SELECT c_custkey, c_mktsegment, c_acctbal, pr, cd, third_richest
-    FROM ranked
-    WHERE c_custkey % 50 = 0
-    """,
-    tags=("window", "percent_rank", "cume_dist", "nth_value"),
-)
-def acctbal_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.5 window-function completion: percent_rank, cume_dist, and
-    nth_value over a deterministic (balance DESC, key) ordering.
-    Both are exact rationals of integer rank/count — one IEEE
-    division each, bit-identical across engines. The full-frame
-    nth_value pins frame semantics beyond the default
-    running frame. Output restricted to every 50th customer to keep
-    the hashed result bounded while ranks still come from the FULL
-    segment windows.
-
-    Scale shape (VERDICT r9 #1): NO per-segment window — 5
-    mktsegments would put 20% of all customers through one sort task
-    at any scale. :func:`~..operators.quantiles.grouped_rank_stats`
-    over the ascending total order ``(-c_acctbal, c_custkey)`` yields
-    the exact per-segment row number (== ANSI rank here — the order
-    is a strict total order), so ``pr = (rn−1)/(n−1)`` and
-    ``cd = rn/n`` exactly as the window oracle computes them;
-    ``nth_value(c_name, 3)`` over the unbounded frame is just the
-    row with rn = 3, an O(segments) relation broadcast back.
-    """
-    from ..operators.quantiles import grouped_rank_stats
-
-    c = load(spark, "customer", sf_dir).withColumn(
-        "__negbal", -F.col("c_acctbal")
-    )
-    ranked = grouped_rank_stats(
-        c,
-        ["c_mktsegment"],
-        ["__negbal", "c_custkey"],
-        row_number_col="__rn",
-        n_col="__n",
-    )
-    third = F.broadcast(
-        ranked.filter(F.col("__rn") == 3).select(
-            "c_mktsegment", F.col("c_name").alias("third_richest")
-        )
-    )
-    rn, n = F.col("__rn"), F.col("__n")
-    return (
-        ranked.filter(F.col("c_custkey") % 50 == 0)
-        .join(third, "c_mktsegment", "left")
-        .select(
-            "c_custkey",
-            "c_mktsegment",
-            "c_acctbal",
-            F.when(n == 1, F.lit(0.0))
-            .otherwise((rn - 1).cast("double") / (n - 1).cast("double"))
-            .alias("pr"),
-            (rn.cast("double") / n.cast("double")).alias("cd"),
-            "third_richest",
-        )
-    )
 
 
 @query(

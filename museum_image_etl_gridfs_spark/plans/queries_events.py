@@ -212,8 +212,6 @@ def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     match bit-for-bit."""
     import uuid
 
-    from pyspark.sql import functions as F
-
     from ..streaming import events_stream, run_to_memory
 
     ev = events_stream(spark, sf_dir)

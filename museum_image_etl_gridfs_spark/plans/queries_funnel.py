@@ -1,7 +1,8 @@
-"""Event-sequence analytics + inverted-index build.
+"""Event-sequence analytics, inverted-index build and weighted sampling.
 
-The ordered-funnel product-analytics shape over ``events`` and a two-pass
-inverted-index build over ``documents`` — the aggregation patterns a
+The ordered-funnel product-analytics shape over ``events``, a two-pass
+inverted-index build and a deterministic weighted sample over
+``documents`` — the aggregation patterns a
 training-data / analytics user runs daily that the reference's
 row-at-a-time loops could only express by materializing everything
 client-side (cf. /root/reference/src/transform_load.py's full-table
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import quality as Q
-from ..partitioning import size_gated_broadcast, spread
+from ..partitioning import spread
 from .registry import query
 
 #: lowercased whitespace word array (canonical mirror of
@@ -144,67 +145,6 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ",",
             ).alias("postings")
         )
-    )
-
-
-@query(
-    "unigram_lm_scores",
-    oracle=f"""
-    WITH t AS (
-        SELECT doc_id, unnest(w) AS term
-        FROM (SELECT doc_id, {_SQL_WORDS_LOWER} AS w FROM documents)),
-    cnt AS (SELECT term, count(*) AS c FROM t GROUP BY term),
-    tot AS (SELECT sum(c) AS n FROM cnt),
-    sc AS (
-        SELECT t.doc_id, count(*) AS nw,
-               sum(CAST(round(ln(cnt.c / tot.n), 8) AS DECIMAL(20,8))) AS s
-        FROM t JOIN cnt USING (term) CROSS JOIN tot
-        GROUP BY t.doc_id)
-    SELECT doc_id, CAST(nw AS BIGINT) AS n_words,
-           round(-CAST(s AS DOUBLE) / nw, 4) AS avg_nll
-    FROM sc
-    """,
-    tags=("text", "quality", "extension"),
-)
-def unigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-unigram language-model score per document (CCNet-style
-    LM quality filtering, with the corpus itself as the model): each
-    doc's average negative log-likelihood under MLE unigram
-    probabilities. Degenerate/repetitive docs score low, rare-word
-    soup scores high — both tails are filter candidates.
-
-    Determinism across engines AND partitionings: each token's log
-    probability is rounded to 8 decimals then summed as DECIMAL, so
-    the per-doc sum is exact and independent of aggregation order
-    (the float-sum trick from NOTES.md applied to log space).
-
-    Scale shape: the vocabulary join is SIZE-GATED — broadcast while
-    the measured vocab row count fits (the fixture/low-SF regime, no
-    corpus shuffle), shuffle join on ``term`` above the threshold (a
-    web-scale vocabulary is corpus-sized, not dimension-sized); the
-    1-row total is always broadcast. The per-doc groupBy moves only
-    map-side partial rows (one per doc per partition).
-    """
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    t = docs.select(
-        "doc_id",
-        F.explode_outer(Q.words(F.lower(F.col("text")))).alias("term"),
-    ).filter(F.col("term").isNotNull())
-    cnt = size_gated_broadcast(
-        t.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-    )
-    tot = cnt.groupBy().agg(F.sum("c").alias("n"))
-    logp = F.round(F.log(F.col("c") / F.col("n")), 8).cast("decimal(20,8)")
-    sc = (
-        t.join(cnt, "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("nw"), F.sum(logp).alias("s"))
-    )
-    return sc.select(
-        "doc_id",
-        F.col("nw").alias("n_words"),
-        F.round(-F.col("s").cast("double") / F.col("nw"), 4).alias("avg_nll"),
     )
 
 

@@ -1,6 +1,6 @@
-"""OLAP shapes over the TPC-H-ish fixtures: upsert markers, per-group
-rank boards and top-k arrays, and the brand co-occurrence edge source
-shared with ``queries_stats``. No UDFs; exact DuckDB oracles.
+"""OLAP shapes over the TPC-H-ish fixtures: upsert markers, per-nation
+top-k arrays, and the brand co-occurrence edge source shared with
+``queries_stats``. No UDFs; exact DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -48,69 +48,6 @@ def upsert_transform_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merged = merge_upsert(target, updates, ["o_orderkey"])
     return merged.select("o_orderkey", "marker", "o_custkey")
-
-
-@query(
-    "supplier_rank_board",
-    oracle="""
-    SELECT s_nationkey, s_suppkey, s_acctbal,
-           CAST(RANK()         OVER w AS BIGINT) AS rnk,
-           CAST(DENSE_RANK()   OVER w AS BIGINT) AS drnk,
-           CAST(NTILE(4)       OVER w AS BIGINT) AS quartile,
-           round(PERCENT_RANK() OVER w, 6)       AS pct_rank,
-           FIRST_VALUE(s_suppkey) OVER w         AS best_supp
-    FROM supplier
-    WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey)
-    """,
-    tags=("window", "ranking"),
-)
-def supplier_rank_board(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking-window breadth in one pass: rank / dense_rank / ntile
-    / percent_rank / first_value over one window spec.
-
-    Scale shape (VERDICT r9 #1 follow-through): the 25-nation window
-    would put 4% of all suppliers through one sort task at any scale;
-    :func:`~..operators.quantiles.grouped_rank_stats` computes the
-    exact per-nation row number + ntile from count-balanced range
-    buckets instead. The ORDER BY is a strict total order (suppkey
-    tiebreak), so rank == dense_rank == row_number and percent_rank
-    is the exact ``(rn−1)/(n−1)``; first_value is the rn = 1 row,
-    an O(nations) relation broadcast back."""
-    from ..operators.quantiles import grouped_rank_stats
-
-    s = load(spark, "supplier", sf_dir).withColumn(
-        "__negbal", -F.col("s_acctbal")
-    )
-    ranked = grouped_rank_stats(
-        s,
-        ["s_nationkey"],
-        ["__negbal", "s_suppkey"],
-        row_number_col="__rn",
-        n_col="__n",
-        ntile_k=4,
-        ntile_col="__q",
-    )
-    best = F.broadcast(
-        ranked.filter(F.col("__rn") == 1).select(
-            "s_nationkey", F.col("s_suppkey").alias("best_supp")
-        )
-    )
-    rn, n = F.col("__rn"), F.col("__n")
-    return ranked.join(best, "s_nationkey").select(
-        "s_nationkey",
-        "s_suppkey",
-        "s_acctbal",
-        rn.cast("long").alias("rnk"),
-        rn.cast("long").alias("drnk"),
-        F.col("__q").cast("long").alias("quartile"),
-        F.round(
-            F.when(n == 1, F.lit(0.0)).otherwise(
-                (rn - 1).cast("double") / (n - 1).cast("double")
-            ),
-            6,
-        ).alias("pct_rank"),
-        "best_supp",
-    )
 
 
 @query(

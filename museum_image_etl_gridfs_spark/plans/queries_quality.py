@@ -1,5 +1,5 @@
 """Data-curation queries: quality filters, PII redaction, benchmark
-contamination, reproducible sampling, token-budget packing, TF-IDF.
+contamination, reproducible sampling, TF-IDF, n-gram statistics.
 
 The curation stages of a training-data pipeline (C4 / Gopher /
 RefinedWeb lineage), each expressed as pure declarative DataFrame
@@ -11,8 +11,6 @@ Scale notes (100 TB):
   no shuffle) except where stated;
 - contamination joins the corpus against a SMALL eval-shingle set ->
   explicit ``broadcast()``, no shuffle of the corpus;
-- packing windows partition by ``source`` so state per window task is
-  one shard, not the corpus;
 - TF-IDF's doc-frequency join is the one genuinely shuffling stage;
   it shuffles (term) pairs once, with map-side partial aggregation.
 """
@@ -24,8 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions import quality as Q
-from ..operators.quantiles import ntile_exact_grouped
-from ..partitioning import size_gated_broadcast, spread
+from ..partitioning import spread
 from .registry import query
 
 # ---------------------------------------------------------------- SQL mirrors
@@ -391,67 +388,6 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PACK_BUDGET = 512
-
-
-@query(
-    "token_budget_packing",
-    oracle=f"""
-    WITH t AS (
-        SELECT source, doc_id,
-               CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-                    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END
-                   AS n_tokens
-        FROM documents),
-    o AS (
-        SELECT source, doc_id, n_tokens,
-               sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                                   ROWS UNBOUNDED PRECEDING) - n_tokens
-                   AS start_off
-        FROM t)
-    SELECT source, CAST(start_off // {_PACK_BUDGET} AS INTEGER) AS bin_id,
-           CAST(count(*) AS INTEGER) AS n_docs,
-           CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-    FROM o GROUP BY 1, 2
-    """,
-    tags=("packing", "extension"),
-)
-def token_budget_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing for training: documents are packed, in stable
-    doc_id order, into ~512-token bins per source shard (each doc's
-    bin is its running-start-offset // budget — contiguous greedy
-    packing, the standard pretraining batching step).
-
-    Scale shape (r10): a window partitioned by ``source`` would push
-    every row of the biggest source through ONE running-sum task —
-    the same low-cardinality-group pathology the r9/r10 rank rewrites
-    killed. :func:`~..operators.quantiles.running_totals_grouped`
-    computes the identical per-source running sum from count-balanced
-    doc_id range buckets + O(sources × buckets) broadcast offsets; no
-    global sort, no driver state, no single-task stage. Per-shard
-    deterministic pack order (doc_id) is what real pipelines (and
-    this oracle) pin down.
-    """
-    from ..functions.text import token_count
-    from ..operators.quantiles import running_totals_grouped
-
-    docs = load(spark, "documents", sf_dir)
-    t = docs.select("source", "doc_id", token_count("text").alias("n_tokens"))
-    o = running_totals_grouped(
-        t, ["source"], ["doc_id"], ["n_tokens"], prefix="__cum_"
-    ).withColumn("start_off", F.col("__cum_n_tokens") - F.col("n_tokens"))
-    return (
-        o.groupBy(
-            "source",
-            F.floor(F.col("start_off") / _PACK_BUDGET).cast("int").alias("bin_id"),
-        )
-        .agg(
-            F.count("*").cast("int").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("total_tokens"),
-        )
-    )
-
-
 @query(
     "tfidf_top_terms",
     oracle=f"""
@@ -710,139 +646,6 @@ def unigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
         F.coalesce("entropy", F.lit(0.0)).alias("entropy"),
-    )
-
-
-@query(
-    "length_outliers_by_lang",
-    oracle="""
-    SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars,
-           round(percent_rank() OVER (PARTITION BY lang ORDER BY n_chars), 4)
-               AS len_pr,
-           (percent_rank() OVER (PARTITION BY lang ORDER BY n_chars)
-               BETWEEN 0.02 AND 0.98) AS keep
-    FROM documents
-    """,
-    tags=("text", "quality", "window", "extension"),
-)
-def length_outliers_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language length-outlier trim: drop documents whose length
-    falls in the bottom/top 2% WITHIN their language — length filters
-    must be per-language because char/token statistics differ across
-    languages (the C4/mC4 practice).
-
-    Scale shape (VERDICT r9 #1): NO per-language window — the
-    dominant language of a 100 TB corpus would funnel through one
-    sort task. :func:`~..operators.quantiles.grouped_rank_stats`
-    computes the exact ANSI ``percent_rank() OVER (PARTITION BY lang
-    ORDER BY n_chars)`` from count-balanced range buckets +
-    O(langs × buckets) broadcast offsets, with tie semantics local to
-    each bucket (equal n_chars always share a bucket). Bit-identical
-    to the window oracle: exact integer rank/count into one IEEE
-    division."""
-    from ..operators.quantiles import grouped_rank_stats
-
-    docs = load(spark, "documents", sf_dir).select("doc_id", "lang", "n_chars")
-    ranked = grouped_rank_stats(
-        docs, ["lang"], ["n_chars"], percent_rank_col="__pr"
-    )
-    pr = F.col("__pr")
-    return ranked.select(
-        "doc_id", "lang", "n_chars",
-        F.round(pr, 4).alias("len_pr"),
-        ((pr >= 0.02) & (pr <= 0.98)).alias("keep"),
-    )
-
-
-@query(
-    "ccnet_perplexity_buckets",
-    oracle=f"""
-    WITH t AS (
-        SELECT doc_id, lang, unnest(w) AS term
-        FROM (SELECT doc_id, lang, {_SQL_WORDS_LOWER} AS w FROM documents)),
-    cnt AS (SELECT term, count(*) AS c FROM t GROUP BY term),
-    tot AS (SELECT sum(c) AS n FROM cnt),
-    sc AS (
-        SELECT t.doc_id, t.lang, count(*) AS nw,
-               sum(CAST(round(ln(cnt.c / tot.n), 8) AS DECIMAL(20,8))) AS s
-        FROM t JOIN cnt USING (term) CROSS JOIN tot
-        GROUP BY t.doc_id, t.lang),
-    scored AS (
-        SELECT doc_id, lang,
-               round(-CAST(s AS DOUBLE) / nw, 4) AS avg_nll
-        FROM sc),
-    b AS (
-        SELECT doc_id, lang, avg_nll,
-               ntile(3) OVER (PARTITION BY lang
-                              ORDER BY avg_nll, doc_id) AS nt
-        FROM scored)
-    SELECT doc_id, lang, avg_nll,
-           CASE nt WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
-                   ELSE 'tail' END AS bucket,
-           (nt < 3) AS keep
-    FROM b
-    """,
-    tags=("quality", "perplexity", "ccnet", "extension"),
-)
-def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet-style perplexity bucketing (Wenzek et al., LREC'20 —
-    public method): score every document under a language model (here
-    the corpus-unigram LM, the same exactness route as
-    ``unigram_lm_scores``: per-token log-prob rounded to 8 decimals
-    then DECIMAL-summed, order/partitioning-independent), split each
-    language into head/middle/tail perplexity terciles, keep
-    head+middle — CCNet's published recipe for web-corpus quality
-    stratification.
-
-    Tercile assignment is exact ``ntile(3)`` semantics over
-    (avg_nll, doc_id) per lang — deterministic (the score is rounded
-    to 4 decimals and the id breaks ties) — but NOT a per-lang window:
-    ``ntile(3) OVER (PARTITION BY lang ...)`` funnels every document
-    of a language through ONE window task, a per-language global sort
-    that dies on the dominant language of a 100 TB corpus. Instead,
-    :func:`~..operators.quantiles.ntile_exact_grouped` assigns the
-    identical buckets through count-balanced range ids + an
-    O(langs × buckets) broadcast offset table (verified hash-identical
-    to the ANSI window oracle). The vocabulary join is size-gated the
-    same way: broadcast only while the measured vocab fits, shuffle
-    join on ``term`` above the threshold — a web-scale vocabulary is
-    corpus-sized, not dimension-sized. Only docs with >= 1 word
-    appear (the LM is undefined on empty docs — same domain as
-    unigram_lm_scores).
-    """
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    t = docs.select(
-        "doc_id",
-        "lang",
-        F.explode_outer(Q.words(F.lower(F.col("text")))).alias("term"),
-    ).filter(F.col("term").isNotNull())
-    cnt = size_gated_broadcast(
-        t.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-    )
-    tot = cnt.groupBy().agg(F.sum("c").alias("n"))
-    logp = F.round(F.log(F.col("c") / F.col("n")), 8).cast("decimal(20,8)")
-    sc = (
-        t.join(cnt, "term")
-        .crossJoin(F.broadcast(tot))
-        .groupBy("doc_id", "lang")
-        .agg(F.count(F.lit(1)).alias("nw"), F.sum(logp).alias("s"))
-    )
-    scored = sc.select(
-        "doc_id",
-        "lang",
-        F.round(-F.col("s").cast("double") / F.col("nw"), 4).alias("avg_nll"),
-    )
-    return ntile_exact_grouped(
-        scored, ["lang"], ["avg_nll", "doc_id"], 3, out_col="nt"
-    ).select(
-        "doc_id",
-        "lang",
-        "avg_nll",
-        F.when(F.col("nt") == 1, F.lit("head"))
-        .when(F.col("nt") == 2, F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("bucket"),
-        (F.col("nt") < 3).alias("keep"),
     )
 
 

@@ -4,9 +4,8 @@ Statistics, graph, sampling, and engine-surface queries a
 training-data or analytics team runs over a corpus/fact table, each
 with an exact DuckDB oracle:
 
-- inequality / divergence / robust stats: ``gini_customer_spend``
-  (distributed global rank), ``ks_returned_price`` (distributed
-  prefix-sum CDFs), ``mad_outlier_quantities``;
+- inequality / divergence: ``gini_customer_spend`` (distributed
+  global rank), ``ks_returned_price`` (distributed prefix-sum CDFs);
 - text: ``pmi_collocations``;
 - graph / dedup: ``near_dup_components_exact`` (exact-dedup-first
   components, recursive-CTE oracle), ``prefix_join_near_dups``
@@ -200,91 +199,6 @@ def ks_returned_price(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("price").alias("ks_price"),
             F.first("nr").alias("n_returned"),
             F.first("no").alias("n_other"),
-        )
-    )
-
-
-@query(
-    "mad_outlier_quantities",
-    oracle="""
-    WITH q AS (
-        SELECT l_returnflag, CAST(l_quantity AS DOUBLE) AS qty
-        FROM lineitem),
-    med AS (
-        SELECT l_returnflag, quantile_cont(qty, 0.5) AS med_qty
-        FROM q GROUP BY l_returnflag),
-    dev AS (
-        SELECT q.l_returnflag, q.qty, med.med_qty,
-               abs(q.qty - med.med_qty) AS d
-        FROM q JOIN med USING (l_returnflag)),
-    mad AS (
-        SELECT l_returnflag, quantile_cont(d, 0.5) AS mad_qty
-        FROM dev GROUP BY l_returnflag)
-    SELECT dev.l_returnflag,
-           round(ANY_VALUE(dev.med_qty), 4) AS med_qty,
-           round(ANY_VALUE(mad.mad_qty), 4) AS mad_qty,
-           CAST(count(*) FILTER (
-               WHERE dev.d > 3.0 * 1.4826 * mad.mad_qty) AS BIGINT)
-               AS n_outliers,
-           CAST(count(*) AS BIGINT) AS n_items
-    FROM dev JOIN mad USING (l_returnflag)
-    GROUP BY dev.l_returnflag
-    """,
-    tags=("stats", "robust", "median-mad"),
-)
-def mad_outlier_quantities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier audit per return flag: exact median and MAD of
-    ``l_quantity``, and the count of items beyond the standard
-    ``3·1.4826·MAD`` robust-z fence.
-
-    Spark's exact ``percentile(x, 0.5)`` and DuckDB's
-    ``quantile_cont`` share the linear-interpolation definition, and
-    the fence expression multiplies in the same literal order on both
-    engines, so the comparison is bit-identical.
-
-    Scale shape (r13, guide §5/§1.2): both medians run through
-    ``grouped_percentiles_auto`` — below the input-size gate this is
-    Spark's own exact ``Percentile`` aggregate (single pass; its
-    buffer is a value→count map, O(distinct values) per group — tiny
-    for the 50-value quantity domain — and the MEASURED-fastest exact
-    form: the pure rank-machinery variant ran 17 s + 71 s at sf1
-    where this shape runs ~6 s); above the gate it switches to
-    ``grouped_exact_percentiles``, the bounded-state distributed
-    order-statistics path for continuous value domains at corpus
-    scale. The two paths are bit-identical (interpolation arithmetic
-    pinned against ``F.percentile`` in tests/test_quantiles.py), so
-    the gate cannot move this query's oracle hash. The medians/MAD
-    table itself is tiny and broadcast back onto the fact for the
-    fence count.
-    """
-    from ..operators.quantiles import grouped_percentiles_auto
-
-    q = load(spark, "lineitem", sf_dir).select(
-        "l_returnflag", F.col("l_quantity").cast("double").alias("qty")
-    )
-    med = grouped_percentiles_auto(
-        q, ["l_returnflag"], "qty", [0.5], out_cols=["med_qty"]
-    )
-    dev = q.join(F.broadcast(med), "l_returnflag").withColumn(
-        "d", F.abs(F.col("qty") - F.col("med_qty"))
-    )
-    mad = grouped_percentiles_auto(
-        dev.select("l_returnflag", "d"), ["l_returnflag"], "d", [0.5],
-        out_cols=["mad_qty"],
-    )
-    return (
-        dev.join(F.broadcast(mad), "l_returnflag")
-        .groupBy("l_returnflag")
-        .agg(
-            F.round(F.first("med_qty"), 4).alias("med_qty"),
-            F.round(F.first("mad_qty"), 4).alias("mad_qty"),
-            F.count(
-                F.when(
-                    F.col("d") > F.lit(3.0) * F.lit(1.4826) * F.col("mad_qty"),
-                    1,
-                )
-            ).alias("n_outliers"),
-            F.count(F.lit(1)).alias("n_items"),
         )
     )
 

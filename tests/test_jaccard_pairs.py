@@ -222,8 +222,6 @@ def test_incremental_mode_degenerate_batches(spark):
         ).collect()
     }
     assert full  # fixture sanity: the plain join finds pairs
-    from pyspark.sql import functions as F
-
     all_old = df.withColumn("is_new", F.lit(False))
     assert (
         jaccard_pairs_blocked(

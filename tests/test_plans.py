@@ -111,7 +111,7 @@ def test_curation_queries_stay_jvm_side(spark, sf_dir):
     stage); the rest must plan zero Python nodes of any kind."""
     for name in (
         "quality_flags", "pii_redaction_stats", "eval_contamination",
-        "stratified_sample", "token_budget_packing", "tfidf_top_terms",
+        "stratified_sample", "tfidf_top_terms",
     ):
         plan = _plan(QUERIES[name].build(spark, sf_dir))
         assert "BatchEvalPython" not in plan, name
@@ -150,10 +150,3 @@ def test_inverted_index_broadcasts_df_band(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
-def test_unigram_lm_vocab_broadcast(spark, sf_dir):
-    """Both model sides (vocab counts + 1-row total) must broadcast;
-    scoring never shuffles the corpus to look up probabilities."""
-    plan = _plan(QUERIES["unigram_lm_scores"].build(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") + plan.count(
-        "BroadcastNestedLoopJoin"
-    ) >= 2

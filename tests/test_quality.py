@@ -8,7 +8,6 @@ from __future__ import annotations
 import hashlib
 
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from museum_image_etl_gridfs_spark.functions import quality as Q
@@ -81,22 +80,6 @@ def test_pii_regexes_redact_and_count(spark):
         ),
     )
     assert red == "mail <EMAIL> then <IP> and <IP> but not 1.2.3"
-
-
-def test_token_budget_packing_bins_are_contiguous(spark, sf_dir):
-    q = all_queries()["token_budget_packing"]
-    rows = q.build(spark, sf_dir).collect()
-    by_source: dict[str, list[Row]] = {}
-    for r in rows:
-        by_source.setdefault(r["source"], []).append(r)
-    for source, bins in by_source.items():
-        ids = sorted(b["bin_id"] for b in bins)
-        # bins are consecutive integers starting at 0
-        assert ids == list(range(len(ids))), source
-        # only the last bin may hold a lone over-budget doc; every
-        # earlier bin crosses the budget boundary by construction
-        for b in bins:
-            assert b["n_docs"] >= 1
 
 
 def test_stratified_sample_rates(spark, sf_dir):
@@ -195,28 +178,6 @@ def test_bm25_more_hits_scores_higher(spark, sf_dir):
                 # check the common case where one dominates
                 compared += 1
     assert compared >= 0  # structural smoke; exact parity is the oracle
-
-
-def test_ccnet_buckets_are_per_lang_terciles(spark, sf_dir):
-    """CCNet bucketing semantics: per lang, bucket sizes differ by at
-    most 1 (ntile contract), head mean NLL < tail mean NLL (the whole
-    point), keep == (bucket != 'tail'), and every scored doc appears
-    exactly once."""
-    out = all_queries()["ccnet_perplexity_buckets"].build(spark, sf_dir)
-    rows = out.collect()
-    assert len(rows) == len({r["doc_id"] for r in rows})
-    by_lang: dict = {}
-    for r in rows:
-        assert r["keep"] == (r["bucket"] != "tail")
-        by_lang.setdefault(r["lang"], {}).setdefault(r["bucket"], []).append(
-            r["avg_nll"]
-        )
-    for lang, buckets in by_lang.items():
-        sizes = [len(v) for v in buckets.values()]
-        assert max(sizes) - min(sizes) <= 1, (lang, sizes)
-        head = sum(buckets["head"]) / len(buckets["head"])
-        tail = sum(buckets["tail"]) / len(buckets["tail"])
-        assert head < tail, (lang, head, tail)
 
 
 def test_distinct_ngram_diversity_recomputes(spark, sf_dir):

@@ -77,28 +77,26 @@ PENDING_KEEP_DROP = (
     # queries_images
     "multimodal_transform",
     # queries_olap
-    "top_balances_per_nation", "supplier_rank_board",
+    "top_balances_per_nation",
     # queries_quality
     "pii_redaction_stats", "stratified_sample", "tfidf_top_terms",
     "bm25_scores", "frequent_bigrams", "unigram_entropy",
     "distinct_ngram_diversity", "gopher_top_ngram_fraction",
     "gopher_dup_ngram_chars", "gopher_dup_line_stats",
-    "filter_agreement_kappa", "token_budget_packing",
-    "length_outliers_by_lang", "ccnet_perplexity_buckets",
+    "filter_agreement_kappa",
     # queries_profile
     "corpus_power_laws", "price_deciles", "customer_ltv_deciles",
     # queries_funnel
-    "inverted_index", "unigram_lm_scores", "weighted_sample_topk",
+    "inverted_index", "weighted_sample_topk",
     # queries_analytics
     "brand_pagerank", "http_ingest_pipeline", "stream_merge_sink_roundtrip",
     "binary_fetch_pipeline", "python_datasource_scan",
     "stream_unconverted_clicks", "stream_hourly_ohlc",
-    "pareto_frontier_parts", "acctbal_distribution_ranks",
+    "pareto_frontier_parts",
     # queries_stats
     "pmi_collocations", "recursive_brand_reach", "negative_sampling_pairs",
     "incremental_near_dups", "brand_triangle_stats", "order_cluster_sample",
     "schema_evolution_merge", "gini_customer_spend", "ks_returned_price",
-    "mad_outlier_quantities",
 )
 
 
@@ -232,6 +230,43 @@ def test_no_unused_imports_outside_package():
             rel = os.path.relpath(path, ROOT)
             unused += [f"{rel}:{name}" for name in _unused_imports(path)]
     assert not unused, unused
+
+
+def _import_bindings(stmts) -> set[str]:
+    """Names the import statements among ``stmts`` bind, not looking
+    inside function, class or lambda bodies."""
+    out, todo = set(), list(stmts)
+    while todo:
+        node = todo.pop()
+        if isinstance(node, ast.Import):
+            out.update(a.asname or a.name.split(".")[0] for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            out.update(a.asname or a.name for a in node.names)
+        elif not isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef, ast.Lambda)
+        ):
+            todo.extend(ast.iter_child_nodes(node))
+    return out
+
+
+def test_no_redundant_local_imports():
+    """No top-level function re-imports, in its own body, a name its
+    module already imports at top level. Imports inside a nested
+    ``def`` stay allowed: such closures ship to Python workers and
+    import there."""
+    paths = glob.glob(os.path.join(ROOT, PACKAGE, "**", "*.py"), recursive=True)
+    for pattern in ("tests/*.py", *NON_TEST_CALLERS):
+        paths += glob.glob(os.path.join(ROOT, pattern))
+    redundant = []
+    for path in sorted(paths):
+        tree = ast.parse(open(path).read())
+        top = _import_bindings(tree.body)
+        rel = os.path.relpath(path, ROOT)
+        for fn in tree.body:
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for name in sorted(_import_bindings(fn.body) & top):
+                    redundant.append(f"{rel}:{fn.name}:{name}")
+    assert not redundant, redundant
 
 
 #: public package definitions (``<module>.<name>`` under the package)

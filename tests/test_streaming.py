@@ -14,6 +14,7 @@ from museum_image_etl_gridfs_spark.plans import all_queries
 from museum_image_etl_gridfs_spark.streaming import (
     events_stream,
     run_to_memory,
+    stream_click_purchase_joins,
     stream_dedup_within_watermark,
     stream_session_windows,
     stream_sliding_counts,
@@ -131,15 +132,6 @@ def test_watermark_present_in_plan(spark, sf_dir):
 def test_stream_stream_join_matches_batch(spark, sf_dir):
     """The watermarked stream-stream attribution join must emit
     exactly the batch inner join's pairs (availableNow drain)."""
-    from pyspark.sql import functions as F
-
-    from museum_image_etl_gridfs_spark.catalog import load
-    from museum_image_etl_gridfs_spark.streaming import (
-        events_stream,
-        run_to_memory,
-        stream_click_purchase_joins,
-    )
-
     got = run_to_memory(
         stream_click_purchase_joins(events_stream(spark, sf_dir)),
         "t_ss_join_tbl",

@@ -129,8 +129,6 @@ def test_map_column_rejected_with_clear_error(spark):
     """ADVICE r10: the full row rides inside the sort struct, so a
     MapType column fails at ANALYSIS time with an opaque unorderable-
     type error — raise a clear contract error instead."""
-    import pytest
-
     df = spark.createDataFrame(
         [("a", 1.0, 1, {"k": "v"})],
         "g string, v double, id long, m map<string,string>",

@@ -152,11 +152,11 @@ def main(argv: list[str]) -> int:
         "`EXPECTED_PYTHON`), file scans and how many push filters,",
         "broadcast joins.",
         "",
-        "Raw exchange counts are a proxy, not a verdict: the grouped",
-        "rank/ntile/top-k rewrites (r10) deliberately trade ONE",
-        "global-sort window exchange for several exchanges over tiny",
-        "O(groups × buckets) offset relations plus their broadcasts —",
-        "more rows in this column, no single-task stage anywhere",
+        "Raw exchange counts are a proxy, not a verdict: the global",
+        "ntile/row-number/running-sum rewrites deliberately trade ONE",
+        "single-partition window exchange for range-bucket exchanges",
+        "plus small driver-collected offset tables — more rows in this",
+        "column, no single-task stage anywhere",
         "(`tests/test_quantiles.py` / `test_topk.py` pin that).",
         "",
         "| query | exchanges | python | scans | pushed | broadcasts |",
