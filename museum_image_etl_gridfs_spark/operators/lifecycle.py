@@ -1,10 +1,10 @@
 """Caller-scoped release of ``localCheckpoint`` storage.
 
 Several operators truncate lineage with ``localCheckpoint`` (the
-global-order machinery in :mod:`.quantiles`, the MinHash signatures
-in :mod:`.dedup`, the span inventory in :mod:`.spans`, the iterative
-fixpoint of the pagerank query, the shared edge list in the OLAP
-graph queries). Checkpoint blocks live in executor
+MinHash signatures in :mod:`.dedup`, the span inventory in
+:mod:`.spans`, the exact-duplicate groups of the near-dup components
+query, the shared edge list in the OLAP graph queries, the streaming
+upsert snapshot). Checkpoint blocks live in executor
 MEMORY_AND_DISK until the RDD is unpersisted or the session dies —
 Spark has no automatic scope for them, so a long-lived session that
 composes many such queries accumulates storage without bound

@@ -1,8 +1,6 @@
-"""Advanced analytics wave (round 3): operators and surfaces beyond
-the earlier families, each with an exact DuckDB oracle.
+"""Advanced analytics wave (round 3): surfaces beyond the earlier
+families, each with an exact DuckDB oracle.
 
-- geometry: distributed SFS skyline
-- graph: iterative PageRank
 - temporal: argmin/argmax OHLC (batch + streaming)
 - engine surfaces, driver-verified: foreachBatch MERGE sink
   round-trip, the format("museum_api") Python DataSource and the
@@ -20,43 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..operators.lifecycle import tracked_local_checkpoint
-from ..operators.skyline import skyline
-from ..partitioning import spread
 from .registry import query
-
-
-@query(
-    "pareto_frontier_parts",
-    oracle="""
-    SELECT p_partkey, p_name, p_retailprice, p_size
-    FROM part a
-    WHERE NOT EXISTS (
-        SELECT 1 FROM part b
-        WHERE b.p_retailprice <= a.p_retailprice
-          AND b.p_size >= a.p_size
-          AND (b.p_retailprice < a.p_retailprice OR b.p_size > a.p_size)
-    )
-    """,
-    tags=("skyline", "pareto", "mapInPandas"),
-)
-def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto frontier of parts: cheapest-for-their-size (minimize
-    p_retailprice, maximize p_size), via the two-phase distributed
-    skyline (operators/skyline.py).
-
-    The oracle is the quadratic NOT EXISTS; the Spark plan is linear
-    per partition (local SFS skyline) plus one tiny global pass —
-    at 100 TB the fact never shuffles, only per-partition frontiers
-    move.
-    """
-    part = spread(
-        load(spark, "part", sf_dir).select(
-            "p_partkey", "p_name", "p_retailprice", "p_size"
-        ),
-        "p_partkey",
-    )
-    return skyline(part, minimize=["p_retailprice"], maximize=["p_size"])
 
 
 @query(
@@ -103,131 +65,6 @@ def hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("value").alias("low_v"),
         F.max(pick)["value"].alias("close_v"),
         F.count(F.lit(1)).alias("n_events"),
-    )
-
-
-_PR_ITERS = 3
-_PR_DAMP = 0.85
-
-
-def _pr_oracle() -> str:
-    """Unrolled fixed-iteration PageRank as DuckDB CTEs (the SQL
-    rendering of the exact dataflow the Spark builder runs)."""
-    iters = []
-    prev = "r0"
-    for i in range(1, _PR_ITERS + 1):
-        iters.append(
-            f"""r{i} AS (
-        SELECT ne.dst AS node,
-               0.15 / (SELECT nn FROM n) + {_PR_DAMP} * sum(p.pr * ne.nw) AS pr
-        FROM ne JOIN {prev} p ON p.node = ne.src
-        GROUP BY ne.dst
-    )"""
-        )
-        prev = f"r{i}"
-    return f"""
-    WITH ob AS (
-        SELECT DISTINCT l_orderkey AS ok, p_brand AS b
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-    ),
-    e AS (
-        SELECT a.b AS src, c.b AS dst, CAST(count(*) AS DOUBLE) AS w
-        FROM ob a JOIN ob c ON a.ok = c.ok AND a.b <> c.b
-        GROUP BY 1, 2
-    ),
-    outw AS (SELECT src, sum(w) AS ow FROM e GROUP BY 1),
-    ne AS (SELECT e.src, e.dst, e.w / outw.ow AS nw
-           FROM e JOIN outw USING (src)),
-    n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM outw),
-    r0 AS (SELECT src AS node, 1.0 / (SELECT nn FROM n) AS pr FROM outw),
-    {", ".join(iters)}
-    SELECT node AS brand, round(pr, 9) AS pr FROM {prev}
-    """
-
-
-@query(
-    "brand_pagerank",
-    oracle=_pr_oracle(),
-    tags=("graph", "pagerank", "iterative"),
-)
-def brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative graph dataflow: 3 power-iteration steps of weighted
-    PageRank over the brand co-occurrence graph (brands linked when
-    they appear in the same order, edge weight = co-order count).
-
-    The Spark shape per iteration is join(ranks, edges on src) →
-    groupBy(dst) → weighted sum: the rank table is tiny (one row per
-    brand) so AQE broadcasts it and each iteration costs one
-    shuffle-free pass over edges plus a small aggregate. The one-time
-    edge extraction collects each order's distinct brand set and
-    DOUBLE-EXPLODES it — pairs are generated map-side off one
-    groupBy(order) exchange; the basket SELF-JOIN this replaces
-    shuffled the (order, brand) stream twice and re-ran the whole
-    extraction a second time for the node count (solo sf1: 50.8 s →
-    this shape ~7 s). Per-order arrays are bounded by the brand
-    universe, so the explode fan-out is |brands|² per order worst
-    case — the same pairs the join built, without the shuffle. The
-    graph is symmetric so there are no dangling nodes. Scores are
-    rounded to 9 decimals for cross-engine float-sum-order
-    independence.
-    """
-    li = load(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    brands = load(spark, "part", sf_dir).select("p_partkey", "p_brand")
-    per_order = (
-        li.join(F.broadcast(brands), li["l_partkey"] == brands["p_partkey"])
-        .groupBy(F.col("l_orderkey").alias("ok"))
-        .agg(F.sort_array(F.collect_set("p_brand")).alias("bs"))
-    )
-    pairs = (
-        per_order.select(F.explode("bs").alias("src"), "bs")
-        .select("src", F.explode("bs").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-    )
-    e = pairs.groupBy("src", "dst").agg(
-        F.count(F.lit(1)).cast("double").alias("w")
-    )
-    outw = e.groupBy("src").agg(F.sum("w").alias("ow"))
-    ne = e.join(outw, "src").select(
-        "src", "dst", (F.col("w") / F.col("ow")).alias("nw")
-    )
-    # truncate lineage before iterating: without this each iteration
-    # replans (and AQE re-optimizes) the whole edge-extraction DAG,
-    # and the plan depth grows linearly with iterations. Edges
-    # materialize once on the executors; each subsequent iteration
-    # plans only join→agg over the checkpointed relation. LAZY
-    # checkpoints (eager=False) keep build()/plan-audit free of job
-    # launches — materialization happens at the first real action.
-    # (Audit caveat: the executed plan beyond the checkpoint shows as
-    # an ExistingRDD stub.) Tracked: lifecycle.release_checkpoints
-    # reclaims the per-iteration blocks after the caller materializes.
-    ne = tracked_local_checkpoint(ne)
-    # node count READS THE CHECKPOINT (src side of every edge exists —
-    # symmetric graph): counting from the pre-checkpoint `outw` would
-    # execute the whole extraction DAG a second time just for this
-    # scalar.
-    n_nodes = float(ne.select("src").distinct().count())
-    # the initial ranks table must ALSO read the checkpoint: seeding
-    # from pre-checkpoint `outw` replays the full extraction DAG once
-    # when ranks first materializes (measured ~7 s of the 14.2 s solo
-    # sf1 cost in r8).
-    ranks = ne.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(1.0 / n_nodes).alias("pr")
-    )
-    for _ in range(_PR_ITERS):
-        ranks = (
-            ne.join(ranks, ne["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(
-                (
-                    F.lit(0.15 / n_nodes)
-                    + F.lit(_PR_DAMP) * F.sum(F.col("pr") * F.col("nw"))
-                ).alias("pr")
-            )
-            .select(F.col("dst").alias("node"), "pr")
-        )
-        ranks = tracked_local_checkpoint(ranks)
-    return ranks.select(
-        F.col("node").alias("brand"), F.round("pr", 9).alias("pr")
     )
 
 

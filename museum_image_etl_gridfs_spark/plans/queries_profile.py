@@ -5,7 +5,8 @@ training-data pipeline runs before trusting a new drop of data.
 scans the table once per column is 6 scans too many; it computes every
 per-column statistic in ONE aggregate (multi-distinct goes through
 Spark's Expand, still one scan) and reshape to rows afterwards with
-``stack`` (a narrow Generate, no extra shuffle).
+``stack`` (a narrow Generate, no extra shuffle). ``corpus_power_laws``
+fits per-source Zipf and Heaps laws over the document corpus.
 """
 
 from __future__ import annotations
@@ -105,99 +106,6 @@ def table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "n_rows",
     ).select("col", "n_rows", "n_null", "n_distinct", "min_value", "max_value")
-
-
-@query(
-    "price_deciles",
-    oracle="""
-    WITH t AS (
-        SELECT l_extendedprice,
-               ntile(10) OVER (ORDER BY l_extendedprice, l_orderkey,
-                               l_linenumber) AS decile
-        FROM lineitem)
-    SELECT decile,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(CAST(min(l_extendedprice) AS DECIMAL(18,2)) AS DOUBLE) AS lo,
-           CAST(CAST(max(l_extendedprice) AS DECIMAL(18,2)) AS DOUBLE) AS hi,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-               AS total
-    FROM t GROUP BY decile
-    """,
-    tags=("profile", "equi-depth", "window"),
-)
-def price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth decile profile of ``l_extendedprice``,
-    reproducing ntile(10) over a deterministic total order (price,
-    orderkey, linenumber) WITHOUT a global window.
-
-    Delegates to ``operators/quantiles.py::ntile_exact`` — exact
-    ntile semantics with no single-task stage (width_bucket range
-    ids, O(buckets) offset collect, within-bucket windows); see that
-    module for the scale analysis and the two traps it avoids
-    (global-window OOM, repartitionByRange per-job resampling).
-    """
-    from ..operators.quantiles import ntile_exact
-
-    keys = ["l_extendedprice", "l_orderkey", "l_linenumber"]
-    li = load(spark, "lineitem", sf_dir).select(*keys)
-    t = ntile_exact(li, keys, 10, out_col="decile")
-    return t.groupBy("decile").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("l_extendedprice").cast("decimal(18,2)").cast("double").alias("lo"),
-        F.max("l_extendedprice").cast("decimal(18,2)").cast("double").alias("hi"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total"),
-    )
-
-
-@query(
-    "customer_ltv_deciles",
-    oracle="""
-    WITH s AS (
-        SELECT o_custkey,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                   AS spend
-        FROM orders GROUP BY o_custkey),
-    t AS (
-        SELECT *, ntile(10) OVER (ORDER BY spend, o_custkey) AS decile
-        FROM s)
-    SELECT decile,
-           CAST(count(*) AS BIGINT) AS n_customers,
-           min(spend) AS lo, max(spend) AS hi,
-           CAST(SUM(CAST(spend AS DECIMAL(18,2))) AS DOUBLE) AS total_spend
-    FROM t GROUP BY decile
-    """,
-    tags=("profile", "equi-depth", "ltv"),
-)
-def customer_ltv_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customer lifetime-value deciles: per-customer total spend,
-    then exact ntile(10) by (spend, custkey) via the distributed
-    ``ntile_exact`` operator — second consumer of the no-global-window
-    machinery, this time over an AGGREGATE (spend per customer), which
-    at billion-customer scale is itself too large for a single-task
-    window.
-    """
-    from ..operators.quantiles import ntile_exact
-
-    spend = (
-        load(spark, "orders", sf_dir)
-        .groupBy("o_custkey")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("spend")
-        )
-    )
-    t = ntile_exact(spend, ["spend", "o_custkey"], 10, out_col="decile")
-    return t.groupBy("decile").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.min("spend").alias("lo"),
-        F.max("spend").alias("hi"),
-        F.sum(F.col("spend").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_spend"),
-    )
 
 
 #: ranks entering the Zipf log-log fit — top-K terms per source

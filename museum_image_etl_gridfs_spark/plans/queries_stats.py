@@ -1,18 +1,14 @@
 """Distributional-statistics & data-audit wave (round 3, session 4).
 
-Statistics, graph, sampling, and engine-surface queries a
-training-data or analytics team runs over a corpus/fact table, each
-with an exact DuckDB oracle:
+Graph, sampling, and engine-surface queries a training-data or
+analytics team runs over a corpus/fact table, each with an exact
+DuckDB oracle:
 
-- inequality / divergence: ``gini_customer_spend`` (distributed
-  global rank), ``ks_returned_price`` (distributed prefix-sum CDFs);
-- text: ``pmi_collocations``;
 - graph / dedup: ``near_dup_components_exact`` (exact-dedup-first
   components, recursive-CTE oracle), ``prefix_join_near_dups``
   (exact Jaccard pairs, block-matrix matmul), ``brand_triangle_stats``
   (exact triangle census + transitivity);
-- training-data sampling: ``negative_sampling_pairs`` (deterministic
-  hash draws), ``order_cluster_sample`` (hierarchical sampling);
+- sampling: ``order_cluster_sample`` (hierarchical sampling);
 - engine surfaces: ``recursive_brand_reach`` (Spark 4 WITH RECURSIVE),
   ``schema_evolution_merge`` (mergeSchema read).
 
@@ -30,324 +26,12 @@ before the final scalar step.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..functions import quality as Q
 from ..operators.ann import jaccard_pairs_blocked
-from ..operators.quantiles import global_row_number, running_totals
-from ..partitioning import spread
 from .registry import query
-
-#: lowercased whitespace word array (canonical tokenizer mirror)
-_SQL_WORDS_LOWER = Q.WORDS_SQL_LOWER
-
-
-@query(
-    "gini_customer_spend",
-    oracle="""
-    WITH spend AS (
-        SELECT c.c_custkey,
-               COALESCE(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))),
-                        CAST(0 AS DECIMAL(18,2))) AS spend
-        FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
-        GROUP BY c.c_custkey),
-    ranked AS (
-        SELECT spend,
-               row_number() OVER (ORDER BY CAST(spend AS DOUBLE), c_custkey)
-                   AS rnk
-        FROM spend),
-    s AS (
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(SUM(spend) AS DECIMAL(30,2)) AS s1,
-               CAST(SUM(rnk * spend) AS DECIMAL(30,2)) AS s2
-        FROM ranked)
-    SELECT n AS n_customers,
-           CAST(s1 AS DOUBLE) AS total_spend,
-           round(CAST(2 * s2 - (n + 1) * s1 AS DOUBLE)
-                 / CAST(n * s1 AS DOUBLE), 8) AS gini
-    FROM s
-    """,
-    tags=("stats", "inequality", "global-rank"),
-)
-def gini_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini coefficient of customer revenue concentration (zero-order
-    customers included at spend 0).
-
-    G = (2·Σᵢ i·xᵢ − (n+1)·Σxᵢ) / (n·Σxᵢ) with x sorted ascending —
-    numerator and denominator are EXACT DECIMAL scalars, so the one
-    double division is bit-identical across engines and partitionings
-    (equal spends permute ranks but leave Σ i·xᵢ invariant).
-
-    Scale shape: the per-customer aggregate shuffles orders once
-    (map-side partials); the global rank uses
-    ``operators/quantiles.global_row_number`` — width_bucket range
-    ids + broadcast offsets + within-bucket window — so no stage ever
-    holds the full customer set in one task (the bare
-    ``Window.orderBy`` scale-killer documented in NOTES.md).
-    """
-    cust = load(spark, "customer", sf_dir).select("c_custkey")
-    orders = load(spark, "orders", sf_dir).select("o_custkey", "o_totalprice")
-    spend = (
-        cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.coalesce(
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                F.lit(0).cast("decimal(18,2)"),
-            ).alias("spend")
-        )
-        .withColumn("spend_d", F.col("spend").cast("double"))
-    )
-    ranked = global_row_number(
-        spend, ["spend_d", "c_custkey"], out_col="rnk"
-    )
-    s = ranked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("spend").cast("decimal(30,2)").alias("s1"),
-        F.sum(F.col("rnk") * F.col("spend")).cast("decimal(30,2)").alias("s2"),
-    )
-    return s.select(
-        F.col("n").alias("n_customers"),
-        F.col("s1").cast("double").alias("total_spend"),
-        F.round(
-            (2 * F.col("s2") - (F.col("n") + 1) * F.col("s1")).cast("double")
-            / (F.col("n") * F.col("s1")).cast("double"),
-            8,
-        ).alias("gini"),
-    )
-
-
-@query(
-    "ks_returned_price",
-    oracle="""
-    WITH vals AS (
-        SELECT l_extendedprice AS price,
-               CAST(count(*) FILTER (WHERE l_returnflag = 'R') AS BIGINT) AS r,
-               CAST(count(*) FILTER (WHERE l_returnflag <> 'R') AS BIGINT) AS o
-        FROM lineitem GROUP BY l_extendedprice),
-    tot AS (SELECT SUM(r) AS nr, SUM(o) AS no FROM vals),
-    cdf AS (
-        SELECT price,
-               SUM(r) OVER (ORDER BY price
-                            ROWS UNBOUNDED PRECEDING) AS cum_r,
-               SUM(o) OVER (ORDER BY price
-                            ROWS UNBOUNDED PRECEDING) AS cum_o
-        FROM vals),
-    d AS (
-        SELECT price,
-               abs(CAST(cum_r AS DOUBLE) / CAST((SELECT nr FROM tot) AS DOUBLE)
-                   - CAST(cum_o AS DOUBLE)
-                     / CAST((SELECT no FROM tot) AS DOUBLE)) AS dist
-        FROM cdf),
-    mx AS (SELECT max(dist) AS ks FROM d)
-    SELECT round((SELECT ks FROM mx), 8) AS ks_stat,
-           min(price) AS ks_price,
-           CAST((SELECT nr FROM tot) AS BIGINT) AS n_returned,
-           CAST((SELECT no FROM tot) AS BIGINT) AS n_other
-    FROM d WHERE dist = (SELECT ks FROM mx)
-    """,
-    tags=("stats", "ks-test", "prefix-sum"),
-)
-def ks_returned_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample Kolmogorov–Smirnov distance between the price
-    distributions of returned (``l_returnflag = 'R'``) and
-    non-returned line items, with the price where the supremum is
-    attained (smallest such price under ties).
-
-    Determinism: the empirical CDFs are exact integer prefix sums;
-    each distance is the SAME double expression on both engines, so
-    the max and the equality filter select identical rows.
-
-    Scale shape: one groupBy compresses the fact to its distinct
-    value set; the global running sums come from
-    ``operators/quantiles.running_totals`` (bucketed two-pass prefix
-    sum — per-bucket totals, broadcast offsets, within-bucket window)
-    — no single-task global window anywhere; the 1-row totals/max
-    are broadcast nested-loop joined.
-    """
-    li = load(spark, "lineitem", sf_dir).select("l_extendedprice", "l_returnflag")
-    vals = (
-        li.groupBy(F.col("l_extendedprice").alias("price"))
-        .agg(
-            F.count(F.when(F.col("l_returnflag") == "R", 1)).alias("r"),
-            F.count(F.when(F.col("l_returnflag") != "R", 1)).alias("o"),
-        )
-    )
-    cdf = running_totals(vals, ["price"], ["r", "o"])
-    # totals = the running sums at the max price (monotone prefix), so
-    # this agg reads the checkpointed CDF instead of re-executing the
-    # distinct-value groupBy a fourth time
-    tot = cdf.agg(F.max("cum_r").alias("nr"), F.max("cum_o").alias("no"))
-    d = cdf.crossJoin(F.broadcast(tot)).select(
-        "price",
-        "nr",
-        "no",
-        F.abs(
-            F.col("cum_r").cast("double") / F.col("nr").cast("double")
-            - F.col("cum_o").cast("double") / F.col("no").cast("double")
-        ).alias("dist"),
-    )
-    mx = d.agg(F.max("dist").alias("ks"))
-    return (
-        d.crossJoin(F.broadcast(mx))
-        .filter(F.col("dist") == F.col("ks"))
-        .groupBy()
-        .agg(
-            F.round(F.first("ks"), 8).alias("ks_stat"),
-            F.min("price").alias("ks_price"),
-            F.first("nr").alias("n_returned"),
-            F.first("no").alias("n_other"),
-        )
-    )
-
-
-#: collocations below this corpus frequency are statistically noisy
-_PMI_MIN_PAIR = 5
-#: result size of the ranked collocation list
-_PMI_TOP_K = 100
-
-
-@query(
-    "pmi_collocations",
-    oracle=f"""
-    WITH w AS (
-        SELECT {_SQL_WORDS_LOWER} AS w
-        FROM documents),
-    uni AS (
-        SELECT unnest(w) AS term FROM w),
-    ucnt AS (SELECT term, CAST(count(*) AS BIGINT) AS c FROM uni GROUP BY 1),
-    un AS (SELECT SUM(c) AS n FROM ucnt),
-    big AS (
-        SELECT unnest(CASE WHEN len(w) < 2 THEN CAST([] AS VARCHAR[])
-                           ELSE list_transform(range(1, len(w)),
-                                               i -> w[i] || ' ' || w[i+1])
-                      END) AS bigram
-        FROM w),
-    bcnt AS (
-        SELECT bigram, CAST(count(*) AS BIGINT) AS c_xy
-        FROM big GROUP BY 1
-        HAVING count(*) >= {_PMI_MIN_PAIR}),
-    bn AS (
-        SELECT SUM(CAST(c AS BIGINT)) AS b FROM (
-            SELECT count(*) AS c FROM big GROUP BY bigram)),
-    scored AS (
-        SELECT b.bigram, b.c_xy,
-               round(ln((CAST(b.c_xy AS DOUBLE) / CAST(bn.b AS DOUBLE))
-                        / ((CAST(x.c AS DOUBLE) / CAST(un.n AS DOUBLE))
-                           * (CAST(y.c AS DOUBLE) / CAST(un.n AS DOUBLE)))),
-                     6) AS pmi
-        FROM bcnt b
-        JOIN ucnt x ON x.term = split_part(b.bigram, ' ', 1)
-        JOIN ucnt y ON y.term = split_part(b.bigram, ' ', 2)
-        CROSS JOIN un CROSS JOIN bn)
-    SELECT bigram, c_xy, pmi
-    FROM scored
-    ORDER BY pmi DESC, bigram
-    LIMIT {_PMI_TOP_K}
-    """,
-    tags=("text", "collocations", "pmi"),
-)
-def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus collocation mining: the top bigrams by pointwise mutual
-    information, PMI = ln(p(xy) / (p(x)·p(y))), restricted to pairs
-    seen at least ``_PMI_MIN_PAIR`` times.
-
-    PMI is computed as one double expression over exact integer
-    counts in the SAME operation order on both engines (divide
-    first, never multiply counts — no bigint overflow at any scale),
-    then rounded; the LIMIT pins a (pmi DESC, bigram) total order.
-
-    Scale shape: unigram and bigram counts are map-side-combined
-    groupBys; the surviving (count-thresholded) bigram table is far
-    smaller than the corpus and joins the unigram vocabulary on the
-    split word — broadcast at this SF, shuffle-joinable at corpus
-    scale; the two 1-row totals are broadcast.
-    """
-    docs = spread(load(spark, "documents", sf_dir), "doc_id")
-    w = docs.select(Q.words(F.lower(F.col("text"))).alias("w"))
-    # ONE tokenize pass for BOTH count tables (r13, guide §2.4/§5).
-    # The r12 attempt fed a tagged explode (kind 1 = unigram, kind 2 =
-    # bigram) into one groupBy(kind, term) and hoped every consumer
-    # would share that exchange via ReusedExchange — it never fired:
-    # the k==1/k==2 consumer filters push BELOW the aggregate, so each
-    # of the five consumers built a structurally different subtree and
-    # re-ran scan + tokenize + struct-wrap from source (committed
-    # after-plan: 5 scans / 12 exchanges / 0 ReusedExchange; driver
-    # measured 1.42 → 2.10 s). The sharing is now REAL: the tagged
-    # counts relation — one narrow (k, term, c) row per DISTINCT
-    # term/bigram, far smaller than the corpus at any SF (Heaps' law;
-    # distributed MEMORY_AND_DISK blocks, never the driver) — is
-    # materialized behind a tracked localCheckpoint, so the corpus is
-    # scanned and tokenized exactly once and all five consumers (ucnt
-    # ×2, bcnt, both totals) are cheap scans of the checkpointed
-    # blocks. Released by the caller via lifecycle.release_checkpoints
-    # after results materialize, as with every tracked checkpoint.
-    # explode_outer + IS NOT NULL: plain explode would let
-    # InferFiltersFromGenerate inline the whole tokenizer chain into a
-    # scan-side size() filter, re-evaluated per row (NOTES.md trap).
-    tagged = (
-        w.select(
-            F.explode_outer(
-                F.concat(
-                    F.transform(
-                        F.col("w"),
-                        lambda t: F.struct(
-                            F.lit(1).alias("k"), t.alias("t")
-                        ),
-                    ),
-                    F.transform(
-                        Q.word_ngrams(F.col("w"), 2),
-                        lambda g: F.struct(
-                            F.lit(2).alias("k"), g.alias("t")
-                        ),
-                    ),
-                )
-            ).alias("e")
-        )
-        .filter(F.col("e").isNotNull())
-        .select("e.k", "e.t")
-    )
-    from ..operators.lifecycle import tracked_local_checkpoint
-
-    counts = tracked_local_checkpoint(
-        tagged.groupBy("k", "t").agg(F.count(F.lit(1)).alias("c"))
-    )
-    ucnt = counts.filter(F.col("k") == 1).select(
-        F.col("t").alias("term"), "c"
-    )
-    un = ucnt.agg(F.sum("c").alias("n"))
-    allb = counts.filter(F.col("k") == 2).select(
-        F.col("t").alias("bigram"), F.col("c").alias("c_xy")
-    )
-    bn = allb.agg(F.sum("c_xy").alias("b"))
-    bcnt = allb.filter(F.col("c_xy") >= _PMI_MIN_PAIR)
-    x = ucnt.select(F.col("term").alias("tx"), F.col("c").alias("cx"))
-    y = ucnt.select(F.col("term").alias("ty"), F.col("c").alias("cy"))
-    scored = (
-        bcnt.withColumn("tx", F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)))
-        .withColumn("ty", F.split_part(F.col("bigram"), F.lit(" "), F.lit(2)))
-        .join(F.broadcast(x), "tx")
-        .join(F.broadcast(y), "ty")
-        .crossJoin(F.broadcast(un))
-        .crossJoin(F.broadcast(bn))
-        .select(
-            "bigram",
-            "c_xy",
-            F.round(
-                F.log(
-                    (F.col("c_xy").cast("double") / F.col("b").cast("double"))
-                    / (
-                        (F.col("cx").cast("double") / F.col("n").cast("double"))
-                        * (F.col("cy").cast("double") / F.col("n").cast("double"))
-                    )
-                ),
-                6,
-            ).alias("pmi"),
-        )
-    )
-    return scored.orderBy(F.desc("pmi"), "bigram").limit(_PMI_TOP_K)
 
 
 @query(
@@ -558,137 +242,6 @@ def recursive_brand_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).createOrReplaceTempView("stats_reach_seed")
     return spark.sql(
         _REACH_RECURSION.format(seed="stats_reach_seed", edges="stats_reach_edges")
-    )
-
-
-#: negatives kept per customer
-_NEG_K = 3
-#: hash draws per customer (headroom over K for invalid/seen/dup hits)
-_NEG_DRAWS = 8
-#: odd multiplier decorrelating the customer key from the draw index
-_NEG_PAIR_MULT = 1000003
-#: per-draw salt (prime) so draws of one customer decorrelate
-_NEG_DRAW_SALT = 7919
-
-
-def _neg_oracle() -> str:
-    from ..functions.keys import KNUTH
-
-    # same portable arithmetic as the Spark side: pre-fold the salted
-    # key below 2^31 so key*KNUTH stays within int64 at ANY key scale
-    # (DuckDB raises on bigint overflow where Spark silently wraps),
-    # then Knuth-hash and map into the live part-key domain
-    guess = (
-        f"1 + ((((c.c_custkey * {_NEG_PAIR_MULT}"
-        f" + i.draw * {_NEG_DRAW_SALT}) % 2147483647) * {KNUTH})"
-        f" % 4294967296) % (SELECT max(p_partkey) FROM part)"
-    )
-    return f"""
-    WITH draws AS (
-        SELECT c.c_custkey, i.draw, {guess} AS guess
-        FROM customer c
-        CROSS JOIN (SELECT unnest(range(0, {_NEG_DRAWS})) AS draw) i),
-    valid AS (
-        SELECT d.c_custkey, d.draw, p.p_partkey
-        FROM draws d JOIN part p ON p.p_partkey = d.guess),
-    seen AS (
-        SELECT DISTINCT o.o_custkey, l.l_partkey
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey),
-    fresh AS (
-        SELECT v.c_custkey, v.draw, v.p_partkey
-        FROM valid v
-        WHERE NOT EXISTS (
-            SELECT 1 FROM seen s
-            WHERE s.o_custkey = v.c_custkey AND s.l_partkey = v.p_partkey)),
-    dedup AS (
-        SELECT c_custkey, draw, p_partkey,
-               row_number() OVER (PARTITION BY c_custkey, p_partkey
-                                  ORDER BY draw) AS dup_rn
-        FROM fresh),
-    ranked AS (
-        SELECT c_custkey, p_partkey,
-               row_number() OVER (PARTITION BY c_custkey
-                                  ORDER BY draw) AS neg_rank
-        FROM dedup WHERE dup_rn = 1)
-    SELECT c_custkey, p_partkey, CAST(neg_rank AS INTEGER) AS neg_rank
-    FROM ranked WHERE neg_rank <= {_NEG_K}
-    """
-
-
-@query(
-    "negative_sampling_pairs",
-    oracle=_neg_oracle(),
-    tags=("traindata", "negative-sampling", "extension"),
-)
-def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic negative sampling for contrastive / recommender
-    training: for every customer, up to K pseudo-random parts they
-    have NEVER ordered, produced by a FIXED number of portable hash
-    draws per customer — rerun-stable on both engines, no RNG.
-
-    Each of the 8 salted Knuth-hash draws maps into the part-key
-    domain, is validated against the part dimension, anti-joined
-    against the customer's observed parts, deduplicated, and the
-    first K surviving draws (in draw order) are kept. All arithmetic
-    pre-folds below 2^31 so the hash never overflows int64 on either
-    engine.
-
-    Scale shape: O(customers × 8) candidate rows — LINEAR in the
-    customer dimension (a pool×customers cross join would be
-    quadratic-ish and was measured unusable at 10×); the part-
-    validation and seen anti-join are both key-partitioned shuffle
-    joins; the final windows partition by customer. The max-partkey
-    probe is one driver scalar (the quantiles-machinery pattern).
-    """
-    from ..functions.keys import KNUTH
-
-    part = load(spark, "part", sf_dir).select("p_partkey")
-    cust = load(spark, "customer", sf_dir).select("c_custkey")
-    orders = load(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
-    li = load(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    maxp = part.agg(F.max("p_partkey")).first()[0]
-    draws = cust.select(
-        "c_custkey",
-        F.explode(F.sequence(F.lit(0), F.lit(_NEG_DRAWS - 1))).alias("draw"),
-    ).withColumn(
-        "guess",
-        1
-        + F.pmod(
-            F.pmod(
-                F.col("c_custkey").cast("long") * _NEG_PAIR_MULT
-                + F.col("draw") * _NEG_DRAW_SALT,
-                F.lit(2147483647),
-            )
-            * F.lit(KNUTH),
-            F.lit(2**32),
-        )
-        % F.lit(int(maxp)),
-    )
-    valid = draws.join(part, draws.guess == part.p_partkey).select(
-        "c_custkey", "draw", "p_partkey"
-    )
-    seen = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select("o_custkey", "l_partkey")
-        .distinct()
-    )
-    fresh = valid.join(
-        seen,
-        (valid.c_custkey == seen.o_custkey) & (valid.p_partkey == seen.l_partkey),
-        "left_anti",
-    )
-    dup_w = Window.partitionBy("c_custkey", "p_partkey").orderBy("draw")
-    rank_w = Window.partitionBy("c_custkey").orderBy("draw")
-    return (
-        fresh.withColumn("dup_rn", F.row_number().over(dup_w))
-        .filter(F.col("dup_rn") == 1)
-        .withColumn("neg_rank", F.row_number().over(rank_w))
-        .filter(F.col("neg_rank") <= _NEG_K)
-        .select(
-            "c_custkey",
-            "p_partkey",
-            F.col("neg_rank").cast("int").alias("neg_rank"),
-        )
     )
 
 

@@ -1,4 +1,4 @@
-"""localCheckpoint lifecycle: a session composing many global-order /
+"""localCheckpoint lifecycle: a session composing many near-dup /
 component queries must be able to return executor storage to
 baseline via the caller-scoped release hook (operators/lifecycle.py).
 Closes the one unbounded resource in the engine (NOTES.md
@@ -7,11 +7,11 @@ Closes the one unbounded resource in the engine (NOTES.md
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from museum_image_etl_gridfs_spark.operators.components import (
     connected_components,
 )
+from museum_image_etl_gridfs_spark.operators.dedup import minhash_near_duplicates
 from museum_image_etl_gridfs_spark.operators.lifecycle import (
     checkpoint_scope,
     release_checkpoints,
@@ -19,11 +19,7 @@ from museum_image_etl_gridfs_spark.operators.lifecycle import (
     tracked_count,
     tracked_local_checkpoint,
 )
-from museum_image_etl_gridfs_spark.operators.quantiles import (
-    global_row_number,
-    ntile_exact,
-    running_totals,
-)
+from museum_image_etl_gridfs_spark.operators.spans import duplicated_spans
 
 
 def _persistent_rdds(spark) -> int:
@@ -80,25 +76,34 @@ def test_checkpoint_scope_releases_only_inner(spark):
 
 
 def test_twenty_query_session_storage_returns_to_baseline(spark):
-    """The VERDICT r5 acceptance test: >=20 quantile/component queries
-    composed in one session, storage back to baseline after release."""
+    """The VERDICT r5 acceptance test: >=20 checkpointing near-dup /
+    component queries composed in one session, storage back to
+    baseline after release."""
     base = _persistent_rdds(spark)
-    df = spark.range(2000).selectExpr(
-        "cast(id % 97 as double) as v", "id % 13 as g", "id"
+    same = "the quick brown fox jumps over the lazy dog"
+    # 6 identical documents (one star of 5 pairs, one full-length span
+    # each) and 6 whose tokens occur nowhere else. A range source, not
+    # createDataFrame: the span inventory's size gate needs a Catalyst
+    # size estimate to checkpoint.
+    docs = spark.range(12).selectExpr(
+        "id as doc_id",
+        f"if(id < 6, '{same}', "
+        "concat_ws(' ', 'a' || id, 'b' || id, 'c' || id, 'd' || id)) as text",
     )
     # 30 stars
     edges = spark.range(300).selectExpr("id % 30 as id_a", "id as id_b")
 
-    for i in range(7):
+    for i in range(10):
         with checkpoint_scope(spark):
-            out = global_row_number(df, ["v", "id"], out_col="rn")
-            assert out.agg(F.max("rn")).first()[0] == 2000
+            pairs = minhash_near_duplicates(
+                docs, "doc_id", "text", k=3, num_hashes=16, bands=4
+            )
+            assert tracked_count(spark) >= 1
+            assert pairs.count() == 5
         with checkpoint_scope(spark):
-            out = ntile_exact(df, ["v", "id"], 4, out_col="q")
-            assert out.filter(F.col("q") == 4).count() > 0
-        with checkpoint_scope(spark):
-            out = running_totals(df, ["v", "id"], ["id"])
-            assert out.count() == 2000
+            spans = duplicated_spans(docs, k=3)
+            assert tracked_count(spark) >= 1
+            assert spans.count() == 6
         if i < 2:  # components creates no checkpoints to release
             comps = connected_components(edges)
             assert comps.select("component").distinct().count() == 30

@@ -85,18 +85,16 @@ PENDING_KEEP_DROP = (
     "gopher_dup_ngram_chars", "gopher_dup_line_stats",
     "filter_agreement_kappa",
     # queries_profile
-    "corpus_power_laws", "price_deciles", "customer_ltv_deciles",
+    "corpus_power_laws",
     # queries_funnel
     "inverted_index", "weighted_sample_topk",
     # queries_analytics
-    "brand_pagerank", "http_ingest_pipeline", "stream_merge_sink_roundtrip",
+    "http_ingest_pipeline", "stream_merge_sink_roundtrip",
     "binary_fetch_pipeline", "python_datasource_scan",
     "stream_unconverted_clicks", "stream_hourly_ohlc",
-    "pareto_frontier_parts",
     # queries_stats
-    "pmi_collocations", "recursive_brand_reach", "negative_sampling_pairs",
-    "incremental_near_dups", "brand_triangle_stats", "order_cluster_sample",
-    "schema_evolution_merge", "gini_customer_spend", "ks_returned_price",
+    "recursive_brand_reach", "incremental_near_dups",
+    "brand_triangle_stats", "order_cluster_sample", "schema_evolution_merge",
 )
 
 

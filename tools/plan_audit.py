@@ -53,7 +53,6 @@ EXPECTED_PYTHON = {
     "multimodal_transform",     # binary image codec
     "image_etl_gridfs",         # binary image codec
     "eval_contamination",        # vectorized bigram shingling
-    "pareto_frontier_parts",     # SFS skyline kernel (numpy)
     "http_ingest_pipeline",      # batch-HTTP fetch stage (S2/U1, hermetic)
     "binary_fetch_pipeline",     # binary blob fetch stage (S3/F2, hermetic)
     "prefix_join_near_dups",     # block-matrix intersection matmul
@@ -151,13 +150,6 @@ def main(argv: list[str]) -> int:
         "shuffle count, Python eval nodes (✓ = whitelisted in",
         "`EXPECTED_PYTHON`), file scans and how many push filters,",
         "broadcast joins.",
-        "",
-        "Raw exchange counts are a proxy, not a verdict: the global",
-        "ntile/row-number/running-sum rewrites deliberately trade ONE",
-        "single-partition window exchange for range-bucket exchanges",
-        "plus small driver-collected offset tables — more rows in this",
-        "column, no single-task stage anywhere",
-        "(`tests/test_quantiles.py` / `test_topk.py` pin that).",
         "",
         "| query | exchanges | python | scans | pushed | broadcasts |",
         "|---|---|---|---|---|---|",
