@@ -10,7 +10,7 @@ MongoDB/GridFS image-ETL pipeline), re-expressed Spark-first:
 - Pandas UDFs only where built-in operators cannot express the
   semantics (image transform, batch HTTP).
 - Scale extensions for LLM-training-data pipelines: dedup (exact,
-  MinHash-LSH, SimHash), similarity search, text analysis, streaming.
+  MinHash-LSH, SimHash), similarity search, text analysis.
 
 See SURVEY.md for the operator inventory this package implements.
 """

@@ -42,8 +42,9 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     TIMESTAMP(NANOS) — which the vectorized reader only accepts as raw
     int64 via ``nanosAsLong`` — and TIMESTAMP(MICROS) with
     ``isAdjustedToUTC=false``, which surfaces as TIMESTAMP_NTZ. Both
-    batch (:func:`load`) and streaming (``streaming.events_stream``)
-    paths share this one function so they cannot diverge again.
+    the batch (:func:`load`) and the streaming
+    (``plans.queries_events.events_stream``) readers share this one
+    function so they cannot diverge again.
     """
     from pyspark.sql import functions as F
 

@@ -2,7 +2,7 @@
 two versions of a keyed table.
 
 The reference's pipeline re-lists the source and skips already-loaded
-ids each run (incremental skip, /root/reference/src/transform_load.py);
+ids each run (the incremental skip, SURVEY.md §2.2 F3);
 a snapshot diff is the general form of that question — "what changed
 between these two table versions?" — answered distributively.
 

@@ -3,21 +3,18 @@
 Several operators truncate lineage with ``localCheckpoint`` (the
 MinHash signatures in :mod:`.dedup`, the span inventory in
 :mod:`.spans`, the exact-duplicate groups of the near-dup components
-query, the shared edge list in the OLAP graph queries, the streaming
-upsert snapshot). Checkpoint blocks live in executor
-MEMORY_AND_DISK until the RDD is unpersisted or the session dies —
-Spark has no automatic scope for them, so a long-lived session that
-composes many such queries accumulates storage without bound
-(NOTES.md "localCheckpoint lifecycle"). This module closes that hole:
+query, the shared edge list in the OLAP graph queries). Checkpoint
+blocks live in executor MEMORY_AND_DISK until the RDD is unpersisted
+or the session dies — Spark has no automatic scope for them, so a
+long-lived session that composes many such queries accumulates
+storage without bound (NOTES.md "localCheckpoint lifecycle"). This
+module closes that hole:
 
 - :func:`tracked_local_checkpoint` — drop-in for
   ``df.localCheckpoint(eager=...)`` that records the checkpointed
   RDD in a session-keyed registry;
 - :func:`release_checkpoints` — unpersist every tracked checkpoint
   (optionally only one session's), returning the count released;
-- :func:`release_df` — unpersist one tracked checkpoint early
-  (iterative operators release round ``i`` once round ``i+1`` is
-  materialized, capping in-flight storage at O(1) rounds);
 - :func:`checkpoint_scope` — context manager releasing exactly the
   checkpoints created inside the ``with`` block.
 
@@ -93,23 +90,6 @@ def tracked_local_checkpoint(df: DataFrame, *, eager: bool = False) -> DataFrame
     token = _NEXT_TOKEN = _NEXT_TOKEN + 1
     _TRACKED.append((token, _session_key(out), jrdd.id(), jrdd))
     return out
-
-
-def release_df(df: DataFrame) -> bool:
-    """Release ONE tracked checkpoint early (iterative loops retire
-    round ``i`` as soon as round ``i+1`` is materialized). True if the
-    DataFrame was a live tracked checkpoint; False (no-op) otherwise.
-    """
-    try:
-        rid = _checkpoint_rdd(df).id()
-    except Exception:
-        return False
-    for i, (_, _, tracked_id, jrdd) in enumerate(_TRACKED):
-        if tracked_id == rid:
-            jrdd.unpersist(False)
-            del _TRACKED[i]
-            return True
-    return False
 
 
 def release_checkpoints(spark=None) -> int:

@@ -57,8 +57,8 @@ Two rejected alternatives, measured at sf0.1/local[32]:
 
 Reference parity: the reference engine has no substring analytics at
 all (its only dedup is the whole-value pymongo ``$group``,
-``/root/reference/src/transform_load.py:48-50``); this module is part
-of the training-data-pipeline extension surface.
+SURVEY.md §2.4); this module is part of the training-data-pipeline
+extension surface.
 """
 
 from __future__ import annotations
@@ -370,9 +370,8 @@ def dup_ngram_char_fraction(
     the same 2⁻⁶⁴-per-pair trade :func:`duplicated_spans` documents.
 
     Reference parity: the reference engine has no text analytics
-    (its pipeline is fetch/resize/store,
-    /root/reference/src/transform_load.py); this operator is part of
-    the LLM-curation extension surface.
+    (its pipeline is fetch/resize/store, SURVEY.md §3); this
+    operator is part of the LLM-curation extension surface.
     """
     from ..partitioning import spread
 

@@ -1,11 +1,6 @@
-"""Advanced analytics wave (round 3): surfaces beyond the earlier
-families, each with an exact DuckDB oracle.
-
-- temporal: argmin/argmax OHLC (batch + streaming)
-- engine surfaces, driver-verified: foreachBatch MERGE sink
-  round-trip, the format("museum_api") Python DataSource and the
-  batch-HTTP/binary fetch pipelines on their hermetic transports,
-  stream-stream LEFT OUTER interval join
+"""Engine surfaces, driver-verified, each with an exact DuckDB oracle:
+the format("museum_api") Python DataSource and the batch-HTTP/binary
+fetch pipelines on their hermetic transports.
 
 The reference (a 501-LoC pymongo ETL) has none of these; they
 complete the large-scale training-data/analytics surface the task
@@ -19,53 +14,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from .registry import query
-
-
-@query(
-    "hourly_ohlc",
-    oracle="""
-    WITH e AS (
-        SELECT date_trunc('hour', ts) AS hour, value, ts, event_id,
-               row_number() OVER (
-                   PARTITION BY date_trunc('hour', ts)
-                   ORDER BY ts, event_id) AS rn_a,
-               row_number() OVER (
-                   PARTITION BY date_trunc('hour', ts)
-                   ORDER BY ts DESC, event_id DESC) AS rn_d
-        FROM events
-    )
-    SELECT hour,
-           max(CASE WHEN rn_a = 1 THEN value END) AS open_v,
-           max(value) AS high_v,
-           min(value) AS low_v,
-           max(CASE WHEN rn_d = 1 THEN value END) AS close_v,
-           CAST(count(*) AS BIGINT) AS n_events
-    FROM e
-    GROUP BY hour
-    """,
-    tags=("argmin", "min_by", "timeseries", "events"),
-)
-def hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly OHLC bars over the event value stream — the argmin/argmax
-    aggregation surface (min_by/max_by family).
-
-    Open/close are computed as single-pass struct-min/struct-max
-    aggregates (lexicographic on (ts, event_id, value); event_id
-    breaks ts ties deterministically) — one shuffle on the hour key
-    with map-side partials, no window sort. The oracle takes the
-    window-function route to the same rows, cross-checking Spark's
-    struct-ordering semantics against row_number ordering.
-    """
-    ev = load(spark, "events", sf_dir)
-    hour = F.date_trunc("hour", F.col("ts")).alias("hour")
-    pick = F.struct("ts", "event_id", "value")
-    return ev.groupBy(hour).agg(
-        F.min(pick)["value"].alias("open_v"),
-        F.max("value").alias("high_v"),
-        F.min("value").alias("low_v"),
-        F.max(pick)["value"].alias("close_v"),
-        F.count(F.lit(1)).alias("n_events"),
-    )
 
 
 @query(
@@ -123,7 +71,7 @@ def http_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scratch_dir(family: str, sf_dir: str) -> str:
-    """Per-run unique scratch dir for sink round-trips, removed at
+    """Per-run unique scratch dir for write/read round-trips, removed at
     process exit (unique so concurrent runs never race on each
     other's files; atexit-bounded so sweeps don't accumulate /tmp
     litter)."""
@@ -140,54 +88,6 @@ def _scratch_dir(family: str, sf_dir: str) -> str:
     )
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     return out
-
-
-@query(
-    "stream_merge_sink_roundtrip",
-    oracle="""
-    SELECT event_id, user_id, event_type, value FROM events
-    """,
-    tags=("streaming", "foreachBatch", "merge-sink", "cdc"),
-)
-def stream_merge_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """foreachBatch MERGE sink, driver-verified: a keyed table is
-    seeded with a STALE snapshot (even event_ids, values corrupted by
-    +1000), the full event stream is applied through
-    ``run_foreach_batch_upsert`` (availableNow CDC-apply), and the
-    table is read back.
-
-    A correct MERGE must overwrite every stale row and insert every
-    missing one, so the final state equals the clean events table —
-    anything less (missed matches, dropped inserts, duplicate keys)
-    hash-mismatches the oracle. The sink surface was previously
-    pytest-only.
-    """
-    import os
-
-    from ..streaming.events import events_stream, run_foreach_batch_upsert
-
-    root = _scratch_dir("museum_etl_merge_demo", sf_dir)
-    target = os.path.join(root, "target")
-    ckpt = os.path.join(root, "ckpt")
-
-    cols = ["event_id", "ts", "user_id", "event_type", "value"]
-    stale = (
-        load(spark, "events", sf_dir)
-        .select(*cols)
-        .filter(F.col("event_id") % 2 == 0)
-        .withColumn("value", F.col("value") + F.lit(1000.0))
-    )
-    stale.write.parquet(target)
-
-    run_foreach_batch_upsert(
-        events_stream(spark, sf_dir).select(*cols),
-        target,
-        ["event_id"],
-        ckpt,
-    )
-    return spark.read.parquet(target).select(
-        "event_id", "user_id", "event_type", "value"
-    )
 
 
 @query(
@@ -300,114 +200,4 @@ def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "status",
         F.col("doc.lang").alias("lang"),
         F.col("doc.n_chars").cast("long").alias("n_chars"),
-    )
-
-
-@query(
-    "stream_unconverted_clicks",
-    oracle="""
-    WITH clicks AS (
-        SELECT user_id AS cu, event_id AS click_id, ts AS cts
-        FROM events WHERE event_type = 'click'
-    ),
-    purch AS (
-        SELECT user_id AS pu, event_id AS purchase_id, ts AS pts
-        FROM events WHERE event_type = 'purchase'
-    ),
-    -- Spark's GLOBAL watermark under the default min policy is the
-    -- minimum of the per-side watermarks, and each side's watermark
-    -- is computed over its own (post-filter) max event time — NOT
-    -- max(ts) over all events (the sides see only their filtered
-    -- streams).
-    wm AS (
-        -- if either side is EMPTY its Spark watermark never advances,
-        -- the min-policy global watermark stays at epoch 0 and no
-        -- null-extension ever emits; a bare least() would silently
-        -- ignore the NULL side (DuckDB least skips NULLs)
-        SELECT CASE WHEN (SELECT max(cts) FROM clicks) IS NULL
-                      OR (SELECT max(pts) FROM purch) IS NULL THEN NULL
-                    ELSE least((SELECT max(cts) FROM clicks),
-                               (SELECT max(pts) FROM purch))
-                         - INTERVAL 1 HOUR END AS w
-    )
-    SELECT cu AS user_id, click_id, purchase_id
-    FROM clicks JOIN purch
-      ON pu = cu AND pts >= cts AND pts <= cts + INTERVAL 30 MINUTE
-    UNION ALL
-    SELECT cu AS user_id, click_id, CAST(NULL AS BIGINT) AS purchase_id
-    FROM clicks
-    WHERE NOT EXISTS (
-        SELECT 1 FROM purch
-        WHERE pu = cu AND pts >= cts AND pts <= cts + INTERVAL 30 MINUTE
-    )
-      AND cts + INTERVAL 30 MINUTE < (SELECT w FROM wm)
-    """,
-    tags=("streaming", "stream-stream-join", "outer-join", "extension"),
-)
-def stream_unconverted_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join
-    (streaming/events.py::stream_click_purchase_left_outer): clicks
-    paired with in-window purchases, null-extended once the watermark
-    proves no purchase can still arrive.
-
-    Evidence-of-absence is the semantics only a watermark can
-    certify on a stream; the oracle replays the emission rule exactly
-    — unmatched clicks emit iff click_ts + 30 min < the final GLOBAL
-    watermark, which under Spark's default min multiple-watermark
-    policy is least(max click_ts, max purchase_ts) - 1 h (each side's
-    watermark tracks its own post-filter stream). Younger clicks stay
-    buffered at stream end. State for both sides evicts continuously
-    at watermark + lag, the only viable shape on an unbounded stream.
-    """
-    import uuid
-
-    from ..streaming.events import (
-        events_stream,
-        run_to_memory,
-        stream_click_purchase_left_outer,
-    )
-
-    return run_to_memory(
-        stream_click_purchase_left_outer(events_stream(spark, sf_dir)),
-        f"q_louter_{uuid.uuid4().hex[:8]}",
-        output_mode="append",
-    )
-
-
-@query(
-    "stream_hourly_ohlc",
-    oracle="""
-    WITH e AS (
-        SELECT date_trunc('hour', ts) AS window_start, value, ts, event_id,
-               row_number() OVER (
-                   PARTITION BY date_trunc('hour', ts)
-                   ORDER BY ts, event_id) AS rn_a,
-               row_number() OVER (
-                   PARTITION BY date_trunc('hour', ts)
-                   ORDER BY ts DESC, event_id DESC) AS rn_d
-        FROM events
-    )
-    SELECT window_start,
-           max(CASE WHEN rn_a = 1 THEN value END) AS open_v,
-           max(value) AS high_v,
-           min(value) AS low_v,
-           max(CASE WHEN rn_d = 1 THEN value END) AS close_v,
-           CAST(count(*) AS BIGINT) AS n_events
-    FROM e
-    GROUP BY window_start
-    """,
-    tags=("streaming", "argmin", "timeseries", "extension"),
-)
-def stream_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of ``hourly_ohlc``: watermarked tumbling-window
-    OHLC bars drained with availableNow (batch-equivalent), so the
-    batch window-function oracle hash-checks the streaming argmin/
-    argmax state machinery."""
-    import uuid
-
-    from ..streaming import events_stream, run_to_memory, stream_hourly_ohlc_bars
-
-    return run_to_memory(
-        stream_hourly_ohlc_bars(events_stream(spark, sf_dir)),
-        f"q_ohlc_{uuid.uuid4().hex[:8]}",
     )

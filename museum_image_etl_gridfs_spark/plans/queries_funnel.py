@@ -1,16 +1,12 @@
-"""Event-sequence analytics, inverted-index build and weighted sampling.
+"""Inverted-index build and weighted sampling.
 
-The ordered-funnel product-analytics shape over ``events``, a two-pass
-inverted-index build and a deterministic weighted sample over
-``documents`` — the aggregation patterns a
-training-data / analytics user runs daily that the reference's
-row-at-a-time loops could only express by materializing everything
-client-side (cf. /root/reference/src/transform_load.py's full-table
-cursor iteration).
+A two-pass inverted-index build and a deterministic weighted sample
+over ``documents`` — aggregation patterns a training-data / analytics
+user runs daily that the reference's row-at-a-time loops could only
+express by materializing everything client-side (its full-table
+cursor iteration, SURVEY.md §3.2).
 
 Scale notes (100 TB):
-- funnel: ONE shuffle on ``user_id`` with map-side partial min();
-  the final global rollup reduces per-partition partials only.
 - inverted index: COUNT-FIRST two-pass — postings lists are collected
   only for terms that survive the document-frequency band, so no
   executor ever materializes the posting list of a stopword-class hot
@@ -30,53 +26,6 @@ from .registry import query
 #: lowercased whitespace word array (canonical mirror of
 #: functions/quality.words — single shared constant)
 _SQL_WORDS_LOWER = Q.WORDS_SQL_LOWER
-
-
-@query(
-    "event_funnel",
-    oracle="""
-    WITH u AS (
-        SELECT user_id,
-               min(ts) FILTER (WHERE event_type = 'view') AS t_view,
-               min(ts) FILTER (WHERE event_type = 'click') AS t_click,
-               min(ts) FILTER (WHERE event_type = 'purchase') AS t_purchase
-        FROM events GROUP BY user_id)
-    SELECT CAST(count(t_view) AS BIGINT) AS viewed,
-           CAST(count(*) FILTER (WHERE t_click > t_view) AS BIGINT)
-               AS clicked_after_view,
-           CAST(count(*) FILTER (WHERE t_click > t_view
-                                 AND t_purchase > t_click) AS BIGINT)
-               AS purchased_full_path
-    FROM u
-    """,
-    tags=("events", "funnel", "extension"),
-)
-def event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered view→click→purchase funnel: users counted at each step
-    only if the step's FIRST occurrence follows the previous step's
-    first occurrence (strict event-time order, not mere presence).
-
-    NULL comparison semantics do the step gating for free: a user with
-    no click has ``t_click > t_view`` evaluate to NULL, which a
-    ``count(when(...))`` skips — identical to the oracle's FILTER.
-    """
-    ev = load(spark, "events", sf_dir)
-
-    def first_ts(etype: str) -> F.Column:
-        return F.min(F.when(F.col("event_type") == etype, F.col("ts")))
-
-    u = ev.groupBy("user_id").agg(
-        first_ts("view").alias("t_view"),
-        first_ts("click").alias("t_click"),
-        first_ts("purchase").alias("t_purchase"),
-    )
-    clicked = F.col("t_click") > F.col("t_view")
-    purchased = clicked & (F.col("t_purchase") > F.col("t_click"))
-    return u.agg(
-        F.count("t_view").alias("viewed"),
-        F.count(F.when(clicked, 1)).alias("clicked_after_view"),
-        F.count(F.when(purchased, 1)).alias("purchased_full_path"),
-    )
 
 
 @query(

@@ -929,7 +929,7 @@ def gopher_dup_ngram_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-local — the whole plan rides ONE exchange on doc_id.
 
     Reference parity: no text analytics in the reference
-    (/root/reference/src/transform_load.py) — extension surface.
+    (SURVEY.md §3.2) — extension surface.
     """
     from ..operators.spans import dup_ngram_char_fraction
 
@@ -1037,7 +1037,7 @@ def gopher_dup_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize+chunk+sort tree per element: 40 s for 500 docs.
 
     Reference parity: no text analytics in the reference
-    (/root/reference/src/transform_load.py) — extension surface.
+    (SURVEY.md §3.2) — extension surface.
     """
     docs = spread(load(spark, "documents", sf_dir), "doc_id")
     # tokenizer staged in its own projection (r12): token_chunks'

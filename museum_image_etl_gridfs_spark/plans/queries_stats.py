@@ -12,10 +12,9 @@ DuckDB oracle:
 - engine surfaces: ``recursive_brand_reach`` (Spark 4 WITH RECURSIVE),
   ``schema_evolution_merge`` (mergeSchema read).
 
-The reference (a 501-LoC row-at-a-time pymongo ETL,
-/root/reference/src/transform_load.py) has no aggregate surface at
-all; these extend the large-scale curation/audit surface scoped in
-SURVEY.md §2.12 / COVERAGE.md.
+The reference (a 501-LoC row-at-a-time pymongo ETL, SURVEY.md §3)
+has no aggregate surface at all; these extend the large-scale
+curation/audit surface scoped in SURVEY.md §2.12 / COVERAGE.md.
 
 Cross-engine determinism: every money/stat sum is routed through
 DECIMAL (exact, order-independent); per-row doubles are produced by

@@ -15,7 +15,6 @@ from museum_image_etl_gridfs_spark.operators.dedup import minhash_near_duplicate
 from museum_image_etl_gridfs_spark.operators.lifecycle import (
     checkpoint_scope,
     release_checkpoints,
-    release_df,
     tracked_count,
     tracked_local_checkpoint,
 )
@@ -46,20 +45,6 @@ def test_tracked_checkpoint_round_trip(spark):
     assert release_checkpoints(spark) >= 1
     assert _persistent_rdds(spark) == base
     assert tracked_count(spark) == 0
-
-
-def test_release_df_is_targeted(spark):
-    base = _persistent_rdds(spark)
-    a = tracked_local_checkpoint(spark.range(10), eager=True)
-    b = tracked_local_checkpoint(spark.range(20), eager=True)
-    assert _persistent_rdds(spark) == base + 2
-    assert release_df(a)
-    assert _persistent_rdds(spark) == base + 1
-    assert b.count() == 20  # untouched checkpoint still live
-    # a plain (untracked) DataFrame is a no-op, not an error
-    assert not release_df(spark.range(5))
-    assert release_checkpoints(spark) == 1
-    assert _persistent_rdds(spark) == base
 
 
 def test_checkpoint_scope_releases_only_inner(spark):

@@ -1,17 +1,11 @@
 """Cross-micro-batch state: the single-file fixtures drain in ONE
-availableNow batch, so these tests re-shard events into multiple
-files and force several micro-batches (maxFilesPerTrigger), proving
-the stateful operators carry state BETWEEN batches:
-
-- per-user running totals (no watermark): order-insensitive state —
-  final per-user emission must equal the batch aggregate no matter
-  how rows split across batches;
-- tumbling window counts (watermarked): with time-ordered file
-  arrival (a production stream's shape) multi-batch results must
-  equal the batch aggregate — windows closed in early batches are
-  merged correctly, late-batch rows within the delay are not dropped;
-- event-time-timeout sessions: sessions spanning a batch boundary
-  must close once (not once per batch fragment).
+availableNow batch, so this test re-shards events into multiple files
+and forces several micro-batches (maxFilesPerTrigger), proving the
+watermarked tumbling-window aggregate carries state BETWEEN batches:
+with time-ordered file arrival (a production stream's shape)
+multi-batch results must equal the batch aggregate — windows closed in
+early batches are merged correctly, late-batch rows within the delay
+are not dropped.
 """
 
 from __future__ import annotations
@@ -22,11 +16,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from museum_image_etl_gridfs_spark.catalog import load, normalize_events_ts
-from museum_image_etl_gridfs_spark.streaming import (
-    stream_expiring_sessions,
-    stream_tumbling_counts,
-    stream_user_running_totals,
-)
+from museum_image_etl_gridfs_spark.plans.queries_events import hourly_counts
 
 N_FILES = 6
 PER_TRIGGER = 2  # -> 3 micro-batches
@@ -67,11 +57,11 @@ def _multi_batch_stream(spark, path):
     return normalize_events_ts(raw)
 
 
-def _drain(stream, name, output_mode):
+def _drain(stream, name):
     q = (
         stream.writeStream.format("memory")
         .queryName(name)
-        .outputMode(output_mode)
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
@@ -80,56 +70,10 @@ def _drain(stream, name, output_mode):
     return stream.sparkSession.table(name)
 
 
-def test_running_totals_state_survives_batch_boundaries(
-    spark, sf_dir, sharded_events_dir
-):
-    ev = _multi_batch_stream(spark, sharded_events_dir)
-    got = _drain(stream_user_running_totals(ev), "mb_totals", "update")
-    # update mode emits once per (batch, active user): keep each
-    # user's LAST emission (n_events is monotone)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    final = (
-        got.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    want = (
-        load(spark, "events", sf_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-    )
-    j = final.alias("g").join(want.alias("w"), "user_id")
-    assert final.count() == want.count()
-    assert (
-        j.filter(
-            (F.col("g.n_events") != F.col("w.n_events"))
-            | (F.abs(F.col("g.total_value") - F.col("w.total_value")) > 1e-6)
-        ).count()
-        == 0
-    )
-
-
 def test_tumbling_windows_merge_across_batches(spark, sf_dir, sharded_events_dir):
     ev = _multi_batch_stream(spark, sharded_events_dir)
-    got = _drain(stream_tumbling_counts(ev), "mb_tumbling", "append")
-    want = (
-        load(spark, "events", sf_dir)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n", "sum_value"
-        )
-    )
+    got = _drain(hourly_counts(ev.withWatermark("ts", "2 hours")), "mb_tumbling")
+    want = hourly_counts(load(spark, "events", sf_dir))
     # append emits only watermark-closed windows: every emitted row
     # must match the batch aggregate exactly, and only the tail
     # windows (within the 2h delay of the final event) may be missing
@@ -140,47 +84,3 @@ def test_tumbling_windows_merge_across_batches(spark, sf_dir, sharded_events_dir
 
     horizon = max_ts - datetime.timedelta(hours=3)  # 2h delay + 1h window
     assert missing.filter(F.col("window_start") < horizon).count() == 0
-
-
-def test_sessions_close_exactly_once_across_batches(
-    spark, sf_dir, sharded_events_dir
-):
-    ev = _multi_batch_stream(spark, sharded_events_dir)
-    got = _drain(stream_expiring_sessions(ev), "mb_sessions", "append")
-    # exactly-once: no (user, session_start) may be emitted twice
-    dupes = (
-        got.groupBy("user_id", "session_start")
-        .count()
-        .filter(F.col("count") > 1)
-    )
-    assert dupes.count() == 0
-    # and every emitted session must match a batch-derived session
-    from pyspark.sql import Window
-
-    w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # ms granularity like the operator (cast-long*1000 floors to
-    # SECONDS and can miss a near-30-min-boundary split)
-    gap_ms = F.unix_millis(F.col("ts")) - F.lag(
-        F.unix_millis(F.col("ts"))
-    ).over(w_order)
-    ns = F.when(gap_ms.isNull() | (gap_ms > 1_800_000), 1).otherwise(0)
-    ev_b = load(spark, "events", sf_dir)
-    sess = (
-        ev_b.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.sum(ns)
-            .over(
-                w_order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            .alias("sid"),
-        )
-        .groupBy("user_id", "sid")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    batch_counts = {
-        (r["user_id"], r["n_events"]) for r in sess.collect()
-    }
-    for r in got.collect():
-        assert (r["user_id"], r["n_events"]) in batch_counts

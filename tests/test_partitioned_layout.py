@@ -10,9 +10,6 @@ files of other splits are read.
 
 from __future__ import annotations
 
-import shutil
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,12 +17,11 @@ from museum_image_etl_gridfs_spark.plans import all_queries
 
 
 @pytest.fixture(scope="module")
-def partitioned_dir(spark, sf_dir):
-    out = f"/root/repo/.tmp_split_{uuid.uuid4().hex[:8]}"
+def partitioned_dir(spark, sf_dir, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("split") / "out")
     df = all_queries()["museum_pipeline"].build(spark, sf_dir)
     df.write.mode("overwrite").partitionBy("split").parquet(out)
-    yield out, df
-    shutil.rmtree(out, ignore_errors=True)
+    return out, df
 
 
 def test_partitioned_roundtrip(spark, partitioned_dir):

@@ -10,8 +10,6 @@ every 100 TB stream depends on.
 
 from __future__ import annotations
 
-import shutil
-import uuid
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -47,44 +45,40 @@ def _drain(spark, src, out, ckpt):
     q.awaitTermination()
 
 
-def test_late_event_does_not_reopen_closed_window(spark):
-    base = f"/root/repo/.tmp_late_{uuid.uuid4().hex[:8]}"
-    src, out, ckpt = f"{base}/src", f"{base}/out", f"{base}/ckpt"
+def test_late_event_does_not_reopen_closed_window(spark, tmp_path):
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
     t = lambda s: datetime.fromisoformat(f"2024-01-01T{s}:00")
-    try:
-        # batch 1: two events in the 10:00 window, one in 11:00, and a
-        # 13:00 event that advances the watermark to 12:30 — closing
-        # (and emitting) the 10:00 and 11:00 windows
-        _write_events(spark, src, [
-            (1, t("10:05"), 1, "click", 1.0),
-            (2, t("10:10"), 1, "click", 1.0),
-            (3, t("11:05"), 2, "click", 1.0),
-            (4, t("13:00"), 3, "click", 1.0),
-        ])
-        _drain(spark, src, out, ckpt)
-        first = {
-            r["window_start"]: r["n"] for r in spark.read.parquet(out).collect()
-        }
-        assert first[t("10:00")] == 2
-        assert first[t("11:00")] == 1
-        assert t("13:00") not in first  # still open
+    # batch 1: two events in the 10:00 window, one in 11:00, and a
+    # 13:00 event that advances the watermark to 12:30 — closing
+    # (and emitting) the 10:00 and 11:00 windows
+    _write_events(spark, src, [
+        (1, t("10:05"), 1, "click", 1.0),
+        (2, t("10:10"), 1, "click", 1.0),
+        (3, t("11:05"), 2, "click", 1.0),
+        (4, t("13:00"), 3, "click", 1.0),
+    ])
+    _drain(spark, src, out, ckpt)
+    first = {
+        r["window_start"]: r["n"] for r in spark.read.parquet(out).collect()
+    }
+    assert first[t("10:00")] == 2
+    assert first[t("11:00")] == 1
+    assert t("13:00") not in first  # still open
 
-        # batch 2: a LATE event for the closed 10:00 window (watermark
-        # is 12:30) plus a 15:00 event that closes the 13:00 window
-        _write_events(spark, src, [
-            (5, t("10:20"), 1, "click", 1.0),  # late -> dropped
-            (6, t("15:00"), 3, "click", 1.0),
-        ])
-        _drain(spark, src, out, ckpt)
-        final = spark.read.parquet(out).collect()
-        counts: dict = {}
-        for r in final:
-            counts.setdefault(r["window_start"], []).append(r["n"])
+    # batch 2: a LATE event for the closed 10:00 window (watermark
+    # is 12:30) plus a 15:00 event that closes the 13:00 window
+    _write_events(spark, src, [
+        (5, t("10:20"), 1, "click", 1.0),  # late -> dropped
+        (6, t("15:00"), 3, "click", 1.0),
+    ])
+    _drain(spark, src, out, ckpt)
+    final = spark.read.parquet(out).collect()
+    counts: dict = {}
+    for r in final:
+        counts.setdefault(r["window_start"], []).append(r["n"])
 
-        # the closed 10:00 window was neither re-emitted nor mutated
-        assert counts[t("10:00")] == [2]
-        assert counts[t("11:00")] == [1]
-        # the 13:00 window closed in batch 2 with exactly its event
-        assert counts[t("13:00")] == [1]
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    # the closed 10:00 window was neither re-emitted nor mutated
+    assert counts[t("10:00")] == [2]
+    assert counts[t("11:00")] == [1]
+    # the 13:00 window closed in batch 2 with exactly its event
+    assert counts[t("13:00")] == [1]

@@ -37,11 +37,10 @@ SHIFTS: dict[str, list[str]] = {
 }
 
 #: FK columns shifted with the PK of the table they reference.
-#: events.user_id joins customer.c_custkey (stream_enriched_segments
-#: etc.), so it must shift by the CUSTOMER key domain — shifting it by
-#: its own (smaller) max would land every copy's events inside copy
-#: 0's customer range, skewing and mis-associating the joins the
-#: synthesized SF exists to validate.
+#: events.user_id references customer.c_custkey, so it must shift by
+#: the CUSTOMER key domain — shifting it by its own (smaller) max would
+#: land every copy's events inside copy 0's customer range, skewing and
+#: mis-associating any events-customer join run on the synthesized SF.
 _DOMAIN_OF = {
     "o_custkey": ("customer", "c_custkey"),
     "l_orderkey": ("orders", "o_orderkey"),
