@@ -7,8 +7,9 @@ the block-local cell pairs cross-join. Per cell pair, numpy builds
 the two token-incidence matrices over the pair's vocabulary and gets
 every intersection count from one float matmul
 (|A∩B| = Ia @ Ib.T; |A∪B| = |a| + |b| - |A∩B|). The sub-block count
-is derived from one measured aggregate, so cells stay memory-bounded
-at any scale factor while still filling every core.
+is derived from one measured aggregate, a Spark job run when the plan
+is built, so cells stay memory-bounded at any scale factor while
+still filling every core.
 
 The exact near-dup pair queries (``near_dup_components_exact``,
 ``prefix_join_near_dups`` and ``incremental_near_dups``) run through
@@ -21,6 +22,10 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: rows per sub-block: the inter/union/jac matrices grow quadratically
+#: with it (~20 B per pair entry across the three, ~84 MB at 2048)
+_TARGET_SUB_ROWS = 2048
 
 
 def _np_id_dtype(spark_type: str) -> str:
@@ -68,8 +73,6 @@ def jaccard_pairs_blocked(
     block_col: str | None = None,
     threshold: float = 0.5,
     new_col: str | None = None,
-    n_sub_blocks: int | None = None,
-    target_sub_rows: int = 2048,
 ) -> DataFrame:
     """All-pairs exact token-set Jaccard ≥ threshold, block-matrix
     style. The engine's one exact Jaccard-threshold join: every exact
@@ -84,27 +87,19 @@ def jaccard_pairs_blocked(
     ``threshold`` must be > 0: diagonal cells zero their id_a ≥ id_b
     entries, so a non-positive threshold would re-admit them.
 
-    ``n_sub_blocks`` is DERIVED by default from ONE measured
-    aggregate (max blocking-group size + group count) under two
+    The sub-block count is derived from ONE measured aggregate (max
+    blocking-group size + group count), run at build time, under two
     constraints (a fixed block count once turned into a
     2.8 GB-per-task / 417 s cliff at sf3):
 
-    - memory ceiling: sub-blocks stay ≈ ``target_sub_rows`` rows —
-      the inter/union/jac matrices grow QUADRATICALLY with sub-block
-      size (~20 B per pair entry across the three ⇒ ~84 MB bounded
-      at the 2048 default), so any count tuned at one SF is a memory
-      cliff at the next;
+    - memory ceiling: sub-blocks stay ≈ ``_TARGET_SUB_ROWS`` rows,
+      so no count tuned at one SF becomes a memory cliff at the next;
     - parallelism floor: enough (block, sub-pair) cells to give every
       core ~4, i.e. n_keys·subs²/2 ≳ 4·defaultParallelism — a
       memory-only derivation picked subs=2 at sf1 (60 cells / 32
       cores) and ran 35 s where subs=4 ran 4.5 s; packed-row
       replication grows linearly with subs, so the floor targets
       cells-per-core, not a fixed count.
-
-    The derivation is one cheap column-pruned aggregate at build
-    time; callers that must stay lazy (explain-only plan audits) pass
-    ``n_sub_blocks`` explicitly — that parameter IS the
-    precomputed-count path.
 
     ``new_col`` (boolean column; NULL counts as old) switches on
     INCREMENTAL mode — "dedup today's batch against the standing
@@ -118,18 +113,15 @@ def jaccard_pairs_blocked(
     if threshold <= 0:
         raise ValueError("jaccard_pairs_blocked: threshold must be > 0")
     blk = F.col(block_col) if block_col else F.lit(0)
-    if n_sub_blocks is None:
-        mx, nk = (
-            docs.select(blk.alias("__blk"))
-            .groupBy("__blk")
-            .count()
-            .agg(F.max("count"), F.count(F.lit(1)))
-            .first()
-        )
-        para = docs.sparkSession.sparkContext.defaultParallelism
-        n_sub_blocks = _sub_blocks_for(
-            mx or 0, nk or 1, para, target_sub_rows
-        )
+    mx, nk = (
+        docs.select(blk.alias("__blk"))
+        .groupBy("__blk")
+        .count()
+        .agg(F.max("count"), F.count(F.lit(1)))
+        .first()
+    )
+    para = docs.sparkSession.sparkContext.defaultParallelism
+    n_sub_blocks = _sub_blocks_for(mx or 0, nk or 1, para, _TARGET_SUB_ROWS)
     new = (
         F.coalesce(F.col(new_col).cast("boolean"), F.lit(False))
         if new_col
@@ -159,7 +151,6 @@ def jaccard_pairs_blocked(
     # |blocks|-wide on any machine (measured 8/32 cores busy, 40 s →
     # 17 s solo at sf1). The extra exchange moves the packed rows
     # once more — cheap next to the numpy stage it parallelizes.
-    para = docs.sparkSession.sparkContext.defaultParallelism
     pairs = (
         packed.alias("a")
         .join(packed.alias("b"), cond)

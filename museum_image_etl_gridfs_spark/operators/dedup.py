@@ -26,7 +26,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType
 
 from ..partitioning import spread
 
@@ -85,13 +84,13 @@ def exact_dedup(df: DataFrame, columns: Sequence[str] | None = None) -> DataFram
 # ANSI overflow checking (Spark 4 default).
 _MERSENNE = (1 << 31) - 1
 
-#: ceiling (bytes, estimated as docs × (8·num_hashes + struct slack)
-#: plus the ids' bytes) under which the per-doc signature relation is
-#: BROADCAST into the post-candidate join instead of shuffle-joined.
-#: 64 MiB matches the session's autoBroadcastJoinThreshold; the
-#: checkpointed relation has no Catalyst stats, so the planner would
-#: never broadcast it unaided.
-_SIG_BROADCAST_MAX_BYTES = 64 << 20
+#: coefficient seed of the MinHash universal hashes
+_SEED = 42
+
+#: largest post-collapse bucket compared in one task; a bigger bucket
+#: is split into ``ceil(g / _BUCKET_CAP)`` chunks (see
+#: :func:`minhash_near_duplicates`)
+_BUCKET_CAP = 4096
 
 
 def _rand_coeffs(n: int, seed: int) -> list[tuple[int, int]]:
@@ -142,8 +141,7 @@ def shingle_hashes(shingle_col) -> "F.Column":
 
 
 def _minhash_doc_rows(
-    id_field, k: int, num_hashes: int, bands: int, seed: int,
-    with_new: bool = False,
+    id_field, k: int, num_hashes: int, bands: int, with_new: bool = False,
 ):
     """mapInArrow worker: (id, text, fp) batches -> ONE row per
     document: (id, fp, sig array<long>, bhs array<long>) (+ the
@@ -172,7 +170,7 @@ def _minhash_doc_rows(
     import numpy as np
     import pyarrow as pa
 
-    coeffs = _rand_coeffs(num_hashes, seed)
+    coeffs = _rand_coeffs(num_hashes, _SEED)
     a = np.array([c[0] for c in coeffs], dtype=np.uint64)[:, None]
     b = np.array([c[1] for c in coeffs], dtype=np.uint64)[:, None]
     p = np.uint64(_MERSENNE)
@@ -254,10 +252,7 @@ def minhash_near_duplicates(
     k: int = 5,
     num_hashes: int = 64,
     bands: int = 16,
-    seed: int = 42,
     min_jaccard: float = 0.5,
-    num_partitions: int | None = None,
-    bucket_cap: int = 4096,
     new_col: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding.
@@ -313,10 +308,10 @@ def minhash_near_duplicates(
       distinct texts) would mark two different texts 1.0 — the
       standard content-fingerprint trade.
     - **2D block decomposition.** A bucket still larger than
-      ``bucket_cap`` after the collapse (many *distinct* near-identical
-      docs) is split into ``ceil(g / bucket_cap)`` chunks; every chunk
+      ``_BUCKET_CAP`` after the collapse (many *distinct* near-identical
+      docs) is split into ``ceil(g / _BUCKET_CAP)`` chunks; every chunk
       pair (i <= j) becomes its own task, so each task compares at
-      most ``2 * bucket_cap`` signatures while the full pair set is
+      most ``2 * _BUCKET_CAP`` signatures while the full pair set is
       still produced EXACTLY — no silent cap, no dropped candidates.
       Replication factor per member is ``nchunks``, so total work
       remains the bucket's inherent O(g^2/2), just bounded per task.
@@ -331,11 +326,6 @@ def minhash_near_duplicates(
     candidate pairs are band-local so cost tracks true-duplicate
     density, not n^2.
 
-    Eager work at build time: ONE aggregate job over the checkpointed
-    sketch (row count and total id bytes). It materializes the lazy
-    checkpoint and sizes the signature relation for the broadcast gate
-    (``_SIG_BROADCAST_MAX_BYTES``).
-
     Sketching is CPU-bound, not IO-bound: parallelism must track
     cores, not input bytes. A small input (one parquet row group)
     would otherwise run the whole sketch on a single core — and AQE
@@ -347,8 +337,6 @@ def minhash_near_duplicates(
     rows_per_band = num_hashes // bands
     if rows_per_band * bands != num_hashes:
         raise ValueError("num_hashes must be divisible by bands")
-    if bucket_cap < 2:
-        raise ValueError("bucket_cap must be at least 2")
     # normalize once: the guards below mix truthiness (`if new_col`)
     # with identity (`new_col is not None` in the pair kernel); an
     # empty-string argument would build members WITHOUT an is_new
@@ -363,9 +351,9 @@ def minhash_near_duplicates(
     ]
     if new_col:
         src_cols.append(F.col(new_col).cast("boolean").alias("is_new"))
-    src = spread(df, id_col, target=num_partitions).select(*src_cols)
+    src = spread(df, id_col).select(*src_cols)
     fn, schema = _minhash_doc_rows(
-        src.schema["id"], k, num_hashes, bands, seed, with_new=bool(new_col)
+        src.schema["id"], k, num_hashes, bands, with_new=bool(new_col)
     )
     # ONE sketch pass, materialized (r13, guide §2.3/§2.4): the
     # per-doc sketch relation — (id, fp, 64-long sig, band hashes),
@@ -453,7 +441,7 @@ def minhash_near_duplicates(
         .filter(F.col("g") > 1)
         .withColumn("rn", F.row_number().over(w_b.orderBy("id")))
         .withColumn(
-            "nchunks", F.ceil(F.col("g") / F.lit(bucket_cap)).cast("int")
+            "nchunks", F.ceil(F.col("g") / F.lit(_BUCKET_CAP)).cast("int")
         )
         .withColumn("chunk", ((F.col("rn") - 1) % F.col("nchunks")).cast("int"))
     )
@@ -461,26 +449,10 @@ def minhash_near_duplicates(
     # "shuffle keys and metadata instead of payloads"): ``kept`` holds
     # the band rows that survived the fp-collapse in a bucket with ≥2
     # distinct texts — usually a small fraction of the fan-out. The
-    # per-doc sig relation reads the checkpoint (never re-sketches);
-    # it is broadcast when provably small (one cheap aggregate over the
-    # checkpoint blocks), else a
-    # shuffle join that still moves each signature once instead of
-    # ``bands`` times. The estimate counts the ids' own bytes: string
-    # and binary ids by their measured octet length, others by their
-    # fixed type width.
-    sig_rel = sk.select("id", "sig")
-    id_dt = sk.schema["id"].dataType
-    if isinstance(id_dt, (StringType, BinaryType)):
-        id_bytes = F.sum(F.octet_length("id"))
-    else:
-        jvm_types = sk.sparkSession._jvm.org.apache.spark.sql.types  # noqa: SLF001
-        width = jvm_types.DataType.fromJson(id_dt.json()).defaultSize()
-        id_bytes = F.count(F.lit(1)) * width
-    n_docs, n_id_bytes = sk.agg(F.count(F.lit(1)), F.coalesce(id_bytes, F.lit(0))).first()
-    sig_bytes = n_docs * (num_hashes * 8 + 32) + n_id_bytes
-    if sig_bytes <= _SIG_BROADCAST_MAX_BYTES:
-        sig_rel = F.broadcast(sig_rel)
-    kept = kept.join(sig_rel, "id")
+    # per-doc sig relation reads the checkpoint (never re-sketches),
+    # and each signature moves once instead of ``bands`` times. No
+    # hint: AQE picks the join strategy from the measured shuffle size.
+    kept = kept.join(sk.select("id", "sig"), "id")
     assignments = F.concat(
         F.transform(
             F.sequence(F.col("chunk"), F.col("nchunks") - 1),

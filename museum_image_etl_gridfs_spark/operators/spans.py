@@ -30,8 +30,9 @@ granularity k.
 
 Scale shape (100 TB posture): the gram inventory is O(total tokens)
 rows but only (doc_id, pos, 64-bit hash) wide after hashing; it is
-shuffled twice (dup test, per-doc window) — both on keys with
-map-side reduction or natural doc locality. No driver materialization,
+derived once behind a tracked localCheckpoint and shuffled twice (dup
+test, per-doc window) — both on keys with map-side reduction or
+natural doc locality. No driver materialization,
 no all-pairs anything; the hot-gram worst case (a stop-phrase
 occurring everywhere) costs one skewed join partition that AQE splits,
 not a cross product.
@@ -46,9 +47,8 @@ Two rejected alternatives, measured at sf0.1/local[32]:
   post-shuffle coalescing, not window partitions). A web-corpus
   stop-phrase with 1e9 occurrences = a guaranteed straggler/OOM at
   100 TB. The groupBy path ships only map-side-combined partial
-  counts and lets AQE manage the join; the price is re-scanning the
-  column-pruned (id, text) projection — linear, spill-free, and the
-  scan is the cheap resource at cluster scale.
+  counts and lets AQE manage the join; the price is reading the
+  inventory twice, which the checkpoint makes one derivation.
 - hashing the token-array slice directly (``xxhash64(slice(toks))``,
   skipping the gram string build) — 13.7-24 s, 2x SLOWER: Catalyst's
   array hashing walks elements with per-element dispatch and
@@ -67,37 +67,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..partitioning import plan_size_bytes
-
-#: input-size ceiling (bytes, est. from the source's optimized-plan
-#: stats) under which :func:`duplicated_spans` materializes the gram
-#: inventory behind a tracked localCheckpoint instead of deriving it
-#: twice. The inventory is O(total tokens) rows × 3 longs — roughly
-#: corpus-sized storage — so the checkpoint is a win exactly while the
-#: executors can hold it (MEMORY_AND_DISK); past the gate the operator
-#: keeps the two-pass shape, whose second scan is linear and
-#: spill-free (the documented 100 TB trade).
-_INV_CKPT_MAX_BYTES = 8 << 30
-
-
-def _maybe_checkpoint_inventory(src: DataFrame, occ: DataFrame) -> DataFrame:
-    """Size-gated tracked localCheckpoint of a gram inventory.
-
-    ``occ`` (the (id, pos, hash) occurrence stream derived from
-    ``src``) is consumed twice by the dup-test + semi-join shape; at
-    bench/fixture scale re-deriving it costs a full second
-    scan + posexplode + window pass (27.1 task-CPU-s at sf0.1 — the #4
-    CPU burner in the r12 bench ledger). Below the gate the inventory
-    is materialized once; above it the relation is returned unchanged
-    and the caller's two-pass plan stands. The gate reads the SOURCE
-    relation's Catalyst size estimate — plan-time, no extra job.
-    """
-    est = plan_size_bytes(src)
-    if est is None or est > _INV_CKPT_MAX_BYTES:  # None: no stats
-        return occ
-    from .lifecycle import tracked_local_checkpoint
-
-    return tracked_local_checkpoint(occ)
+from .lifecycle import tracked_local_checkpoint
 
 
 def norm_tokens(text: Column | str) -> Column:
@@ -205,12 +175,10 @@ def duplicated_spans(
     # duplication is tested on the gram's 64-bit hash, never the
     # string (collision risk 2^-64 per pair — the standard trade), so
     # the codegen hash-gram path applies: no gram strings anywhere.
-    # The inventory is consumed twice (dup test + semi-join back);
-    # below the size gate it is checkpointed so documents are scanned
-    # and exploded ONCE (r13, guide §2.4/§5 — see
-    # :func:`_maybe_checkpoint_inventory` for the 100 TB trade).
-    occ = _maybe_checkpoint_inventory(
-        df, gram_hash_occurrences(df, id_col=id_col, text_col=text_col, k=k)
+    # The inventory is consumed twice (dup test + semi-join back), so
+    # it is checkpointed: documents are scanned and exploded ONCE.
+    occ = tracked_local_checkpoint(
+        gram_hash_occurrences(df, id_col=id_col, text_col=text_col, k=k)
     )
     dup = (
         occ.groupBy("__gh")
@@ -522,9 +490,9 @@ def substring_dedup_rewrite(
     from ..partitioning import spread
 
     # same double-consumption shape as duplicated_spans (firsts
-    # aggregate + removals join) — same size-gated materialization
-    occ = _maybe_checkpoint_inventory(
-        df, gram_hash_occurrences(df, id_col=id_col, text_col=text_col, k=k)
+    # aggregate + removals join) — same checkpointed inventory
+    occ = tracked_local_checkpoint(
+        gram_hash_occurrences(df, id_col=id_col, text_col=text_col, k=k)
     )
     firsts = (
         occ.groupBy("__gh")

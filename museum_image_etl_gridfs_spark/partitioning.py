@@ -1,4 +1,4 @@
-"""Scale-conditional partitioning helpers.
+"""Scale-conditional repartitioning for CPU-bound stages.
 
 CPU-bound stages (sketching, hashing, vector scoring, codec UDFs) need
 parallelism that tracks *cores*, not input bytes: a small input — one
@@ -45,21 +45,4 @@ def spread(
     if key_cols:
         return df.repartition(target, *[F.col(c) for c in key_cols])
     return df.repartition(target)
-
-
-def plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's optimized-plan size estimate in bytes — plan-time, no
-    job; ``None`` when the plan has no statistics."""
-    try:
-        return int(
-            str(
-                df._jdf.queryExecution()  # noqa: SLF001
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-    except Exception:
-        return None
-
 

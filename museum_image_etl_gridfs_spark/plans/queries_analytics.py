@@ -70,26 +70,6 @@ def http_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _scratch_dir(family: str, sf_dir: str) -> str:
-    """Per-run unique scratch dir for write/read round-trips, removed at
-    process exit (unique so concurrent runs never race on each
-    other's files; atexit-bounded so sweeps don't accumulate /tmp
-    litter)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        family,
-        f"{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:8]}",
-    )
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    return out
-
-
 @query(
     "binary_fetch_pipeline",
     oracle="""

@@ -191,12 +191,10 @@ def run_to_memory(stream: DataFrame, name: str) -> DataFrame:
 def stream_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``events_tumbling_1h`` as a Structured Streaming query, drained
     with an ``availableNow`` trigger — same oracle as the batch query
-    because the trigger guarantees batch equivalence. The 2-hour
-    watermark lets an append or update sink drop closed windows'
-    state; the complete-mode drain here keeps every window."""
-    ev = events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
+    because the trigger guarantees batch equivalence."""
     return run_to_memory(
-        hourly_counts(ev), f"q_tumbling_{uuid.uuid4().hex[:8]}"
+        hourly_counts(events_stream(spark, sf_dir)),
+        f"q_tumbling_{uuid.uuid4().hex[:8]}",
     )
 
 

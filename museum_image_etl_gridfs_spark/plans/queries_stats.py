@@ -456,6 +456,26 @@ def order_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _scratch_dir(family: str, sf_dir: str) -> str:
+    """Per-run unique scratch dir for write/read round-trips, removed at
+    process exit (unique so concurrent runs never race on each
+    other's files; atexit-bounded so sweeps don't accumulate /tmp
+    litter)."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+    import uuid
+
+    out = os.path.join(
+        tempfile.gettempdir(),
+        family,
+        f"{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:8]}",
+    )
+    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    return out
+
+
 @query(
     "schema_evolution_merge",
     oracle="""
@@ -484,8 +504,6 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged scan unions footers and prunes columns per file — schema
     reconciliation is metadata-only, no data rewrite.
     """
-    from .queries_analytics import _scratch_dir
-
     out = _scratch_dir("spark_graft_schema_evo", sf_dir)
     li = load(spark, "lineitem", sf_dir)
     old_gen = li.filter(F.col("l_linenumber") == 1).select(

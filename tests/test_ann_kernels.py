@@ -100,13 +100,12 @@ def test_block_count_scales_with_input():
     assert _sub_blocks_for(1000, 10_000, 32, 2048) == 2
 
 
-def test_jaccard_derived_blocks_match_explicit(spark, sf_dir):
-    """The adaptive default must be a pure performance knob: derived
-    and explicit block counts produce the identical pair set."""
+def test_jaccard_derived_blocks_match_explicit(spark, sf_dir, monkeypatch):
+    """The sub-block count must be a pure performance knob: the
+    default target and a target small enough to force more sub-blocks
+    produce the identical pair set."""
     from museum_image_etl_gridfs_spark.catalog import load
-    from museum_image_etl_gridfs_spark.operators.ann import (
-        jaccard_pairs_blocked,
-    )
+    from museum_image_etl_gridfs_spark.operators import ann
     from pyspark.sql import functions as F
 
     toks = load(spark, "documents", sf_dir).select(
@@ -120,10 +119,10 @@ def test_jaccard_derived_blocks_match_explicit(spark, sf_dir):
         id_col="doc_id", tokens_col="ts", block_col="source", threshold=0.5
     )
     derived = {
-        tuple(r) for r in jaccard_pairs_blocked(toks, **kw).collect()
+        tuple(r) for r in ann.jaccard_pairs_blocked(toks, **kw).collect()
     }
-    explicit = {
-        tuple(r)
-        for r in jaccard_pairs_blocked(toks, n_sub_blocks=5, **kw).collect()
+    monkeypatch.setattr(ann, "_TARGET_SUB_ROWS", 8)
+    finer = {
+        tuple(r) for r in ann.jaccard_pairs_blocked(toks, **kw).collect()
     }
-    assert derived == explicit and derived
+    assert derived == finer and derived

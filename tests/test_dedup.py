@@ -126,13 +126,16 @@ def test_minhash_identical_docs_score_1(spark):
     assert len(rows) == 1 and rows[0]["jaccard_est"] == 1.0
 
 
-def test_minhash_giant_identical_cluster_bounded(spark):
+def test_minhash_giant_identical_cluster_bounded(spark, monkeypatch):
     """The 100 TB killer case (VERDICT r3 'what's wrong' #1): a
     boilerplate cluster of N identical docs shares EVERY band bucket.
     The fp-collapse must turn it into N-1 star pairs at 1.0 — O(N)
     output, never an O(N^2) expansion or a single N-member
-    collect_list — even with a tiny bucket_cap forcing the blocking
+    collect_list — even with a tiny bucket cap forcing the blocking
     path for whatever survives."""
+    from museum_image_etl_gridfs_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_BUCKET_CAP", 64)
     n = 20_000
     docs = spark.range(n).select(
         F.col("id").cast("string").alias("doc_id"),
@@ -148,7 +151,6 @@ def test_minhash_giant_identical_cluster_bounded(spark):
         num_hashes=32,
         bands=8,
         min_jaccard=0.5,
-        bucket_cap=64,
     )
     rows = pairs.collect()
     assert len(rows) == n - 1  # star closure, not all-pairs
@@ -157,44 +159,13 @@ def test_minhash_giant_identical_cluster_bounded(spark):
     assert all(r["id_a"] == rep or r["id_b"] == rep for r in rows)
 
 
-def test_minhash_sig_broadcast_gate_counts_id_bytes(spark, monkeypatch):
-    """The signature broadcast gate must count the ids' bytes. With
-    wide string ids and a ceiling between the id-blind estimate
-    (docs × (8·num_hashes + 32)) and the full one, the sig join must
-    carry no broadcast hint; the pairs are the same either way."""
-    from museum_image_etl_gridfs_spark.operators import dedup
-
-    n, num_hashes = 12, 32
-    docs = spark.createDataFrame(
-        [
-            (f"{i:04d}" + "x" * 2000, f"shared words in every doc number {i % 3} here")
-            for i in range(n)
-        ],
-        "doc_id string, text string",
-    )
-    kw = dict(k=2, num_hashes=num_hashes, bands=8, min_jaccard=0.5)
-
-    def hinted(pairs) -> bool:
-        plan = pairs._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-        return "strategy=broadcast" in plan
-
-    assert hinted(minhash_near_duplicates(docs, "doc_id", "text", **kw))
-    expected = sorted(
-        tuple(r) for r in minhash_near_duplicates(docs, "doc_id", "text", **kw).collect()
-    )
-    id_blind = n * (num_hashes * 8 + 32)
-    monkeypatch.setattr(dedup, "_SIG_BROADCAST_MAX_BYTES", id_blind)
-    pairs = minhash_near_duplicates(docs, "doc_id", "text", **kw)
-    assert not hinted(pairs)
-    assert sorted(tuple(r) for r in pairs.collect()) == expected
-    assert expected  # the docs do pair up
-
-
-def test_minhash_block_decomposition_is_exact(spark):
+def test_minhash_block_decomposition_is_exact(spark, monkeypatch):
     """Sub-salting oversized buckets must be output-invariant: a
-    bucket_cap small enough to force multi-chunk 2D blocking on every
+    bucket cap small enough to force multi-chunk 2D blocking on every
     bucket yields EXACTLY the same pair set (ids and estimates) as an
     effectively-unbounded cap."""
+    from museum_image_etl_gridfs_spark.operators import dedup
+
     base = "the quick brown fox jumps over the lazy dog again and again "
     rows = [
         (f"d{i:02d}", base + f"variant token {i % 4}") for i in range(30)
@@ -202,6 +173,7 @@ def test_minhash_block_decomposition_is_exact(spark):
     docs = spark.createDataFrame(rows, "doc_id string, text string")
 
     def run(cap):
+        monkeypatch.setattr(dedup, "_BUCKET_CAP", cap)
         return {
             (r["id_a"], r["id_b"]): r["jaccard_est"]
             for r in minhash_near_duplicates(
@@ -212,7 +184,6 @@ def test_minhash_block_decomposition_is_exact(spark):
                 num_hashes=32,
                 bands=8,
                 min_jaccard=0.2,
-                bucket_cap=cap,
             ).collect()
         }
 

@@ -67,9 +67,7 @@ def test_twenty_query_session_storage_returns_to_baseline(spark):
     base = _persistent_rdds(spark)
     same = "the quick brown fox jumps over the lazy dog"
     # 6 identical documents (one star of 5 pairs, one full-length span
-    # each) and 6 whose tokens occur nowhere else. A range source, not
-    # createDataFrame: the span inventory's size gate needs a Catalyst
-    # size estimate to checkpoint.
+    # each) and 6 whose tokens occur nowhere else.
     docs = spark.range(12).selectExpr(
         "id as doc_id",
         f"if(id < 6, '{same}', "

@@ -113,6 +113,49 @@ def test_benchmark_queries_are_registered():
         assert names and set(names) <= set(QUERIES), set(names) - set(QUERIES)
 
 
+def test_near_dup_builds_run_no_package_jobs(spark, sf_dir):
+    """Building a ``NEAR_DUP`` query starts no Spark job from a package
+    call site: no size estimate or gate runs a job at build time. The
+    one exception is the jaccard kernel's sub-block count, a measured
+    ``first()`` in ``operators/ann.py``. Jobs Spark starts itself
+    (the parquet schema read, a lazy checkpoint's shuffle stage) are
+    named after Spark frames and do not count."""
+    from museum_image_etl_gridfs_spark.operators.lifecycle import checkpoint_scope
+
+    pkg = os.path.join(ROOT, PACKAGE) + os.sep
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sites = {}
+    try:
+        for name in _benchmark_lists()["NEAR_DUP"]:
+            group = f"build-{name}"
+            sc.setJobGroup(group, group)
+            with checkpoint_scope(spark):
+                QUERIES[name].build(spark, sf_dir)
+            stages = [
+                tracker.getStageInfo(s)
+                for j in tracker.getJobIdsForGroup(group)
+                for s in tracker.getJobInfo(j).stageIds
+            ]
+            # a stage is named "<api> at <file>:<line>"
+            sites[name] = {
+                (api, path[len(pkg):].rsplit(":", 1)[0])
+                for api, _, path in (s.name.partition(" at ") for s in stages)
+                if path.startswith(pkg)
+            }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jaccard = {("first", "operators/ann.py")}
+    assert sites == {
+        "minhash_near_dups": set(),
+        "prefix_join_near_dups": jaccard,
+        "near_dup_components_exact": jaccard,
+        "duplicated_spans": set(),
+        "eval_contamination": set(),
+    }
+
+
 def test_every_query_has_a_keep_reason():
     """A registered query is benchmarked, tagged ``reference-parity``,
     drives a named test, or awaits its keep/drop decision in

@@ -6,6 +6,7 @@ self-repeat within one doc, partition invariance)."""
 from __future__ import annotations
 
 import random
+import re
 
 from museum_image_etl_gridfs_spark.operators.spans import (
     duplicated_spans,
@@ -154,48 +155,35 @@ def test_gram_hash_occurrences_positions_match_string_path(spark):
             assert (g_a == g_b) == (h[key_a] == h[key_b]), (key_a, key_b)
 
 
-def test_inventory_checkpoint_gate_paths_agree(spark):
-    """duplicated_spans' size-gated inventory checkpoint (r13) must be
-    output-invariant: the checkpointed one-derivation path and the
-    above-gate two-pass path yield identical spans. Also pins that the
-    gate actually switches (checkpoint plan vs re-derivation plan)."""
-    from museum_image_etl_gridfs_spark.operators import spans as S
-
+def test_inventory_checkpointed_for_every_source(spark):
+    """duplicated_spans builds ONE plan whatever the source: a
+    createDataFrame corpus (no Catalyst size estimate) and an equal
+    spark.range-built corpus both read the gram inventory from its
+    checkpoint, and both give the same spans."""
     rows = [
-        (1, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2, "alpha beta gamma delta epsilon nine ten eleven"),
-        (3, "unrelated words entirely different content here now"),
+        "alpha beta gamma delta epsilon zeta eta theta",
+        "alpha beta gamma delta epsilon nine ten eleven",
+        "unrelated words entirely different content here now",
     ] * 4
-    df = spark.createDataFrame(
-        [(i, t) for i, (_, t) in enumerate(rows)], "doc_id long, text string"
+    from_rows = spark.createDataFrame(
+        list(enumerate(rows)), "doc_id long, text string"
     )
-
-    def run():
-        return sorted(
-            (r["doc_id"], r["span_start"], r["span_end"])
-            for r in S.duplicated_spans(df, k=3).collect()
-        )
-
-    import re
-
-    import pytest as _pytest
-
-    # a createDataFrame source is itself a LogicalRDD (estimated
-    # Long.Max — above the default gate), so force each side
-    # explicitly; the checkpointed-inventory plan is recognized by an
-    # ExistingRDD scan that carries the hash column __gh
+    texts = ", ".join(f"'{t}'" for t in rows)
+    from_range = spark.range(len(rows)).selectExpr(
+        "id as doc_id", f"element_at(array({texts}), cast(id + 1 as int)) as text"
+    )
+    # the checkpointed inventory is an ExistingRDD scan that carries
+    # the gram-hash column __gh
     inv_scan = re.compile(r"Scan ExistingRDD\[[^\]]*__gh")
-    mp = _pytest.MonkeyPatch()
-    try:
-        mp.setattr(S, "_INV_CKPT_MAX_BYTES", 1 << 63)
-        with_ckpt = run()
-        plan_ckpt = S.duplicated_spans(df, k=3)._jdf.queryExecution().executedPlan().toString()
-        assert inv_scan.search(plan_ckpt)  # below the gate: materialized
-
-        mp.setattr(S, "_INV_CKPT_MAX_BYTES", 0)
-        without_ckpt = run()
-        plan_two_pass = S.duplicated_spans(df, k=3)._jdf.queryExecution().executedPlan().toString()
-        assert not inv_scan.search(plan_two_pass)  # above: two-pass
-    finally:
-        mp.undo()
-    assert with_ckpt == without_ckpt and with_ckpt
+    got = []
+    for df in (from_rows, from_range):
+        spans = duplicated_spans(df, k=3)
+        plan = spans._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+        assert inv_scan.search(plan)
+        got.append(
+            sorted(
+                (r["doc_id"], r["span_start"], r["span_end"])
+                for r in spans.collect()
+            )
+        )
+    assert got[0] == got[1] and got[0]
