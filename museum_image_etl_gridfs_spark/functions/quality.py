@@ -23,13 +23,21 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-#: Gopher-style "must contain ≥2 of these" stopword list.
+#: Gopher-style stopword list: ``quality_flags`` keeps a document that
+#: contains at least one of these.
 STOPWORDS: tuple[str, ...] = ("the", "be", "to", "of", "and", "that", "have", "with")
+
+#: ASCII whitespace that :func:`words` strips from both ends before it
+#: splits, so a tab or newline at an edge yields no empty token
+_EDGE_WS = " \t\n\r\f"
+#: the same set as a DuckDB string expression
+_EDGE_WS_SQL = " || ".join(f"chr({ord(c)})" for c in _EDGE_WS)
 
 
 def words(text: Column | str) -> Column:
     """Whitespace-split word array; NULL/blank -> empty array."""
-    t = F.trim(F.coalesce(F.col(text) if isinstance(text, str) else text, F.lit("")))
+    c = F.col(text) if isinstance(text, str) else text
+    t = F.btrim(F.coalesce(c, F.lit("")), F.lit(_EDGE_WS))
     return F.when(t == "", F.array().cast("array<string>")).otherwise(
         F.split(t, r"\s+")
     )
@@ -90,81 +98,6 @@ def dup_ngram_fraction(ws: Column, n: int) -> Column:
     )
 
 
-def token_chunks(ws: Column, width: int) -> Column:
-    """Space-joined fixed-width token chunks starting at positions
-    1, 1+width, ... (the last chunk may be shorter).
-
-    The fixture-scale stand-in for line/paragraph splits: the
-    synthetic documents are single-line token streams, so the
-    line-level repetition rules (:func:`dup_segment_stats`) operate
-    on deterministic chunks here; a real corpus passes
-    ``F.split(text, '\\n')`` / ``F.split(text, '\\n\\n')`` instead —
-    the stats are splitter-agnostic.
-    """
-    if width < 1:
-        raise ValueError("width must be >= 1")
-    return F.when(
-        F.size(ws) <= 0, F.array().cast("array<string>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws), F.lit(width)),
-            lambda i: F.array_join(F.slice(ws, i, width), " "),
-        )
-    )
-
-
-def dup_segment_stats(sorted_segs: Column) -> Column:
-    """Per-document duplicate-segment counters as a struct
-    ``(n, dup, chars, dup_chars)`` over an ALREADY-SORTED segment
-    array: a *duplicate* is every occurrence AFTER THE FIRST of an
-    identical segment (the keep-first convention shared with
-    ``operators/spans.py``), ``chars``/``dup_chars`` are the segment
-    text lengths of all/duplicate occurrences.
-
-    Scale shape: sorted-adjacency over the per-row array — a segment
-    occurring k times yields exactly k-1 adjacent equalities — so the
-    whole computation is ROW-LOCAL: no explode, no Python, no shuffle
-    of segment occurrences (the explode + two-level groupBy
-    equivalent shuffles every occurrence of a 100 TB corpus).
-
-    CALLER CONTRACT: pass a cheap column reference holding
-    ``array_sort(<segments>)`` materialized by its OWN projection —
-    not a deep expression tree. The adjacency test is phrased as
-    ``zip_with`` over the array zipped with its shifted self so every
-    lambda touches only its BOUND variables: a lambda that indexes an
-    outer array (``element_at(s, i)``) re-evaluates the whole
-    argument tree PER ELEMENT — measured 40 s for 500 docs before
-    this rewrite, 100x off.
-    """
-    s = sorted_segs
-    n = F.size(s)
-    m = F.greatest(n - 1, F.lit(0))
-    # per adjacent position: segment length if equal to predecessor,
-    # -1 otherwise (a length sentinel, not 0 — a zero-length segment
-    # must still count as a duplicate occurrence)
-    eqlens = F.zip_with(
-        F.slice(s, 2, m),
-        F.slice(s, 1, m),
-        lambda a, b: F.when(a == b, F.length(a).cast("long")).otherwise(
-            F.lit(-1).cast("long")
-        ),
-    )
-    chars = F.aggregate(
-        s, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    dup_chars = F.aggregate(
-        eqlens,
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.greatest(x, F.lit(0).cast("long")),
-    )
-    return F.struct(
-        n.cast("long").alias("n"),
-        F.size(F.filter(eqlens, lambda x: x >= 0)).cast("long").alias("dup"),
-        chars.alias("chars"),
-        dup_chars.alias("dup_chars"),
-    )
-
-
 def frac_alpha_words(ws: Column) -> Column:
     """Fraction of words containing at least one ASCII letter
     (C4 keeps only mostly-alphabetic text); 0.0 for empty docs."""
@@ -173,17 +106,11 @@ def frac_alpha_words(ws: Column) -> Column:
     return F.when(total <= 0, F.lit(0.0)).otherwise(alpha / total.cast("double"))
 
 
-def stopword_hits(ws: Column, stops: tuple[str, ...] = STOPWORDS) -> Column:
-    """How many DISTINCT stopwords from ``stops`` appear (Gopher's
-    "contains at least 2 stop words" signal). Case-insensitive."""
+def stopword_hits(ws: Column) -> Column:
+    """How many DISTINCT :data:`STOPWORDS` appear, case-insensitively
+    (``quality_flags`` keeps a document with at least one)."""
     lowered = F.transform(ws, F.lower)
-    return F.size(F.array_intersect(lowered, F.array(*[F.lit(s) for s in stops])))
-
-
-#: Portable regexes — restricted to syntax with identical semantics in
-#: Java regex (Spark) and RE2 (DuckDB): classes, bounded repeats, \b \d.
-EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-IPV4_RE = r"\b\d{1,3}(\.\d{1,3}){3}\b"
+    return F.size(F.array_intersect(lowered, F.array(*[F.lit(s) for s in STOPWORDS])))
 
 
 def hash_bucket(key: Column | str, buckets: int = 1000) -> Column:
@@ -207,6 +134,7 @@ def hash_bucket(key: Column | str, buckets: int = 1000) -> Column:
 #: CASE expression: a tokenizer change then propagates to every oracle
 #: atomically instead of silently diverging per module.
 WORDS_SQL_LOWER = (
-    "CASE WHEN text IS NULL OR trim(text) = '' THEN CAST([] AS VARCHAR[]) "
-    "ELSE regexp_split_to_array(trim(lower(text)), '\\s+') END"
+    f"CASE WHEN trim(coalesce(text, ''), {_EDGE_WS_SQL}) = '' "
+    "THEN CAST([] AS VARCHAR[]) "
+    f"ELSE regexp_split_to_array(trim(lower(text), {_EDGE_WS_SQL}), '\\s+') END"
 )

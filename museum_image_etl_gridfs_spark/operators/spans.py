@@ -121,8 +121,8 @@ def gram_hash_occurrences(
     posexplode the tokens once, build the gram identity with k−1
     ``lead()`` columns over (id, pos) and hash the k token columns
     directly — no per-gram array slice, no string concatenation, no
-    interpreted higher-order lambda (the trap NOTES.md documents for
-    frequent_bigrams; measured 81 s → see NOTES round 7 at sf1).
+    interpreted higher-order lambda (the trap NOTES.md documents;
+    measured 81 s → see NOTES round 7 at sf1).
     Tokens are whitespace-split so the multi-column hash identifies
     exactly the same grams as hashing the space-joined string
     (collision class unchanged: 2⁻⁶⁴ per pair).
@@ -282,171 +282,6 @@ def top_dup_grams(
         .orderBy(F.desc("occurrences"), "gram")
         .limit(top_n)
     )
-
-
-#: Gopher repetition thresholds (Rae et al., arXiv 2112.11446,
-#: Table A1): a document is flagged when the fraction of characters
-#: inside WITHIN-DOC duplicated n-grams exceeds the n's threshold.
-GOPHER_DUP_NGRAM_THRESHOLDS: dict[int, float] = {
-    5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10,
-}
-
-
-def dup_ngram_char_fraction(
-    df: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ns: tuple[int, ...] = (5, 6, 7, 8, 9, 10),
-    thresholds: dict[int, float] | None = None,
-) -> DataFrame:
-    """Per-(document, n) fraction of characters covered by WITHIN-DOC
-    duplicated n-grams — the second half of Gopher's repetition rule
-    family (Rae et al. 2112.11446 Table A1 "duplicate n-grams,
-    fraction of characters", n = 5..10; the top-n-gram half lives in
-    ``gopher_top_ngram_fraction``).
-
-    Characters are counted over the space-joined normalized token
-    stream (deterministic in both engines regardless of the source
-    whitespace), and overlapping duplicated grams are counted ONCE —
-    an exact interval union per (doc, n), not a sum of gram lengths.
-
-    Output: (id, n, dup_chars, total_chars, dup_char_frac, flagged).
-    One row per document per n (documents shorter than n tokens get
-    0 / frac 0.0). An ``n`` with no threshold (neither published nor
-    passed in ``thresholds``) is measured but NEVER flagged.
-
-    100 TB shape — everything rides ONE exchange on the document id:
-
-    1. posexplode tokens once; cumulative char offsets and the
-       n-gram identities for EVERY n come from lead() columns over
-       the (id, token-index) window (the corpus is tokenized once —
-       the gopher_top_ngram_fraction trick, with spans added);
-    2. within-doc duplicate marking is an unordered COUNT window over
-       (id, n, gram-hash) — its partition is bounded by the document
-       length and its clustering requirement is satisfied by the
-       id-hash exchange already in place (id ⊆ keys), so no second
-       shuffle;
-    3. the interval union is the classic sweep: sort each (id, n)
-       slice by span start, running max of span end over the
-       PRECEDING rows, contribution = max(0, end − max(start,
-       prev_max)) — again bounded by doc length, again no new
-       exchange;
-    4. only the final per-(id, n) sums aggregate across the corpus.
-
-    Gram identity is the 64-bit ``xxhash64`` of the n token columns —
-    the same 2⁻⁶⁴-per-pair trade :func:`duplicated_spans` documents.
-
-    Reference parity: the reference engine has no text analytics
-    (its pipeline is fetch/resize/store, SURVEY.md §3); this
-    operator is part of the LLM-curation extension surface.
-    """
-    from ..partitioning import spread
-
-    thr = dict(GOPHER_DUP_NGRAM_THRESHOLDS)
-    if thresholds:
-        thr.update(thresholds)
-    ns = tuple(sorted(set(ns)))
-    max_n = max(ns)
-
-    toks = norm_tokens(text_col)
-    exploded = spread(df, id_col).select(
-        F.col(id_col).alias("id"),
-        F.posexplode(toks).alias("__i", "__tok"),
-    )
-    w = Window.partitionBy("id").orderBy("__i")
-    # inclusive running sum of (len + 1 separator): token __i covers
-    # chars [cum - len - 1, cum - 1) of the space-joined stream
-    cum = F.sum(F.length("__tok") + F.lit(1)).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    base = exploded.select(
-        "id",
-        "__i",
-        "__tok",
-        (cum - F.length("__tok") - F.lit(1)).alias("__gstart"),
-        (cum - F.lit(1)).alias("__tend"),
-        *[
-            F.lead("__tok", j).over(w).alias(f"__t{j}")
-            for j in range(1, max_n)
-        ],
-        *[
-            F.lead(cum - F.lit(1), n - 1).over(w).alias(f"__e{n}")
-            for n in ns
-        ],
-    )
-    grams = F.array(
-        *[
-            F.when(
-                F.col(f"__t{n - 1}").isNotNull(),
-                F.struct(
-                    F.lit(n).alias("n"),
-                    F.xxhash64(
-                        "__tok", *[f"__t{j}" for j in range(1, n)]
-                    ).alias("gh"),
-                    F.col("__gstart").alias("gstart"),
-                    F.col(f"__e{n}").alias("gend"),
-                ),
-            )
-            for n in ns
-        ]
-    )
-    occ = (
-        base.select("id", F.explode(grams).alias("g"))
-        .filter(F.col("g").isNotNull())
-        .select("id", "g.n", "g.gh", "g.gstart", "g.gend")
-    )
-    # within-doc duplicate test: unordered count window, partition
-    # bounded by doc length, clustering satisfied by the id exchange
-    cnt = F.count(F.lit(1)).over(Window.partitionBy("id", "n", "gh"))
-    dups = occ.withColumn("__c", cnt).filter(F.col("__c") >= 2)
-    # interval union sweep per (id, n): gstart is unique within the
-    # slice (one gram per start position), so the order is total
-    wcov = Window.partitionBy("id", "n").orderBy("gstart")
-    pmax = F.max("gend").over(
-        wcov.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    contrib = F.greatest(
-        F.lit(0).cast("long"),
-        F.col("gend")
-        - F.greatest(F.col("gstart"), F.coalesce(pmax, F.col("gstart"))),
-    )
-    dup_chars = (
-        dups.select("id", "n", contrib.alias("__contrib"))
-        .groupBy("id", "n")
-        .agg(F.sum("__contrib").alias("dup_chars"))
-    )
-    totals = df.select(
-        F.col(id_col).alias("id"),
-        F.length(F.array_join(toks, " ")).cast("long").alias("total_chars"),
-        F.explode(F.array(*[F.lit(n) for n in ns])).alias("n"),
-    )
-    thr_col = F.element_at(
-        F.create_map(
-            *[F.lit(x) for n in ns for x in (n, float(thr.get(n, 1.0)))]
-        ),
-        F.col("n"),
-    )
-    out = (
-        totals.join(dup_chars, ["id", "n"], "left")
-        .select(
-            F.col("id").alias(id_col),
-            "n",
-            F.coalesce("dup_chars", F.lit(0)).cast("long").alias("dup_chars"),
-            "total_chars",
-        )
-        .withColumn(
-            "dup_char_frac",
-            F.when(F.col("total_chars") == 0, F.lit(0.0)).otherwise(
-                F.round(
-                    F.col("dup_chars").cast("double")
-                    / F.col("total_chars").cast("double"),
-                    6,
-                )
-            ),
-        )
-    )
-    return out.withColumn("flagged", F.col("dup_char_frac") > thr_col)
 
 
 def substring_dedup_rewrite(

@@ -97,8 +97,9 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: first-8-hex-digits-of-md5 bucket in [0, 1e6) — the finer-grained
-#: mirror of queries_quality._SQL_HASH_BUCKET_1000
+#: first-8-hex-digits-of-md5 bucket in [0, 1e6) — DuckDB mirror of
+#: ``functions/quality.hash_bucket("doc_id", 1_000_000)`` via a
+#: hex-digit fold
 _SQL_HASH_BUCKET_1M = (
     "CAST(list_reduce(list_prepend(0::BIGINT, "
     "list_transform(regexp_split_to_array("

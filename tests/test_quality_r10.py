@@ -1,5 +1,5 @@
-"""Behavioral pins for the round-10 curation/eval queries —
-gopher_top_ngram_fraction and corpus_power_laws.
+"""Behavioral pins for the Gopher top-n-gram fraction over the
+``words`` / ``word_ngrams`` tokenizer, and for corpus_power_laws.
 Cross-engine value equality is the oracle harness's job; these pin
 the SEMANTICS on constructed inputs where the right answer is known
 by hand."""
@@ -15,7 +15,8 @@ from museum_image_etl_gridfs_spark.operators.topk import grouped_topk
 
 
 def _gopher_fracs(spark, text):
-    """Run the gopher per-doc plan on one synthetic document."""
+    """Per-n share of the most frequent 2/3/4-gram in one synthetic
+    document (count of the top gram / count of all grams)."""
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
     w = Q.words(F.lower(F.col("text")))
 
@@ -45,23 +46,6 @@ def test_gopher_dominant_bigram_fraction(spark):
     assert abs(fr[2] - 3 / 5) < 1e-12
     # trigrams: [a b a, b a b, a b a, b a b] -> 2/4
     assert abs(fr[3] - 0.5) < 1e-12
-
-
-def test_gopher_all_unique_grams_pass(spark, sf_dir):
-    from museum_image_etl_gridfs_spark.plans.registry import all_queries
-
-    out = (
-        all_queries()["gopher_top_ngram_fraction"]
-        .build(spark, sf_dir)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("top2_frac").alias("mn"),
-            F.max("top2_frac").alias("mx"),
-        )
-        .first()
-    )
-    # every document gets a row; fractions live in (0, 1]
-    assert out["n"] > 0 and 0.0 <= out["mn"] and out["mx"] <= 1.0
 
 
 def test_zipf_slope_recovers_synthetic_power_law(spark):
