@@ -9,8 +9,8 @@ MongoDB/GridFS image-ETL pipeline), re-expressed Spark-first:
   natively as (files, chunks) tables.
 - Pandas UDFs only where built-in operators cannot express the
   semantics (image transform, batch HTTP).
-- Scale extensions for LLM-training-data pipelines: dedup (exact,
-  MinHash-LSH, SimHash), similarity search, text analysis.
+- Scale extensions: dedup (exact, MinHash-LSH, SimHash, spans) and
+  text analysis.
 
 See SURVEY.md for the operator inventory this package implements.
 """

@@ -1,24 +1,38 @@
-"""Data-quality / filtering column functions for training-data curation.
+"""The engine's one whitespace tokenizer, and the C4/Gopher-style
+per-document quality heuristics built on it (word-count bounds, mean
+word length, alphabetic-word fraction, stopwords, repeated n-grams).
+All are JVM expressions, so they stay inside whole-stage codegen, and
+each has an exact DuckDB rendering that the oracle gate checks.
 
-The published curation pipelines (C4, Gopher, RefinedWeb) filter web
-text with cheap per-document heuristics: word-count bounds, mean word
-length, alphabetic-word fraction, stopword presence, and repeated
-n-gram fractions. All of them are expressible as pure JVM expressions
-(split / higher-order array functions / regexp), so they run inside
-whole-stage codegen with zero Python in the hot path and scale
-linearly with executors — exactly what you want for a 100 TB
-first-pass filter where the filter itself must be cheaper than the
-data motion.
+**The tokenizer rule**, written once in three forms that agree on every
+input: :func:`words` (Spark column), :func:`words_sql` (DuckDB SQL over
+a text expression) and :func:`words_py` (Python, for the Arrow/pandas
+kernels). Every tokenizer, whitespace normalizer and Python kernel in
+the package uses them.
 
-Every function here has an exact DuckDB rendering (list_transform /
-list_filter / list_distinct mirror Spark's transform / filter /
-array_distinct), so the oracle gate verifies semantics bit-for-bit.
+- Whitespace is the ASCII class ``[ \\t\\n\\x0b\\f\\r]`` and nothing
+  else. Java's ``\\s`` is exactly this class, but RE2's leaves out
+  ``\\x0b`` and Python's ``str.split()`` also splits on NBSP,
+  ``\\x1c``-``\\x1f``, ``\\x85`` and U+2003, so every form spells it out.
+- A token is a maximal run of non-whitespace. NULL, ``''`` and
+  all-whitespace text give ``[]``; no token is ever empty.
+- Case folding is one named step applied before tokenizing, in the same
+  three forms (:func:`fold_case` and its ``_sql``/``_py`` twins): ASCII
+  ``A``-``Z`` become ``a``-``z`` and every other character passes through
+  unchanged. The engines' ``lower`` disagree beyond ASCII (DuckDB gives
+  ``σ`` for a word-final ``Σ`` and ``i`` for ``İ``; Spark and Python
+  give ``ς`` and ``i̇``), so no form uses it.
 
-Extensions beyond the reference (no text analysis there; see
-SURVEY.md §2.8 — its only string work is filename interpolation).
+Derived forms keep their own rules on top: a document with fewer than
+k tokens has one k-shingle, its tokens joined (``operators/dedup``); a
+fingerprint hashes the tokens joined by one space (``functions/text``);
+a "solid" character count (:func:`solid_len`) removes the same class.
 """
 
 from __future__ import annotations
+
+import re
+import string
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,20 +41,62 @@ from pyspark.sql import functions as F
 #: contains at least one of these.
 STOPWORDS: tuple[str, ...] = ("the", "be", "to", "of", "and", "that", "have", "with")
 
-#: ASCII whitespace that :func:`words` strips from both ends before it
-#: splits, so a tab or newline at an edge yields no empty token
-_EDGE_WS = " \t\n\r\f"
-#: the same set as a DuckDB string expression
-_EDGE_WS_SQL = " || ".join(f"chr({ord(c)})" for c in _EDGE_WS)
+#: the whitespace class
+_WS = " \t\n\x0b\f\r"
+#: one or more :data:`_WS` characters, as a regex that Java, RE2 and
+#: Python read alike (DuckDB string literals keep backslashes as typed)
+_WS_RUN = "[ \\t\\n\\x0b\\f\\r]+"
+_WS_RUN_RE = re.compile(_WS_RUN)
+_FOLD = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
+
+
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
 
 
 def words(text: Column | str) -> Column:
-    """Whitespace-split word array; NULL/blank -> empty array."""
-    c = F.col(text) if isinstance(text, str) else text
-    t = F.btrim(F.coalesce(c, F.lit("")), F.lit(_EDGE_WS))
+    """Whitespace tokens of ``text`` (module docstring); NULL/blank -> []."""
+    t = F.btrim(F.coalesce(_col(text), F.lit("")), F.lit(_WS))
     return F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
+        F.split(t, _WS_RUN)
     )
+
+
+def words_sql(text: str) -> str:
+    """DuckDB form of :func:`words` over the SQL expression ``text``."""
+    split = f"regexp_split_to_array(coalesce({text}, ''), '{_WS_RUN}')"
+    return f"list_filter({split}, tok -> tok <> '')"
+
+
+def words_py(text: str | None) -> list[str]:
+    """Python form of :func:`words`."""
+    t = (text or "").strip(_WS)
+    return _WS_RUN_RE.split(t) if t else []
+
+
+def fold_case(text: Column | str) -> Column:
+    """ASCII case fold: ``A``-``Z`` -> ``a``-``z``, all else unchanged."""
+    return F.translate(_col(text), string.ascii_uppercase, string.ascii_lowercase)
+
+
+def fold_case_sql(text: str) -> str:
+    """DuckDB form of :func:`fold_case`."""
+    return f"translate({text}, '{string.ascii_uppercase}', '{string.ascii_lowercase}')"
+
+
+def fold_case_py(text: str | None) -> str | None:
+    """Python form of :func:`fold_case`."""
+    return None if text is None else text.translate(_FOLD)
+
+
+def solid_len(text: Column | str) -> Column:
+    """Character count of ``text`` without its whitespace; NULL -> 0."""
+    return F.length(F.regexp_replace(F.coalesce(_col(text), F.lit("")), _WS_RUN, ""))
+
+
+def solid_len_sql(text: str) -> str:
+    """DuckDB form of :func:`solid_len`."""
+    return f"length(regexp_replace(coalesce({text}, ''), '{_WS_RUN}', '', 'g'))"
 
 
 def word_ngrams(ws: Column, n: int) -> Column:
@@ -109,8 +165,8 @@ def frac_alpha_words(ws: Column) -> Column:
 def stopword_hits(ws: Column) -> Column:
     """How many DISTINCT :data:`STOPWORDS` appear, case-insensitively
     (``quality_flags`` keeps a document with at least one)."""
-    lowered = F.transform(ws, F.lower)
-    return F.size(F.array_intersect(lowered, F.array(*[F.lit(s) for s in STOPWORDS])))
+    folded = F.transform(ws, fold_case)
+    return F.size(F.array_intersect(folded, F.array(*[F.lit(s) for s in STOPWORDS])))
 
 
 def hash_bucket(key: Column | str, buckets: int = 1000) -> Column:
@@ -123,18 +179,5 @@ def hash_bucket(key: Column | str, buckets: int = 1000) -> Column:
     which rows were kept. Complements operators/split.py (same idea,
     different field widths).
     """
-    k = F.col(key) if isinstance(key, str) else key
-    hex8 = F.substring(F.md5(k.cast("string")), 1, 8)
+    hex8 = F.substring(F.md5(_col(key).cast("string")), 1, 8)
     return (F.conv(hex8, 16, 10).cast("long") % buckets).cast("int")
-
-
-#: DuckDB mirror of :func:`words` over ``lower(text)`` — THE canonical
-#: oracle rendering of the tokenizer. Every plans-module oracle must
-#: use this single constant (importing it) rather than re-spelling the
-#: CASE expression: a tokenizer change then propagates to every oracle
-#: atomically instead of silently diverging per module.
-WORDS_SQL_LOWER = (
-    f"CASE WHEN trim(coalesce(text, ''), {_EDGE_WS_SQL}) = '' "
-    "THEN CAST([] AS VARCHAR[]) "
-    f"ELSE regexp_split_to_array(trim(lower(text), {_EDGE_WS_SQL}), '\\s+') END"
-)

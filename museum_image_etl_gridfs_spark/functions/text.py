@@ -1,4 +1,4 @@
-"""Text-analysis column functions for the training-data pipeline.
+"""Text-analysis column functions.
 
 All pure JVM-side expressions (regexp / string builtins) — no Python
 UDFs in the hot path, so they stay inside whole-stage codegen and
@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .quality import _col, fold_case, fold_case_sql, solid_len, words, words_sql
+
 #: Tiny per-language stopword marker sets for the n-gram/stopword
 #: language heuristic. Chosen to be discriminative and regex-safe.
 #: ASCII punctuation stripped from token EDGES before marker compare
@@ -30,18 +32,9 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
 def token_count(text: Column | str) -> Column:
-    """Whitespace token count; empty/NULL -> 0."""
-    t = F.trim(_col(text))
-    return (
-        F.when(t.isNull() | (t == ""), F.lit(0))
-        .otherwise(F.size(F.split(t, r"\s+")))
-        .cast("int")
-    )
+    """Whitespace token count (:func:`.quality.words`); empty/NULL -> 0."""
+    return F.size(words(text)).cast("int")
 
 
 def char_count(text: Column | str) -> Column:
@@ -69,11 +62,9 @@ def uppercase_ratio(text: Column | str) -> Column:
 
 
 def mean_token_len(text: Column | str) -> Column:
-    """Average token length = chars-without-spaces / tokens."""
-    t = F.trim(F.coalesce(_col(text), F.lit("")))
-    toks = token_count(t)
-    solid = F.length(F.regexp_replace(t, r"\s+", ""))
-    return F.when(toks == 0, F.lit(0.0)).otherwise(solid / toks)
+    """Average token length = chars-without-whitespace / tokens."""
+    toks = token_count(text)
+    return F.when(toks == 0, F.lit(0.0)).otherwise(solid_len(text) / toks)
 
 
 def quality_score(text: Column | str) -> Column:
@@ -102,11 +93,14 @@ def quality_score(text: Column | str) -> Column:
 
 
 def fingerprint(text: Column | str) -> Column:
-    """Normalized content fingerprint: md5 over lowercase,
-    whitespace-collapsed text. Identical hex output in DuckDB."""
-    t = F.coalesce(_col(text), F.lit(""))
-    normalized = F.regexp_replace(F.lower(F.trim(t)), r"\s+", " ")
-    return F.md5(normalized)
+    """Normalized content fingerprint: md5 of the case-folded tokens
+    joined by one space. Identical hex output in DuckDB."""
+    return F.md5(F.array_join(words(fold_case(text)), " "))
+
+
+def fingerprint_sql(text: str) -> str:
+    """DuckDB form of :func:`fingerprint` (its ``array_to_string([])`` is NULL)."""
+    return f"md5(coalesce(array_to_string({words_sql(fold_case_sql(text))}, ' '), ''))"
 
 
 def lang_guess(text: Column | str) -> Column:
@@ -130,9 +124,7 @@ def lang_guess(text: Column | str) -> Column:
     prose); btrim(token, set) has identical semantics in DuckDB's
     trim(x, chars), so the oracle mirrors it exactly.
     """
-    from .quality import words
-
-    ws = words(F.lower(F.coalesce(_col(text), F.lit(""))))
+    ws = words(fold_case(text))
     langs = list(LANG_MARKERS)
 
     # ONE tokenize + ONE btrim pass + ONE counting pass (r12): the

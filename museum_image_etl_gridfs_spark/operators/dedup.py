@@ -27,6 +27,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.quality import fold_case, fold_case_py, words, words_py
 from ..partitioning import spread
 
 
@@ -77,7 +78,7 @@ def exact_dedup(df: DataFrame, columns: Sequence[str] | None = None) -> DataFram
 
 
 # ---------------------------------------------------------------------------
-# Near-duplicate detection (training-data pipeline extensions)
+# Near-duplicate detection
 # ---------------------------------------------------------------------------
 
 # Mersenne prime 2^31-1: keeps a*h + b < 2^62, inside int64 even with
@@ -110,15 +111,13 @@ def _rand_coeffs(n: int, seed: int) -> list[tuple[int, int]]:
 def shingles(text_col, k: int = 3) -> "F.Column":
     """Word k-shingle set of normalized text, as array<string>.
 
-    Whitespace-split lowercase tokens, sliding window of k words
-    (Broder '97 used word shingles). Word shingles keep the set size
+    Case-folded :func:`.quality.words` tokens, sliding window of k
+    words (Broder '97 used word shingles); fewer than k tokens give one
+    shingle, the tokens joined. Word shingles keep the set size
     ~n_tokens (vs ~n_chars for char shingles), which matters because
     higher-order array expressions are interpreted, not codegen'd.
     """
-    toks = F.split(
-        F.regexp_replace(F.lower(F.trim(F.coalesce(text_col, F.lit("")))), r"\s+", " "),
-        " ",
-    )
+    toks = words(fold_case(text_col))
     n = F.size(toks)
     idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
     return F.array_distinct(
@@ -194,7 +193,7 @@ def _minhash_doc_rows(
             sig_rows = np.empty((n, num_hashes), dtype=np.int64)
             band_hashes = np.empty((n, bands), dtype=np.int64)
             for i, text in enumerate(texts):
-                toks = (text or "").lower().split()
+                toks = words_py(fold_case_py(text))
                 if len(toks) < k:
                     sh = {" ".join(toks)}
                 else:
@@ -541,16 +540,12 @@ def minhash_near_duplicates(
 
 
 def simhash(text_col, bits: int = 64) -> "F.Column":
-    """64-bit SimHash of whitespace tokens (Charikar '02).
+    """64-bit SimHash of case-folded word tokens (Charikar '02).
 
     Per-token xxhash64; for each bit position sum +1/-1 weighted by
     the bit, take the sign. All JVM-side expressions.
     """
-    tokens = F.split(
-        F.regexp_replace(F.lower(F.trim(F.coalesce(text_col, F.lit("")))), r"\s+", " "),
-        " ",
-    )
-    hashes = F.transform(tokens, lambda tok: F.xxhash64(tok))
+    hashes = F.transform(words(fold_case(text_col)), lambda tok: F.xxhash64(tok))
 
     # ONE pass (r12): the previous shape ran a separate F.aggregate
     # per bit, and each of the 64 aggregates re-evaluated the

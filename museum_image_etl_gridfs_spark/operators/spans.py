@@ -57,24 +57,17 @@ Two rejected alternatives, measured at sf0.1/local[32]:
 
 Reference parity: the reference engine has no substring analytics at
 all (its only dedup is the whole-value pymongo ``$group``,
-SURVEY.md §2.4); this module is part of the training-data-pipeline
-extension surface.
+SURVEY.md §2.4); this module extends the dedup family to spans.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.quality import fold_case, words
 from .lifecycle import tracked_local_checkpoint
-
-
-def norm_tokens(text: Column | str) -> Column:
-    """Whitespace tokens of lower(trim(text)) — the shared
-    normalization used by the dedup family (`fingerprint`)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(F.trim(F.lower(F.coalesce(c, F.lit("")))), r"\s+")
 
 
 def gram_occurrences(
@@ -91,7 +84,7 @@ def gram_occurrences(
     expression-level (sequence/slice/concat_ws under posexplode) —
     stays inside whole-stage codegen until the explode.
     """
-    toks = norm_tokens(text_col)
+    toks = words(fold_case(text_col))
     n = F.size(toks)
     # sequence(1, n-k+1) is DESCENDING when n < k — guard to empty.
     starts = F.when(n >= k, F.sequence(F.lit(1), n - F.lit(k - 1))).otherwise(
@@ -135,7 +128,7 @@ def gram_hash_occurrences(
     """
     from ..partitioning import spread
 
-    toks = norm_tokens(text_col)
+    toks = words(fold_case(text_col))
     exploded = spread(df, id_col).select(
         F.col(id_col), F.posexplode(toks).alias("__i", "__tok")
     )
@@ -268,7 +261,7 @@ def top_dup_grams(
         )
     )
     toks = df.select(
-        F.col(id_col).alias("id"), norm_tokens(text_col).alias("__ts")
+        F.col(id_col).alias("id"), words(fold_case(text_col)).alias("__ts")
     )
     return (
         cand.join(toks, "id")
@@ -299,8 +292,8 @@ def substring_dedup_rewrite(
 
     Output: (id, orig_tokens, removed_tokens, kept_text), one row per
     input document. ``kept_text`` is the NORMALIZED token stream
-    (lower/trim, single spaces) minus the removed spans; a fully
-    duplicated document yields ``''``.
+    (case-folded :func:`.quality.words` tokens, single spaces) minus
+    the removed spans; a fully duplicated document yields ``''``.
 
     Plan shape (100 TB posture — same backbone as
     :func:`duplicated_spans`):
@@ -367,7 +360,7 @@ def substring_dedup_rewrite(
     covered = spans.select(
         id_col, F.explode(F.sequence("__s", "__e")).alias("__idx")
     )
-    toks = norm_tokens(text_col)
+    toks = words(fold_case(text_col))
     tokens = spread(df, id_col).select(
         F.col(id_col), F.posexplode(toks).alias("__i0", "__tok")
     ).select(id_col, (F.col("__i0") + 1).cast("long").alias("__idx"), "__tok")

@@ -11,20 +11,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..functions.text import fingerprint
+from ..functions.quality import fold_case_sql, words_sql
+from ..functions.text import fingerprint, fingerprint_sql
 from ..operators.dedup import minhash_near_duplicates, simhash
 from ..partitioning import spread
 from .registry import query
 
-_SQL_FINGERPRINT = "md5(regexp_replace(lower(trim(coalesce(text,''))), '\\s+', ' ', 'g'))"
+#: (doc_id, ts): the case-folded word array of every document — the
+#: DuckDB form of the tokens the span and gram operators build
+_SQL_DOC_TOKENS = (
+    f"SELECT doc_id, {words_sql(fold_case_sql('text'))} AS ts FROM documents"
+)
 
 
 @query(
     "exact_dedup_stats",
     oracle=f"""
-    SELECT CAST(COUNT(*) AS BIGINT)                            AS n_docs,
-           CAST(COUNT(DISTINCT text) AS BIGINT)                AS n_distinct_text,
-           CAST(COUNT(DISTINCT {_SQL_FINGERPRINT}) AS BIGINT)  AS n_distinct_fp
+    SELECT CAST(COUNT(*) AS BIGINT)                             AS n_docs,
+           CAST(COUNT(DISTINCT text) AS BIGINT)                 AS n_distinct_text,
+           CAST(COUNT(DISTINCT {fingerprint_sql('text')}) AS BIGINT) AS n_distinct_fp
     FROM documents
     """,
     tags=("dedup", "extension"),
@@ -92,11 +97,7 @@ _SPAN_K = 5
 #: DuckDB mirror of operators/spans.py::gram_occurrences +
 #: duplicated_spans — same normalization, same gap-and-islands merge.
 _SQL_SPANS = f"""
-    WITH toks AS (
-        SELECT doc_id,
-               regexp_split_to_array(trim(lower(coalesce(text, ''))), '\\s+') AS ts
-        FROM documents
-    ),
+    WITH toks AS ({_SQL_DOC_TOKENS}),
     occ AS (
         SELECT doc_id, i AS pos, array_to_string(ts[i:i + {_SPAN_K - 1}], ' ') AS g
         FROM toks, UNNEST(range(1, len(ts) - {_SPAN_K} + 2)) AS r(i)
@@ -157,11 +158,7 @@ def duplicated_spans_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dup_gram_stats",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               regexp_split_to_array(trim(lower(coalesce(text, ''))), '\\s+') AS ts
-        FROM documents
-    ),
+    WITH toks AS ({_SQL_DOC_TOKENS}),
     occ AS (
         SELECT doc_id, array_to_string(ts[i:i + {_SPAN_K - 1}], ' ') AS g
         FROM toks, UNNEST(range(1, len(ts) - {_SPAN_K} + 2)) AS r(i)
@@ -226,11 +223,7 @@ def incremental_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame
 @query(
     "substring_dedup_rewrite",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               regexp_split_to_array(trim(lower(coalesce(text, ''))), '\\s+') AS ts
-        FROM documents
-    ),
+    WITH toks AS ({_SQL_DOC_TOKENS}),
     occ AS (
         SELECT doc_id, i AS pos, array_to_string(ts[i:i + {_SPAN_K - 1}], ' ') AS g
         FROM toks, UNNEST(range(1, len(ts) - {_SPAN_K} + 2)) AS r(i)
@@ -298,11 +291,7 @@ def substring_dedup_rewrite_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ngram_novelty_profile",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id,
-               regexp_split_to_array(trim(lower(coalesce(text, ''))), '\\s+') AS ts
-        FROM documents
-    ),
+    WITH toks AS ({_SQL_DOC_TOKENS}),
     occ AS (
         SELECT DISTINCT doc_id,
                array_to_string(ts[i:i + {_SPAN_K - 1}], ' ') AS g

@@ -23,17 +23,14 @@ from ..functions import quality as Q
 from ..partitioning import spread
 from .registry import query
 
-#: lowercased whitespace word array (canonical mirror of
-#: functions/quality.words — single shared constant)
-_SQL_WORDS_LOWER = Q.WORDS_SQL_LOWER
-
 
 @query(
     "inverted_index",
     oracle=f"""
     WITH t AS (
         SELECT DISTINCT doc_id, unnest(w) AS term
-        FROM (SELECT doc_id, {_SQL_WORDS_LOWER} AS w FROM documents)),
+        FROM (SELECT doc_id, {Q.words_sql(Q.fold_case_sql('text'))} AS w
+              FROM documents)),
     n AS (SELECT count(*) AS n_docs FROM documents),
     df AS (
         SELECT term, CAST(count(*) AS BIGINT) AS df
@@ -65,7 +62,7 @@ def inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
         docs.select(
             "doc_id",
-            F.explode_outer(Q.words(F.lower(F.col("text")))).alias("term"),
+            F.explode_outer(Q.words(Q.fold_case("text"))).alias("term"),
         )
         .filter(F.col("term").isNotNull())
         .distinct()

@@ -199,8 +199,9 @@ def gridfs_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gridfs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 ∘ S7 identity: chunk every blob (101-byte chunks), shuffle
     the chunk rows, reassemble ordered by n, verify byte-for-byte
-    equality. The oracle states the identity (rebuilt == original);
-    Spark actually performs the distributed round trip.
+    equality (NULL-safe: a NULL blob rebuilds to NULL). The oracle
+    states the identity (rebuilt == original); Spark actually performs
+    the distributed round trip.
     """
     docs = load(spark, "documents", sf_dir).select(
         "doc_id", F.col("text").cast("binary").alias("blob")
@@ -213,7 +214,7 @@ def gridfs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("files_id"),
             F.length("blob").cast("long").alias("orig_len"),
             F.length("data").cast("long").alias("rebuilt_len"),
-            (F.col("blob") == F.col("data")).alias("roundtrip_ok"),
+            F.col("blob").eqNullSafe(F.col("data")).alias("roundtrip_ok"),
         )
     )
 
@@ -233,7 +234,7 @@ def gridfs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT coalesce(a.o_orderkey, b.o_orderkey) AS o_orderkey,
                CASE WHEN a.o_orderkey IS NULL THEN 'added'
                     WHEN b.o_orderkey IS NULL THEN 'removed'
-                    WHEN old_priority <> new_priority THEN 'changed'
+                    WHEN old_priority IS DISTINCT FROM new_priority THEN 'changed'
                END AS change_type,
                old_priority, new_priority
         FROM a FULL OUTER JOIN b ON a.o_orderkey = b.o_orderkey)

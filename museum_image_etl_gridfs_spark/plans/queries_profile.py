@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
-from ..functions.quality import WORDS_SQL_LOWER
+from ..functions.quality import fold_case_sql, words_sql
 from .registry import query
 
 # (column, expression that renders min/max as a cross-engine-stable
@@ -116,7 +116,7 @@ _ZIPF_K = 100
     "corpus_power_laws",
     oracle=f"""
     WITH w AS (
-        SELECT source, {WORDS_SQL_LOWER} AS ws FROM documents),
+        SELECT source, {words_sql(fold_case_sql('text'))} AS ws FROM documents),
     t AS (
         SELECT source, term FROM w, UNNEST(ws) AS u(term)),
     c AS (
@@ -197,7 +197,7 @@ def corpus_power_laws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(load(spark, "documents", sf_dir), "doc_id")
     terms = docs.select(
-        "source", F.explode(Q.words(F.lower(F.col("text")))).alias("term")
+        "source", F.explode(Q.words(Q.fold_case("text"))).alias("term")
     )
     cnts = terms.groupBy("source", "term").agg(F.count(F.lit(1)).alias("c"))
     stats = cnts.groupBy("source").agg(

@@ -24,10 +24,6 @@ from .registry import query
 
 # ---------------------------------------------------------------- SQL mirrors
 
-#: ``Q.WORDS_SQL_LOWER`` (the DuckDB mirror of ``Q.words``) over the
-#: text as written, not lowercased; NULL/blank -> []
-_SQL_WORDS = Q.WORDS_SQL_LOWER.replace("lower(text)", "text")
-
 _STOPS_SQL = "[" + ", ".join(f"'{s}'" for s in Q.STOPWORDS) + "]"
 
 
@@ -35,9 +31,8 @@ _STOPS_SQL = "[" + ", ".join(f"'{s}'" for s in Q.STOPWORDS) + "]"
     "quality_flags",
     oracle=f"""
     WITH base AS (
-        SELECT doc_id, {_SQL_WORDS} AS w,
-               length(regexp_replace(trim(coalesce(text, '')), '\\s+', '', 'g'))
-                   AS solid
+        SELECT doc_id, {Q.words_sql('text')} AS w,
+               {Q.solid_len_sql('text')} AS solid
         FROM documents),
     g AS (
         SELECT doc_id, w, solid, len(w) AS n,
@@ -57,7 +52,7 @@ _STOPS_SQL = "[" + ", ".join(f"'{s}'" for s in Q.STOPWORDS) + "]"
                round(CASE WHEN n = 0 THEN 0.0
                      ELSE len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]')))
                           / CAST(n AS DOUBLE) END, 4) AS frac_alpha,
-               CAST(len(list_intersect(list_transform(w, x -> lower(x)),
+               CAST(len(list_intersect(list_transform(w, x -> {Q.fold_case_sql('x')}),
                                        {_STOPS_SQL})) AS INTEGER) AS stop_hits,
                round(CASE WHEN len(g2) = 0 THEN 0.0
                      ELSE (len(g2) - len(list_distinct(g2)))
@@ -96,9 +91,7 @@ def quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     wdf = docs.select(
         "doc_id",
         Q.words("text").alias("w"),
-        F.length(
-            F.regexp_replace(F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+", "")
-        ).alias("solid"),
+        Q.solid_len("text").alias("solid"),
     )
     w = F.col("w")
     n = F.size(w)
@@ -131,7 +124,8 @@ def quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
                list_distinct(CASE WHEN len(w) < 2 THEN CAST([] AS VARCHAR[])
                     ELSE list_transform(range(1, len(w)),
                                         i -> w[i] || ' ' || w[i+1]) END) AS sh
-        FROM (SELECT doc_id, {Q.WORDS_SQL_LOWER} AS w FROM documents)),
+        FROM (SELECT doc_id, {Q.words_sql(Q.fold_case_sql('text'))} AS w
+              FROM documents)),
     ev AS (SELECT DISTINCT unnest(sh) AS g FROM s WHERE doc_id % 97 = 0),
     tr AS (SELECT doc_id, len(sh) AS n_shingles, unnest(sh) AS g
            FROM s WHERE doc_id % 97 <> 0),
@@ -186,21 +180,21 @@ def eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     def bigrams_fn(batches):
         # Vectorized bigram shingling (r12, guide §4.2): the previous
         # per-position Python loop built ~5M bigram strings per run
-        # through a genexpr + dict insert each. pandas .str ops keep
-        # Python's exact strip/lower/split semantics; the bigram
-        # stream is one shifted elementwise concat over the batch's
-        # flattened word stream (doc boundaries masked out), hashed to
-        # int64 in the same pass, and the per-doc distinct is a stable
-        # drop_duplicates over (int, int) pairs — the same gram SET
-        # per doc as dict.fromkeys over strings, up to 64-bit
-        # collisions (2⁻⁶⁴/pair, see docstring).
+        # through a genexpr + dict insert each. Each document is
+        # tokenized by ``Q.words_py``, the Python form of the oracle's
+        # ``words_sql``; the bigram stream is one shifted elementwise
+        # concat over the batch's flattened word stream (doc
+        # boundaries masked out), hashed to int64 in the same pass, and
+        # the per-doc distinct is a stable drop_duplicates over (int,
+        # int) pairs — the same gram SET per doc as dict.fromkeys over
+        # strings, up to 64-bit collisions (2⁻⁶⁴/pair, see docstring).
         import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if not len(pdf):
                 continue
-            words = pdf["text"].fillna("").str.strip().str.lower().str.split()
+            words = pdf["text"].map(lambda t: Q.words_py(Q.fold_case_py(t)))
             lens = words.str.len().to_numpy()
             mask = lens >= 2  # unnest([]) semantics: no rows
             if not mask.any():

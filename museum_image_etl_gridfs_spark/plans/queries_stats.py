@@ -29,17 +29,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ..functions.quality import fold_case, fold_case_sql, words, words_sql
 from ..operators.ann import jaccard_pairs_blocked
 from .registry import query
+
+#: DuckDB token set of a document: its distinct case-folded words
+_SQL_TOKEN_SET = f"list_distinct({words_sql(fold_case_sql('text'))})"
 
 
 @query(
     "near_dup_components_exact",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE toks AS (
         SELECT doc_id, source,
-               list_distinct(regexp_split_to_array(
-                   trim(lower(coalesce(text,''))), '\\s+')) AS ts
+               {_SQL_TOKEN_SET} AS ts
         FROM documents),
     pairs AS (
         SELECT a.doc_id AS id_a, b.doc_id AS id_b
@@ -96,14 +99,7 @@ def near_dup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        F.sort_array(
-            F.array_distinct(
-                F.split(
-                    F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))),
-                    r"\s+",
-                )
-            )
-        ).alias("ts"),
+        F.sort_array(F.array_distinct(words(fold_case("text")))).alias("ts"),
     ).withColumn(
         # to_json is an INJECTIVE encoding of the token array (escapes
         # any separator-like bytes inside tokens); a concat_ws join
@@ -149,8 +145,10 @@ def near_dup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.5,
     )
     # an exact-duplicate group is a clique even with no other
-    # neighbor: a self-edge keeps its representative in the graph
-    self_edges = groups.filter(F.col("grp_n") >= 2).select(
+    # neighbor: a self-edge keeps its representative in the graph.
+    # Blank documents have no tokens, and an empty set has Jaccard 0
+    # with every set, its own copies included.
+    self_edges = groups.filter((F.col("grp_n") >= 2) & (F.size("ts") > 0)).select(
         F.col("rep_id").alias("id_a"), F.col("rep_id").alias("id_b")
     )
     comps = connected_components(
@@ -244,25 +242,12 @@ def recursive_brand_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doc_tokens(docs: DataFrame) -> DataFrame:
-    """(doc_id, source, ts): the lowercased whitespace token array the
-    pair oracles build with ``regexp_split_to_array``."""
-    return docs.select(
-        "doc_id",
-        "source",
-        F.split(
-            F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+"
-        ).alias("ts"),
-    )
-
-
 @query(
     "prefix_join_near_dups",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, source,
-               list_distinct(regexp_split_to_array(
-                   trim(lower(coalesce(text,''))), '\\s+')) AS ts
+               {_SQL_TOKEN_SET} AS ts
         FROM documents)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            CASE WHEN len(list_distinct(list_concat(a.ts, b.ts))) = 0
@@ -291,7 +276,7 @@ def prefix_join_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, "documents", sf_dir)
     return jaccard_pairs_blocked(
-        _doc_tokens(docs),
+        docs.select("doc_id", "source", words(fold_case("text")).alias("ts")),
         id_col="doc_id",
         tokens_col="ts",
         block_col="source",
@@ -301,11 +286,10 @@ def prefix_join_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "incremental_near_dups",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT doc_id, source, (doc_id % 10 = 0) AS is_new,
-               list_distinct(regexp_split_to_array(
-                   trim(lower(coalesce(text,''))), '\\s+')) AS ts
+               {_SQL_TOKEN_SET} AS ts
         FROM documents)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            CASE WHEN len(list_distinct(list_concat(a.ts, b.ts))) = 0
@@ -330,7 +314,10 @@ def incremental_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     old documents pack into separate cells and old x old cells are
     dropped at the cell-pair join, before any matmul."""
     docs = load(spark, "documents", sf_dir)
-    toks = _doc_tokens(docs).withColumn("is_new", F.col("doc_id") % 10 == 0)
+    toks = docs.select(
+        "doc_id", "source", words(fold_case("text")).alias("ts"),
+        (F.col("doc_id") % 10 == 0).alias("is_new"),
+    )
     return jaccard_pairs_blocked(
         toks,
         id_col="doc_id",

@@ -18,16 +18,12 @@ from .registry import query
 
 # DuckDB mirrors of functions/text.py expressions (note the 'g' flag:
 # DuckDB regexp_replace is first-match-only by default, Spark's is global).
-_SQL_TOKENS = (
-    "CASE WHEN text IS NULL OR trim(text) = '' THEN 0 "
-    "ELSE CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS INTEGER) END"
-)
+_SQL_TOKENS = f"CAST(len({Q.words_sql('text')}) AS INTEGER)"
 _SQL_CHARS = "CAST(coalesce(length(text), 0) AS INTEGER)"
 _SQL_PUNCT = (
     "CAST(length(coalesce(text,'')) - "
     "length(regexp_replace(coalesce(text,''), '[.!?,;:]', '', 'g')) AS INTEGER)"
 )
-_SQL_FINGERPRINT = "md5(regexp_replace(lower(trim(coalesce(text,''))), '\\s+', ' ', 'g'))"
 
 
 @query(
@@ -37,7 +33,7 @@ _SQL_FINGERPRINT = "md5(regexp_replace(lower(trim(coalesce(text,''))), '\\s+', '
            {_SQL_TOKENS}      AS n_tokens,
            {_SQL_CHARS}       AS n_chars_obs,
            {_SQL_PUNCT}       AS n_punct,
-           {_SQL_FINGERPRINT} AS fingerprint
+           {TX.fingerprint_sql('text')} AS fingerprint
     FROM documents
     """,
     tags=("text", "extension"),
@@ -85,9 +81,8 @@ _SQL_QUALITY = """
                    greatest(length(coalesce(text,'')), 1) AS n,
                    length(coalesce(text,''))
                      - length(regexp_replace(coalesce(text,''), '[.!?,;:]', '', 'g')) AS punct,
-                   CASE WHEN text IS NULL OR trim(text) = '' THEN 0
-                        ELSE len(regexp_split_to_array(trim(coalesce(text,'')), '\\s+')) END AS toks,
-                   length(regexp_replace(trim(coalesce(text,'')), '\\s+', '', 'g')) AS solid
+                   {_SQL_TOKENS} AS toks,
+                   {Q.solid_len_sql('text')} AS solid
             FROM documents
         )
     )
@@ -102,8 +97,8 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lang_oracle() -> str:
-    """DuckDB mirror of ``functions/text.lang_guess``: the canonical
-    WORDS_SQL_LOWER tokenization once, then marker equality counts per
+    """DuckDB mirror of ``functions/text.lang_guess``: the case-folded
+    ``words_sql`` tokenization once, then marker equality counts per
     language over punctuation-btrimmed tokens (same token form as the
     Spark side — no per-marker regex rescans of the document; ADVICE
     r9: edge punctuation no longer hides markers)."""
@@ -132,7 +127,8 @@ def _lang_oracle() -> str:
         FROM (
             SELECT doc_id,
                {scores_sql}
-            FROM (SELECT doc_id, {Q.WORDS_SQL_LOWER} AS w FROM documents)
+            FROM (SELECT doc_id, {Q.words_sql(Q.fold_case_sql('text'))} AS w
+                  FROM documents)
         )
     )
     """

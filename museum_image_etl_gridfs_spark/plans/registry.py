@@ -1,6 +1,6 @@
 """Query registry.
 
-Every operator from SURVEY.md §2 (plus the training-data-pipeline
+Every operator from SURVEY.md §2 (plus the text, dedup and analytics
 extensions) registers a named query here: a DataFrame builder
 ``(spark, sf_dir) -> DataFrame`` and, when SQL-expressible, an exact
 DuckDB oracle. ``tools/check_correctness.py`` hashes both sides

@@ -1,8 +1,8 @@
 """Unit tests for the text-quality column functions
 (functions/quality.py) and the two queries built on them
 (plans/queries_quality.py: quality_flags, eval_contamination) on
-hand-computed inputs, plus one oracle comparison on a corpus whose
-documents start or end with tabs and newlines.
+hand-computed inputs, plus one oracle comparison of the tokenizing
+queries on a corpus whose documents start or end with whitespace.
 """
 
 from __future__ import annotations
@@ -121,10 +121,13 @@ def test_eval_contamination_excludes_eval_docs(spark, sf_dir):
 
 
 def test_edge_whitespace_yields_no_empty_token(spark, tmp_path):
-    """A tab, newline or carriage return at either end of a document
-    strips like a space: ``words`` and its DuckDB mirrors make no empty
-    token, so ``eval_contamination`` (whose shingling kernel uses
-    ``str.split()``) and ``quality_flags`` each match their oracle."""
+    """A tab, newline, vertical tab, form feed or carriage return at
+    either end of a document strips like a space, and a run of
+    whitespace splits like one space: ``words`` makes no empty token,
+    and every query tokenizing with it, its DuckDB form or its Python
+    form (the ``eval_contamination`` kernel) matches its own oracle.
+    Blank and NULL documents have no tokens, so they pair with no
+    document; upper-case and non-ASCII letters check the case fold."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -136,6 +139,13 @@ def test_edge_whitespace_yields_no_empty_token(spark, tmp_path):
         "\t\n",
         None,
         "one two three four five six seven eight nine ten the\t",
+        "\x0bthe red fox jumps over the  blue sky\x0b",
+        "the\x0bred fox jumps  over the blue\tsky",
+        "  one two three four five six seven eight nine ten  ",
+        "\x0b",
+        "",
+        "THE Red FOX jumps over ΟΔΟΣ ΣΑΣ İstanbul",
+        "the red fox jumps over οδος σας İstanbul\x0b",
     ]
     n = len(texts)
     pq.write_table(
@@ -153,7 +163,10 @@ def test_edge_whitespace_yields_no_empty_token(spark, tmp_path):
     for r in ws.select(Q.words("text").alias("w")).collect():
         assert "" not in r["w"], r["w"]
     con = duck_connection(sf)
-    for name in ("eval_contamination", "quality_flags"):
+    for name in (
+        "eval_contamination", "quality_flags", "duplicated_spans",
+        "prefix_join_near_dups", "near_dup_components_exact", "text_stats",
+    ):
         q = all_queries()[name]
         got = normalize(q.build(spark, sf).toPandas())
         want = normalize(con.execute(q.oracle).df())
