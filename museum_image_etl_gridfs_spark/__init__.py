@@ -9,7 +9,7 @@ MongoDB/GridFS image-ETL pipeline), re-expressed Spark-first:
   natively as (files, chunks) tables.
 - Pandas UDFs only where built-in operators cannot express the
   semantics (image transform, batch HTTP).
-- Scale extensions: dedup (exact, MinHash-LSH, SimHash, spans) and
+- Scale extensions: near-dup (MinHash-LSH, exact Jaccard, spans) and
   text analysis.
 
 See SURVEY.md for the operator inventory this package implements.

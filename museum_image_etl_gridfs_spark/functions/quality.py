@@ -23,10 +23,11 @@ the package uses them.
   ``σ`` for a word-final ``Σ`` and ``i`` for ``İ``; Spark and Python
   give ``ς`` and ``i̇``), so no form uses it.
 
-Derived forms keep their own rules on top: a document with fewer than
-k tokens has one k-shingle, its tokens joined (``operators/dedup``); a
-fingerprint hashes the tokens joined by one space (``functions/text``);
-a "solid" character count (:func:`solid_len`) removes the same class.
+Derived forms keep their own rules on top: a document with 1 to k-1
+tokens has one k-shingle, its tokens joined, and one with no token has
+none (``operators/dedup``); a fingerprint hashes the tokens joined by
+one space (``functions/text``); a "solid" character count
+(:func:`solid_len`) removes the same class.
 """
 
 from __future__ import annotations

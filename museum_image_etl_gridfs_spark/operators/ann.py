@@ -2,8 +2,8 @@
 corpus whose Jaccard similarity reaches a threshold, without a
 quadratic Spark join.
 
-Documents pack into (block, new, sub-block) cells, one row each, and
-the block-local cell pairs cross-join. Per cell pair, numpy builds
+Documents pack into (block, sub-block) cells, one row each, and the
+block-local cell pairs cross-join. Per cell pair, numpy builds
 the two token-incidence matrices over the pair's vocabulary and gets
 every intersection count from one float matmul
 (|A∩B| = Ia @ Ib.T; |A∪B| = |a| + |b| - |A∩B|). The sub-block count
@@ -11,9 +11,8 @@ is derived from one measured aggregate, a Spark job run when the plan
 is built, so cells stay memory-bounded at any scale factor while
 still filling every core.
 
-The exact near-dup pair queries (``near_dup_components_exact``,
-``prefix_join_near_dups`` and ``incremental_near_dups``) run through
-:func:`jaccard_pairs_blocked`.
+The exact near-dup pair queries (``near_dup_components_exact`` and
+``prefix_join_near_dups``) run through :func:`jaccard_pairs_blocked`.
 """
 
 from __future__ import annotations
@@ -72,7 +71,6 @@ def jaccard_pairs_blocked(
     tokens_col: str,
     block_col: str | None = None,
     threshold: float = 0.5,
-    new_col: str | None = None,
 ) -> DataFrame:
     """All-pairs exact token-set Jaccard ≥ threshold, block-matrix
     style. The engine's one exact Jaccard-threshold join: every exact
@@ -100,15 +98,6 @@ def jaccard_pairs_blocked(
       cores) and ran 35 s where subs=4 ran 4.5 s; packed-row
       replication grows linearly with subs, so the floor targets
       cells-per-core, not a fixed count.
-
-    ``new_col`` (boolean column; NULL counts as old) switches on
-    INCREMENTAL mode — "dedup today's batch against the standing
-    corpus": only pairs with at least one NEW member are returned, and
-    the result equals the full join filtered to those pairs. New and
-    old rows pack into separate cells (``new`` is part of the packing
-    key) and the cell-pair join drops old x old cells, so the standing
-    corpus is never re-paired with itself and those cells never reach
-    the matmul.
     """
     if threshold <= 0:
         raise ValueError("jaccard_pairs_blocked: threshold must be > 0")
@@ -122,29 +111,21 @@ def jaccard_pairs_blocked(
     )
     para = docs.sparkSession.sparkContext.defaultParallelism
     n_sub_blocks = _sub_blocks_for(mx or 0, nk or 1, para, _TARGET_SUB_ROWS)
-    new = (
-        F.coalesce(F.col(new_col).cast("boolean"), F.lit(False))
-        if new_col
-        else F.lit(False)
-    )
     packed = (
         docs.select(
             F.col(id_col).alias("id"),
             F.array_distinct(F.col(tokens_col)).alias("ts"),
             blk.alias("blk"),
-            new.alias("new"),
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_sub_blocks)).alias("sub"),
         )
-        .groupBy("blk", "new", "sub")
+        .groupBy("blk", "sub")
         .agg(F.collect_list(F.struct("id", "ts")).alias("ms"))
     )
-    # Cells are ordered by (new, sub), so each unordered cell pair
-    # joins once and a cell pairs with itself on the diagonal.
-    cell_a = F.struct(F.col("a.new"), F.col("a.sub"))
-    cell_b = F.struct(F.col("b.new"), F.col("b.sub"))
-    cond = (F.col("a.blk") == F.col("b.blk")) & (cell_a <= cell_b)
-    if new_col:
-        cond = cond & (F.col("a.new") | F.col("b.new"))
+    # Each unordered cell pair joins once (a.sub <= b.sub), and a
+    # cell pairs with itself on the diagonal.
+    cond = (F.col("a.blk") == F.col("b.blk")) & (
+        F.col("a.sub") <= F.col("b.sub")
+    )
     # Round-robin the O(blocks × sub²) pair rows across cores: the
     # join's output inherits hash-partitioning on blk (a handful of
     # sources), so without this the CPU-bound matmul stage runs
@@ -155,7 +136,7 @@ def jaccard_pairs_blocked(
         packed.alias("a")
         .join(packed.alias("b"), cond)
         .select(
-            (cell_a == cell_b).alias("diag"),
+            (F.col("a.sub") == F.col("b.sub")).alias("diag"),
             F.col("a.ms").alias("ms_a"),
             F.col("b.ms").alias("ms_b"),
         )
@@ -253,7 +234,7 @@ def _jaccard_score_fn(threshold: float, id_np: str):
                     # silently drop or duplicate pairs under
                     # permutation. Id masking keeps the output
                     # duplicate-free BY CONSTRUCTION (every doc lives
-                    # in exactly one (block, new, sub)) with no
+                    # in exactly one (block, sub)) with no
                     # dropDuplicates — a full shuffle of the
                     # output-quadratic pair stream (10 GB at sf3).
                     jac = np.where(aid[:, None] < bid[None, :], jac, 0.0)

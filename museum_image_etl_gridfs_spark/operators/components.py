@@ -102,16 +102,6 @@ def connected_components(
     )
 
 
-def canonical_per_cluster(components: DataFrame) -> DataFrame:
-    """(component, canonical_vertex): keep-first applied to clusters —
-    the min id is the deterministic survivor (the scalable form of the
-    reference's docs_list[0] keep, src/transform_load.py:59-60)."""
-    return components.groupBy("component").agg(
-        F.min("vertex").alias("canonical_vertex"),
-        F.count(F.lit(1)).alias("cluster_size"),
-    )
-
-
 def triangle_census(
     edges: DataFrame, src: str = "b1", dst: str = "b2"
 ) -> DataFrame:

@@ -8,15 +8,14 @@ pipeline), then deletes all but the first document of each group.
 explicit ordering (SURVEY.md A3).
 
 Scale notes:
-- ``duplicate_groups`` / ``dedup_keep_first`` are single-shuffle hash
-  aggregations / windows on the group key. At 100 TB the only risk is
-  key skew, which AQE skew-join/partition-split handles; no
-  driver-side materialization anywhere (the reference's
-  ``list(coll.aggregate(...))`` pulls all duplicate groups into the
-  client — we never do).
-- MinHash/SimHash near-dup live here too: shingle -> sketch ->
-  band -> self-join on (band, signature) buckets. The band self-join
-  is the classic LSH trick that turns O(n^2) pair comparison into a
+- ``dedup_keep_first`` is a single-shuffle window on the group key.
+  At 100 TB the only risk is key skew, which AQE skew-join/partition-
+  split handles; no driver-side materialization anywhere (the
+  reference's ``list(coll.aggregate(...))`` pulls all duplicate groups
+  into the client — we never do).
+- MinHash near-dup lives here too: shingle -> sketch -> band ->
+  self-join on (band, signature) buckets. The band self-join is the
+  classic LSH trick that turns O(n^2) pair comparison into a
   bucket-local join — the only scalable shape at 100 TB.
 """
 
@@ -27,24 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.quality import fold_case, fold_case_py, words, words_py
+from ..functions.quality import fold_case_py, words_py
 from ..partitioning import spread
-
-
-def duplicate_groups(
-    df: DataFrame, keys: Sequence[str], min_count: int = 2
-) -> DataFrame:
-    """Groups appearing more than once: key cols + ``dup_count``.
-
-    Spark form of the reference's $group/$match pipeline
-    (``src/transform_load.py:48-50``): partial (map-side) + final hash
-    aggregate, then a HAVING filter — one shuffle on the keys.
-    """
-    return (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("dup_count"))
-        .filter(F.col("dup_count") >= min_count)
-    )
 
 
 def dedup_keep_first(
@@ -65,16 +48,6 @@ def dedup_keep_first(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def exact_dedup(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
-    """Exact duplicate removal on ``columns`` (default: all).
-
-    Hash-groupBy dedup — Spark plans ``dropDuplicates`` as a partial
-    + final aggregate, so most duplicate elimination happens map-side
-    before the shuffle.
-    """
-    return df.dropDuplicates(list(columns) if columns else None)
 
 
 # ---------------------------------------------------------------------------
@@ -108,61 +81,31 @@ def _rand_coeffs(n: int, seed: int) -> list[tuple[int, int]]:
     return coeffs
 
 
-def shingles(text_col, k: int = 3) -> "F.Column":
-    """Word k-shingle set of normalized text, as array<string>.
-
-    Case-folded :func:`.quality.words` tokens, sliding window of k
-    words (Broder '97 used word shingles); fewer than k tokens give one
-    shingle, the tokens joined. Word shingles keep the set size
-    ~n_tokens (vs ~n_chars for char shingles), which matters because
-    higher-order array expressions are interpreted, not codegen'd.
-    """
-    toks = words(fold_case(text_col))
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.when(n < k, F.array(F.concat_ws(" ", toks))).otherwise(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-        )
-    )
-
-
-def shingle_hashes(shingle_col) -> "F.Column":
-    """xxhash64 of each shingle, reduced mod the Mersenne prime.
-
-    Materialize this ONCE as its own column before fanning out to the
-    per-permutation mins — otherwise each of the ``num_hashes``
-    expressions re-hashes every shingle (a 64× blowup that Catalyst's
-    CollapseProject is prevented from reintroducing because the
-    reference is non-cheap).
-    """
-    return F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
-
-
-def _minhash_doc_rows(
-    id_field, k: int, num_hashes: int, bands: int, with_new: bool = False,
-):
+def _minhash_doc_rows(id_field, k: int, num_hashes: int, bands: int):
     """mapInArrow worker: (id, text, fp) batches -> ONE row per
-    document: (id, fp, sig array<long>, bhs array<long>) (+ the
-    pass-through ``is_new`` flag when ``with_new``, for incremental
-    mode). ``bhs[band]`` is the band's bucket hash.
+    document with at least one token: (id, fp, sig array<long>,
+    bhs array<long>). ``bhs[band]`` is the band's bucket hash.
 
-    Vectorized numpy per document: shingle the token list, crc32 each
-    shingle (deterministic across workers/runs, unlike PYTHONHASHSEED
-    hashing), then all ``num_hashes`` affine mins in ONE numpy
-    broadcast — a ~50-100x constant-factor win over evaluating the
-    same arithmetic as interpreted Catalyst higher-order functions,
-    and with none of their janino codegen cost on first run.
+    Shingles are word k-shingles of the case-folded tokens
+    (``words_py(fold_case_py(text))``); a document with fewer than k
+    tokens has one shingle, its tokens joined. A document with no
+    token (NULL, ``''``, all whitespace) has no shingle, so it gets no
+    row and pairs with nothing: an empty set has Jaccard 0, as in
+    ``ann.jaccard_pairs_blocked``.
 
-    The (doc, band) fan-out moved OUT of the kernel (r13, guide
-    §2.3): band rows are now a JVM-side ``posexplode`` of the per-doc
-    band-hash array, so the bucket exchange carries only (id, fp,
-    band, band_hash) — the 64-long signature previously rode every
-    one of the ``bands`` copies of each doc through that shuffle
-    (16× replication of the widest column, 30.7 task-CPU-s at sf0.1).
-    Signatures now cross the cluster once, attached post-candidate in
-    :func:`minhash_near_duplicates`. Signature values, band hashes,
-    and dtypes are bit-identical to the fan-out kernel's.
+    Vectorized numpy per document: crc32 each shingle (deterministic
+    across workers/runs, unlike PYTHONHASHSEED hashing), then all
+    ``num_hashes`` affine mins in ONE numpy broadcast — a ~50-100x
+    constant-factor win over evaluating the same arithmetic as
+    interpreted Catalyst higher-order functions, and with none of
+    their janino codegen cost on first run.
+
+    The (doc, band) fan-out is OUT of the kernel: band rows are a
+    JVM-side ``posexplode`` of the per-doc band-hash array, so the
+    bucket exchange carries only (id, fp, band, band_hash) and the
+    64-long signature is not replicated ``bands`` times through that
+    shuffle. Signatures cross the cluster once, attached
+    post-candidate in :func:`minhash_near_duplicates`.
     """
     import zlib
 
@@ -177,29 +120,32 @@ def _minhash_doc_rows(
 
     def fn(batches):
         for rb in batches:
+            texts = rb.column("text").to_pylist()
+            toks = [words_py(fold_case_py(t)) for t in texts]
+            keep = [bool(t) for t in toks]
+            if not all(keep):
+                rb = rb.filter(pa.array(keep))
+                toks = [t for t in toks if t]
             n = rb.num_rows
             if n == 0:
                 continue
             # int32 list offsets hold n·num_hashes values — raise
             # loudly instead of overflowing if a session ever pairs a
             # giant arrow batch size with a huge signature width
-            # (ADVICE r12: the guard used to be a comment)
             if n * max(num_hashes, bands) >= 1 << 31:
                 raise ValueError(
                     "arrow batch too large for int32 list offsets: "
                     f"{n} rows x {num_hashes} hashes"
                 )
-            texts = rb.column("text").to_pylist()
             sig_rows = np.empty((n, num_hashes), dtype=np.int64)
             band_hashes = np.empty((n, bands), dtype=np.int64)
-            for i, text in enumerate(texts):
-                toks = words_py(fold_case_py(text))
-                if len(toks) < k:
-                    sh = {" ".join(toks)}
+            for i, doc in enumerate(toks):
+                if len(doc) < k:
+                    sh = {" ".join(doc)}
                 else:
                     sh = {
-                        " ".join(toks[j : j + k])
-                        for j in range(len(toks) - k + 1)
+                        " ".join(doc[j : j + k])
+                        for j in range(len(doc) - k + 1)
                     }
                 h = np.fromiter(
                     (zlib.crc32(s.encode("utf-8")) for s in sh),
@@ -227,19 +173,15 @@ def _minhash_doc_rows(
                 ),
                 pa.array(band_hashes.ravel(), type=pa.int64()),
             )
-            cols = [rb.column("id"), rb.column("fp"), sig_arr, bhs_arr]
-            names = ["id", "fp", "sig", "bhs"]
-            if with_new:
-                cols.append(rb.column("is_new"))
-                names.append("is_new")
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("id"), rb.column("fp"), sig_arr, bhs_arr],
+                names=["id", "fp", "sig", "bhs"],
+            )
 
     schema = (
         f"id {id_field.dataType.simpleString()}, fp long, sig array<long>, "
         "bhs array<long>"
     )
-    if with_new:
-        schema += ", is_new boolean"
     return fn, schema
 
 
@@ -252,29 +194,16 @@ def minhash_near_duplicates(
     num_hashes: int = 64,
     bands: int = 16,
     min_jaccard: float = 0.5,
-    new_col: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding.
-
-    ``new_col`` (boolean column) switches on INCREMENTAL mode — the
-    approximate twin of ``ann.jaccard_pairs_blocked``'s
-    ``new_col``: only pairs with at least one NEW member are emitted,
-    and the result equals the full output filtered to those pairs
-    (``tests/test_dedup.py`` pins that equivalence). Plan-level, not a
-    post-filter: the batch's band-bucket keys come from an ``is_new``
-    filter of the checkpointed sketch (no second sketch stage), the
-    corpus' banded rows are left-semi pruned by that key set BEFORE
-    the bucket shuffle (broadcasts when the batch is small — the
-    corpus inventory is filtered map-side, never shuffled), old×old
-    comparisons are rejected inside the bucket-local pair kernel, and
-    all-old exact-dup star groups are dropped at the aggregate.
 
     Pipeline: shingle -> signature -> band hashes (ONE Arrow-batched
     per-doc sketch stage, see :func:`_minhash_doc_rows`, materialized
     behind a tracked localCheckpoint) -> JVM-side band explode ->
     repartition on the band bucket -> bucket-local candidate
     selection -> signatures joined back onto candidates -> Jaccard
-    estimate from full signatures -> filter.
+    estimate from full signatures -> filter. Documents with no token
+    take no part (see :func:`_minhash_doc_rows`).
 
     Returns (id_a, id_b, jaccard_est) with id_a < id_b — a
     **star-closure-reduced** pair set: members of an exact-duplicate
@@ -282,11 +211,10 @@ def minhash_near_duplicates(
     cross pairs against other documents are emitted for the
     representative alone (see the exact-duplicate collapse below).
     The set is complete up to connected-component equivalence — the
-    contract the dedup consumers (``near_dup_clusters`` /
-    keep-canonical) need — NOT the full cross product of every
-    qualifying pair. A consumer that needs the literal all-pairs list
-    must re-expand by joining each exact-dup member onto its
-    representative's pairs.
+    contract a dedup consumer (connected components, keep-canonical)
+    needs — NOT the full cross product of every qualifying pair. A
+    consumer that needs the literal all-pairs list must re-expand by
+    joining each exact-dup member onto its representative's pairs.
 
     Two guards make the bucket stage safe on real web corpora, where
     a boilerplate-heavy cluster can put millions of documents into
@@ -298,7 +226,7 @@ def minhash_near_duplicates(
       representative per text fingerprint (``xxhash64(text)``, a
       window min — no giant arrays); the dropped members surface as
       (member, representative) pairs at ``jaccard_est = 1.0`` via a
-      separate (id, fp)-only aggregate over the source (text never
+      separate (id, fp)-only aggregate over the sketch (text never
       shuffles, the sketch never forks). For dedup decisions
       (connected components / keep-canonical) this star closure is
       equivalent to the O(g^2) all-pairs expansion it replaces, with
@@ -319,11 +247,10 @@ def minhash_near_duplicates(
     narrow repartition on (band, band_hash) — the fp-collapse and
     blocking windows reuse that partitioning (their keys are
     supersets) — the post-candidate signature join (signatures move
-    ONCE, vs riding all ``bands`` fan-out copies through the bucket
-    shuffle pre-r13), the block groupBy over candidate rows, the
-    narrow (fp, id) star aggregate/join, and the final pair dedup;
-    candidate pairs are band-local so cost tracks true-duplicate
-    density, not n^2.
+    ONCE, not with every one of the ``bands`` fan-out copies), the
+    block groupBy over candidate rows, the narrow (fp, id) star
+    aggregate/join, and the final pair dedup; candidate pairs are
+    band-local so cost tracks true-duplicate density, not n^2.
 
     Sketching is CPU-bound, not IO-bound: parallelism must track
     cores, not input bytes. A small input (one parquet row group)
@@ -336,90 +263,54 @@ def minhash_near_duplicates(
     rows_per_band = num_hashes // bands
     if rows_per_band * bands != num_hashes:
         raise ValueError("num_hashes must be divisible by bands")
-    # normalize once: the guards below mix truthiness (`if new_col`)
-    # with identity (`new_col is not None` in the pair kernel); an
-    # empty-string argument would build members WITHOUT an is_new
-    # field but a kernel that indexes m["is_new"] → KeyError inside
-    # mapInPandas. After this line both tests agree for every input.
-    new_col = new_col or None
 
-    src_cols = [
+    src = spread(df, id_col).select(
         F.col(id_col).alias("id"),
         F.col(text_col).alias("text"),
         F.xxhash64(text_col).alias("fp"),
-    ]
-    if new_col:
-        src_cols.append(F.col(new_col).cast("boolean").alias("is_new"))
-    src = spread(df, id_col).select(*src_cols)
-    fn, schema = _minhash_doc_rows(
-        src.schema["id"], k, num_hashes, bands, with_new=bool(new_col)
     )
-    # ONE sketch pass, materialized (r13, guide §2.3/§2.4): the
-    # per-doc sketch relation — (id, fp, 64-long sig, band hashes),
-    # ~0.6 KB/doc, a small fraction of the text it summarizes,
-    # distributed MEMORY_AND_DISK — is read by the band explode, the
-    # star-pair branch, the post-candidate signature join, and (in
-    # incremental mode) the new-key prune. Without the checkpoint
-    # each consumer would re-run the whole Python sketch (exchange
-    # reuse never matches re-aliased subtrees); with it the corpus is
-    # scanned ONCE (the star branch previously paid a second full
-    # text scan) and the bucket shuffle sheds the signature column.
+    fn, schema = _minhash_doc_rows(src.schema["id"], k, num_hashes, bands)
+    # ONE sketch pass, materialized: the per-doc sketch relation —
+    # (id, fp, 64-long sig, band hashes), ~0.6 KB/doc, a small
+    # fraction of the text it summarizes, distributed MEMORY_AND_DISK —
+    # is read by the band explode, the star-pair branch and the
+    # post-candidate signature join. Without the checkpoint each
+    # consumer would re-run the whole Python sketch (exchange reuse
+    # never matches re-aliased subtrees); with it the corpus is
+    # scanned ONCE and the bucket shuffle sheds the signature column.
     # Tracked: callers release via lifecycle.release_checkpoints once
     # results are materialized, like every checkpoint in this repo.
     from .lifecycle import tracked_local_checkpoint
 
     sk = tracked_local_checkpoint(src.mapInArrow(fn, schema))
 
-    new_cols = ["is_new"] if new_col else []
     banded = sk.select(
-        "id", "fp", *new_cols,
-        F.posexplode("bhs").alias("band", "band_hash"),
+        "id", "fp", F.posexplode("bhs").alias("band", "band_hash")
     )
-    if new_col:
-        # Incremental band prune: a qualifying pair shares a band
-        # bucket with a NEW doc, so corpus rows outside the batch's
-        # bucket-key set provably pair nothing. The keys are a filter
-        # of the SAME checkpointed sketch (the pre-r13 shape paid a
-        # second mapInArrow sketch over the batch to avoid forking the
-        # un-materialized corpus sketch — moot now).
-        new_keys = (
-            sk.filter(F.col("is_new"))
-            .select(F.posexplode("bhs").alias("band", "band_hash"))
-            .distinct()
-        )
-        banded = banded.join(new_keys, ["band", "band_hash"], "left_semi")
 
     # Star pairs read the checkpointed sketch too — no second corpus
     # scan, no sketch fork.
-    fp_ids = sk.select("id", "fp", *new_cols)
-    rep_aggs = [F.min("id").alias("rep_id"), F.count(F.lit(1)).alias("grp_n")]
-    if new_col:
-        # the representative's own flag (min_by id) + whether the
-        # group contains ANY new member (all-old groups emit nothing)
-        rep_aggs.append(F.min_by("is_new", "id").alias("rep_new"))
-        rep_aggs.append(F.max("is_new").alias("grp_new"))
-    dup_reps = fp_ids.groupBy("fp").agg(*rep_aggs).filter(F.col("grp_n") > 1)
-    if new_col:
-        dup_reps = dup_reps.filter(F.col("grp_new"))
-        dup_reps = dup_reps.select("fp", "rep_id", "rep_new")
-    else:
-        dup_reps = dup_reps.select("fp", "rep_id")
-    star_pairs = fp_ids.join(dup_reps, "fp").filter(
-        F.col("id") != F.col("rep_id")
+    fp_ids = sk.select("id", "fp")
+    dup_reps = (
+        fp_ids.groupBy("fp")
+        .agg(F.min("id").alias("rep_id"), F.count(F.lit(1)).alias("grp_n"))
+        .filter(F.col("grp_n") > 1)
+        .select("fp", "rep_id")
     )
-    if new_col:
-        star_pairs = star_pairs.filter(F.col("is_new") | F.col("rep_new"))
-    star_pairs = star_pairs.select(
-        F.least("id", "rep_id").alias("id_a"),
-        F.greatest("id", "rep_id").alias("id_b"),
-        F.lit(1.0).alias("jaccard_est"),
+    star_pairs = (
+        fp_ids.join(dup_reps, "fp")
+        .filter(F.col("id") != F.col("rep_id"))
+        .select(
+            F.least("id", "rep_id").alias("id_a"),
+            F.greatest("id", "rep_id").alias("id_b"),
+            F.lit(1.0).alias("jaccard_est"),
+        )
     )
 
     # ONE narrow exchange on the bucket key — (id, fp, band,
-    # band_hash) only, the signature column stays out of the fan-out
-    # (r13; it was 16× replicated here before). The collapse and
-    # blocking windows key on supersets of (band, band_hash) and
-    # reuse this partitioning.
+    # band_hash) only, the signature column stays out of the fan-out.
+    # The collapse and blocking windows key on supersets of (band,
+    # band_hash) and reuse this partitioning.
     bucketed = banded.repartition("band", "band_hash")
 
     # Exact-duplicate collapse: one representative per text
@@ -444,13 +335,13 @@ def minhash_near_duplicates(
         )
         .withColumn("chunk", ((F.col("rn") - 1) % F.col("nchunks")).cast("int"))
     )
-    # Attach signatures to CANDIDATE rows only (r13, guide §2.3
-    # "shuffle keys and metadata instead of payloads"): ``kept`` holds
-    # the band rows that survived the fp-collapse in a bucket with ≥2
-    # distinct texts — usually a small fraction of the fan-out. The
-    # per-doc sig relation reads the checkpoint (never re-sketches),
-    # and each signature moves once instead of ``bands`` times. No
-    # hint: AQE picks the join strategy from the measured shuffle size.
+    # Attach signatures to CANDIDATE rows only ("shuffle keys and
+    # metadata instead of payloads"): ``kept`` holds the band rows that
+    # survived the fp-collapse in a bucket with ≥2 distinct texts —
+    # usually a small fraction of the fan-out. The per-doc sig relation
+    # reads the checkpoint (never re-sketches), and each signature
+    # moves once instead of ``bands`` times. No hint: AQE picks the
+    # join strategy from the measured shuffle size.
     kept = kept.join(sk.select("id", "sig"), "id")
     assignments = F.concat(
         F.transform(
@@ -465,22 +356,13 @@ def minhash_near_duplicates(
             ),
         ).otherwise(F.array()),
     )
-    member_cols = ["id", "sig", "chunk"] + (["is_new"] if new_col else [])
+    member_cols = ["id", "sig", "chunk"]
     blocks = kept.select(
-        "band",
-        "band_hash",
-        "id",
-        "sig",
-        "chunk",
-        *( ["is_new"] if new_col else [] ),
-        F.explode(assignments).alias("blk"),
+        "band", "band_hash", *member_cols, F.explode(assignments).alias("blk")
     ).select(
         "band",
         "band_hash",
-        "id",
-        "sig",
-        "chunk",
-        *( ["is_new"] if new_col else [] ),
+        *member_cols,
         F.col("blk.bi").alias("bi"),
         F.col("blk.bj").alias("bj"),
     )
@@ -491,14 +373,10 @@ def minhash_near_duplicates(
     )
 
     id_type = sk.schema["id"].dataType.simpleString()
-    incremental = new_col is not None
 
     def pair_fn(batches):
         import numpy as np
         import pandas as pd
-
-        def _new(m) -> bool:  # old×old pairs are dead in incremental mode
-            return m["is_new"] if incremental else True
 
         for pdf in batches:
             id_a, id_b, est = [], [], []
@@ -511,9 +389,7 @@ def minhash_near_duplicates(
                     for i in range(len(members)):
                         eq = (sig_mat[i + 1 :] == sig_mat[i]).mean(axis=1)
                         for j, e in enumerate(eq, start=i + 1):
-                            if e >= min_jaccard and (
-                                _new(members[i]) or _new(members[j])
-                            ):
+                            if e >= min_jaccard:
                                 id_a.append(members[i]["id"])
                                 id_b.append(members[j]["id"])
                                 est.append(float(e))
@@ -524,9 +400,7 @@ def minhash_near_duplicates(
                     for m in left:
                         eq = (sig_r == np.asarray(m["sig"])).mean(axis=1)
                         for j, e in enumerate(eq):
-                            if e >= min_jaccard and (
-                                _new(m) or _new(right[j])
-                            ):
+                            if e >= min_jaccard:
                                 lo, hi = sorted((m["id"], right[j]["id"]))
                                 id_a.append(lo)
                                 id_b.append(hi)
@@ -537,57 +411,3 @@ def minhash_near_duplicates(
         pair_fn, f"id_a {id_type}, id_b {id_type}, jaccard_est double"
     )
     return pairs.unionByName(star_pairs).dropDuplicates(["id_a", "id_b"])
-
-
-def simhash(text_col, bits: int = 64) -> "F.Column":
-    """64-bit SimHash of case-folded word tokens (Charikar '02).
-
-    Per-token xxhash64; for each bit position sum +1/-1 weighted by
-    the bit, take the sign. All JVM-side expressions.
-    """
-    hashes = F.transform(words(fold_case(text_col)), lambda tok: F.xxhash64(tok))
-
-    # ONE pass (r12): the previous shape ran a separate F.aggregate
-    # per bit, and each of the 64 aggregates re-evaluated the
-    # ``hashes`` subtree — 64 tokenize+hash walks per row (expression
-    # references re-run their subtree; only lambda-bound variables are
-    # free). Now a single aggregate carries a 64-wide counter array:
-    # the token hash ``h`` is bound in the step lambda, and the
-    # sign→bit assembly runs in the finish lambda over the bound
-    # accumulator. Contributions, signs, and bit placement are
-    # arithmetically identical.
-    zero = F.array(*[F.lit(0) for _ in range(bits)])
-
-    def step(acc, h):
-        return F.array(
-            *[
-                F.element_at(acc, i + 1)
-                + F.when(
-                    F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-                for i in range(bits)
-            ]
-        )
-
-    def finish(acc):
-        total = F.lit(0).cast("long")
-        for i in range(bits):
-            total = total + F.when(
-                F.element_at(acc, i + 1) > 0,
-                F.shiftleft(F.lit(1).cast("long"), i),
-            ).otherwise(F.lit(0).cast("long"))
-        return total
-
-    return F.aggregate(hashes, zero, step, finish)
-
-
-def hamming64(a, b) -> "F.Column":
-    """Hamming distance between two int64 simhashes (bit_count of xor)."""
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)) if isinstance(a, str) else a.bitwiseXOR(b))
-
-
-def ngram_jaccard(a_tokens, b_tokens) -> "F.Column":
-    """Exact Jaccard similarity of two token arrays."""
-    inter = F.size(F.array_intersect(a_tokens, b_tokens))
-    union = F.size(F.array_union(a_tokens, b_tokens))
-    return F.when(union == 0, F.lit(0.0)).otherwise(inter / union)

@@ -14,9 +14,7 @@ module closes that hole:
   ``df.localCheckpoint(eager=...)`` that records the checkpointed
   RDD in a session-keyed registry;
 - :func:`release_checkpoints` — unpersist every tracked checkpoint
-  (optionally only one session's), returning the count released;
-- :func:`checkpoint_scope` — context manager releasing exactly the
-  checkpoints created inside the ``with`` block.
+  (optionally only one session's), returning the count released.
 
 Contract: a *local* checkpoint cannot be recomputed once released —
 its lineage was truncated at materialization. Callers must fully
@@ -36,19 +34,12 @@ session's JVM hash so sessions don't release each other's blocks.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 
-#: (token, session key, rdd id, JVM RDD handle) for every live tracked
-#: checkpoint, in creation order. Module-level: the registry must
-#: outlive any one operator call, and a process hosts few sessions.
-#: ``token`` is a monotonically increasing creation stamp —
-#: :func:`checkpoint_scope` compares tokens, not ``id()``s, because
-#: CPython reuses freed object ids within a scope.
-_TRACKED: list[tuple[int, int, int, object]] = []
-_NEXT_TOKEN = 0
+#: (session key, JVM RDD handle) for every live tracked checkpoint, in
+#: creation order. Module-level: the registry must outlive any one
+#: operator call, and a process hosts few sessions.
+_TRACKED: list[tuple[int, object]] = []
 
 
 def _session_key(df_or_spark) -> int:
@@ -69,8 +60,8 @@ def _checkpoint_rdd(df: DataFrame):
 
 def tracked_local_checkpoint(df: DataFrame, *, eager: bool = False) -> DataFrame:
     """``df.localCheckpoint(eager=eager)`` + registry entry so the
-    blocks can be released by :func:`release_checkpoints` /
-    :func:`checkpoint_scope` once the caller is done with the result.
+    blocks can be released by :func:`release_checkpoints` once the
+    caller is done with the result.
 
     The registry deliberately holds a STRONG py4j handle: the entry
     must stay releasable even after the caller drops its Python
@@ -84,11 +75,8 @@ def tracked_local_checkpoint(df: DataFrame, *, eager: bool = False) -> DataFrame
     free (tests/test_lifecycle.py pins the storage-returns-to-baseline
     contract).
     """
-    global _NEXT_TOKEN
     out = df.localCheckpoint(eager=eager)
-    jrdd = _checkpoint_rdd(out)
-    token = _NEXT_TOKEN = _NEXT_TOKEN + 1
-    _TRACKED.append((token, _session_key(out), jrdd.id(), jrdd))
+    _TRACKED.append((_session_key(out), _checkpoint_rdd(out)))
     return out
 
 
@@ -98,53 +86,17 @@ def release_checkpoints(spark=None) -> int:
     Call after materializing query results; see module contract.
     """
     key = None if spark is None else _session_key(spark)
-    kept: list[tuple[int, int, int, object]] = []
+    kept: list[tuple[int, object]] = []
     released = 0
     for entry in _TRACKED:
-        if key is not None and entry[1] != key:
+        if key is not None and entry[0] != key:
             kept.append(entry)
             continue
         try:
-            entry[3].unpersist(False)
+            entry[1].unpersist(False)
         except Exception:
             pass  # session already stopped — blocks died with it
         released += 1
     _TRACKED[:] = kept
     return released
 
-
-def tracked_count(spark=None) -> int:
-    """Live tracked checkpoints (for tests / storage audits)."""
-    if spark is None:
-        return len(_TRACKED)
-    key = _session_key(spark)
-    return sum(1 for e in _TRACKED if e[1] == key)
-
-
-@contextmanager
-def checkpoint_scope(spark=None) -> Iterator[None]:
-    """Release, on exit, exactly the checkpoints created inside the
-    block (for ``spark``'s session if given). Results derived from
-    them must be materialized before the block ends.
-
-    Scope membership is decided by creation token, not object
-    identity: an id()-based snapshot breaks when CPython reuses a
-    freed entry's id for one created inside the block.
-    """
-    high_water = _NEXT_TOKEN
-    try:
-        yield
-    finally:
-        key = None if spark is None else _session_key(spark)
-        kept, to_release = [], []
-        for e in _TRACKED:
-            if e[0] > high_water and (key is None or e[1] == key):
-                to_release.append(e)
-            else:
-                kept.append(e)
-        for e in to_release:
-            try:
-                e[3].unpersist(False)
-            except Exception:
-                pass
-        _TRACKED[:] = kept

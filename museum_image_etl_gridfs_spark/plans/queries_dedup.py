@@ -1,8 +1,9 @@
-"""Deduplication queries over ``documents`` (training-data pipeline).
+"""Deduplication queries over ``documents``.
 
-Exact dedup is oracle-checked; the sketch-based near-dup operators
-(MinHash-LSH, SimHash) rely on Spark-specific xxhash64 so they get
-rows-only checks here and full behavioral tests in tests/.
+The substring and gram queries are oracle-checked. MinHash-LSH relies
+on Spark-side hashing, so ``minhash_near_dups`` gets a rows-only check
+here, a full golden in ``data_outputs/`` and behavioural tests in
+``tests/test_dedup.py``.
 """
 
 from __future__ import annotations
@@ -12,9 +13,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..functions.quality import fold_case_sql, words_sql
-from ..functions.text import fingerprint, fingerprint_sql
-from ..operators.dedup import minhash_near_duplicates, simhash
-from ..partitioning import spread
+from ..operators.dedup import minhash_near_duplicates
 from .registry import query
 
 #: (doc_id, ts): the case-folded word array of every document — the
@@ -24,70 +23,16 @@ _SQL_DOC_TOKENS = (
 )
 
 
-@query(
-    "exact_dedup_stats",
-    oracle=f"""
-    SELECT CAST(COUNT(*) AS BIGINT)                             AS n_docs,
-           CAST(COUNT(DISTINCT text) AS BIGINT)                 AS n_distinct_text,
-           CAST(COUNT(DISTINCT {fingerprint_sql('text')}) AS BIGINT) AS n_distinct_fp
-    FROM documents
-    """,
-    tags=("dedup", "extension"),
-)
-def exact_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-duplicate audit: distinct raw text vs normalized
-    fingerprint (hash-groupBy dedup; partial aggregation map-side)."""
-    docs = load(spark, "documents", sf_dir)
-    return docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("text").alias("n_distinct_text"),
-        F.countDistinct(fingerprint("text")).alias("n_distinct_fp"),
-    )
-
-
 @query("minhash_near_dups", oracle=None, tags=("dedup", "lsh", "extension"))
 def minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-duplicate candidate pairs (rows-only check:
-    signatures use Spark-side xxhash64). Accuracy is asserted against
-    exact Jaccard in tests/test_dedup.py."""
+    """MinHash+LSH near-duplicate candidate pairs (rows-only check: the
+    crc32 sketch and the Spark xxhash64 text fingerprint have no DuckDB
+    mirror). Accuracy is asserted against exact Jaccard in
+    tests/test_dedup.py."""
     docs = load(spark, "documents", sf_dir)
     return minhash_near_duplicates(
         docs, "doc_id", "text", k=5, num_hashes=64, bands=16, min_jaccard=0.4
     )
-
-
-@query("simhash_fingerprints", oracle=None, tags=("dedup", "extension"))
-def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash per document (rows-only check — Spark xxhash64).
-
-    spread() to core count first: the 64 per-bit aggregates are
-    CPU-bound interpreted HOFs, so parallelism must track cores, not
-    input bytes; at scale the scan's splits suffice and no Exchange
-    is emitted (same reasoning as minhash_near_duplicates)."""
-    docs = load(spark, "documents", sf_dir)
-    return spread(docs, "doc_id").select(
-        "doc_id", simhash(F.col("text")).alias("simhash64")
-    )
-
-
-@query("near_dup_clusters", oracle=None, tags=("dedup", "iterative", "extension"))
-def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup CLUSTERS (rows-only: iterative fixpoint, the driver's
-    non-SQL-expressible category): MinHash-LSH candidate pairs ->
-    connected components -> per-cluster canonical doc + size — the
-    full dedup decision a training pipeline acts on (keep canonical,
-    drop the rest). The closure is one lazy union-find stage over all
-    candidate pairs in a single Python worker; its correctness is
-    pinned on known, long-chain and random graphs in
-    tests/test_components.py."""
-    from ..operators.components import canonical_per_cluster, connected_components
-
-    docs = load(spark, "documents", sf_dir)
-    pairs = minhash_near_duplicates(
-        docs, "doc_id", "text", k=5, num_hashes=64, bands=16, min_jaccard=0.4
-    )
-    comps = connected_components(pairs)
-    return canonical_per_cluster(comps)
 
 
 #: exact duplicated-span parameters shared by query and oracle:
@@ -186,38 +131,6 @@ def dup_gram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, "documents", sf_dir)
     return top_dup_grams(docs, k=_SPAN_K, min_count=2, top_n=20)
-
-
-@query(
-    "incremental_minhash_near_dups",
-    oracle=None,
-    tags=("dedup", "lsh", "incremental", "extension"),
-)
-def incremental_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental MinHash+LSH near-dup pairs — the approximate twin
-    of ``incremental_near_dups`` (rows-only check: signatures are not
-    SQL-expressible; equivalence to the full join filtered to
-    >=1-new-member pairs is pinned in tests/test_dedup.py): today's
-    batch (the deterministic doc_id % 10 == 0 slice) deduped against
-    the standing corpus without re-pairing the corpus with itself.
-    The batch's band-key set is an ``is_new`` filter of the one
-    checkpointed sketch (r13 — previously a second sketch stage), the
-    corpus' banded rows are semi-join pruned map-side, and old x old
-    comparisons die inside the bucket kernel
-    (operators/dedup.py::minhash_near_duplicates ``new_col``)."""
-    docs = load(spark, "documents", sf_dir).withColumn(
-        "is_new", F.col("doc_id") % 10 == 0
-    )
-    return minhash_near_duplicates(
-        docs,
-        "doc_id",
-        "text",
-        k=5,
-        num_hashes=64,
-        bands=16,
-        min_jaccard=0.4,
-        new_col="is_new",
-    )
 
 
 @query(

@@ -1,4 +1,4 @@
-"""Distributional-statistics & data-audit wave (round 3, session 4).
+"""Distributional-statistics and data-audit queries.
 
 Graph, sampling, and engine-surface queries a training-data or
 analytics team runs over a corpus/fact table, each with an exact
@@ -69,10 +69,9 @@ _SQL_TOKEN_SET = f"list_distinct({words_sql(fold_case_sql('text'))})"
 )
 def near_dup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the EXACT near-duplicate graph
-    (token-set Jaccard ≥ 0.5, blocked by source) — the oracle-checked
-    twin of ``near_dup_clusters``: the same union-find closure
-    (operators/components.py), but on a deterministic
-    SQL-expressible edge set so DuckDB's recursive CTE can hash-match
+    (token-set Jaccard ≥ 0.5, blocked by source): the union-find
+    closure of operators/components.py over a deterministic
+    SQL-expressible edge set, so DuckDB's recursive CTE can hash-match
     the full cluster decision (component id ≡ min reachable doc_id,
     keep-first canonical, cluster size).
 
@@ -281,50 +280,6 @@ def prefix_join_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokens_col="ts",
         block_col="source",
         threshold=0.5,
-    )
-
-
-@query(
-    "incremental_near_dups",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, source, (doc_id % 10 = 0) AS is_new,
-               {_SQL_TOKEN_SET} AS ts
-        FROM documents)
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CASE WHEN len(list_distinct(list_concat(a.ts, b.ts))) = 0
-                THEN CAST(0.0 AS DOUBLE)
-                ELSE len(list_intersect(a.ts, b.ts))
-                     / len(list_distinct(list_concat(a.ts, b.ts))) END
-               AS jaccard
-    FROM toks a JOIN toks b
-      ON a.source = b.source AND a.doc_id < b.doc_id
-         AND (a.is_new OR b.is_new)
-    WHERE len(list_intersect(a.ts, b.ts))
-          / len(list_distinct(list_concat(a.ts, b.ts))) >= 0.5
-    """,
-    tags=("dedup", "similarity", "blocked-matmul", "incremental"),
-)
-def incremental_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental near-dup join: exact Jaccard >= 0.5 pairs with at
-    least one member in the NEW batch (here the deterministic
-    doc_id % 10 == 0 slice standing in for "today's crawl") — the
-    standing corpus is never re-paired with itself. Same block-matrix
-    join as ``prefix_join_near_dups`` in its ``new_col`` mode: new and
-    old documents pack into separate cells and old x old cells are
-    dropped at the cell-pair join, before any matmul."""
-    docs = load(spark, "documents", sf_dir)
-    toks = docs.select(
-        "doc_id", "source", words(fold_case("text")).alias("ts"),
-        (F.col("doc_id") % 10 == 0).alias("is_new"),
-    )
-    return jaccard_pairs_blocked(
-        toks,
-        id_col="doc_id",
-        tokens_col="ts",
-        block_col="source",
-        threshold=0.5,
-        new_col="is_new",
     )
 
 

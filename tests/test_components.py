@@ -1,5 +1,5 @@
 """Connected components: known graphs, long chains, random graphs
-against a BFS reference, NULL rejection, canonical pick."""
+against a BFS reference, NULL rejection."""
 
 from __future__ import annotations
 
@@ -7,10 +7,7 @@ import random
 
 import pytest
 
-from museum_image_etl_gridfs_spark.operators.components import (
-    canonical_per_cluster,
-    connected_components,
-)
+from museum_image_etl_gridfs_spark.operators.components import connected_components
 
 
 def _edges(spark, pairs):
@@ -35,15 +32,6 @@ def test_long_chain_converges(spark):
     cc = connected_components(_edges(spark, [(i, i + 1) for i in range(n)]))
     comps = {r["component"] for r in cc.collect()}
     assert comps == {0}
-
-
-def test_canonical_per_cluster(spark):
-    cc = connected_components(_edges(spark, [(5, 9), (9, 7), (2, 3)]))
-    cans = {
-        r["component"]: (r["canonical_vertex"], r["cluster_size"])
-        for r in canonical_per_cluster(cc).collect()
-    }
-    assert cans == {5: (5, 3), 2: (2, 2)}
 
 
 def test_null_endpoint_raises(spark):

@@ -1,24 +1,26 @@
-"""Dedup operators — exact, keep-first, MinHash/LSH, SimHash.
+"""Dedup operators — keep-first and MinHash/LSH.
 
-Covers SURVEY.md A1-A3 (reference parity) and the training-data
-near-dup extensions. MinHash accuracy is asserted against exact
-Jaccard on crafted documents (FIXTURES.md model).
+Covers SURVEY.md A3 (reference parity) and the near-dup extension.
+MinHash accuracy is asserted against exact Jaccard on crafted
+documents (FIXTURES.md model).
 """
 
 from __future__ import annotations
 
+from itertools import combinations
+
 from pyspark.sql import functions as F
 
+from museum_image_etl_gridfs_spark.functions.quality import (
+    fold_case,
+    fold_case_py,
+    words,
+    words_py,
+)
+from museum_image_etl_gridfs_spark.operators.ann import jaccard_pairs_blocked
 from museum_image_etl_gridfs_spark.operators.dedup import (
     dedup_keep_first,
-    duplicate_groups,
-    exact_dedup,
-    hamming64,
     minhash_near_duplicates,
-    ngram_jaccard,
-    shingle_hashes,
-    shingles,
-    simhash,
 )
 
 
@@ -36,14 +38,6 @@ def _meta(spark):
     ).withColumn("created_at", F.to_timestamp("created_at"))
 
 
-def test_duplicate_groups(spark):
-    got = {
-        r["object_id"]: r["dup_count"]
-        for r in duplicate_groups(_meta(spark), ["object_id"]).collect()
-    }
-    assert got == {10: 3}
-
-
 def test_dedup_keep_first_deterministic(spark):
     out = dedup_keep_first(_meta(spark), ["object_id"], ["created_at", "doc_id"])
     got = {r["object_id"]: r["doc_id"] for r in out.collect()}
@@ -52,25 +46,6 @@ def test_dedup_keep_first_deterministic(spark):
     # idempotent: dedup of deduped is identity
     again = dedup_keep_first(out, ["object_id"], ["created_at", "doc_id"])
     assert again.subtract(out).count() == 0 and out.subtract(again).count() == 0
-
-
-def test_exact_dedup(spark):
-    df = spark.createDataFrame([(1, "x"), (1, "x"), (2, "y")], "k int, v string")
-    assert exact_dedup(df).count() == 2
-    assert exact_dedup(df, ["k"]).count() == 2
-
-
-def test_shingles_word_window(spark):
-    df = spark.createDataFrame([("the quick brown fox",)], "t string")
-    got = sorted(df.select(shingles(F.col("t"), k=2).alias("s")).collect()[0]["s"])
-    assert got == ["brown fox", "quick brown", "the quick"]
-
-
-def test_shingles_short_text_single_shingle(spark):
-    df = spark.createDataFrame([("hello",), ("",)], "t string")
-    rows = df.select(shingles(F.col("t"), k=3).alias("s")).collect()
-    assert rows[0]["s"] == ["hello"]
-    assert rows[1]["s"] == [""]
 
 
 def test_minhash_estimates_jaccard(spark):
@@ -84,28 +59,23 @@ def test_minhash_estimates_jaccard(spark):
     i = base.rfind("lazy")
     near = base[:i] + "sleepy" + base[i + len("lazy"):]
     far = "completely different text about spark engines and parquet files"
-    df = spark.createDataFrame(
-        [("base", base), ("near", near), ("far", far)], "doc_id string, text string"
-    )
+    texts = {"base": base, "near": near, "far": far}
+    df = spark.createDataFrame(list(texts.items()), "doc_id string, text string")
     pairs = {
         (r["id_a"], r["id_b"]): r["jaccard_est"]
         for r in minhash_near_duplicates(
             df, "doc_id", "text", k=3, num_hashes=64, bands=16, min_jaccard=0.0
         ).collect()
     }
+
+    def shingle_set(text, k=3):
+        toks = words_py(fold_case_py(text))
+        return {" ".join(toks[j : j + k]) for j in range(len(toks) - k + 1)}
+
+    sets = {d: shingle_set(t) for d, t in texts.items()}
     exact = {
-        (r["id_a"], r["id_b"]): r["j"]
-        for r in (
-            df.alias("a")
-            .join(df.alias("b"), F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b"),
-                ngram_jaccard(
-                    shingles(F.col("a.text"), 3), shingles(F.col("b.text"), 3)
-                ).alias("j"),
-            )
-        ).collect()
+        (a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        for a, b in combinations(sorted(texts), 2)
     }
     key = ("base", "near")
     assert exact[key] >= 0.5  # sanity: the crafted pair is near-dup
@@ -193,76 +163,29 @@ def test_minhash_block_decomposition_is_exact(spark, monkeypatch):
     assert blocked == unblocked
 
 
-def test_shingle_hashes_in_range(spark):
-    df = spark.createDataFrame([("alpha beta gamma delta",)], "t string")
-    hs = df.select(
-        shingle_hashes(shingles(F.col("t"), 2)).alias("h")
-    ).collect()[0]["h"]
-    assert all(0 <= h < (1 << 31) - 1 for h in hs)
-
-
-def test_simhash_properties(spark):
-    df = spark.createDataFrame(
-        [
-            ("a", "the quick brown fox jumps over the lazy dog"),
-            ("b", "the quick brown fox jumps over the lazy dog"),
-            ("c", "the quick brown fox jumps over the sleepy dog"),
-            ("d", "entirely unrelated content regarding database engines"),
-        ],
-        "id string, text string",
-    )
-    sigs = df.select("id", simhash(F.col("text")).alias("sh"))
-    wide = (
-        sigs.alias("x")
-        .join(sigs.alias("y"), F.col("x.id") < F.col("y.id"))
-        .select(
-            F.col("x.id").alias("a"),
-            F.col("y.id").alias("b"),
-            hamming64(F.col("x.sh"), F.col("y.sh")).alias("d"),
-        )
-    )
-    dist = {(r["a"], r["b"]): r["d"] for r in wide.collect()}
-    assert dist[("a", "b")] == 0  # identical text -> identical simhash
-    assert dist[("a", "c")] < dist[("a", "d")]  # near < far
-
-
-def test_ngram_jaccard_edges(spark):
-    df = spark.createDataFrame([(["a", "b"], ["a", "b"], [], ["c"])],
-                               "x array<string>, y array<string>, e array<string>, z array<string>")
-    row = df.select(
-        ngram_jaccard(F.col("x"), F.col("y")).alias("same"),
-        ngram_jaccard(F.col("e"), F.col("e")).alias("both_empty"),
-        ngram_jaccard(F.col("x"), F.col("z")).alias("disjoint"),
-    ).collect()[0]
-    assert row["same"] == 1.0
-    assert row["both_empty"] == 0.0
-    assert row["disjoint"] == 0.0
-
-
-def test_incremental_minhash_equals_filtered_full(spark, sf_dir):
-    """Incremental mode's contract: identical to the FULL output
-    filtered to pairs with at least one new member — the band prune
-    drops only buckets with no new doc (whose pairs are all old×old),
-    the kernel rejects old×old inside surviving buckets, and all-old
-    star groups emit nothing."""
-    from museum_image_etl_gridfs_spark.catalog import load
-
-    docs = load(spark, "documents", sf_dir).withColumn(
-        "is_new", F.col("doc_id") % 10 == 0
-    )
-    kw = dict(k=5, num_hashes=16, bands=4, min_jaccard=0.3)
-    full = minhash_near_duplicates(docs, "doc_id", "text", **kw)
-    inc = minhash_near_duplicates(
-        docs, "doc_id", "text", new_col="is_new", **kw
-    )
-    flags = docs.select(F.col("doc_id"), "is_new")
-    expected = (
-        full.join(flags.withColumnRenamed("doc_id", "id_a"), "id_a")
-        .withColumnRenamed("is_new", "new_a")
-        .join(flags.withColumnRenamed("doc_id", "id_b"), "id_b")
-        .filter(F.col("new_a") | F.col("is_new"))
-        .select("id_a", "id_b", "jaccard_est")
-    )
-    got = {tuple(r) for r in inc.collect()}
-    want = {tuple(r) for r in expected.collect()}
-    assert got == want and len(want) > 0
+def test_minhash_pairs_no_token_less_document(spark):
+    """A document with no token (NULL, empty or all whitespace) has an
+    empty shingle set, whose Jaccard with anything is 0: MinHash pairs
+    none of them, and agrees with the exact kernel on such input. Two
+    documents shorter than k that fold to the same tokens share their
+    one shingle and pair."""
+    same = "the quick brown fox jumps over the lazy dog"
+    rows = [(1, None), (2, None), (3, ""), (4, "   "), (5, "\t\n"),
+            (6, same), (7, same), (8, "Hello World"), (9, "hello  world")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    minhash = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_near_duplicates(
+            docs, "doc_id", "text", k=5, num_hashes=64, bands=16, min_jaccard=0.5
+        ).collect()
+    }
+    exact = {
+        (r["id_a"], r["id_b"])
+        for r in jaccard_pairs_blocked(
+            docs.select("doc_id", words(fold_case("text")).alias("ts")),
+            id_col="doc_id",
+            tokens_col="ts",
+            threshold=0.5,
+        ).collect()
+    }
+    assert minhash == exact == {(6, 7), (8, 9)}

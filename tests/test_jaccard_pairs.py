@@ -1,8 +1,7 @@
 """jaccard_pairs_blocked must return EXACTLY the brute-force
-Jaccard-threshold pairs, in full and in incremental (``new_col``)
-mode. The inputs include the boundary cases of prefix-filter joins
-(float-rounded thresholds, overlap exactly at the bound), which any
-exact pair engine must also get right."""
+Jaccard-threshold pairs. The inputs include the boundary cases of
+prefix-filter joins (float-rounded thresholds, overlap exactly at the
+bound), which any exact pair engine must also get right."""
 
 from __future__ import annotations
 
@@ -10,7 +9,6 @@ import itertools
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from museum_image_etl_gridfs_spark.operators.ann import jaccard_pairs_blocked
 
@@ -158,92 +156,3 @@ def test_overlap_at_the_bound_keeps_pairs(spark):
     }
     assert got == _brute(rows, 0.5)
     assert all((i * 10, i * 10 + 1) in got for i in range(40, 50))
-
-
-def _brute_incremental(rows, t):
-    """rows: (id, tokenset, blk, is_new); pairs with >= 1 new member."""
-    out = set()
-    for (ia, sa, ba, na), (ib, sb, bb, nb) in itertools.combinations(rows, 2):
-        if ba != bb or not (na or nb):
-            continue
-        u = len(sa | sb)
-        if u and len(sa & sb) / u >= t:
-            out.add((min(ia, ib), max(ia, ib)))
-    return out
-
-
-def test_incremental_mode_exact(spark):
-    """new_col mode must return EXACTLY the full join filtered to
-    pairs with at least one new member — at several thresholds."""
-    rng = random.Random(3)
-    vocab = [f"w{i}" for i in range(30)]
-    rows = [
-        (
-            i,
-            set(rng.sample(vocab, rng.randint(1, 12))),
-            i % 2,
-            i % 5 == 0,
-        )
-        for i in range(120)
-    ]
-    df = spark.createDataFrame(
-        [(i, list(s), b, n) for i, s, b, n in rows],
-        "id long, ts array<string>, blk int, is_new boolean",
-    )
-    for t in (0.3, 0.5, 0.8):
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in jaccard_pairs_blocked(
-                df,
-                id_col="id",
-                tokens_col="ts",
-                threshold=t,
-                block_col="blk",
-                new_col="is_new",
-            ).collect()
-        }
-        assert got == _brute_incremental(rows, t), f"t={t}"
-
-
-def test_incremental_mode_degenerate_batches(spark):
-    """All-old batch -> no pairs; all-new batch -> identical to the
-    plain (non-incremental) join."""
-    rng = random.Random(9)
-    vocab = [f"v{i}" for i in range(20)]
-    rows = [
-        (i, list(set(rng.sample(vocab, rng.randint(2, 10)))), 0)
-        for i in range(60)
-    ]
-    df = spark.createDataFrame(rows, "id long, ts array<string>, blk int")
-    full = {
-        (r["id_a"], r["id_b"])
-        for r in jaccard_pairs_blocked(
-            df, id_col="id", tokens_col="ts", threshold=0.4, block_col="blk"
-        ).collect()
-    }
-    assert full  # fixture sanity: the plain join finds pairs
-    all_old = df.withColumn("is_new", F.lit(False))
-    assert (
-        jaccard_pairs_blocked(
-            all_old,
-            id_col="id",
-            tokens_col="ts",
-            threshold=0.4,
-            block_col="blk",
-            new_col="is_new",
-        ).count()
-        == 0
-    )
-    all_new = df.withColumn("is_new", F.lit(True))
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in jaccard_pairs_blocked(
-            all_new,
-            id_col="id",
-            tokens_col="ts",
-            threshold=0.4,
-            block_col="blk",
-            new_col="is_new",
-        ).collect()
-    }
-    assert got == full

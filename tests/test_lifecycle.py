@@ -13,9 +13,7 @@ from museum_image_etl_gridfs_spark.operators.components import (
 )
 from museum_image_etl_gridfs_spark.operators.dedup import minhash_near_duplicates
 from museum_image_etl_gridfs_spark.operators.lifecycle import (
-    checkpoint_scope,
     release_checkpoints,
-    tracked_count,
     tracked_local_checkpoint,
 )
 from museum_image_etl_gridfs_spark.operators.spans import duplicated_spans
@@ -41,23 +39,9 @@ def test_tracked_checkpoint_round_trip(spark):
     )
     assert df.count() == 100
     assert _persistent_rdds(spark) == base + 1
-    assert tracked_count(spark) >= 1
-    assert release_checkpoints(spark) >= 1
+    assert release_checkpoints(spark) == 1
     assert _persistent_rdds(spark) == base
-    assert tracked_count(spark) == 0
-
-
-def test_checkpoint_scope_releases_only_inner(spark):
-    base = _persistent_rdds(spark)
-    outer = tracked_local_checkpoint(spark.range(50), eager=True)
-    with checkpoint_scope(spark):
-        inner = tracked_local_checkpoint(spark.range(60), eager=True)
-        assert inner.count() == 60
-        assert _persistent_rdds(spark) == base + 2
-    assert _persistent_rdds(spark) == base + 1  # inner gone, outer alive
-    assert outer.count() == 50
-    release_checkpoints(spark)
-    assert _persistent_rdds(spark) == base
+    assert release_checkpoints(spark) == 0
 
 
 def test_twenty_query_session_storage_returns_to_baseline(spark):
@@ -77,21 +61,19 @@ def test_twenty_query_session_storage_returns_to_baseline(spark):
     edges = spark.range(300).selectExpr("id % 30 as id_a", "id as id_b")
 
     for i in range(10):
-        with checkpoint_scope(spark):
-            pairs = minhash_near_duplicates(
-                docs, "doc_id", "text", k=3, num_hashes=16, bands=4
-            )
-            assert tracked_count(spark) >= 1
-            assert pairs.count() == 5
-        with checkpoint_scope(spark):
-            spans = duplicated_spans(docs, k=3)
-            assert tracked_count(spark) >= 1
-            assert spans.count() == 6
+        pairs = minhash_near_duplicates(
+            docs, "doc_id", "text", k=3, num_hashes=16, bands=4
+        )
+        assert pairs.count() == 5
+        assert release_checkpoints(spark) == 1
+        spans = duplicated_spans(docs, k=3)
+        assert spans.count() == 6
+        assert release_checkpoints(spark) == 1
         if i < 2:  # components creates no checkpoints to release
             comps = connected_components(edges)
             assert comps.select("component").distinct().count() == 30
 
-    assert tracked_count(spark) == 0
+    assert release_checkpoints(spark) == 0
     assert _persistent_rdds(spark) == base
 
 
@@ -102,7 +84,7 @@ def test_components_caps_inflight_checkpoints(spark):
     edges = spark.range(12).selectExpr("id as id_a", "id + 1 as id_b")
     comps = connected_components(edges)
     assert comps.count() == 13
-    assert tracked_count(spark) == 0
+    assert release_checkpoints(spark) == 0
     assert _persistent_rdds(spark) == base
 
 

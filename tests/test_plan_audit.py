@@ -19,6 +19,8 @@ from museum_image_etl_gridfs_spark.plans import all_queries  # noqa: E402
 def test_no_unexpected_python_nodes_anywhere(spark, sf_dir):
     results = audit(spark, sf_dir)
     assert set(results) == set(all_queries())  # the whole registry got audited
+    # a deleted query cannot linger in the whitelist
+    assert EXPECTED_PYTHON <= set(results), EXPECTED_PYTHON - set(results)
     offenders = {
         name: row["python"]
         for name, row in results.items()
@@ -29,9 +31,7 @@ def test_no_unexpected_python_nodes_anywhere(spark, sf_dir):
     stale = {
         name
         for name in EXPECTED_PYTHON
-        if name in results
-        and "error" not in results[name]
-        and not results[name]["python"]
+        if "error" not in results[name] and not results[name]["python"]
     }
     assert stale == set(), f"whitelisted but Python-free now: {stale}"
 

@@ -65,9 +65,7 @@ PENDING_KEEP_DROP = (
     "text_quality", "lang_id", "token_length_histogram",
     "lang_confusion_matrix",
     # queries_dedup
-    "exact_dedup_stats", "simhash_fingerprints", "near_dup_clusters",
-    "dup_gram_stats", "incremental_minhash_near_dups", "substring_dedup_rewrite",
-    "ngram_novelty_profile",
+    "dup_gram_stats", "substring_dedup_rewrite", "ngram_novelty_profile",
     # queries_images
     "multimodal_transform",
     # queries_olap
@@ -79,8 +77,8 @@ PENDING_KEEP_DROP = (
     # queries_analytics
     "http_ingest_pipeline", "binary_fetch_pipeline", "python_datasource_scan",
     # queries_stats
-    "recursive_brand_reach", "incremental_near_dups",
-    "brand_triangle_stats", "order_cluster_sample", "schema_evolution_merge",
+    "recursive_brand_reach", "brand_triangle_stats", "order_cluster_sample",
+    "schema_evolution_merge",
 )
 
 
@@ -107,28 +105,44 @@ def test_benchmark_queries_are_registered():
         assert names and set(names) <= set(QUERIES), set(names) - set(QUERIES)
 
 
+#: Spark jobs each ``NEAR_DUP`` build started at sf0.001 and sf0.01
+#: when this bound was set: one parquet schema read per scanned table,
+#: a lazy checkpoint's shuffle stage (minhash, components, spans), and
+#: the jaccard kernel's ``first()`` (3 jobs per call)
+NEAR_DUP_BUILD_JOBS = {
+    "minhash_near_dups": 2,
+    "prefix_join_near_dups": 4,
+    "near_dup_components_exact": 5,
+    "duplicated_spans": 2,
+    "eval_contamination": 1,
+}
+
+
 def test_near_dup_builds_run_no_package_jobs(spark, sf_dir):
     """Building a ``NEAR_DUP`` query starts no Spark job from a package
     call site: no size estimate or gate runs a job at build time. The
     one exception is the jaccard kernel's sub-block count, a measured
-    ``first()`` in ``operators/ann.py``. Jobs Spark starts itself
-    (the parquet schema read, a lazy checkpoint's shuffle stage) are
-    named after Spark frames and do not count."""
-    from museum_image_etl_gridfs_spark.operators.lifecycle import checkpoint_scope
+    ``first()`` in ``operators/ann.py``. Every job counts towards the
+    query's bound in :data:`NEAR_DUP_BUILD_JOBS`, the ones named after
+    Spark frames too (the parquet schema read, a lazy checkpoint's
+    shuffle stage)."""
+    from museum_image_etl_gridfs_spark.operators.lifecycle import release_checkpoints
 
     pkg = os.path.join(ROOT, PACKAGE) + os.sep
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    sites = {}
+    sites, jobs = {}, {}
     try:
         for name in _benchmark_lists()["NEAR_DUP"]:
             group = f"build-{name}"
             sc.setJobGroup(group, group)
-            with checkpoint_scope(spark):
-                QUERIES[name].build(spark, sf_dir)
+            QUERIES[name].build(spark, sf_dir)
+            release_checkpoints(spark)
+            job_ids = tracker.getJobIdsForGroup(group)
+            jobs[name] = len(job_ids)
             stages = [
                 tracker.getStageInfo(s)
-                for j in tracker.getJobIdsForGroup(group)
+                for j in job_ids
                 for s in tracker.getJobInfo(j).stageIds
             ]
             # a stage is named "<api> at <file>:<line>". Once the status
@@ -153,6 +167,9 @@ def test_near_dup_builds_run_no_package_jobs(spark, sf_dir):
         "duplicated_spans": set(),
         "eval_contamination": set(),
     }
+    assert set(jobs) == set(NEAR_DUP_BUILD_JOBS)
+    over = {n: c for n, c in jobs.items() if c > NEAR_DUP_BUILD_JOBS[n]}
+    assert not over, over
 
 
 def test_near_dup_second_round_compiles_no_class(spark, sf_dir):
@@ -352,17 +369,9 @@ def test_no_redundant_local_imports():
 #: caller. The list may only shrink.
 PENDING_DEFINITIONS = (
     "functions.cleaning.na_standardize",
-    "operators.dedup.exact_dedup",
-    "operators.dedup.duplicate_groups",
-    "operators.dedup.shingles",
-    "operators.dedup.shingle_hashes",
-    "operators.dedup.hamming64",
-    "operators.dedup.ngram_jaccard",
     "operators.gridfs.file_descriptors",
     "operators.gridfs.reassemble_with_files",
     "operators.images.PILCodec",
-    "operators.lifecycle.checkpoint_scope",
-    "operators.lifecycle.tracked_count",
     "operators.spans.gram_occurrences",
     "sources.http.ids_dataframe",
     "sources.http.project_metadata",

@@ -42,9 +42,6 @@ GOLDENS = {
 FULL_SF_DIR = "/root/testdata/sf0.01"
 FULL_GOLDENS = {
     "minhash_near_dups": ["id_a", "id_b"],
-    "incremental_minhash_near_dups": ["id_a", "id_b"],
-    "simhash_fingerprints": ["doc_id"],
-    "near_dup_clusters": ["component"],
 }
 
 

@@ -49,16 +49,13 @@ _PYTHON_NODES = (
 #: queries where Python eval is the design (no JVM primitive exists)
 EXPECTED_PYTHON = {
     "minhash_near_dups",        # numpy minhash sketching
-    "incremental_minhash_near_dups",  # same sketch, batch-vs-corpus mode
     "multimodal_transform",     # binary image codec
     "image_etl_gridfs",         # binary image codec
     "eval_contamination",        # vectorized bigram shingling
     "http_ingest_pipeline",      # batch-HTTP fetch stage (S2/U1, hermetic)
     "binary_fetch_pipeline",     # binary blob fetch stage (S3/F2, hermetic)
     "prefix_join_near_dups",     # block-matrix intersection matmul
-    "incremental_near_dups",     # same matmul, incremental mode
     "near_dup_components_exact",  # matmul + union-find closure (numpy)
-    "near_dup_clusters",         # minhash sketch + union-find closure
 }
 
 
